@@ -80,6 +80,8 @@ object Bench {
   // run recorded under co-tenant load (the r11/r12 artifacts moved ±23%
   // on untouched code purely from ambient machine pressure).
   private val loadAtStart: Double = systemLoad()
+  // above this start load a run is flagged as taken on a busy host
+  private val LoadedHost = 2.0
 
   private def systemLoad(): Double = {
     val l = java.lang.management.ManagementFactory
@@ -102,6 +104,13 @@ object Bench {
     // 129s -> 106s total by halving the cap; solo numbers unchanged)
     val chunkCap = sys.env.getOrElse(Chunk, "5").toInt
     val isChild = sys.env.contains(Child)
+    // quiet-host check (methodology unchanged): a run that starts on a
+    // loaded host still runs and records its loadavg, but says so
+    if (!isChild && loadAtStart > LoadedHost)
+      System.err.println(f"[bench] WARNING: 1-minute load average " +
+        f"$loadAtStart%.2f at start is above $LoadedHost%.0f — the host " +
+        "is busy, and the timings will read slow; compare only against " +
+        "a run taken under the same load")
     // fork only when the suite is big enough to amortize child warmup;
     // small hand-picked query lists (local iteration) stay in-process
     if (!isChild && chunkCap > 0 && names.size >= chunkCap * 2)

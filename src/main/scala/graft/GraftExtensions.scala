@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{ExactPercentilesAgg, FastRoundExpr,
-  InverseNormalCdfExpr, MedianMadAgg, MinHashSigsExpr, NfcNormalizeExpr,
-  SortedIntersectSizeExpr, VecDotExpr}
+  InverseNormalCdfExpr, MedianMadAgg, MinHashSigsExpr, NearestCentroidExpr,
+  NfcNormalizeExpr, SortedIntersectSizeExpr, VecDotExpr}
 
 /** SQL-surface registration of the engine's native Catalyst expressions
   * (`spark.sql.extensions=graft.GraftExtensions`, or
@@ -13,6 +13,8 @@ import graft.functions.{ExactPercentilesAgg, FastRoundExpr,
   *
   *   - `inv_norm_cdf(p)` — Acklam probit (the gaussianize kernel)
   *   - `vec_dot(a, b)` — fused dot product (the similarity kernel)
+  *   - `nearest_centroid(v, centroids)` — argmin squared-euclidean cell
+  *     over a constant centroid matrix (the IVF assignment kernel)
   *   - `sorted_intersect_size(a, b)` — two-pointer merge intersection
   *     (the n-gram Jaccard kernel)
   *   - `minhash_sigs(h1, h2, n)` — fused n-way minhash minimums
@@ -50,6 +52,14 @@ object GraftFunctions {
       (args: Seq[Expression]) => {
         require(args.length == 2, "vec_dot expects 2 arguments")
         VecDotExpr(args(0), args(1))
+      }),
+    (FunctionIdentifier("nearest_centroid"),
+      info("nearest_centroid", "nearest_centroid(v, centroids) - index " +
+        "of the nearest centroid by squared euclidean distance (ties to " +
+        "the lowest index; centroids a constant array of arrays)"),
+      (args: Seq[Expression]) => {
+        require(args.length == 2, "nearest_centroid expects 2 arguments")
+        NearestCentroidExpr(args(0), args(1))
       }),
     (FunctionIdentifier("sorted_intersect_size"),
       info("sorted_intersect_size",

@@ -27,6 +27,18 @@ import org.apache.spark.sql.functions._
   * keeping per-round analysis cost constant (the standard Pregel/
   * GraphFrames shape). Blocks from a previous invocation are released
   * on the next call, mirroring EraSolver.scaleGlobal's queue.
+  *
+  * One invocation at a time per JVM: every call first releases the
+  * checkpointed RDDs and caches of the PREVIOUS call (`liveRdds`,
+  * `liveCaches`). Their lineage is truncated, so they cannot be
+  * recomputed — two overlapping invocations in one session make the
+  * earlier one's job fail. Run the calls one after another (or give
+  * each its own session) until the caches are scoped per invocation.
+  *
+  * Ids must be integral (byte/short/int/long) and non-null: the loops
+  * run on 64-bit ids. Another id type fails at the call with an
+  * IllegalArgumentException; a null id fails the first job that reads
+  * the pairs, instead of joining a spurious cluster.
   */
 object DupClusters {
 
@@ -49,10 +61,10 @@ object DupClusters {
     * min(own label, min over neighbor labels) per round. */
   def minLabelClusters(pairs: DataFrame, aCol: String, bCol: String,
       iters: Int = 4): DataFrame = {
+    val idType = requireIntegralIds(pairs, aCol, bCol, "minLabelClusters")
     liveCaches.release()
     releaseRdds()
     val spark = pairs.sparkSession
-    val idType = pairs.schema(pairs.schema.fieldIndex(aCol)).dataType
     val pDf = pairs.select(col(aCol).cast("long").as("src"),
       col(bCol).cast("long").as("dst"))
     val P0 = new org.apache.spark.HashPartitioner(
@@ -66,7 +78,7 @@ object DupClusters {
     // (dst, src) both directions — gather key first; static across
     // rounds, so its partitioning is paid once
     val edges0 = pDf.queryExecution.toRdd
-      .map(ir => (ir.getLong(0), ir.getLong(1)))
+      .map(ir => nonNullPair(ir, "minLabelClusters", aCol, bCol))
     val edges = ckpt(edges0.flatMap(p => Iterator(p, p.swap))
       .partitionBy(P0))
     val edgeCount = edges.count()
@@ -75,7 +87,14 @@ object DupClusters {
       edgeCount / 65536L + 1L)).toInt
     val P = if (pAdaptive < P0.numPartitions)
       new org.apache.spark.HashPartitioner(pAdaptive) else P0
-    val edgesByDst = if (P ne P0) ckpt(edges.partitionBy(P)) else edges
+    // a shrunk P re-partitions the edges once; the P0 copy is released
+    // as soon as the P copy is materialized
+    val edgesByDst = if (P eq P0) edges else {
+      val byP = ckpt(edges.partitionBy(P))
+      byP.count()
+      release(edges)
+      byP
+    }
     // labels keyed by id under the SAME partitioner: both per-round
     // joins below are narrow
     // No per-round action: the fixed `iters` rounds chain into the
@@ -161,19 +180,19 @@ object DupClusters {
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxRounds: Int = 50): DataFrame = {
+    val idType = requireIntegralIds(pairs, aCol, bCol, "connectedComponents")
     liveCaches.release()
     releaseRdds()
     val spark = pairs.sparkSession
     // canonical (lo, hi) pairs; self-loops dropped. The 64-bit cast is
-    // internal; outputs cast back to the input id type at the end.
-    val idType = {
-      val f = pairs.schema(pairs.schema.fieldIndex(aCol))
-      f.dataType
-    }
+    // internal; outputs cast back to the input id type at the end. A
+    // pair with a null id keeps null ends (least/greatest would skip
+    // the null) and survives to the RDD read below, which refuses it.
+    val anyNull = col(aCol).isNull || col(bCol).isNull
     val eDf = pairs
-      .select(least(col(aCol), col(bCol)).cast("long").as("lo"),
-        greatest(col(aCol), col(bCol)).cast("long").as("hi"))
-      .where(col("lo") =!= col("hi")).distinct()
+      .select(when(!anyNull, least(col(aCol), col(bCol))).cast("long").as("lo"),
+        when(!anyNull, greatest(col(aCol), col(bCol))).cast("long").as("hi"))
+      .where(col("lo").isNull || col("lo") =!= col("hi")).distinct()
     val P0 = new org.apache.spark.HashPartitioner(
       spark.conf.get("spark.sql.shuffle.partitions", "200").toInt)
     def ckpt(r: org.apache.spark.rdd.RDD[(Long, Long)])
@@ -184,7 +203,7 @@ object DupClusters {
     }
     // keyed by lo under P — every round's joins stay co-partitioned
     var e = ckpt(eDf.queryExecution.toRdd
-      .map(ir => (ir.getLong(0), ir.getLong(1)))
+      .map(ir => nonNullPair(ir, "connectedComponents", aCol, bCol))
       .partitionBy(P0))
     var eCount = e.count()
     // Scale-adaptive round parallelism (guide §2: derive partitioning
@@ -200,8 +219,10 @@ object DupClusters {
       eCount / 65536L + 1L)).toInt
     val P = if (pAdaptive < P0.numPartitions)
       new org.apache.spark.HashPartitioner(pAdaptive) else P0
-    if (P ne P0) e = e.partitionBy(P) // one tiny reshuffle, shuffle-file
-                                      // reads thereafter
+    // one tiny reshuffle onto P; the P0 copy is superseded once round 1
+    // has materialized the P copy, and is released with it
+    var superseded = Option.empty[org.apache.spark.rdd.RDD[(Long, Long)]]
+    if (P ne P0) { superseded = Some(e); e = ckpt(e.partitionBy(P)) }
     var converged = false
     var round = 0
     while (!converged && round < maxRounds) {
@@ -248,8 +269,8 @@ object DupClusters {
           Iterator(same && n == sa.size)
         }.fold(true)(_ && _)
       }
-      e.unpersist(blocking = false)
-      liveRdds.remove(e)
+      (e +: superseded.toSeq).foreach(release)
+      superseded = None
       e = e2
       eCount = e2Count
     }
@@ -280,6 +301,37 @@ object DupClusters {
   private def releaseRdds(): Unit = {
     val it = liveRdds.iterator()
     while (it.hasNext) { it.next().unpersist(blocking = false); it.remove() }
+  }
+
+  private def release(r: org.apache.spark.rdd.RDD[(Long, Long)]): Unit = {
+    r.unpersist(blocking = false)
+    liveRdds.remove(r)
+  }
+
+  /** The id contract at entry: both id columns integral. Returns the id
+    * type (the outputs cast back to it). */
+  private def requireIntegralIds(pairs: DataFrame, aCol: String,
+      bCol: String, fn: String): org.apache.spark.sql.types.DataType = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
+      ShortType}
+    Seq(aCol, bCol).foreach { c =>
+      val t = pairs.schema(c).dataType
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+        s"$fn: id column $c is ${t.sql}; ids must be integral " +
+          "(tinyint, smallint, int or bigint)")
+    }
+    pairs.schema(aCol).dataType
+  }
+
+  /** One (a, b) id pair of the first two columns, refusing a null id —
+    * read by the job that already scans the pairs, so the check costs
+    * no job of its own. */
+  private def nonNullPair(ir: org.apache.spark.sql.catalyst.InternalRow,
+      fn: String, aCol: String, bCol: String): (Long, Long) = {
+    if (ir.isNullAt(0) || ir.isNullAt(1))
+      throw new IllegalArgumentException(
+        s"$fn: null id in the pair columns ($aCol, $bCol)")
+    (ir.getLong(0), ir.getLong(1))
   }
 
   /** Canonical-representative selection — the step after clustering in

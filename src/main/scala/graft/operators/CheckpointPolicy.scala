@@ -41,10 +41,10 @@ package graft.operators
   *
   *   DELTA-sized (CDC / maintenance change set)
   *   - streaming/IndexMaintain (diff, affected ids, sidecar lookup)
-  *   - sim/IvfCosine.applyChanges (affectedIds, newAssigned;
-  *     replacement/sideReplacement are affected-PARTITION-sized —
-  *     delta-proportional under the bounded-cell ~125-rows/cell rule,
-  *     and REQUIRED there to sever self-read-overwrite lineage)
+  *   - sim/IvfCosine.stageChanges (the one change-set frame of
+  *     appendToIndex and applyChanges: id, vector, cell, bucket; the
+  *     partition rewrites need no checkpoint — dynamic overwrite
+  *     replaces partitions only at job commit, after every read)
   *   - QueriesSim q_index_maint diff
   *
   *   CORPUS-ROW-proportional, NARROW (a few words per row — the bound

@@ -77,4 +77,55 @@ object ParquetMeta {
       } finally pool.shutdown()
     }
   }
+
+  /** `spark.read.parquet(path)` without its schema-inference JOB: Spark
+    * infers a parquet schema by reading a footer in a distributed job
+    * (one per read). Here the first data file's footer is read on the
+    * driver and converted the way Spark converts it (the Spark row
+    * metadata the writer stored, else the parquet schema); each of the
+    * Hive-style partition columns `partitionCols` that the file's path
+    * actually carries is appended as an int (the type Spark infers for
+    * the index trees' `cell=` and `bucket=` directory values), and the
+    * tree is read with that schema. A tree with no data file falls back
+    * to the inferring read. */
+  def read(spark: SparkSession, path: String,
+      partitionCols: Seq[String]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    firstDataFile(root.getFileSystem(conf), root) match {
+      case None => spark.read.parquet(path)
+      case Some(file) =>
+        val in = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+        val data = try ParquetFileFormat.readSchemaFromFooter(
+            new org.apache.parquet.hadoop.Footer(file, in.getFooter),
+            new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+          finally in.close()
+        val dirs = Iterator.iterate(file.getParent)(_.getParent)
+          .takeWhile(d => d != null && d.depth > root.depth)
+          .map(_.getName).toSet
+        val parts = partitionCols.filter(c => dirs.exists(_.startsWith(s"$c=")))
+        spark.read.schema(StructType(
+          data.filterNot(f => parts.contains(f.name)) ++
+            parts.map(StructField(_, IntegerType))))
+          .parquet(path)
+    }
+  }
+
+  /** The first visible data file under `root`, depth-first in listing
+    * order — a couple of listings, not a walk of the whole tree. */
+  private def firstDataFile(fs: FileSystem, root: Path): Option[Path] = {
+    def visible(name: String) =
+      !name.startsWith("_") && !name.startsWith(".")
+    fs.listStatus(root).iterator
+      .filter(st => visible(st.getPath.getName))
+      .flatMap(st =>
+        if (st.isDirectory) firstDataFile(fs, st.getPath)
+        else if (st.getLen > 0) Some(st.getPath)
+        else None)
+      .nextOption()
+  }
 }

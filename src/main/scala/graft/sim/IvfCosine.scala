@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.dedup.Similarity
+import graft.functions.NearestCentroid
 
 /** IVF (inverted-file) approximate nearest neighbor: a k-means coarse
   * quantizer partitions the corpus into `nlist` cells; each probe only
@@ -180,13 +181,10 @@ object IvfCosine {
       s"index at $path was built with idCol=${meta("idCol")}, not $c"))
     vecCol.foreach(c => require(c == meta("vecCol"),
       s"index at $path was built with vecCol=${meta("vecCol")}, not $c"))
-    val (nlist, dim) = (meta("nlist").toInt, meta("dim").toInt)
-    val cents = Array.tabulate(nlist) { i =>
-      val c = sections(s"c$i")
-      graft.ml.WeightsIO.requireLen(s"c$i", c, dim)
-      c
-    }
-    val assigned = spark.read.parquet(s"$path/assigned")
+    val cents = recordedCentroids(meta, sections)
+    val dim = cents.head.length
+    val assigned = graft.operators.ParquetMeta.read(spark, s"$path/assigned",
+      Seq("cell"))
     Seq(meta("idCol"), meta("vecCol"), "cell").foreach { c =>
       require(assigned.columns.contains(c),
         s"assigned parquet at $path/assigned is missing column $c " +
@@ -261,15 +259,15 @@ object IvfCosine {
     Index(cents, assigned)
   }
 
-  /** Shared load/append-side vector validation: the column must be an
-    * array type and a probed row's length must match the recorded
-    * `dim` — a rewritten or wrong-shard artifact fails HERE with the
-    * artifact path instead of as a mid-job vec_dot length error.
-    * DEFAULT mode probes ONE row (constant-time; a frame that mixes
-    * dimensions can still pass and die later as a vec_dot error);
-    * `strict = true` aggregates min/max(size(vecCol)) over the whole
-    * frame — one extra scan, the right trade for a one-time index
-    * build or a suspect shard. */
+  /** Shared load-side vector validation: the column must be an array
+    * type and a probed row's length must match the recorded `dim` — a
+    * rewritten or wrong-shard artifact fails HERE with the artifact path
+    * instead of as a mid-job kernel length error. DEFAULT mode probes
+    * ONE row (constant-time); `strict = true` aggregates
+    * min/max(size(vecCol)) over the whole frame — one extra scan, the
+    * right trade for a one-time build or a suspect shard. (The IVF
+    * append and apply paths validate every row from their change-set
+    * census instead, at no extra job.) */
   private[sim] def requireVecDim(df: DataFrame, vecCol: String, dim: Int,
       where: String, strict: Boolean = false): Unit = {
     require(df.schema(vecCol).dataType
@@ -298,15 +296,24 @@ object IvfCosine {
 
   /** Append a delta shard of NEW documents to a `saveIndex`ed index IN
     * PLACE: the saved quantizer is reloaded (bit-exact), ONLY the delta
-    * is assigned (map-side, centroid literals — the corpus at rest is
-    * never re-scored or rewritten), and the new rows append into the
-    * same cell-partitioned parquet layout — the daily-shard ingest path
-    * that keeps a 100 TB index build-once. The delta's columns must
-    * match the names the index was built with (validated against meta,
-    * like loadIndex). Additions ONLY: re-embedded or deleted documents
-    * go through the SnapshotDiff merge-on-read path (resolveLatest,
-    * AnnMaintenanceSpec) and a compaction rewrite — an in-place append
+    * is assigned (the `nearest_centroid` kernel against the recorded
+    * centroids — the corpus at rest is never re-scored or rewritten),
+    * and the new rows append into the same cell-partitioned parquet
+    * layout — the daily-shard ingest path that keeps a 100 TB index
+    * build-once. The delta's columns must match the names the index was
+    * built with (validated against meta, like loadIndex). Additions
+    * ONLY: re-embedded or deleted documents go through [[applyChanges]]
+    * (or the SnapshotDiff merge-on-read path) — an in-place append
     * cannot retract rows.
+    *
+    * Jobs: the delta is assigned and materialized ONCE (one
+    * localCheckpoint job, [[stageChanges]]); that job's own census gives
+    * the row count, the touched cells and buckets and the min/max vector
+    * length, so EVERY row's dimension is validated before any write.
+    * Then the assigned and sidecar appends run overlapped, each with
+    * its fan-out sized to the cells (buckets) the delta touches — one
+    * new file per touched directory, two jobs per write (the keyed
+    * exchange and the write).
     *
     * Commit protocol (ADVICE r12): the delta count is taken BEFORE the
     * write, the parquet append commits, and only then does
@@ -314,11 +321,8 @@ object IvfCosine {
     * point leaves a DETECTABLE state — partial part files (actual <
     * recorded + delta) or committed parquet with stale meta (actual >
     * recorded) — and loadIndex's row-count verification refuses both
-    * instead of silently serving a half-appended index.
-    * `strict = true` additionally validates EVERY delta row's vector
-    * dimension (one extra scan of the delta) instead of one probe row. */
-  def appendToIndex(path: String, delta: DataFrame,
-      strict: Boolean = false): Unit = {
+    * instead of silently serving a half-appended index. */
+  def appendToIndex(path: String, delta: DataFrame): Unit = {
     val (meta, sections) = graft.ml.WeightsIO.load(s"$path/centroids.json")
     graft.ml.WeightsIO.requireFamily(meta, "ivf_index",
       s"$path/centroids.json")
@@ -326,77 +330,39 @@ object IvfCosine {
     Seq(idCol, vecCol).foreach(c => require(delta.columns.contains(c),
       s"delta is missing column $c (the index at $path was built " +
         s"with idCol=$idCol, vecCol=$vecCol)"))
-    val (nlist, dim) = (meta("nlist").toInt, meta("dim").toInt)
-    val cents = Array.tabulate(nlist) { i =>
-      val c = sections(s"c$i")
-      graft.ml.WeightsIO.requireLen(s"c$i", c, dim)
-      c
-    }
-    val spark = delta.sparkSession
-    // DATA-form assignment (centroids broadcast as a frame, plan size
-    // independent of nlist — bit-identical to the literal path per
-    // DataFormAnnSpec): a corpus-scaled grid (bounded-cell indexes,
-    // ~125 rows/cell) would blow the literal path's O(nlist) Catalyst
-    // tree out of codegen exactly where appends run daily
-    val assigned = assignByCentroidsDf(delta, idCol, vecCol,
-      centroidsDf(spark, cents))
-      .select(col(idCol), col(vecCol), col("cell"))
-    // cache so the pre-write count, the written rows, the sidecar rows
-    // and the new-cell list are the same materialization (the delta is
-    // shard-sized by definition)
-    assigned.cache()
-    val (deltaRows, deltaCells) =
-      try {
-        // ONE aggregate job yields both the pre-write commit count and
-        // the touched-cell set (bounded by nlist) — count() plus a
-        // separate distinct-collect was two scheduler round-trips over
-        // the same cached delta for no extra information. The
-        // wrong-dim fail-fast probe overlaps with it (guide §2.6):
-        // both are read-only pre-write jobs, and the overlap completes
-        // (propagating the probe's failure, listed first) BEFORE any
-        // write — an invalid shard still never reaches the parquet
-        // append
-        @volatile var perCellV: Array[(Int, Long)] = null
-        graft.operators.ParallelInput.overlap(Seq(
-          () => requireVecDim(delta, vecCol, dim, "appendToIndex delta",
-            strict),
-          () => perCellV = assigned.groupBy(col("cell")).count().collect()
-            .map(r => r.getInt(0) -> r.getLong(1))))
-        val perCell = perCellV
-        val n = perCell.map(_._2).sum
-        // the assigned append and the sidecar append write DISJOINT
-        // trees from the same CACHED delta — overlap them (guide §2.6)
-        // instead of paying two sequential write-commit tails; the
-        // commit protocol is unchanged (count above taken before any
-        // write, meta republished after both)
-        graft.operators.ParallelInput.overlap(Seq(
-          () => repartForWrite(assigned, "cell", nlist) // 1 new file/cell
-            .write.partitionBy("cell").mode("append")
-            .parquet(s"$path/assigned"),
-          // sidecar append: the same delta-sized rows, bucketed by id —
-          // the corpus-at-rest sidecar files are never touched
-          // (repartition on bucket: one new file per touched bucket)
-          () => meta.get("buckets").map(_.toInt).foreach { b =>
-            repartForWrite(
-              assigned.select(col(idCol), col("cell"), bucketOf(idCol, b)),
-              "bucket", b)
-              .write.partitionBy("bucket").mode("append")
-              .parquet(s"$path/idmap")
-          }))
-        (n, perCell.map(_._1).toSet)
-      } finally assigned.unpersist()
+    val cents = recordedCentroids(meta, sections)
+    val buckets = meta.get("buckets").map(_.toInt)
+    val (staged, census) = stageChanges(delta, None, idCol, vecCol, cents,
+      buckets, "appendToIndex delta")
+    if (census.rows == 0) return
+    // the assigned append and the sidecar append write DISJOINT trees
+    // from the same materialized delta, so they run overlapped; the
+    // commit protocol is unchanged (count taken before any write, meta
+    // republished after both)
+    graft.operators.ParallelInput.overlap(Seq(
+      () => repartForWrite(staged.select(col(idCol), col(vecCol),
+          col("cell")), "cell", census.cells.size)
+        .write.partitionBy("cell").mode("append")
+        .parquet(s"$path/assigned"),
+      // sidecar append: the same delta-sized rows, bucketed by id — the
+      // corpus-at-rest sidecar files are never touched
+      () => if (buckets.nonEmpty)
+        repartForWrite(staged.select(col(idCol), col("cell"),
+            col("bucket")), "bucket", census.buckets.size)
+          .write.partitionBy("bucket").mode("append")
+          .parquet(s"$path/idmap")))
     // cells CREATED by this append get a marker at the new epoch;
     // cells merely appended into keep theirs (append never destroys a
     // marker — partial-append detection is the row count's job)
     val epochMeta = parseCellEpochs(meta).map { known =>
       val epoch = meta.get("epoch").map(_.toLong).getOrElse(1L) + 1
-      val newCells = deltaCells.diff(known.keySet)
-      writeEpochMarkers(spark, path, newCells, epoch)
+      val newCells = census.cells.toSet.diff(known.keySet)
+      writeEpochMarkers(delta.sparkSession, path, newCells, epoch)
       Map("epoch" -> epoch.toString,
         "cellEpochs" -> fmtCellEpochs(
           known ++ newCells.map(_ -> epoch)))
     }.getOrElse(Map.empty)
-    val rows = meta.get("rows").map(_.toLong).getOrElse(0L) + deltaRows
+    val rows = meta.get("rows").map(_.toLong).getOrElse(0L) + census.rows
     graft.ml.WeightsIO.save(s"$path/centroids.json",
       meta ++ epochMeta + ("rows" -> rows.toString), sections.toSeq)
   }
@@ -410,25 +376,36 @@ object IvfCosine {
     * right tool for pure additions — it writes the delta without
     * touching any existing file).
     *
-    * Mechanics: the affected ids' OLD cells come from the id→cell
-    * SIDECAR (`$path/idmap`, bucketed by id hash) — the lookup reads
-    * only the delta's bucket directories (static partition pruning),
-    * so it is DELTA-proportional, not index-proportional (an index
-    * saved before the sidecar existed falls back to one column-pruned
-    * (id, cell) scan of the assigned tree with the delta broadcast).
-    * The upserts assign map-side against the reloaded quantizer to
-    * find their NEW cells (a re-embedded vector may move cells — both
-    * sides are affected); the union of those cell ids — bounded by
-    * nlist, collected as a scalar list — selects the partitions to
-    * rewrite. The replacement content (surviving rows of affected
-    * cells + re-assigned upserts) is written with DYNAMIC partition
-    * overwrite, so parquet replaces exactly the affected `cell=`
-    * directories; a cell emptied by deletion (dynamic overwrite only
-    * touches partitions present in the output) is removed explicitly.
-    * Reads are partition-pruned to the affected cells; every other
-    * cell's files are untouched. The sidecar's affected BUCKET
-    * partitions rewrite the same way (survivors + new assignments,
-    * dynamic overwrite — also delta-proportional).
+    * Mechanics, in a fixed handful of jobs whatever the delta size:
+    *
+    *   1. ONE change-set frame (id, vector, new cell, bucket, upsert
+    *      flag) — upserts assigned by the `nearest_centroid` kernel,
+    *      deletes with null vector and cell — is materialized by one
+    *      localCheckpoint job whose census yields the affected buckets,
+    *      the upserts' new cells and their dimension bounds
+    *      ([[stageChanges]]); a wrong-dimension upsert fails here,
+    *      before any write.
+    *   2. The affected ids' OLD cells come from the id→cell SIDECAR
+    *      ([[sidecarOldCells]]: the census's buckets statically prune
+    *      the sidecar to the delta's bucket directories, so the lookup
+    *      is DELTA-proportional, not index-proportional); the cell set
+    *      comes back as the lookup job's census. An index saved before
+    *      the sidecar existed falls back to one column-pruned (id, cell)
+    *      scan of the assigned tree with the delta broadcast.
+    *   3. Old ∪ new cells select the partitions to rewrite: surviving
+    *      rows of the affected cells + the re-assigned upserts, written
+    *      with DYNAMIC partition overwrite, so parquet replaces exactly
+    *      the affected `cell=` directories. The sidecar's affected
+    *      BUCKET partitions rewrite the same way, overlapped with it.
+    *      Each rewrite reads its own tree partition-pruned and writes
+    *      through a staging directory that replaces the partitions only
+    *      at job commit, after every read of the old files — so no
+    *      checkpoint is needed to sever the self-read. The rewrite's
+    *      fan-out is the number of affected cells (buckets), and the
+    *      write job's own census reports which cells (buckets) are
+    *      still present: a cell emptied by deletion (dynamic overwrite
+    *      only touches partitions present in the output) is removed
+    *      explicitly.
     *
     * Commit detection: each rewritten cell directory gets a fresh
     * `_epoch_<e>` marker and the meta republishes the per-cell epoch
@@ -449,137 +426,41 @@ object IvfCosine {
         s"with idCol=$idCol, vecCol=$vecCol)"))
     require(deleteIds.columns.contains(idCol),
       s"deleteIds is missing column $idCol")
-    val (nlist, dim) = (meta("nlist").toInt, meta("dim").toInt)
-    val cents = Array.tabulate(nlist) { i =>
-      val c = sections(s"c$i")
-      graft.ml.WeightsIO.requireLen(s"c$i", c, dim)
-      c
-    }
-    requireVecDim(upserts, vecCol, dim, "applyChanges upserts")
-    val assigned = spark.read.parquet(s"$path/assigned")
+    val cents = recordedCentroids(meta, sections)
     val buckets = meta.get("buckets").map(_.toInt)
-    // delta-sized and consumed FOUR times (bucket list + three
-    // broadcast joins): localCheckpoint so each consumer reads the
-    // materialized rows instead of re-planning and re-running the
-    // union+distinct shuffle per broadcast build. The two checkpoints
-    // are INDEPENDENT materializations (ids-union vs upsert
-    // assignment) — overlap them (guide §2.6) instead of paying two
-    // sequential delta-sized scheduling round-trips.
-    @volatile var affectedIds: DataFrame = null
-    @volatile var newAssigned: DataFrame = null
-    graft.operators.ParallelInput.overlap(Seq(
-      () => affectedIds = upserts.select(col(idCol))
-        .unionByName(deleteIds.select(col(idCol))).distinct()
-        .localCheckpoint(),
-      () => newAssigned =
-        assignByCentroidsDf(upserts, idCol, vecCol, // data form: see append
-          centroidsDf(spark, cents))
-          .select(col(idCol), col(vecCol), col("cell"))
-          .localCheckpoint())) // 2 consumers (cell list + rewrite)
-    // the delta's bucket list (bounded by the bucket count, shared by
-    // the old-cell lookup and the sidecar rewrite — computed ONCE) and
-    // the NEW-cell census are independent collects over the two
-    // checkpoints — overlap them; the old-cell lookup below then only
-    // unions the PRE-COLLECTED new cells driver-side instead of paying
-    // a union+distinct exchange per cells query
-    @volatile var affectedBuckets = Option.empty[Seq[Int]]
-    @volatile var newCells: Array[Int] = Array.empty
-    graft.operators.ParallelInput.overlap(Seq(
-      () => affectedBuckets = buckets.map(b =>
-        affectedIds.select(bucketOf(idCol, b))
-          .distinct().collect().map(_.getInt(0)).toSeq),
-      () => newCells = newAssigned.select(col("cell"))
-        .distinct().collect().map(_.getInt(0))))
+    val (changes, census) = stageChanges(upserts, Some(deleteIds), idCol,
+      vecCol, cents, buckets, "applyChanges upserts")
+    if (census.rows == 0) return
+    val affectedIds = changes.select(col(idCol))
+    val newRows = changes.where(col("__up"))
     // old cells: bucket-pruned sidecar lookup (delta-proportional);
     // legacy artifacts without a sidecar fall back to one column-pruned
     // (id, cell) scan of the assigned tree with the delta broadcast
-    val oldCells = (buckets, affectedBuckets) match {
-      case (Some(_), Some(bks)) =>
-        spark.read.parquet(s"$path/idmap")
-          .where(col("bucket").isin(bks: _*)) // static partition pruning
-          .join(broadcast(affectedIds), Seq(idCol))
-          .select(col("cell"))
-      case _ =>
-        assigned.join(broadcast(affectedIds), Seq(idCol))
-          .select(col("cell"))
+    val oldPairs = buckets match {
+      case Some(b) => sidecarOldCells(spark, path, affectedIds, idCol, b,
+        Some(census.buckets))
+      case None => graft.operators.ParquetMeta.read(spark,
+          s"$path/assigned", Seq("cell"))
+        .join(broadcast(affectedIds), Seq(idCol))
+        .select(col(idCol), col("cell"))
     }
-    val cells = (oldCells.distinct().collect().map(_.getInt(0))
-      ++ newCells).distinct.toSeq // bounded by nlist
+    val cells = (cellCensus(oldPairs, "cell") ++ census.cells)
+      .distinct.sorted // bounded by nlist
     // the cell rewrite and the sidecar rewrite touch DISJOINT trees
-    // ($path/assigned vs $path/idmap) and read only checkpointed
-    // delta-sized frames plus their own tree — overlap them
-    // (guide §2.6) instead of paying two sequential
-    // checkpoint+write+commit tails. Crash detection is unchanged: the
-    // epoch markers and the meta republish still happen strictly AFTER
-    // both rewrites, so a crash anywhere before that leaves at least
-    // one rewritten cell whose marker disagrees with the recorded
-    // epoch (or a sidecar/assigned row-count mismatch).
+    // ($path/assigned vs $path/idmap), and the lookup above has finished
+    // reading the sidecar, so they run overlapped. Crash detection is
+    // unchanged: the epoch markers and the meta republish still happen
+    // strictly AFTER both rewrites, so a crash anywhere before that
+    // leaves at least one rewritten cell whose marker disagrees with the
+    // recorded epoch (or a sidecar/assigned row-count mismatch).
     @volatile var presentCells = Set.empty[Int]
-    val rewriteCells: () => Unit = () => if (cells.nonEmpty) {
-      val survivors = assigned
-        .where(col("cell").isin(cells: _*)) // static partition pruning
-        .join(broadcast(affectedIds), Seq(idCol), "left_anti")
-        .select(col(idCol), col(vecCol), col("cell"))
-      val replacement = survivors
-        .unionByName(newAssigned.select(col(idCol), col(vecCol),
-          col("cell")))
-        .localCheckpoint() // sever self-read-overwrite lineage
-      // the overwrite and the present-cell census both consume the
-      // CHECKPOINTED replacement (no shared uncached lineage) and the
-      // census reads no output of the write — overlap them (guide
-      // §2.6) instead of paying two sequential round-trips; the
-      // emptied-cell deletes below still run strictly after both
-      graft.operators.ParallelInput.overlap(Seq(
-        () => repartForWrite(replacement, "cell", cells.size) // 1 file/cell
-          .write.partitionBy("cell").mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .parquet(s"$path/assigned"),
-        // dynamic overwrite replaces only partitions PRESENT in the
-        // output — a cell emptied by deletion keeps its stale files
-        // unless removed explicitly
-        () => presentCells = replacement.select(col("cell")).distinct()
-          .collect().map(_.getInt(0)).toSet))
-      val hconf = spark.sparkContext.hadoopConfiguration
-      cells.filterNot(presentCells).foreach { c =>
-        val p = new org.apache.hadoop.fs.Path(s"$path/assigned/cell=$c")
-        val fs = p.getFileSystem(hconf)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
-    }
-    // sidecar maintenance: rewrite ONLY the delta's bucket partitions
-    // (survivors of affected buckets + the new assignments), mirroring
-    // the cell rewrite — also delta-proportional
-    val rewriteSidecar: () => Unit = () => buckets.foreach { b =>
-      val side = spark.read.parquet(s"$path/idmap")
-      val affBks = affectedBuckets.getOrElse(Nil)
-      if (affBks.nonEmpty) {
-        val sideSurvivors = side
-          .where(col("bucket").isin(affBks: _*))
-          .join(broadcast(affectedIds), Seq(idCol), "left_anti")
-          .select(col(idCol), col("cell"), col("bucket"))
-        val sideReplacement = sideSurvivors
-          .unionByName(newAssigned.select(col(idCol), col("cell"),
-            bucketOf(idCol, b)))
-          .localCheckpoint() // sever self-read-overwrite lineage
-        // same write + census overlap as the cell rewrite (both read
-        // only the checkpointed sideReplacement)
-        @volatile var presentBuckets = Set.empty[Int]
-        graft.operators.ParallelInput.overlap(Seq(
-          () => repartForWrite(sideReplacement, "bucket", affBks.size)
-            .write.partitionBy("bucket").mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(s"$path/idmap"),
-          () => presentBuckets = sideReplacement.select(col("bucket"))
-            .distinct().collect().map(_.getInt(0)).toSet))
-        val hconf = spark.sparkContext.hadoopConfiguration
-        affBks.filterNot(presentBuckets).foreach { bk =>
-          val p = new org.apache.hadoop.fs.Path(s"$path/idmap/bucket=$bk")
-          val fs = p.getFileSystem(hconf)
-          if (fs.exists(p)) fs.delete(p, true)
-        }
-      }
-    }
-    graft.operators.ParallelInput.overlap(Seq(rewriteCells, rewriteSidecar))
+    graft.operators.ParallelInput.overlap(Seq(
+      () => presentCells = rewritePartitions(spark, s"$path/assigned",
+        "cell", cells, affectedIds, idCol,
+        newRows.select(col(idCol), col(vecCol), col("cell"))),
+      () => buckets.foreach(_ => rewritePartitions(spark, s"$path/idmap",
+        "bucket", census.buckets, affectedIds, idCol,
+        newRows.select(col(idCol), col("cell"), col("bucket"))))))
     // commit markers AFTER the rewrites, BEFORE the meta republish: any
     // crash before the meta save leaves marker/meta disagreement on at
     // least one rewritten cell
@@ -593,8 +474,7 @@ object IvfCosine {
           known -- cells ++ presentCells.map(_ -> epoch)))
     }.getOrElse(Map.empty)
     // the two verification counts are footer-metadata-only — driver-side
-    // footer reads over disjoint bounded trees, overlapped (previously
-    // two distributed count() jobs)
+    // footer reads over disjoint bounded trees, overlapped
     @volatile var rows = 0L
     @volatile var sideRows = Option.empty[Long]
     graft.operators.ParallelInput.overlap(Seq(
@@ -612,18 +492,125 @@ object IvfCosine {
       meta ++ epochMeta + ("rows" -> rows.toString), sections.toSeq)
   }
 
+  /** What a materialized change set touches, from its own job. */
+  private case class Census(rows: Long, cells: Seq[Int], buckets: Seq[Int])
+
+  /** Assign and MATERIALIZE a change set once: (idCol, vecCol, cell,
+    * [bucket], __up) — `upserts` with their cell from the
+    * `nearest_centroid` kernel, `deletes` (ids only) with null vector and
+    * cell. The one localCheckpoint job also takes the census as an
+    * observation (no job of its own): row count, touched cells and
+    * buckets, and the upserts' null-vector count and min/max vector
+    * length — so every upsert's dimension is validated before any write,
+    * and a wrong-dimension row gets a null cell instead of failing
+    * inside the kernel. Delta-sized by definition. */
+  private def stageChanges(upserts: DataFrame, deletes: Option[DataFrame],
+      idCol: String, vecCol: String, cents: Array[Array[Double]],
+      buckets: Option[Int], where: String): (DataFrame, Census) = {
+    val dim = cents.head.length
+    val vec = col(vecCol)
+    val ups = upserts.select(col(idCol), vec,
+      when(size(vec) === dim, NearestCentroid(vec, cents)).as("cell"),
+      lit(true).as("__up"))
+    val all = deletes.fold(ups)(d => ups.unionByName(d.select(col(idCol),
+      lit(null).cast(upserts.schema(vecCol).dataType).as(vecCol),
+      lit(null).cast("int").as("cell"), lit(false).as("__up"))))
+    val withBucket = buckets.fold(all)(b =>
+      all.withColumn("bucket", bucketOf(idCol, b)))
+    val upVec = col("__up") && vec.isNotNull
+    val obs = org.apache.spark.sql.Observation()
+    val metrics = Seq(count(lit(1)).as("rows"),
+      collect_set(col("cell")).as("cells"),
+      count(when(col("__up") && vec.isNull, 1)).as("nulls"),
+      min(when(upVec, size(vec))).as("lo"),
+      max(when(upVec, size(vec))).as("hi")) ++
+      buckets.map(_ => collect_set(col("bucket")).as("buckets"))
+    val staged = withBucket.observe(obs, metrics.head, metrics.tail: _*)
+      .localCheckpoint()
+    val m = obs.get
+    val nulls = m("nulls").asInstanceOf[Long]
+    require(nulls == 0, s"$where holds $nulls null vectors in $vecCol")
+    Option(m("lo")).foreach { lo =>
+      require(lo == dim && m("hi") == dim,
+        s"$where holds vectors of dim $lo..${m("hi")} in $vecCol, but " +
+          s"the index quantizer is dim-$dim")
+    }
+    def ints(k: String) = m.get(k).map(_.asInstanceOf[Seq[Int]].sorted)
+      .getOrElse(Nil)
+    (staged, Census(m("rows").asInstanceOf[Long], ints("cells"),
+      ints("buckets")))
+  }
+
+  /** Rewrite the `key=` partitions `keys` of the tree at `root`: the
+    * surviving rows (those partitions, partition-pruned, minus
+    * `affectedIds` by a broadcast anti-join) plus `added`, by dynamic
+    * partition overwrite with one write task per key at most. Returns
+    * the keys still present, taken as the write job's own census;
+    * partitions left empty are deleted, since dynamic overwrite only
+    * replaces partitions present in the output. */
+  private def rewritePartitions(spark: org.apache.spark.sql.SparkSession,
+      root: String, key: String, keys: Seq[Int], affectedIds: DataFrame,
+      idCol: String, added: DataFrame): Set[Int] =
+    if (keys.isEmpty) Set.empty
+    else {
+      val survivors = graft.operators.ParquetMeta.read(spark, root, Seq(key))
+        .where(col(key).isin(keys: _*)) // static partition pruning
+        .join(broadcast(affectedIds), Seq(idCol), "left_anti")
+      val obs = org.apache.spark.sql.Observation()
+      repartForWrite(survivors.select(added.columns.map(col): _*)
+          .unionByName(added)
+          .observe(obs, collect_set(col(key)).as("present")),
+        key, keys.size)
+        .write.partitionBy(key).mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(root)
+      val present = obs.get("present").asInstanceOf[Seq[Int]].toSet
+      val hconf = spark.sparkContext.hadoopConfiguration
+      keys.filterNot(present).foreach { k =>
+        val p = new org.apache.hadoop.fs.Path(s"$root/$key=$k")
+        val fs = p.getFileSystem(hconf)
+        if (fs.exists(p)) fs.delete(p, true)
+      }
+      present
+    }
+
+  /** The distinct values of the int column `c` of a delta-sized frame,
+    * taken as an observation on one `noop` job (no exchange, no job of
+    * its own for the distinct). */
+  private def cellCensus(df: DataFrame, c: String): Seq[Int] = {
+    val obs = org.apache.spark.sql.Observation()
+    df.observe(obs, collect_set(col(c)).as("set"))
+      .write.format("noop").mode("overwrite").save()
+    obs.get("set").asInstanceOf[Seq[Int]]
+  }
+
+  /** The recorded quantizer of an index meta (shape-validated). */
+  private def recordedCentroids(meta: Map[String, String],
+      sections: Map[String, Array[Double]]): Array[Array[Double]] = {
+    val (nlist, dim) = (meta("nlist").toInt, meta("dim").toInt)
+    Array.tabulate(nlist) { i =>
+      val c = sections(s"c$i")
+      graft.ml.WeightsIO.requireLen(s"c$i", c, dim)
+      c
+    }
+  }
+
   /** The delta-proportional old-cell lookup over the id→cell sidecar:
-    * the affected ids' buckets (a delta-sized distinct, bounded by the
-    * bucket count) statically prune the sidecar scan to the delta's
-    * bucket directories, and the delta broadcasts into the equi-join —
-    * no index-proportional work anywhere (PlanSpec pins the
-    * PartitionFilters on the idmap scan). Returns (idCol, cell). */
+    * the affected ids' buckets statically prune the sidecar scan to the
+    * delta's bucket directories, and the delta broadcasts into the
+    * equi-join — no index-proportional work anywhere (PlanSpec pins the
+    * PartitionFilters on the idmap scan). `bucketIds` passes the
+    * buckets when the caller already has them (applyChanges takes them
+    * from its change-set census); otherwise they are one delta-sized
+    * distinct, bounded by the bucket count. The sidecar is read with
+    * its footer schema (no inference job). Returns (idCol, cell). */
   private[graft] def sidecarOldCells(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      affectedIds: DataFrame, idCol: String, buckets: Int): DataFrame = {
-    val bks = affectedIds.select(bucketOf(idCol, buckets))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    spark.read.parquet(s"$path/idmap")
+      affectedIds: DataFrame, idCol: String, buckets: Int,
+      bucketIds: Option[Seq[Int]] = None): DataFrame = {
+    val bks = bucketIds.getOrElse(affectedIds.select(bucketOf(idCol, buckets))
+      .distinct().collect().map(_.getInt(0)).toSeq)
+    graft.operators.ParquetMeta.read(spark, s"$path/idmap", Seq("bucket"))
       .where(col("bucket").isin(bks: _*)) // static partition pruning
       .join(broadcast(affectedIds), Seq(idCol))
       .select(col(idCol), col("cell"))
@@ -811,22 +798,14 @@ object IvfCosine {
     }
 
   /** Cell assignment against FIXED centroids: per row, argmin squared
-    * euclidean distance (ties to the lowest cell id), as a pure codegen
-    * projection — d² = v·v − 2·v·c + c·c with the VecDot kernel and the
-    * centroid self-dots precomputed as literals. */
+    * euclidean distance (ties to the lowest cell id), as one codegen'd
+    * projection — the `nearest_centroid` kernel, d² = v·v − 2·v·c + c·c
+    * with VecDot's fold and the centroid matrix as one reference object
+    * (plan and generated class independent of nlist). */
   def assignByCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: Array[Array[Double]]): Index = {
-    val vv = Similarity.dot(col(vecCol), col(vecCol))
-    val dists = centroids.zipWithIndex.map { case (c, i) =>
-      val cc = c.map(x => x * x).sum
-      val d2 = vv - lit(2.0) * Similarity.dot(col(vecCol),
-        typedlit(c)) + lit(cc)
-      struct(d2.as("d2"), lit(i).as("cell"))
-    }
-    val assigned = corpus.select(col(idCol), col(vecCol),
-      array_min(array(dists: _*)).getField("cell").as("cell"))
-    Index(centroids, assigned)
-  }
+      centroids: Array[Array[Double]]): Index =
+    Index(centroids, corpus.select(col(idCol), col(vecCol),
+      NearestCentroid(col(vecCol), centroids).as("cell")))
 
   /** The pinned/trained centroid grid as DATA — (cell int, cvec
     * array<double>) — for the data-form assignment path. */

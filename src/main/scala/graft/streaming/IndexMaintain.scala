@@ -68,7 +68,8 @@ object IndexMaintain {
       .collect().map(_.getInt(0)).toSeq // bounded by nlist
     // the corpus-at-rest slice: partition-pruned to the batch's cells,
     // then the delta-sized id set broadcast in
-    val oldRows = spark.read.parquet(s"$indexPath/assigned")
+    val oldRows = graft.operators.ParquetMeta.read(spark,
+        s"$indexPath/assigned", Seq("cell"))
       .where(col("cell").isin(oldCells: _*))
       .join(broadcast(ids), Seq(idCol))
       .select(col(idCol), col(vecCol))

@@ -4,10 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch diagnostics for the connected-components round shape: print
-  * the physical plan of ONE large-star/small-star contraction round as
-  * [[graft.dedup.DupClusters.connectedComponents]] spells it, so the
-  * exchange count / reuse behavior per round is visible (dev aid; not
-  * part of the driver contract). */
+  * the physical plan of ONE large-star/small-star contraction round in
+  * the DataFrame spelling that [[graft.dedup.DupClusters.connectedComponents]]
+  * used before its loop moved to pair RDDs. The probe keeps that old
+  * round on purpose: its plan shows the exchange count and the
+  * duplicated min-join subtrees that the RDD rewrite removed (the RDD
+  * round has no Catalyst plan to print). Dev aid; not part of the
+  * driver contract. */
 object CcProbe {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
@@ -20,7 +23,7 @@ object CcProbe {
     import spark.implicits._
     val e = Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L))
       .toDF("lo", "hi").localCheckpoint(eager = true)
-    // one round, exactly as connectedComponents spells it
+    // one round in the former DataFrame spelling (see the object doc)
     val sym = e.union(e.select(col("hi").as("lo"), col("lo").as("hi")))
       .toDF("u", "v")
     val mins = sym.groupBy(col("u")).agg(min(col("v")).as("__nmin"))

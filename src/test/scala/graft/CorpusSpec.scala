@@ -178,6 +178,40 @@ class CorpusSpec extends AnyFunSuite {
     assert(got == expect)
   }
 
+  test("dup clusters id contract: a non-integral id column is refused " +
+    "at the call, naming the column and its type") {
+    val pairs = Seq(("a", "b"), ("b", "c")).toDF("id_a", "id_b")
+    for (run <- Seq[() => Unit](
+        () => DupClusters.minLabelClusters(pairs, "id_a", "id_b"),
+        () => DupClusters.connectedComponents(pairs, "id_a", "id_b"))) {
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("id column id_a is STRING") &&
+        e.getMessage.contains("integral"), e.getMessage)
+    }
+    // int ids stay accepted, and come back as ints
+    val ints = Seq((1, 2), (2, 3)).toDF("id_a", "id_b")
+    val out = DupClusters.connectedComponents(ints, "id_a", "id_b")
+    assert(out.schema("cluster").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    assert(out.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap ==
+      Map(1 -> 1, 2 -> 1, 3 -> 1))
+  }
+
+  test("dup clusters id contract: a null id fails the first job instead " +
+    "of joining a spurious cluster 0") {
+    val pairs = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (null, 3L),
+      (4L, 5L)).toDF("id_a", "id_b")
+    def messages(t: Throwable) = Iterator.iterate(t)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    val e1 = intercept[Exception](DupClusters.minLabelClusters(pairs,
+      "id_a", "id_b").collect())
+    assert(messages(e1).contains("minLabelClusters: null id"), messages(e1))
+    val e2 = intercept[Exception](DupClusters.connectedComponents(pairs,
+      "id_a", "id_b").collect())
+    assert(messages(e2).contains("connectedComponents: null id"),
+      messages(e2))
+  }
+
   test("heavy hitters: Misra-Gries candidates + exact confirm equal " +
     "brute force under sketch saturation and cross-partition merges") {
     // skewed stream: token t_i appears (i+1)^2 times, 40 types, so

@@ -448,7 +448,7 @@ class ModelPersistenceSpec extends AnyFunSuite {
     val mixed = vecs(100 until 104).unionByName(
       Seq((104L, Array.fill(dim + 2)(0.1f))).toDF("vec_id", "embedding"))
     val e2 = intercept[IllegalArgumentException] {
-      IvfCosine.appendToIndex(p, mixed, strict = true)
+      IvfCosine.appendToIndex(p, mixed)
     }
     assert(e2.getMessage.contains("dim"),
       s"strict append must name the dimension range, got: ${e2.getMessage}")

@@ -821,8 +821,8 @@ class ExtensionsRegistrationSpec extends AnyFunSuite {
     // with a builder that produces a well-typed expression
     assert(GraftFunctions.definitions.map(_._1.funcName).sorted ==
       Seq("exact_percentiles", "fast_round", "inv_norm_cdf", "median_mad",
-        "minhash_sigs", "nfc_normalize", "sorted_intersect_size",
-        "topk_by", "vec_dot"))
+        "minhash_sigs", "nearest_centroid", "nfc_normalize",
+        "sorted_intersect_size", "topk_by", "vec_dot"))
     val ext = new GraftExtensions
     val se = new org.apache.spark.sql.SparkSessionExtensions
     ext(se)  // must not throw; injection is covered by register() above
