@@ -275,8 +275,9 @@ object QueriesSim {
     // BOUNDED CELLS (round 14 — the q_umap_ivf treatment applied to
     // the lifecycle family): nlist scales with the corpus
     // (max(16, ceil(N/125)) from the FULL embeddings count, same at
-    // gate scales where it stays 16), assignment/search ride the
-    // data-form paths (plan size nlist-independent), and the oracle
+    // gate scales where it stays 16), the build assigns through the
+    // nearest_centroid kernel and the search routes through the
+    // data-form path (both plans nlist-independent), and the oracle
     // derives the identical md5 grid from count(*) in SQL — without
     // this the fixed 16-cell grid makes the gated SEARCH quadratic in
     // corpus size (12.5k-row cells at sf10 → a 345M-row rank shuffle).
@@ -292,13 +293,11 @@ object QueriesSim {
       require(nlist <= 65536, s"q_ivf_append nlist=$nlist exceeds the " +
         "oracle's 65536-cell enumeration cap")
       val grid = IvfCosine.pinnedCentroids(nlist, DIM)
-      val cents = IvfCosine.centroidsDf(s, grid)
       val base = all.where(col("vec_id") % 3 =!= 0)
       val delta = all.where(col("vec_id") % 3 === 0)
       val path = qiaSite.fresh().resolve("idx").toString
-      IvfCosine.saveIndex(path, IvfCosine.Index(grid,
-        IvfCosine.assignByCentroidsDf(base, "vec_id", "embedding", cents)
-          .select(col("vec_id"), col("embedding"), col("cell"))),
+      IvfCosine.saveIndex(path,
+        IvfCosine.assignByCentroids(base, "vec_id", "embedding", grid),
         "vec_id", "embedding")
       IvfCosine.appendToIndex(path,
         delta.select(col("vec_id"), col("embedding")))
@@ -326,7 +325,7 @@ object QueriesSim {
     // stale row, missed delete, or wrong-cell rewrite breaks the hash.
     // BOUNDED CELLS (round 14): grid sized from the FULL embeddings
     // count — the same derivation (and at gate scales the same 16-cell
-    // grid) as q_ivf_append above; data-form assignment/search.
+    // grid) as q_ivf_append above; kernel assignment, data-form search.
     "q_index_maint" -> ((s, dir) => {
       val all = emb(s, dir)
       // footer-derived corpus count, as in q_ivf_append above
@@ -336,7 +335,6 @@ object QueriesSim {
       require(nlist <= 65536, s"q_index_maint nlist=$nlist exceeds " +
         "the oracle's 65536-cell enumeration cap")
       val grid = IvfCosine.pinnedCentroids(nlist, DIM)
-      val cents = IvfCosine.centroidsDf(s, grid)
       val oldSnap = all.where(col("vec_id") % 5 =!= 0)
         .select(col("vec_id"), col("embedding"))
       val newSnap = all.where(col("vec_id") % 13 =!= 0)
@@ -352,9 +350,8 @@ object QueriesSim {
       // both (they read the saved meta and the diff)
       @volatile var d: DataFrame = null
       graft.operators.ParallelInput.overlap(Seq(
-        () => IvfCosine.saveIndex(path, IvfCosine.Index(grid,
-          IvfCosine.assignByCentroidsDf(oldSnap, "vec_id", "embedding",
-            cents).select(col("vec_id"), col("embedding"), col("cell"))),
+        () => IvfCosine.saveIndex(path,
+          IvfCosine.assignByCentroids(oldSnap, "vec_id", "embedding", grid),
           "vec_id", "embedding"),
         () => d = graft.sources.SnapshotDiff.diff(oldSnap, newSnap,
           "vec_id", md5(to_json(struct(col("embedding")))))
@@ -486,14 +483,13 @@ object QueriesSim {
     // SemDeDup (arXiv:2303.09540): pinned-centroid clustering + within-
     // cell cosine pruning, keep-lowest-centroid-sim priority. The full
     // semantic-dedup decision — assignment, priority, prune — under a
-    // bit-for-bit oracle, through the DATA-form centroid path
-    // (broadcast-joined (cell, cvec) frame — the shape that survives
-    // the paper's 50k-cluster nlist); literal path pinned equal in
-    // SemDedupSpec.
+    // bit-for-bit oracle; the assignment is the nearest_centroid
+    // kernel, whose plan holds the grid as one node at any nlist (the
+    // paper's 50k clusters included).
     "q_semdedup" -> ((s, dir) => {
       SemDedup.dedup(emb(s, dir), "vec_id", "embedding",
-        IvfCosine.centroidsDf(s, IvfCosine.pinnedCentroids(16, DIM)),
-        threshold = thr, maxCellSize = 10000)
+        IvfCosine.pinnedCentroids(16, DIM), threshold = thr,
+        maxCellSize = 10000)
         .select(col("vec_id"), col("cell"),
           round(col("centroid_sim"), 6).as("centroid_sim"), col("keep"))
     }),
@@ -518,8 +514,9 @@ object QueriesSim {
         .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
     }),
 
-    // distributed full-corpus Lloyd's (2 rounds from the pinned grid,
-    // data-form centroids throughout): the whole-corpus trainer behind
+    // distributed full-corpus Lloyd's (2 rounds from the pinned grid;
+    // each round's centroid frame is collected and assigned by the
+    // nearest_centroid kernel): the whole-corpus trainer behind
     // the IVF/SemDeDup quantizers — fixed iters + pinned init make the
     // fit oracle-checkable, unlike seeded-sample k-means
     "q_kmeans" -> ((s, dir) => {
@@ -558,8 +555,8 @@ object QueriesSim {
     // item 2): nlist scales with the corpus (max(16, ceil(N/125)) — the
     // md5 grid is enumerable at any size, so the oracle derives the
     // same grid from count(*) in SQL), keeping the self-kNN probe join
-    // N·cell instead of N²/const; the centroid frame goes through the
-    // DATA-form assignment/search paths so the PLAN is also
+    // N·cell instead of N²/const; the grid enters the assignment and
+    // the probe routing as one matrix literal, so the PLAN is also
     // nlist-independent. 16 cells at the gate scales (500/2000 rows),
     // 160 at the sf1 checkpoint — cells stay ~125 rows at every scale.
     "q_umap_ivf" -> ((s, dir) => {
@@ -573,11 +570,9 @@ object QueriesSim {
       require(nlist <= 65536,
         s"q_umap_ivf nlist=$nlist exceeds the oracle's 65536-cell " +
           "enumeration cap — raise cellRows or the oracle's range bound")
-      val cents = IvfCosine.centroidsDf(s,
-        IvfCosine.pinnedCentroids(nlist, DIM))
       graft.ml.UmapAnalog.fitTransform(e,
-        graft.ml.UmapAnalog.ivfKnnEdgesDf(e, "vec_id", "embedding",
-          dim = DIM, k = 5, cents, nprobe = 4),
+        graft.ml.UmapAnalog.ivfKnnEdges(e, "vec_id", "embedding",
+          dim = DIM, k = 5, nlist = nlist, nprobe = 4),
         "vec_id", "embedding", dim = DIM,
         negOffsets = Seq(17L, 131L, 313L), iters = 3, lr = 0.05,
         gamma = 1.0, eps = 1e-3)

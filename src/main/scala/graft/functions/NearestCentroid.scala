@@ -17,10 +17,14 @@ import org.apache.spark.sql.graft.ColumnBridge
   * with the least d² = v·v − 2·v·c + c·c, each dot the VecDot fold
   * (index-ascending from 0.0), compared with Spark's double ordering
   * (`SQLOrderingUtil.compareDoubles`: NaN above everything, −0.0 = 0.0)
-  * and ties to the LOWEST cell. That is the (d², cell) order of both
-  * composed forms — the `array_min` over per-cell structs and the
-  * data-form `min(struct(d2, cell))` after a broadcast fan-out — so the
-  * kernel is bit-identical to either.
+  * and ties to the LOWEST cell. That is the (d², cell) order of the
+  * composed forms it replaces — the `array_min` over per-cell structs
+  * and the `min(struct(d2, cell))` argmin after a broadcast fan-out,
+  * both kept as references in NearestCentroidSpec — so the kernel is
+  * bit-identical to either. Every IVF cell assignment goes through it:
+  * [[graft.sim.IvfCosine.assignByCentroids]] with an array grid,
+  * [[graft.sim.IvfCosine.assignByCentroidsDf]] with a (cell, cvec)
+  * frame collected on the driver, and index maintenance.
   *
   * `centroids` must be foldable (an array<array<double|float>> literal):
   * the matrix and its self-dots are evaluated once per expression and

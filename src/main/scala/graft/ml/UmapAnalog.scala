@@ -59,12 +59,14 @@ object UmapAnalog {
   }
 
   /** The SCALE path for the kNN graph: [[IvfCosine]] cell-partitioned
-    * search — corpus and probes shuffle once on the cell id instead of
-    * broadcasting the whole corpus as probes. Same (src, dst) edge
-    * contract as [[bruteKnnEdges]]; at nprobe == nlist the candidate set
-    * is the full corpus and the edges are IDENTICAL to brute force (the
-    * ranking key (cosine desc, nid) is shared), which is what
-    * UmapKnnSeamSpec pins. */
+    * search over the pinned md5 grid of `nlist` cells — corpus and
+    * probes shuffle once on the cell id instead of broadcasting the
+    * whole corpus as probes, and the grid enters the plan as one matrix
+    * literal, so a corpus-scaled nlist adds no plan nodes. Same (src,
+    * dst) edge contract as [[bruteKnnEdges]]; at nprobe == nlist the
+    * candidate set is the full corpus and the edges are IDENTICAL to
+    * brute force (the ranking key (cosine desc, nid) is shared), which
+    * is what UmapKnnSeamSpec pins. */
   def ivfKnnEdges(emb: DataFrame, idCol: String, vecCol: String,
       dim: Int, k: Int, nlist: Int, nprobe: Int): DataFrame = {
     val index = IvfCosine.assignByCentroids(emb, idCol, vecCol,
@@ -72,25 +74,6 @@ object UmapAnalog {
     val probes = emb.select(col(idCol).as("__qid"), col(vecCol).as("__qvec"))
     IvfCosine.search(index, probes, idCol, vecCol,
       "__qid", "__qvec", k, nprobe, dim)
-      .select(col("qid").cast("long").as("src"),
-        col("nid").cast("long").as("dst"))
-  }
-
-  /** [[ivfKnnEdges]] through the DATA-form centroid paths
-    * ([[IvfCosine.assignByCentroidsDf]] + [[IvfCosine.searchDf]]): the
-    * centroid grid arrives as a (cell, cvec) frame, so the plan size is
-    * independent of nlist — the shape that survives a CORPUS-SCALED
-    * cell count (nlist ∝ N keeps cells bounded; the literal plan grows
-    * O(nlist) and is the wrong vehicle for exactly the configuration
-    * that needs many cells). Values are bit-identical to the literal
-    * build (DataFormAnnSpec pins both halves). */
-  def ivfKnnEdgesDf(emb: DataFrame, idCol: String, vecCol: String,
-      dim: Int, k: Int, centroids: DataFrame, nprobe: Int): DataFrame = {
-    val assigned = IvfCosine
-      .assignByCentroidsDf(emb, idCol, vecCol, centroids)
-    val probes = emb.select(col(idCol).as("__qid"), col(vecCol).as("__qvec"))
-    IvfCosine.searchDf(assigned, probes, idCol, vecCol,
-      "__qid", "__qvec", centroids, k, nprobe, dim)
       .select(col("qid").cast("long").as("src"),
         col("nid").cast("long").as("dst"))
   }

@@ -95,10 +95,11 @@ object AnnIndexIO {
 
   /** Append a delta shard of NEW documents: the saved quantizer
     * parameters reload bit-exactly, ONLY the delta is encoded (through
-    * the data-form [[IvfPq.encodeDf]] — plan size independent of
-    * nlist·m·nk, the production shape), and the new code rows append
-    * into the cell-partitioned layout. Same additions-only contract and
-    * commit protocol as [[IvfCosine.appendToIndex]]. */
+    * the data-form [[IvfPq.encodeDf]] — the coarse cell from the
+    * `nearest_centroid` kernel, the codebooks as a broadcast frame, so
+    * the plan size is independent of nlist·nk), and the new code rows
+    * append into the cell-partitioned layout. Same additions-only
+    * contract and commit protocol as [[IvfCosine.appendToIndex]]. */
   def appendIvfPq(path: String, delta: DataFrame, vecCol: String): Unit = {
     val (meta, sections) = graft.ml.WeightsIO.load(s"$path/params.json")
     graft.ml.WeightsIO.requireFamily(meta, "ivfpq_index",

@@ -808,7 +808,8 @@ object IvfCosine {
       NearestCentroid(col(vecCol), centroids).as("cell")))
 
   /** The pinned/trained centroid grid as DATA — (cell int, cvec
-    * array<double>) — for the data-form assignment path. */
+    * array<double>), the form [[assignByCentroidsDf]] and [[searchDf]]
+    * take. */
   def centroidsDf(spark: org.apache.spark.sql.SparkSession,
       centroids: Array[Array[Double]]): DataFrame = {
     import spark.implicits._
@@ -816,81 +817,59 @@ object IvfCosine {
       .toDF("cell", "cvec")
   }
 
-  /** Data-form cell assignment: the centroid grid arrives as a
-    * DataFrame (cell, cvec) and is BROADCAST-joined instead of being
-    * interpolated into the plan as literals — the plan size is
-    * independent of nlist, which is what survives SemDeDup's 50k
-    * clusters / production IVF nlist (the literal path's Catalyst tree
-    * grows O(nlist) and hits janino/analyzer limits first). The shape
-    * stays one pass: broadcast nested-loop join fans each row out to
-    * nlist candidates INSIDE its partition, and the per-id argmin
-    * collapses them right back map-side (partial min before the one
-    * id-keyed exchange). Values are bit-identical to
-    * [[assignByCentroids]] — same d² = v·v − 2·v·c + c·c with the
-    * VecDot kernel (the driver-side `Σx²` of the literal path is the
-    * same index-ascending fold), same lexicographic (d², cell) argmin.
+  /** [[assignByCentroids]] for a centroid grid held as DATA — a (cell,
+    * cvec) frame, e.g. a trainer's output. The frame's nlist rows are
+    * collected on the driver and ordered by cell, the same
+    * `nearest_centroid` kernel assigns every row, and the kernel's row
+    * index maps back to the frame's cell id — so the cell ids need not
+    * be 0..nlist-1, and exact ties go to the LOWEST id. The winning
+    * centroid's vector re-attaches by one broadcast left equi-join on
+    * the cell. No exchange, no per-row fan-out.
+    *
+    * Contract: the centroid frame holds at least one row, integral
+    * cell ids that are non-null and unique, and non-null centroid
+    * vectors of one dimension — each is checked on the collected grid,
+    * before any job over the corpus, and fails with an
+    * IllegalArgumentException naming the fault. Corpus ids must be
+    * unique: every input row yields one output row. A null vector
+    * yields a null cell and a null `__cvec`, and keeps its row.
     *
     * Output: (idCol, vecCol, cell, __cvec — the winning centroid's
     * vector, for callers that need centroid similarity). */
   def assignByCentroidsDf(corpus: DataFrame, idCol: String,
       vecCol: String, centroids: DataFrame): DataFrame = {
-    // per-SIDE terms precomputed BEFORE the fan-out: v·v once per row
-    // (a projection below the join — the join boundary stops
-    // CollapseProject from inlining it back into the per-pair
-    // expression) and c·c once per centroid inside the broadcast —
-    // without this the per-pair d² evaluates THREE dim-length dots
-    // instead of one (measured 3× the assignment cost at nlist=160).
-    // Same IEEE ops as the literal path (VecDot's ascending fold; the
-    // literal path's driver-side Σx² is the same fold), so values stay
-    // bit-identical (DataFormAnnSpec pins it).
-    val cents = broadcast(centroids.select(col("cell").as("__cell"),
-      col("cvec").as("__cvec"),
-      Similarity.dot(col("cvec"), col("cvec")).as("__cc")))
-    val pre0 = corpus.select(col(idCol), col(vecCol),
-      Similarity.dot(col(vecCol), col(vecCol)).as("__vv"))
-    // the broadcast fan-out multiplies each input partition nlist× —
-    // a corpus that arrives in fewer partitions than cores (one small
-    // parquet file) would run the whole nlist·N join+argmin on ONE
-    // core. Spread it first in that case (measured 7× on the lifecycle
-    // gate); a corpus at scale already exceeds core count and skips
-    // the extra exchange. The .rdd partition probe is only free on an
-    // exchange-free plan — under AQE it materializes every upstream
-    // query stage as real jobs (measured +0.5s per call on inputs that
-    // arrive through an explicit spread), so a plan that already
-    // carries a user repartition skips the probe outright: its
-    // partition count is pinned by that repartition (AQE does not
-    // coalesce user-specified counts) and is >= the parallelism target
-    // in every spread-input shape.
-    val sc = corpus.sparkSession.sparkContext
-    val alreadySpread = pre0.queryExecution.analyzed.exists {
-      // only count-pinned repartitions: AQE may coalesce a keyed
-      // repartition with no explicit count back below the target
-      case r: org.apache.spark.sql.catalyst.plans.logical.Repartition
-        if r.shuffle => true
-      case r: org.apache.spark.sql.catalyst.plans.logical
-        .RepartitionByExpression if r.optNumPartitions.isDefined => true
-      case _ => false
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
+      ShortType}
+    val cellType = centroids.schema("cell").dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(cellType),
+      s"assignByCentroidsDf: cell ids must be integral, got ${cellType.sql}")
+    val rows = centroids.select(col("cell").cast("long"),
+      col("cvec").cast("array<double>")).collect()
+    require(rows.nonEmpty, "assignByCentroidsDf: empty centroid frame")
+    rows.foreach { r =>
+      require(!r.isNullAt(0), "assignByCentroidsDf: null cell id")
+      require(!r.isNullAt(1) && !r.getSeq[Any](1).contains(null),
+        s"assignByCentroidsDf: null centroid at cell ${r.getLong(0)}")
     }
-    val pre =
-      if (alreadySpread) pre0
-      else if (pre0.rdd.getNumPartitions < sc.defaultParallelism)
-        pre0.repartition(sc.defaultParallelism)
-      else pre0
-    val d2 = col("__vv") -
-      lit(2.0) * Similarity.dot(col(vecCol), col("__cvec")) +
-      col("__cc")
-    // the argmin struct carries only (d², cell) — 12 bytes, not the
-    // dim-length centroid array (which made every partial-aggregation
-    // update copy ~0.5 KB); the winning centroid's vector re-attaches
-    // by one broadcast equi-join on the cell id afterwards. Tie order
-    // unchanged: (d², cell) is decisive on its own (cell ids unique).
-    pre.crossJoin(cents)
-      .groupBy(col(idCol))
-      .agg(min(struct(d2.as("d2"), col("__cell").as("cell"))).as("__best"),
-        first(col(vecCol)).as(vecCol))
-      .select(col(idCol), col(vecCol), col("__best.cell").as("cell"))
+    val grid = rows.map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
+      .sortBy(_._1)
+    val ids = grid.map(_._1)
+    val dup = ids.zip(ids.tail).collectFirst { case (a, b) if a == b => a }
+    require(dup.isEmpty, s"assignByCentroidsDf: duplicate cell id ${dup.get}")
+    val dim = grid.head._2.length
+    val odd = grid.find(_._2.length != dim)
+    require(odd.isEmpty, s"assignByCentroidsDf: centroids of mixed " +
+      s"dimension — cell ${ids.head} has $dim, cell ${odd.get._1} has " +
+      s"${odd.get._2.length}")
+    val row = NearestCentroid(col(vecCol), grid.map(_._2))
+    // element_at over a null-free literal array is typed non-nullable
+    // and reads a null index as 0; the guard keeps a null vector's cell
+    // null
+    val cell = when(row.isNotNull, element_at(typedlit(ids), row + 1))
+      .cast(cellType)
+    corpus.select(col(idCol), col(vecCol), cell.as("cell"))
       .join(broadcast(centroids.select(col("cell"),
-        col("cvec").as("__cvec"))), Seq("cell"))
+        col("cvec").as("__cvec"))), Seq("cell"), "left")
       .select(col(idCol), col(vecCol), col("cell"), col("__cvec"))
   }
 
@@ -923,7 +902,7 @@ object IvfCosine {
     * DataFrame and probe routing runs as a broadcast join + per-probe
     * rank — the plan size is INDEPENDENT of nlist (the literal path's
     * Catalyst tree grows O(nlist), which a corpus-scaled cell count
-    * outgrows — same rationale as [[assignByCentroidsDf]]). Values are
+    * outgrows). Values are
     * identical to [[search]]: same cosine routing, same (desc, cell)
     * tie order, same cell equi-join core (SimSpec pins literal ≡ data). */
   def searchDf(assigned: DataFrame, probes: DataFrame, idCol: String,
@@ -931,7 +910,7 @@ object IvfCosine {
       centroids: DataFrame, k: Int, nprobe: Int, dim: Int): DataFrame = {
     // centroid self-norms precomputed once per centroid inside the
     // broadcast (same IEEE value as the per-pair form — one sqrt of
-    // the same fold), mirroring assignByCentroidsDf's per-side terms
+    // the same fold)
     val cents = broadcast(centroids.select(col("cell").as("__c0"),
       col("cvec").as("__cv"),
       sqrt(Similarity.dot(col("cvec"), col("cvec"))).as("__cn0")))

@@ -116,11 +116,13 @@ object IvfPq {
   }
 
   /** Data-form residual-PQ encoding: `coarse` = (cell, cvec) and
-    * `codebooks` = (m, k, bv) arrive as DataFrames and broadcast-join;
-    * only `m` (the subspace count — a structural constant like a column
-    * list, never a scale axis) shapes the plan. One broadcast fan-out,
-    * m partial-min aggregates, one id-keyed exchange. Values identical
-    * to the literal encoder. */
+    * `codebooks` = (m, k, bv) arrive as DataFrames. The coarse cell
+    * comes from [[IvfCosine.assignByCentroidsDf]] (the
+    * `nearest_centroid` kernel, no fan-out); the codebooks broadcast-
+    * join, and only `m` (the subspace count — a structural constant
+    * like a column list, never a scale axis) shapes the plan: one
+    * codebook fan-out, m partial-min aggregates, one id-keyed exchange.
+    * Values identical to the literal encoder. */
   def encodeDf(corpus: DataFrame, idCol: String, vecCol: String,
       coarse: DataFrame, codebooks: DataFrame, m: Int): DataFrame = {
     val assigned = IvfCosine

@@ -12,15 +12,14 @@ import org.apache.spark.sql.functions._
   * rows); this operator is the complementary path for when the trainer
   * must see the whole corpus — k proportional to corpus size (the
   * SemDeDup regime, nlist ~ 50k at paper scale), or per-cluster
-  * statistics that a sample cannot estimate. Everything is data-form:
-  * centroids are a (cell, cvec) frame, never plan literals, so plan
-  * size is independent of nlist (the r7 DataFormAnnSpec contract).
+  * statistics that a sample cannot estimate. Centroids travel between
+  * rounds as a (cell, cvec) frame.
   *
   * Per iteration, TWO relational steps:
-  *   1. assignment — [[IvfCosine.assignByCentroidsDf]]: broadcast the
-  *      centroid frame, fan each row out to nlist candidates inside its
-  *      partition, per-id argmin collapses map-side before the one
-  *      id-keyed exchange; deterministic (d², cell) tie-break;
+  *   1. assignment — [[IvfCosine.assignByCentroidsDf]]: the nlist-row
+  *      centroid frame is collected on the driver and every row is
+  *      assigned by the `nearest_centroid` kernel in one map-side
+  *      projection (no exchange); deterministic (d², cell) tie-break;
   *   2. update — per-(cell, coordinate) MEAN via posexplode + a
   *      map-side-combined groupBy: the shuffle carries at most
   *      nlist × dim partial rows per task regardless of corpus size,

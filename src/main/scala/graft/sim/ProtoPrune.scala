@@ -12,12 +12,13 @@ import graft.dedup.Similarity
   * cluster — prototypical examples are the ones large datasets can
   * spare, and pruning them per-cluster keeps coverage of the space.
   * The keep-hard-examples complement of [[SemDedup]]'s near-duplicate
-  * cut; both ride the same data-form cell assignment.
+  * cut; both assign cells with the same `nearest_centroid` kernel.
   *
-  * Plan shape: ONE broadcast fan-out + map-side argmin assignment
-  * ([[IvfCosine.assignByCentroidsDf]] — plan size independent of
-  * nlist), a scan-speed centroid-cosine projection, then per-CELL
-  * exact-percentile cuts — an nlist-row aggregate broadcast back (the
+  * Plan shape: a map-side assignment ([[IvfCosine.assignByCentroidsDf]]
+  * — the kernel over the collected centroid frame, the winning
+  * centroid re-attached by a broadcast join), a scan-speed
+  * centroid-cosine projection, then per-CELL exact-percentile cuts —
+  * an nlist-row aggregate broadcast back (the
   * [[graft.text.LmBuckets]] cut shape, never a per-cell sort or
   * window). Sims and cuts are rounded to 6 decimals before the
   * boundary compare so the keep set is engine-stable; at 100 TB swap

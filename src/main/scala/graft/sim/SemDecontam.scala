@@ -17,9 +17,8 @@ import graft.functions.FastRound
   * the broadcast nested-loop fans each corpus row out to |eval|
   * candidates inside its partition, and the per-id struct-max collapses
   * them right back map-side (partial max before the one id-keyed
-  * exchange, which then carries exactly one skinny row per corpus id) —
-  * the [[IvfCosine.assignByCentroidsDf]] shape. Nothing here is
-  * quadratic in the corpus.
+  * exchange, which then carries exactly one skinny row per corpus id).
+  * Nothing here is quadratic in the corpus.
   *
   * Cosines are round-6 snapped before the threshold compare and the
   * argmax (FastRound convention); argmax ties break toward the smallest

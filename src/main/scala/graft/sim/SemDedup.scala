@@ -15,32 +15,22 @@ import graft.dedup.Similarity
   * cluster centroid (they are the least redundant representatives);
   * ties break on id, so the result is fully deterministic.
   *
-  * Spark shape: two cell-assignment paths share one pruning core.
-  * The LITERAL path bakes the centroid grid into the plan as a
-  * `typedlit` table (a pure codegen projection — right for the small
-  * pinned grids the bit-exact oracles use); the DATA path
-  * ([[dedup(corpus:org\.apache\.spark\.sql\.DataFrame,idCol:String,vecCol:String,centroids:org\.apache\.spark\.sql\.DataFrame,threshold:Double,maxCellSize:Int)*]])
-  * takes the centroids as a DataFrame and broadcast-joins the
-  * assignment, so the Catalyst plan size is INDEPENDENT of nlist — the
-  * path that survives the paper's own scale (50k clusters × dim 768+,
-  * where literal grids are tens of millions of doubles in the
-  * expression tree). Either way the only shuffle after assignment is
-  * the self-equi-join on the cell id, and the exchange is planned ONCE
-  * for both sides (exchange reuse on the identical child). The
-  * quadratic pairwise work is bounded per cell — exactly the paper's
-  * scaling argument: nlist grows with the corpus so cells stay a few
-  * thousand rows regardless of total scale, and `maxCellSize`
-  * hard-caps the pathological cell the same way the LSH dedup
-  * operators cap hot buckets (dropped cells trade recall for a runtime
-  * bound).
+  * Spark shape: cell assignment is one codegen'd projection (the
+  * `nearest_centroid` kernel of [[IvfCosine.assignByCentroids]], whose
+  * plan holds the grid as one matrix node whatever nlist is), and the
+  * only shuffle after it is the self-equi-join on the cell id — the
+  * exchange is planned ONCE for both sides (exchange reuse on the
+  * identical child). The quadratic pairwise work is bounded per cell —
+  * exactly the paper's scaling argument: nlist grows with the corpus
+  * so cells stay a few thousand rows regardless of total scale, and
+  * `maxCellSize` hard-caps the pathological cell the same way the LSH
+  * dedup operators cap hot buckets (dropped cells trade recall for a
+  * runtime bound).
   *
   * Against a PINNED centroid grid (md5-derived, engine-reproducible) the
   * whole operator — assignment, priority, pairwise pruning — verifies
-  * bit-for-bit against the DuckDB oracle through BOTH paths (the data
-  * path is value-identical by construction: same VecDot kernel, same
-  * lexicographic argmin — pinned by an equality test at nlist 1024);
-  * seeded k-means training of the quantizer is covered by
-  * [[IvfCosine.buildIndex]]'s recall tests.
+  * bit-for-bit against the DuckDB oracle; seeded k-means training of
+  * the quantizer is covered by [[IvfCosine.buildIndex]]'s recall tests.
   *
   * North-star extension beyond the reference surface (SURVEY.md §7.6).
   */
@@ -49,7 +39,7 @@ object SemDedup {
   /** One row per input vector: (idCol, cell, centroid_sim, keep).
     * `keep = false` iff some same-cell vector with strictly higher
     * priority (lower centroid_sim, ties by lower id) has
-    * cosine ≥ threshold to this one. Literal-grid assignment path. */
+    * cosine ≥ threshold to this one. */
   def dedup(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Double]], threshold: Double,
       maxCellSize: Int = 10000): DataFrame = {
@@ -65,24 +55,7 @@ object SemDedup {
     prune(assigned, idCol, vecCol, threshold, maxCellSize)
   }
 
-  /** Data-form path: centroids as a (cell, cvec) DataFrame,
-    * broadcast-joined (see [[IvfCosine.assignByCentroidsDf]]) — plan
-    * size independent of nlist, results identical to the literal path. */
-  def dedup(corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, threshold: Double,
-      maxCellSize: Int): DataFrame = {
-    val assigned = IvfCosine
-      .assignByCentroidsDf(corpus, idCol, vecCol, centroids)
-      .withColumn("__nrm", sqrt(Similarity.dot(col(vecCol), col(vecCol))))
-      .withColumn("centroid_sim",
-        Similarity.dot(col(vecCol), col("__cvec"))
-          / (col("__nrm")
-             * sqrt(Similarity.dot(col("__cvec"), col("__cvec")))))
-      .drop("__cvec")
-    prune(assigned, idCol, vecCol, threshold, maxCellSize)
-  }
-
-  /** Shared pruning core over an assigned frame
+  /** Pruning core over an assigned frame
     * (idCol, vecCol, cell, __nrm, centroid_sim). */
   private def prune(assigned: DataFrame, idCol: String, vecCol: String,
       threshold: Double, maxCellSize: Int): DataFrame = {

@@ -4,11 +4,12 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sim.{IvfCosine, IvfPq, PqCosine, SemDedup}
 
-/** Round-8 closure of the one `weak` on the round-7 board: the
-  * data-form centroid/codebook paths for SemDeDup and IVF-PQ must be
-  * value-identical to the literal-table paths (which back the DuckDB
-  * oracles), and their plan size must be INDEPENDENT of nlist — the
-  * literal plans grow O(nlist) and die at production cluster counts. */
+/** The data-form centroid/codebook paths (IVF search routing, IVF-PQ,
+  * k-means, prototypicality pruning) must be value-identical to the
+  * literal-table paths (which back the DuckDB oracles), and the plan
+  * size of the data-form and kernel-assigned paths must be INDEPENDENT
+  * of nlist — a plan that grows O(nlist) dies at production cluster
+  * counts. */
 class DataFormAnnSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -22,25 +23,6 @@ class DataFormAnnSpec extends AnyFunSuite {
     array((0 until dim).map(d => sin((col("id") + 1) * lit(d + 1))): _*)
       .as("embedding"))
 
-  private def semRows(df: org.apache.spark.sql.DataFrame) =
-    df.collect().map(r => (r.getLong(0), r.getAs[Int]("cell"),
-      r.getAs[Double]("centroid_sim"), r.getAs[Boolean]("keep"))).toSet
-
-  test("semdedup data-form path is bit-identical to the literal path " +
-    "at nlist = 1024 (the scale where literal grids stop being viable)") {
-    val grid = IvfCosine.pinnedCentroids(1024, dim)
-    val emb = corpus(150)
-    val lit = SemDedup.dedup(emb, "vec_id", "embedding", grid,
-      threshold = 0.8)
-    val data = SemDedup.dedup(emb, "vec_id", "embedding",
-      IvfCosine.centroidsDf(spark, grid), threshold = 0.8,
-      maxCellSize = 10000)
-    val (l, d) = (semRows(lit), semRows(data))
-    assert(l == d, "literal and data assignments/priorities must agree " +
-      "on every row, bit for bit")
-    assert(l.nonEmpty)
-  }
-
   // total Catalyst expression-node count of the optimized plan —
   // immune to toString truncation, which is exactly what a growing
   // literal plan triggers
@@ -49,24 +31,16 @@ class DataFormAnnSpec extends AnyFunSuite {
       p.expressions.map(_.collect { case _ => 1L }.sum).sum
     }.sum
 
-  test("semdedup plan size is independent of nlist on both the " +
-    "data-form and the literal-grid path") {
+  test("semdedup plan size is independent of nlist") {
     val emb = corpus(20)
-    def dataPlan(nlist: Int): Long = exprNodes(
-      SemDedup.dedup(emb, "vec_id", "embedding",
-        IvfCosine.centroidsDf(spark, IvfCosine.pinnedCentroids(nlist, dim)),
-        threshold = 0.8, maxCellSize = 10000))
     def litPlan(nlist: Int): Long = exprNodes(
       SemDedup.dedup(emb, "vec_id", "embedding",
         IvfCosine.pinnedCentroids(nlist, dim), threshold = 0.8))
-    val (d16, d1024) = (dataPlan(16), dataPlan(1024))
-    assert(d1024 <= d16 * 11 / 10,
-      s"data-form plan must not grow with nlist: $d16 -> $d1024")
-    // the literal grid is one nearest_centroid node over one matrix
-    // literal, no longer a per-cell struct per centroid
-    val (l16, l256) = (litPlan(16), litPlan(256))
-    assert(l256 <= l16 * 11 / 10,
-      s"literal-grid plan must not grow with nlist: $l16 -> $l256")
+    // the grid is one nearest_centroid node over one matrix literal,
+    // not a per-cell struct per centroid
+    val (l16, l1024) = (litPlan(16), litPlan(1024))
+    assert(l1024 <= l16 * 11 / 10,
+      s"literal-grid plan must not grow with nlist: $l16 -> $l1024")
   }
 
   test("ivf-pq data-form encode + search are bit-identical to the " +

@@ -9,9 +9,11 @@ import graft.sim.IvfCosine
 
 /** The `nearest_centroid` kernel: a driver-side brute-force argmin on
   * float and double vectors, exact ties to the lowest cell, the length
-  * check, bit-identity with both composed assignment forms (the
-  * per-cell struct `array_min` and the data-form broadcast argmin), and
-  * one generated class for every centroid set. */
+  * check, bit-identity with both composed assignment forms it replaced
+  * (the per-cell struct `array_min` and the broadcast cross-join
+  * argmin, kept here as references), and one generated class for every
+  * centroid set. Also the contract of `assignByCentroidsDf`, the
+  * adapter that runs the kernel over a (cell, cvec) frame. */
 class NearestCentroidSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -42,6 +44,31 @@ class NearestCentroidSpec extends AnyFunSuite {
   private def cells(df: DataFrame, cents: Array[Array[Double]]) =
     df.select(col("vec_id"), NearestCentroid(col("embedding"), cents))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+
+  /** The former data-form assignment, kept as a reference: every row
+    * fanned out to every centroid of a (cell, cvec) frame by a
+    * broadcast cross join, then the per-id argmin of (d², cell). */
+  private def crossJoinCells(df: DataFrame,
+      cents: DataFrame): Map[Long, Int] = {
+    val c = broadcast(cents.select(col("cell").as("__cell"),
+      col("cvec").as("__cvec"),
+      Similarity.dot(col("cvec"), col("cvec")).as("__cc")))
+    val d2 = col("__vv") -
+      lit(2.0) * Similarity.dot(col("embedding"), col("__cvec")) +
+      col("__cc")
+    df.select(col("vec_id"), col("embedding"),
+        Similarity.dot(col("embedding"), col("embedding")).as("__vv"))
+      .crossJoin(c)
+      .groupBy(col("vec_id"))
+      .agg(min(struct(d2.as("d2"), col("__cell").as("cell")))
+        .getField("cell"))
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+  }
+
+  private def adapterCells(df: DataFrame, cents: DataFrame) =
+    IvfCosine.assignByCentroidsDf(df, "vec_id", "embedding", cents)
+      .select("vec_id", "cell").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
 
   test("float and double vectors: the kernel equals a driver-side " +
     "brute-force argmin, in generated and interpreted evaluation") {
@@ -100,11 +127,11 @@ class NearestCentroidSpec extends AnyFunSuite {
     val composed = df.select(col("vec_id"),
       array_min(array(structs: _*)).getField("cell")).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val dataForm = IvfCosine.assignByCentroidsDf(df, "vec_id", "embedding",
-      IvfCosine.centroidsDf(spark, cents)).select("vec_id", "cell")
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val centsDf = IvfCosine.centroidsDf(spark, cents)
+    val crossJoin = crossJoinCells(df, centsDf)
     val kernel = cells(df, cents)
-    assert(kernel == composed && kernel == dataForm)
+    assert(kernel == composed && kernel == crossJoin)
+    assert(adapterCells(df, centsDf) == kernel)
   }
 
   test("one generated class serves every centroid set, and the plan " +
@@ -120,6 +147,63 @@ class NearestCentroidSpec extends AnyFunSuite {
       org.apache.spark.sql.graft.ColumnBridge.expression(NearestCentroid(
         col("embedding"), cents)).collect { case e => e }.size
     assert(nodes(a) == nodes(b))
+  }
+
+  test("assignByCentroidsDf: unsorted, non-contiguous cell ids come " +
+    "back as those ids, exact ties go to the lowest id") {
+    // frame order 40, 2, 7; (0, 0) ties cells 40 and 7, (5, 5) sits on 2
+    val cents = Seq((40, Array(1.0, 0.0)), (2, Array(5.0, 5.0)),
+      (7, Array(-1.0, 0.0))).toDF("cell", "cvec")
+    val df = Seq((0L, Seq(0.0, 0.0)), (1L, Seq(5.0, 5.0)),
+      (2L, Seq(0.9, 0.0)), (3L, Seq(-2.0, 0.0)))
+      .toDF("vec_id", "embedding")
+    val want = Map(0L -> 7, 1L -> 2, 2L -> 40, 3L -> 7)
+    assert(adapterCells(df, cents) == want)
+    assert(crossJoinCells(df, cents) == want)
+    val out = IvfCosine.assignByCentroidsDf(df, "vec_id", "embedding", cents)
+    assert(out.columns.toSeq == Seq("vec_id", "embedding", "cell", "__cvec"))
+    assert(out.schema("cell").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    val cvec = out.collect().map(r => r.getLong(0) -> r.getSeq[Double](3))
+      .toMap
+    assert(cvec(0L) == Seq(-1.0, 0.0) && cvec(2L) == Seq(1.0, 0.0))
+  }
+
+  test("assignByCentroidsDf: a null vector yields a null cell and keeps " +
+    "its row") {
+    val df = Seq((0L, null: Seq[Double]), (1L, Seq(1.0, 0.0)))
+      .toDF("vec_id", "embedding")
+    val out = IvfCosine.assignByCentroidsDf(df, "vec_id", "embedding",
+        IvfCosine.centroidsDf(spark, Array(Array(0.0, 1.0), Array(1.0, 0.0))))
+      .collect().map(r => r.getLong(0) -> r).toMap
+    assert(out.size == 2)
+    assert(out(0L).isNullAt(2) && out(0L).isNullAt(3))
+    assert(out(1L).getInt(2) == 1)
+  }
+
+  test("assignByCentroidsDf: a bad centroid frame fails by name before " +
+    "any job over the corpus") {
+    // evaluating this corpus fails, so a job over it cannot pass unseen
+    val corpus = spark.range(4).select(col("id").as("vec_id"),
+      array(raise_error(lit("corpus evaluated")).cast("double"))
+        .as("embedding"))
+    def fails(cents: DataFrame, msg: String): Unit = {
+      val e = intercept[IllegalArgumentException](
+        IvfCosine.assignByCentroidsDf(corpus, "vec_id", "embedding", cents))
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
+    val v = Array(1.0, 0.0)
+    fails(Seq((1, v), (1, Array(0.0, 1.0))).toDF("cell", "cvec"),
+      "duplicate cell id 1")
+    fails(Seq((Some(1), v), (None, v)).toDF("cell", "cvec"),
+      "null cell id")
+    fails(Seq((1, v), (2, null: Array[Double])).toDF("cell", "cvec"),
+      "null centroid at cell 2")
+    fails(Seq((1, v), (2, Array(1.0, 0.0, 0.0))).toDF("cell", "cvec"),
+      "mixed dimension")
+    fails(Seq.empty[(Int, Array[Double])].toDF("cell", "cvec"),
+      "empty centroid frame")
+    fails(Seq(("a", v)).toDF("cell", "cvec"), "must be integral")
   }
 
   test("registered as nearest_centroid on the SQL surface") {
