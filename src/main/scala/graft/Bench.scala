@@ -32,9 +32,10 @@ import org.apache.spark.sql.SparkSession
   *
   * NUMBER-OF-RECORD RULE (VERDICT r13 item 3): a run is only accepted
   * as the committed number of record when its own load markers show a
-  * quiet host — `loadavg_start` well under 1 on this 32-core box. A
-  * hot-start artifact (the r13 driver run began at loadavg 9.49) is
-  * evidence, not a record: keep it, but re-measure before citing it. */
+  * quiet host — `cpu_busy_start` low (where it is null, `loadavg_start`
+  * well under 1 on this 32-core box). A hot-start artifact (the r13
+  * driver run began at loadavg 9.49) is evidence, not a record: keep
+  * it, but re-measure before citing it. */
 object Bench {
 
   private val Child  = "SPARK_GRAFT_BENCH_CHILD"
@@ -81,12 +82,45 @@ object Bench {
   // on untouched code purely from ambient machine pressure).
   private val loadAtStart: Double = systemLoad()
   // above this start load a run is flagged as taken on a busy host
+  // (only where the busy fraction below cannot be sampled)
   private val LoadedHost = 2.0
 
   private def systemLoad(): Double = {
     val l = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     math.round(l * 100.0) / 100.0
+  }
+
+  // quiet-host signal: the host's CPU busy fraction over a short window
+  // sampled before the session starts. The 1-minute load average still
+  // carries a previous run's own load for about a minute after it ends,
+  // so back-to-back runs on an idle host read as busy; the busy fraction
+  // sees only what runs during the window. None where /proc/stat cannot
+  // be read (the check then falls back to the load average). Children
+  // skip the sample: their parent took it before forking them.
+  private lazy val busyAtStart: Option[Double] =
+    if (sys.env.contains(Child)) None else cpuBusyFrac(500L)
+  // above this busy fraction a run is flagged as taken on a busy host
+  private val BusyHost = 0.25
+
+  /** 1 − Δ(idle + iowait) / Δtotal between two reads of the aggregate
+    * `cpu` line of /proc/stat taken `windowMs` apart. */
+  private def cpuBusyFrac(windowMs: Long): Option[Double] = {
+    def sample(): Option[(Long, Long)] = try {
+      val src = scala.io.Source.fromFile("/proc/stat")
+      val line = try src.getLines().next() finally src.close()
+      // cpu user nice system idle iowait irq softirq steal [guest ...];
+      // guest time is already counted inside user/nice
+      val v = line.trim.split("\\s+").drop(1).take(8).map(_.toLong)
+      if (v.length < 5) None else Some((v(3) + v(4), v.sum))
+    } catch { case _: Exception => None }
+    sample().flatMap { case (idle0, total0) =>
+      Thread.sleep(windowMs)
+      sample().collect { case (idle1, total1) if total1 > total0 =>
+        val busy = 1.0 - (idle1 - idle0).toDouble / (total1 - total0)
+        math.round(busy * 1000.0) / 1000.0
+      }
+    }
   }
 
   def main(args: Array[String]): Unit = {
@@ -105,12 +139,20 @@ object Bench {
     val chunkCap = sys.env.getOrElse(Chunk, "5").toInt
     val isChild = sys.env.contains(Child)
     // quiet-host check (methodology unchanged): a run that starts on a
-    // loaded host still runs and records its loadavg, but says so
-    if (!isChild && loadAtStart > LoadedHost)
-      System.err.println(f"[bench] WARNING: 1-minute load average " +
-        f"$loadAtStart%.2f at start is above $LoadedHost%.0f — the host " +
-        "is busy, and the timings will read slow; compare only against " +
-        "a run taken under the same load")
+    // loaded host still runs and records its load markers, but says so
+    if (!isChild) {
+      val busyNote = busyAtStart match {
+        case Some(b) if b > BusyHost =>
+          Some(f"CPU busy fraction $b%.3f at start is above $BusyHost%.2f")
+        case None if loadAtStart > LoadedHost =>
+          Some(f"1-minute load average $loadAtStart%.2f at start is " +
+            f"above $LoadedHost%.0f")
+        case _ => None
+      }
+      busyNote.foreach(note => System.err.println(s"[bench] WARNING: " +
+        s"$note — the host is busy, and the timings will read slow; " +
+        "compare only against a run taken under the same load"))
+    }
     // fork only when the suite is big enough to amortize child warmup;
     // small hand-picked query lists (local iteration) stay in-process
     if (!isChild && chunkCap > 0 && names.size >= chunkCap * 2)
@@ -293,7 +335,8 @@ object Bench {
     val extra = chunkSum.map(c =>
       s""","value_chunk_sum":$c,"number_of_record":"value = sum of per-query min(chunk, solo)"""")
       .getOrElse("")
-    val load = s""","loadavg_start":$loadAtStart,"loadavg_end":${
+    val load = s""","loadavg_start":$loadAtStart,"cpu_busy_start":${
+      busyAtStart.getOrElse("null")},"loadavg_end":${
       systemLoad()},"host_cpus":${Runtime.getRuntime.availableProcessors}"""
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec"$extra$load,"queries":$qs,"spotcheck":$sp,"errors":$es,"sf":"$sfDir"}"""

@@ -177,7 +177,8 @@ object AttnBpttFull {
     preds
   }
 
-  /** Single-output compatibility wrapper over [[runMulti]]. */
+  /** Single-output wrapper over [[runMulti]] (gradient-check helper;
+    * the trainers call [[runMulti]] directly). */
   def run(w: Array[Double], c: Cfg, x: Array[Array[Double]], y: Double,
       acc: Array[Double], maskSeed: Long = 0L): Double = {
     require(c.out == 1, "multi-output Cfg needs runMulti")

@@ -673,7 +673,8 @@ class AttnTrainer(
       val cfg = fullCfg // ONE architecture definition shared with load
       val w = AttnBpttFull.init(cfg, seed)
       adamEpochs(data, sz = cfg.size, w, f, t,
-        (bw, x, y, acc, ms) => AttnBpttFull.run(bw, cfg, x, y, acc, ms))
+        (bw, x, ys, acc, ms, po) =>
+          AttnBpttFull.runMulti(bw, cfg, x, ys, acc, ms, po))
       materialize(w)
     } else {
       val sz = kernelSize // shared with load's shape validation
@@ -704,9 +705,11 @@ class AttnTrainer(
       if (crossMode) for (_ <- 0 until 3) { // wqF/wkF/wvF (+ biases)
         glorot(off, t, t); off += t * t + t
       }
-      adamEpochs(data, sz, w, f, t,
-        (bw, x, y, acc, _) =>
-          AttnBptt.run(bw, f, h, ff, x, y, acc, useNorm, crossMode))
+      adamEpochs(data, sz, w, f, t, (bw, x, ys, acc, _, po) => {
+        val r = AttnBptt.run(bw, f, h, ff, x, ys(0), acc, useNorm, crossMode)
+        if (po != null) po(0) = r
+        r
+      })
       materialize(w)
     }
     data.unpersist()
@@ -787,16 +790,15 @@ class AttnTrainer(
     WeightsIO.save(path, m, s)
   }
 
-  /** Shared epoch loop — delegates to [[SeqAdam]] (also used by the
-    * transformer trainer). `f`/`t` are the KERNEL dims (swapped in
-    * feature mode). */
+  /** The [[SeqAdam]] epoch loop at one output. `f`/`t` are the KERNEL
+    * dims (swapped in feature mode). */
   private def adamEpochs(data: DataFrame, sz: Int, w: Array[Double],
       f: Int, t: Int,
-      kernel: (Array[Double], Array[Array[Double]], Double, Array[Double],
-        Long) => Double): Unit =
-    SeqAdam.run(data, sz, w, SeqAdam.Cfg(f, t, yMean, yStd,
-      epochs, lr, seed, batchFraction, loss, mseWeight, spearmanWeight,
-      rankTau, rankBatch, optimizer), kernel)
+      kernel: (Array[Double], Array[Array[Double]], Array[Double],
+        Array[Double], Long, Array[Double]) => Double): Unit =
+    SeqAdam.run(data, sz, w, 1, Array(yMean), Array(yStd), f, t, epochs,
+      lr, seed, batchFraction, kernel, loss, mseWeight, spearmanWeight,
+      rankTau, rankBatch, optimizer)
 
   /** Appends `prediction` through the distributed unrolled forward pass,
     * un-standardizing if the target was scaled at fit. */
@@ -992,7 +994,7 @@ class AttnMultiTrainer(
         math.max(r.getDouble(out + o), 1e-12))
     }
     val w = AttnBpttFull.init(cfg, seed)
-    SeqAdam.runMulti(data, cfg.size, w, out, yMean, yStd, f, t,
+    SeqAdam.run(data, cfg.size, w, out, yMean, yStd, f, t,
       epochs, lr, seed, batchFraction,
       (bw, x, ys, acc, ms, po) => AttnBpttFull.runMulti(bw, cfg, x, ys,
         acc, ms, po),

@@ -34,11 +34,7 @@ object BnAeKernel {
   def size(k: Int, hE: Int, l: Int, hA: Int, out: Int = 1): Int =
     JointAeKernel.size(k, hE, l, hA, out) + 2 * (k + hE + l + hE + hA)
 
-  @inline private def sigmoid(z: Double): Double = 1.0 / (1.0 + math.exp(-z))
-  @inline private def swish(z: Double): Double = z * sigmoid(z)
-  @inline private def swishD(z: Double): Double = {
-    val s = sigmoid(z); s * (1.0 + z * (1.0 - s))
-  }
+  import Activations.{sigmoid, swish, swishD}
 
   def toWeights(p: Array[Double], k: Int, hE: Int, l: Int, hA: Int,
       out: Int = 1): BnAeWeights = {

@@ -23,11 +23,7 @@ import org.apache.spark.sql.functions._
   */
 object DeepAeKernel {
 
-  @inline private def sigmoid(z: Double): Double = 1.0 / (1.0 + math.exp(-z))
-  @inline private def swish(z: Double): Double = z * sigmoid(z)
-  @inline private def swishD(z: Double): Double = {
-    val s = sigmoid(z); s * (1.0 + z * (1.0 - s))
-  }
+  import Activations.{sigmoid, swish, swishD}
 
   /** One chained Dense stage: `act` = swish (false = linear);
     * `drop` = training-time dropout rate AFTER the activation

@@ -24,11 +24,7 @@ import org.apache.spark.sql.functions._
 object DeepBnKernel {
   import DeepAeKernel.Cfg
 
-  @inline private def sigmoid(z: Double): Double = 1.0 / (1.0 + math.exp(-z))
-  @inline private def swish(z: Double): Double = z * sigmoid(z)
-  @inline private def swishD(z: Double): Double = {
-    val s = sigmoid(z); s * (1.0 + z * (1.0 - s))
-  }
+  import Activations.{sigmoid, swish, swishD}
 
   /** BN site widths: site 0 = the input (k), then one per ACT stage in
     * stage order. */

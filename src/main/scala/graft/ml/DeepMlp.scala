@@ -20,7 +20,7 @@ object DeepMlpKernel {
   private def layerOff(dims: Seq[Int], l: Int): Int =
     (1 to l).map(i => dims(i - 1) * dims(i) + dims(i)).sum
 
-  @inline private def sigmoid(z: Double): Double = 1.0 / (1.0 + math.exp(-z))
+  import Activations.sigmoid
 
   /** Forward + (if `acc` non-null) backward of 0.5·(pred − y)² with the
     * output delta = pred − y (linear in pred − y, so the rank-loss

@@ -31,7 +31,7 @@ case class JointAeWeights(
   def nOut: Int = if (wpM == null) 1 else wpM.length
 }
 
-/** Flat-gradient kernel for the joint autoencoder (the LstmBptt /
+/** Flat-gradient kernel for the joint autoencoder (the LstmStackBptt /
   * AttnBptt pattern: executors fold rows into one flat gradient vector;
   * the driver runs Adam). */
 object JointAeKernel {
@@ -39,11 +39,7 @@ object JointAeKernel {
     k * hE + hE + hE * l + l + l * hE + hE + hE * k + k +
       k * hA + hA + hA * out + out
 
-  @inline private def sigmoid(z: Double): Double = 1.0 / (1.0 + math.exp(-z))
-  @inline private def swish(z: Double): Double = z * sigmoid(z)
-  @inline private def swishD(z: Double): Double = {
-    val s = sigmoid(z); s * (1.0 + z * (1.0 - s))
-  }
+  import Activations.{sigmoid, swish, swishD}
 
   def toWeights(p: Array[Double], k: Int, hE: Int, l: Int, hA: Int,
       out: Int = 1): JointAeWeights = {

@@ -203,14 +203,14 @@ class LSTMBnTrainer(
         if (b >= 2 || !spearmanOnly) {
           val ys = new Array[Double](b)
           val xs = new Array[Array[Array[Double]]](b)
-          val drops = new Array[LstmBptt.Drop](b)
+          val drops = new Array[LstmStackBptt.Drop](b)
           var i = 0
           batch.foreach { row =>
             ys(i) = row.getDouble(0)
             xs(i) = Array.tabulate(t0, f)((t, j) =>
               row.getDouble(1 + t * f + j))
             drops(i) = if (!anyDrop) null
-              else LstmBptt.Drop(din, drec,
+              else LstmStackBptt.Drop(din, drec,
                 SeqAdam.maskSeed(seed0, ep, part, idx))
             idx += 1
             i += 1
@@ -261,7 +261,7 @@ class LSTMBnTrainer(
     * final (concat) state, gradients through [[StateSession]]s. */
   private def runSingle(p: Array[Double], c: LstmStackBptt.Cfg,
       acc: Array[Double], xs: Array[Array[Array[Double]]],
-      ys: Array[Double], drops: Array[LstmBptt.Drop],
+      ys: Array[Double], drops: Array[LstmStackBptt.Drop],
       gamma: Array[Double], beta: Array[Double], bOff: Int, hdd: Int,
       tau: Double, mw: Double, sw: Double,
       lnG: Array[Double] = null, lnB: Array[Double] = null,
@@ -339,7 +339,7 @@ class LSTMBnTrainer(
     * next layer down. */
   private def runStacked(p: Array[Double], c: LstmStackBptt.Cfg,
       acc: Array[Double], xs: Array[Array[Array[Double]]],
-      ys: Array[Double], drops: Array[LstmBptt.Drop],
+      ys: Array[Double], drops: Array[LstmStackBptt.Drop],
       gammas: Array[Array[Double]], betas: Array[Array[Double]],
       offs: Array[Int], widths: Array[Int], hdd: Int,
       tau: Double, mw: Double, sw: Double,

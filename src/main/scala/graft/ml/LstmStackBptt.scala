@@ -1,8 +1,13 @@
 package graft.ml
 
-/** Flat-parameter BPTT kernel generalizing [[LstmBptt]] to the
-  * reference's remaining LSTM fit layouts (sequence.py:120-147):
+/** Flat-parameter BPTT kernel for every LSTM fit layout the reference
+  * builds from its `lstm_units` list (sequence.py:120-147) — the one
+  * kernel behind [[LSTMTrainer]], [[LSTMMultiTrainer]] and
+  * [[LSTMBnTrainer]]:
   *
+  * - **one layer** (the default, `lstm_units=[n]`): a single cell whose
+  *   final hidden state feeds the linear head — the per-row gradient of
+  *   0.5·(pred − y)².
   * - **stacked** (`lstm_units` list): layer n+1 consumes layer n's
   *   per-step hidden states (Keras return_sequences=True between
   *   layers); the linear head reads the LAST layer's final hidden state.
@@ -13,17 +18,49 @@ package graft.ml
   *   steps plus an independent cell over the REVERSED steps; the head
   *   reads the concatenated final hidden states [fwd_h, bwd_h].
   *
-  * Layout: per cell (stacked: one per layer; bidi: fwd then bwd) the
-  * [[LstmBptt]] gate blocks — per gate g ∈ i,f,c̃,o: `W_g` F×H
-  * feature-major, `U_g` H×H, `b_g` H — then `wOut` (H_last, or 2H for
-  * bidi) and `bOut`. Forward recurrences match the scorer's stage
-  * algebra exactly (t=0 convention h₋₁ = c₋₁ = 0), so fitted weights
-  * score identically through the distributed codegen'd forward pass. */
+  * Layout: per cell (stacked: one per layer; bidi: fwd then bwd) four
+  * gate blocks — per gate g ∈ i,f,c̃,o in that order: `W_g` F×H
+  * feature-major, `U_g` H×H prev-hidden-major, `b_g` H — then `wOut`
+  * (H_last, or 2H for bidi) and `bOut` (one layer: 4(FH + H² + H) + H + 1
+  * doubles in all). Forward recurrences match the scorer's stage algebra
+  * exactly (Keras gate order and the t=0 convention h₋₁ = c₋₁ = 0, where
+  * the recurrent term is omitted and c₀ = i∘g — so the forget gate has
+  * zero gradient at t=0): fitted weights score identically through the
+  * distributed codegen'd forward pass. */
 object LstmStackBptt {
+  import Activations.sigmoid
 
   /** Keras LayerNormalization default epsilon (the LSTM path's
     * use_layer_norm stage carries no explicit eps, sequence.py:141-142). */
   val LnEps = 1e-3
+
+  /** Training-time dropout sample (Keras LSTM semantics,
+    * sequence.py:123-132): `in` masks the step inputs and `rec` the
+    * recurrent state, with ONE Bernoulli mask PER GATE held constant
+    * across all timesteps of the row (the Keras `dropout` /
+    * `recurrent_dropout` behavior), inverted 1/(1−p) scaling. `seed`
+    * fixes the sample so forward/backward and finite-difference pairs
+    * see the same sub-network. `perCell`, when set, carries one
+    * (dropout, recurrent_dropout) pair PER STACKED LAYER — the
+    * reference's `lstm_units` tuple list (sequence.py:105,123) — and
+    * overrides the scalar rates in the per-cell mask sampling. */
+  case class Drop(in: Double, rec: Double, seed: Long,
+      perCell: Seq[(Double, Double)] = null) {
+    require(in >= 0 && in < 1 && rec >= 0 && rec < 1,
+      s"dropout rates in [0, 1), got ($in, $rec)")
+    require(perCell == null || perCell.forall { case (i, r) =>
+      i >= 0 && i < 1 && r >= 0 && r < 1 },
+      s"per-layer dropout rates in [0, 1), got $perCell")
+  }
+
+  /** A row's [[Drop]] sample for a trainer's per-layer (dropout,
+    * recurrent_dropout) `rates`, or null when every rate is 0: the first
+    * pair gives the scalar rates, and a list of more than one pair also
+    * rides along as `perCell`. */
+  private[ml] def rowDrop(rates: Seq[(Double, Double)], seed: Long): Drop =
+    if (!rates.exists(p => p._1 > 0 || p._2 > 0)) null
+    else Drop(rates.head._1, rates.head._2, seed,
+      if (rates.size > 1) rates else null)
 
   /** @param layers hidden width per stacked layer (bidi: exactly one)
     * @param layerNorm trainable LayerNormalization after every layer
@@ -120,7 +157,7 @@ object LstmStackBptt {
     * and returns per-step input gradients (for the layer below).
     * `mIn`/`mRec` are optional per-gate dropout masks (Keras
     * dropout/recurrent_dropout: one mask per gate, constant across
-    * timesteps — [[LstmBptt.Drop]] semantics per layer). */
+    * timesteps — [[Drop]] semantics per layer). */
   private final class Cell(w: Array[Double], off: Int, f: Int, h: Int,
       mIn: Array[Array[Double]] = null, mRec: Array[Array[Double]] = null) {
     private val blk = f * h + h * h + h
@@ -138,7 +175,6 @@ object LstmStackBptt {
       gg = Array.ofDim(T, h); og = Array.ofDim(T, h)
       cs = Array.ofDim(T, h); hs = Array.ofDim(T, h)
       tc = Array.ofDim(T, h)
-      def sigmoid(z: Double) = 1.0 / (1.0 + math.exp(-z))
       var t = 0
       while (t < T) {
         val xt = x(t)
@@ -297,20 +333,21 @@ object LstmStackBptt {
 
   /** Forward pass only (gradient-check helper). */
   def forward(w: Array[Double], c: Cfg, x: Array[Array[Double]],
-      drop: LstmBptt.Drop = null): Double =
+      drop: Drop = null): Double =
     run(w, c, x, 0.0, null, drop)
 
   /** Multi-output forward: all `c.out` predictions. */
   def forwardMulti(w: Array[Double], c: Cfg, x: Array[Array[Double]],
-      drop: LstmBptt.Drop = null): Array[Double] = {
+      drop: Drop = null): Array[Double] = {
     val preds = new Array[Double](c.out)
     runMulti(w, c, x, new Array[Double](c.out), null, drop, preds)
     preds
   }
 
-  /** Single-output compatibility wrapper over [[runMulti]]. */
+  /** Single-output wrapper over [[runMulti]] (gradient-check helper;
+    * the trainers call [[runMulti]] directly). */
   def run(w: Array[Double], c: Cfg, x: Array[Array[Double]], y: Double,
-      acc: Array[Double], drop: LstmBptt.Drop = null): Double = {
+      acc: Array[Double], drop: Drop = null): Double = {
     require(c.out == 1, "multi-output Cfg needs runMulti")
     runMulti(w, c, x, Array(y), acc, drop)
   }
@@ -322,7 +359,7 @@ object LstmStackBptt {
     * own (dropout, recurrent_dropout) pair — the reference's
     * `lstm_units` tuples (bidi directions share the single layer's
     * pair, as Keras' Bidirectional wraps one configured cell). */
-  private def cellMasks(drop: LstmBptt.Drop, c: Cfg, nCells: Int)
+  private def cellMasks(drop: Drop, c: Cfg, nCells: Int)
       : Array[(Array[Array[Double]], Array[Array[Double]])] = {
     if (drop == null) return null
     val rng = new java.util.Random(drop.seed)
@@ -345,7 +382,7 @@ object LstmStackBptt {
     * `drop` samples Keras dropout/recurrent_dropout per cell. */
   def runMulti(w: Array[Double], c: Cfg, x: Array[Array[Double]],
       ys: Array[Double], acc: Array[Double],
-      drop: LstmBptt.Drop = null,
+      drop: Drop = null,
       predsOut: Array[Double] = null): Double = {
     val T = x.length
     val hOff = c.headOff
@@ -510,7 +547,7 @@ object LstmStackBptt {
     * applies it between the session's state and the batch-level BN
     * (LstmBnSpec pins the both-flags gradient and fit). */
   final class StateSession(w: Array[Double], c: Cfg,
-      x: Array[Array[Double]], drop: LstmBptt.Drop = null) {
+      x: Array[Array[Double]], drop: Drop = null) {
     require(!c.layerNorm, "BatchNorm session excludes layerNorm")
     private val T = x.length
     private val masks = cellMasks(drop, c, if (c.bidi) 2 else c.layers.size)
@@ -571,7 +608,7 @@ object LstmStackBptt {
     * call pair (forwardLayer then, later, backwardLayer in reverse
     * order) uses this session's retained caches. */
   final class LayerSession(w: Array[Double], c: Cfg,
-      drop: LstmBptt.Drop = null) {
+      drop: Drop = null) {
     require(!c.bidi && !c.layerNorm,
       "stacked BN sessions cover the non-bidi, non-LN layouts")
     private val masks = cellMasks(drop, c, c.layers.size)
@@ -673,8 +710,9 @@ object LstmStackBptt {
       Array.tabulate(h)(i => w(o + h + i)), LnEps)
   }
 
-  /** Glorot input blocks, scaled-uniform recurrent blocks, unit forget
-    * bias — the same scheme as the one-layer trainer. */
+  /** Glorot input blocks, scaled-uniform recurrent blocks and a
+    * Keras-style unit forget bias (inert at t=0 by the cell's h₋₁ = 0
+    * convention, but it stabilizes early epochs); Glorot head. */
   def init(c: Cfg, seed: Long): Array[Double] = {
     val rng = new scala.util.Random(seed)
     val w = new Array[Double](c.size)

@@ -3,240 +3,12 @@ package graft.ml
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Flat-parameter BPTT kernel for a one-layer LSTM (+ linear head): the
-  * per-row gradient of 0.5·(pred − y)², written against a single flat
-  * weight array so gradients aggregate as one vector sum.
-  *
-  * Layout (per gate g ∈ i,f,c̃,o in that order):
-  * `W_g` F×H feature-major, `U_g` H×H prev-hidden-major, `b_g` H —
-  * then `wOut` H, `bOut`. Total 4(FH + H² + H) + H + 1.
-  *
-  * The forward recurrence matches [[LstmScorer.stepStages]] exactly
-  * (Keras gate order and the t=0 convention h₋₁ = c₋₁ = 0, where the
-  * recurrent term is omitted and c₀ = i∘g — so the forget gate has zero
-  * gradient at t=0): weights fitted here score identically through the
-  * distributed codegen'd forward pass.
-  */
-object LstmBptt {
-
-  def size(f: Int, h: Int): Int = 4 * (f * h + h * h + h) + h + 1
-
-  /** Offsets of gate `g` (0=i,1=f,2=c̃,3=o): (W, U, b). */
-  private def gateOff(g: Int, f: Int, h: Int): (Int, Int, Int) = {
-    val blk = f * h + h * h + h
-    val base = g * blk
-    (base, base + f * h, base + f * h + h * h)
-  }
-  private def wOutOff(f: Int, h: Int): Int = 4 * (f * h + h * h + h)
-
-  /** Unpack a flat vector into the scorer's weight case class. */
-  def toWeights(w: Array[Double], f: Int, h: Int): LstmWeights = {
-    def mat(off: Int, rows: Int): Array[Array[Double]] =
-      Array.tabulate(rows, h)((r, u) => w(off + r * h + u))
-    def vec(off: Int): Array[Double] = Array.tabulate(h)(u => w(off + u))
-    val Seq((wi, ui, bi), (wf, uf, bf), (wc, uc, bc), (wo, uo, bo)) =
-      (0 until 4).map(g => gateOff(g, f, h))
-    LstmWeights(
-      mat(wi, f), mat(ui, h), vec(bi),
-      mat(wf, f), mat(uf, h), vec(bf),
-      mat(wc, f), mat(uc, h), vec(bc),
-      mat(wo, f), mat(uo, h), vec(bo),
-      Array.tabulate(h)(u => w(wOutOff(f, h) + u)),
-      w(size(f, h) - 1))
-  }
-
-  /** Training-time dropout sample (Keras LSTM semantics,
-    * sequence.py:123-132): `in` masks the step inputs and `rec` the
-    * recurrent state, with ONE Bernoulli mask PER GATE held constant
-    * across all timesteps of the row (the Keras `dropout` /
-    * `recurrent_dropout` behavior), inverted 1/(1−p) scaling. `seed`
-    * fixes the sample so forward/backward and finite-difference pairs
-    * see the same sub-network. `perCell`, when set, carries one
-    * (dropout, recurrent_dropout) pair PER STACKED LAYER — the
-    * reference's `lstm_units` tuple list (sequence.py:105,123) — and
-    * overrides the scalar rates in [[LstmStackBptt]]'s mask sampling
-    * (the one-layer kernel has a single cell and ignores it). */
-  case class Drop(in: Double, rec: Double, seed: Long,
-      perCell: Seq[(Double, Double)] = null) {
-    require(in >= 0 && in < 1 && rec >= 0 && rec < 1,
-      s"dropout rates in [0, 1), got ($in, $rec)")
-    require(perCell == null || perCell.forall { case (i, r) =>
-      i >= 0 && i < 1 && r >= 0 && r < 1 },
-      s"per-layer dropout rates in [0, 1), got $perCell")
-  }
-
-  /** Forward pass only: prediction for one row (used by the gradient
-    * check; production scoring goes through [[LstmScorer]]). */
-  def forward(w: Array[Double], f: Int, h: Int,
-      x: Array[Array[Double]], drop: Drop = null): Double =
-    run(w, f, h, x, 0.0, null, drop)
-
-  /** Forward + (if `acc` non-null) backward, accumulating the gradient
-    * into `acc` (same layout as `w`, one extra slot for the loss is NOT
-    * assumed — caller tracks loss from the return). Returns the
-    * prediction (acc == null) or the squared-error loss (acc != null). */
-  def run(w: Array[Double], f: Int, h: Int, x: Array[Array[Double]],
-      y: Double, acc: Array[Double], drop: Drop = null): Double = {
-    val T = x.length
-    val (wiO, uiO, biO) = gateOff(0, f, h)
-    val (wfO, ufO, bfO) = gateOff(1, f, h)
-    val (wcO, ucO, bcO) = gateOff(2, f, h)
-    val (woO, uoO, boO) = gateOff(3, f, h)
-    val woutO = wOutOff(f, h)
-    val ig = Array.ofDim[Double](T, h); val fg = Array.ofDim[Double](T, h)
-    val gg = Array.ofDim[Double](T, h); val og = Array.ofDim[Double](T, h)
-    val cs = Array.ofDim[Double](T, h); val hs = Array.ofDim[Double](T, h)
-    val tc = Array.ofDim[Double](T, h)
-    // per-gate masks (4×f input, 4×h recurrent), drawn in fixed order
-    val (mIn, mRec) = if (drop == null) (null, null) else {
-      val rng = new java.util.Random(drop.seed)
-      (Array.fill(4)(SeqAdam.invBernoulli(rng, drop.in, f)),
-        Array.fill(4)(SeqAdam.invBernoulli(rng, drop.rec, h)))
-    }
-    def sigmoid(z: Double) = 1.0 / (1.0 + math.exp(-z))
-    var t = 0
-    while (t < T) {
-      val xt = x(t)
-      var u = 0
-      while (u < h) {
-        var zi = w(biO + u); var zf = w(bfO + u)
-        var zg = w(bcO + u); var zo = w(boO + u)
-        var fi = 0
-        while (fi < f) {
-          val xv = xt(fi); val r = fi * h + u
-          if (mIn == null) {
-            zi += xv * w(wiO + r); zf += xv * w(wfO + r)
-            zg += xv * w(wcO + r); zo += xv * w(woO + r)
-          } else {
-            zi += xv * mIn(0)(fi) * w(wiO + r)
-            zf += xv * mIn(1)(fi) * w(wfO + r)
-            zg += xv * mIn(2)(fi) * w(wcO + r)
-            zo += xv * mIn(3)(fi) * w(woO + r)
-          }
-          fi += 1
-        }
-        if (t > 0) {
-          val hp = hs(t - 1)
-          var k = 0
-          while (k < h) {
-            val hv = hp(k); val r = k * h + u
-            if (mRec == null) {
-              zi += hv * w(uiO + r); zf += hv * w(ufO + r)
-              zg += hv * w(ucO + r); zo += hv * w(uoO + r)
-            } else {
-              zi += hv * mRec(0)(k) * w(uiO + r)
-              zf += hv * mRec(1)(k) * w(ufO + r)
-              zg += hv * mRec(2)(k) * w(ucO + r)
-              zo += hv * mRec(3)(k) * w(uoO + r)
-            }
-            k += 1
-          }
-        }
-        ig(t)(u) = sigmoid(zi); fg(t)(u) = sigmoid(zf)
-        gg(t)(u) = math.tanh(zg); og(t)(u) = sigmoid(zo)
-        cs(t)(u) = (if (t > 0) fg(t)(u) * cs(t - 1)(u) else 0.0) +
-          ig(t)(u) * gg(t)(u)
-        tc(t)(u) = math.tanh(cs(t)(u))
-        hs(t)(u) = og(t)(u) * tc(t)(u)
-        u += 1
-      }
-      t += 1
-    }
-    var pred = w(size(f, h) - 1)
-    var u = 0
-    while (u < h) { pred += w(woutO + u) * hs(T - 1)(u); u += 1 }
-    if (acc == null) return pred
-
-    // backward
-    val d = pred - y
-    val dh = new Array[Double](h); val dc = new Array[Double](h)
-    acc(size(f, h) - 1) += d
-    u = 0
-    while (u < h) {
-      acc(woutO + u) += d * hs(T - 1)(u)
-      dh(u) = w(woutO + u) * d
-      u += 1
-    }
-    t = T - 1
-    val dzi = new Array[Double](h); val dzf = new Array[Double](h)
-    val dzg = new Array[Double](h); val dzo = new Array[Double](h)
-    while (t >= 0) {
-      val xt = x(t)
-      var u2 = 0
-      while (u2 < h) {
-        val o = og(t)(u2); val i = ig(t)(u2); val g = gg(t)(u2)
-        val tch = tc(t)(u2)
-        dzo(u2) = dh(u2) * tch * o * (1 - o)
-        val dcu = dc(u2) + dh(u2) * o * (1 - tch * tch)
-        dzi(u2) = dcu * g * i * (1 - i)
-        dzg(u2) = dcu * i * (1 - g * g)
-        dzf(u2) = if (t > 0) {
-          val fgu = fg(t)(u2)
-          dcu * cs(t - 1)(u2) * fgu * (1 - fgu)
-        } else 0.0
-        // dc_{t-1}; the forget path only exists for t > 0
-        dc(u2) = if (t > 0) dcu * fg(t)(u2) else 0.0
-        acc(biO + u2) += dzi(u2); acc(bfO + u2) += dzf(u2)
-        acc(bcO + u2) += dzg(u2); acc(boO + u2) += dzo(u2)
-        var fi = 0
-        while (fi < f) {
-          val xv = xt(fi); val r = fi * h + u2
-          if (mIn == null) {
-            acc(wiO + r) += xv * dzi(u2); acc(wfO + r) += xv * dzf(u2)
-            acc(wcO + r) += xv * dzg(u2); acc(woO + r) += xv * dzo(u2)
-          } else {
-            acc(wiO + r) += xv * mIn(0)(fi) * dzi(u2)
-            acc(wfO + r) += xv * mIn(1)(fi) * dzf(u2)
-            acc(wcO + r) += xv * mIn(2)(fi) * dzg(u2)
-            acc(woO + r) += xv * mIn(3)(fi) * dzo(u2)
-          }
-          fi += 1
-        }
-        u2 += 1
-      }
-      if (t > 0) {
-        val hp = hs(t - 1)
-        var k = 0
-        while (k < h) {
-          var s = 0.0
-          var u3 = 0
-          while (u3 < h) {
-            val r = k * h + u3
-            if (mRec == null) {
-              acc(uiO + r) += hp(k) * dzi(u3)
-              acc(ufO + r) += hp(k) * dzf(u3)
-              acc(ucO + r) += hp(k) * dzg(u3)
-              acc(uoO + r) += hp(k) * dzo(u3)
-              s += w(uiO + r) * dzi(u3) + w(ufO + r) * dzf(u3) +
-                w(ucO + r) * dzg(u3) + w(uoO + r) * dzo(u3)
-            } else {
-              acc(uiO + r) += hp(k) * mRec(0)(k) * dzi(u3)
-              acc(ufO + r) += hp(k) * mRec(1)(k) * dzf(u3)
-              acc(ucO + r) += hp(k) * mRec(2)(k) * dzg(u3)
-              acc(uoO + r) += hp(k) * mRec(3)(k) * dzo(u3)
-              s += w(uiO + r) * mRec(0)(k) * dzi(u3) +
-                w(ufO + r) * mRec(1)(k) * dzf(u3) +
-                w(ucO + r) * mRec(2)(k) * dzg(u3) +
-                w(uoO + r) * mRec(3)(k) * dzo(u3)
-            }
-            u3 += 1
-          }
-          dh(k) = s
-          k += 1
-        }
-      }
-      t -= 1
-    }
-    0.5 * d * d
-  }
-}
-
 /** Trains the LSTM regressor the reference fits with Keras
-  * (sequence.py:101-153) — one-layer by default, layer stacks via
+  * (sequence.py:101-153) — one layer by default, layer stacks via
   * `layers` (the reference's `lstm_units` list) and the single-layer
-  * bidirectional layout via `bidirectional`, both through the
-  * generalized [[LstmStackBptt]] kernel — with the same
-  * treeAggregate-gradient + driver-Adam shape as
+  * bidirectional layout via `bidirectional`, every layout through the
+  * one [[LstmStackBptt]] kernel and the [[SeqAdam]] epoch loop at one
+  * output — with the same treeAggregate-gradient + driver-Adam shape as
   * [[MLPRegressor]]: executors fold rows into ONE flat gradient
   * vector per epoch (map-side partial sums, depth-2 tree merge), the
   * driver holds only the weight vector. Fitted weights flow into the
@@ -297,31 +69,18 @@ class LSTMTrainer(
   private val effDropouts: Seq[(Double, Double)] =
     if (layerDropouts.nonEmpty) layerDropouts
     else Seq.fill(math.max(layers.size, 1))((dropout, recurrentDropout))
-  private def anyDropout: Boolean =
-    effDropouts.exists(p => p._1 > 0 || p._2 > 0)
   private val nFeat = lagCols.size / seqLen
 
-  /** `layers.size > 1` (reference `lstm_units` list, sequence.py:120),
-    * `bidirectional`, or `layerNorm` (the trainable use_layer_norm
-    * stage lives only in the generalized kernel) selects
-    * [[LstmStackBptt]]; otherwise the one-layer [[LstmBptt]] fast
-    * path — with `layers == Seq(n)` honored as a one-layer fit of n
-    * units. `use_batch_norm` training (batch statistics + moving
-    * averages) is NOT fitted — the standardization-in-lieu-of-BatchNorm
-    * deviation documented on the autoencoder; BN scoring parity over
+  /** The kernel layout: the `layers` list (the reference's
+    * `lstm_units`, sequence.py:120) — empty means one layer of `hidden`
+    * units, and `layers == Seq(n)` is a one-layer fit of n units — with
+    * the optional bidirectional wrapper and trainable use_layer_norm
+    * stages, at one output. `use_batch_norm` training (batch statistics
+    * + moving averages) is [[LSTMBnTrainer]]'s; BN scoring parity over
     * pinned moving stats is [[LstmNorm]]'s affine mode. */
-  private def stackCfg: Option[LstmStackBptt.Cfg] =
-    if (bidirectional)
-      Some(LstmStackBptt.Cfg(nFeat,
-        if (layers.isEmpty) Seq(hidden) else layers, bidi = true,
-        layerNorm = layerNorm))
-    else if (layers.size > 1 || layerNorm)
-      Some(LstmStackBptt.Cfg(nFeat,
-        if (layers.isEmpty) Seq(hidden) else layers, bidi = false,
-        layerNorm = layerNorm))
-    else None
+  private def kernelCfg: LstmStackBptt.Cfg = LstmStackBptt.Cfg(nFeat,
+    if (layers.isEmpty) Seq(hidden) else layers, bidirectional, layerNorm)
 
-  private var weights: LstmWeights = _
   private var stacked: Seq[LstmWeights] = Nil
   private var stackedNorms: Seq[LstmNorm] = Nil
   private var bidi: (LstmWeights, LstmWeights, Array[Double], Double) = _
@@ -330,7 +89,12 @@ class LSTMTrainer(
   private var yMean = 0.0
   private var yStd = 1.0
 
-  def fittedWeights: LstmWeights = weights
+  /** The one-layer fit's cell and head (null for stacked and
+    * bidirectional fits; a layerNorm fit's norm is in [[fittedNorms]]). */
+  def fittedWeights: LstmWeights = stacked match {
+    case Seq(one) => one
+    case _ => null
+  }
   def fittedLayers: Seq[LstmWeights] = stacked
   def fittedNorms: Seq[LstmNorm] = stackedNorms
   def fittedBidi: (LstmWeights, LstmWeights, Array[Double], Double) = bidi
@@ -338,8 +102,7 @@ class LSTMTrainer(
   def steps: Seq[Seq[String]] = lagCols.grouped(nFeat).toSeq
 
   def fit(df: DataFrame): this.type = {
-    val f = nFeat
-    val h = effH // one-element `layers` honored (lstm_units=[n])
+    val cfg = kernelCfg
     val data = df.select((targetCol +: lagCols).map(c =>
       col(c).cast("double")): _*).na.drop()
     data.cache()
@@ -350,53 +113,16 @@ class LSTMTrainer(
         .collect()(0)
       yMean = r.getDouble(0); yStd = math.max(r.getDouble(1), 1e-12)
     }
-    stackCfg match {
-      case Some(cfg) =>
-        val w = LstmStackBptt.init(cfg, seed)
-        adamEpochs(data, cfg.size, w,
-          (bw, x, y, acc, ms) => LstmStackBptt.run(bw, cfg, x, y, acc,
-            if (anyDropout)
-              LstmBptt.Drop(effDropouts.head._1, effDropouts.head._2, ms,
-                if (effDropouts.size > 1) effDropouts else null)
-            else null))
-        materialize(w)
-      case None =>
-        val sz = LstmBptt.size(f, h)
-        val rng = new scala.util.Random(seed)
-        val w = new Array[Double](sz)
-        // Glorot for the input blocks, scaled-uniform for the recurrent
-        // blocks; Keras-style unit forget bias (inert at t=0 by the
-        // cell's h₋₁ = 0 convention but it stabilizes early epochs)
-        val limW = math.sqrt(6.0 / (f + h))
-        val limU = math.sqrt(6.0 / (2.0 * h))
-        val blk = f * h + h * h + h
-        for (g <- 0 until 4) {
-          val base = g * blk
-          for (i <- 0 until f * h)
-            w(base + i) = (rng.nextDouble() * 2 - 1) * limW
-          for (i <- 0 until h * h)
-            w(base + f * h + i) = (rng.nextDouble() * 2 - 1) * limU
-          if (g == 1)
-            for (i <- 0 until h) w(base + f * h + h * h + i) = 1.0
-        }
-        val limOut = math.sqrt(6.0 / (h + 1))
-        for (i <- 0 until h + 1)
-          w(4 * blk + i) = (rng.nextDouble() * 2 - 1) * limOut
-        adamEpochs(data, sz, w,
-          (bw, x, y, acc, ms) => LstmBptt.run(bw, f, h, x, y, acc,
-            if (anyDropout)
-              LstmBptt.Drop(effDropouts.head._1, effDropouts.head._2, ms)
-            else null))
-        materialize(w)
-    }
+    val w = LstmStackBptt.init(cfg, seed)
+    SeqAdam.run(data, cfg.size, w, 1, Array(yMean), Array(yStd), nFeat,
+      seqLen, epochs, lr, seed, batchFraction,
+      (bw, x, ys, acc, ms, po) => LstmStackBptt.runMulti(bw, cfg, x, ys,
+        acc, LstmStackBptt.rowDrop(effDropouts, ms), po),
+      loss, mseWeight, spearmanWeight, rankTau, rankBatch, optimizer)
+    materialize(w)
     data.unpersist()
     this
   }
-
-  /** Effective one-layer unit count (a one-element `layers` list IS the
-    * one-layer fast path — lstm_units=[n], sequence.py:120). */
-  private def effH: Int =
-    if (!bidirectional && layers.size == 1) layers.head else hidden
 
   /** Decode a final flat kernel into the scorer-side weight containers —
     * shared by the fit tail and [[LSTMTrainer.load]], so a loaded
@@ -404,25 +130,14 @@ class LSTMTrainer(
     * used. */
   private def materialize(w: Array[Double]): Unit = {
     flatKernel = w
-    stackCfg match {
-      case Some(cfg) =>
-        if (cfg.bidi) {
-          bidi = LstmStackBptt.toBidi(w, cfg)
-          if (layerNorm) bidiLn = LstmStackBptt.bidiNorm(w, cfg)
-        } else {
-          stacked = LstmStackBptt.toStacked(w, cfg)
-          if (layerNorm) stackedNorms = LstmStackBptt.stackNorms(w, cfg)
-        }
-      case None =>
-        weights = LstmBptt.toWeights(w, nFeat, effH)
+    val cfg = kernelCfg
+    if (cfg.bidi) {
+      bidi = LstmStackBptt.toBidi(w, cfg)
+      if (layerNorm) bidiLn = LstmStackBptt.bidiNorm(w, cfg)
+    } else {
+      stacked = LstmStackBptt.toStacked(w, cfg)
+      if (layerNorm) stackedNorms = LstmStackBptt.stackNorms(w, cfg)
     }
-  }
-
-  /** Kernel length the configured architecture expects — the loader's
-    * shape validation. */
-  private def kernelSize: Int = stackCfg match {
-    case Some(cfg) => cfg.size
-    case None => LstmBptt.size(nFeat, effH)
   }
 
   /** Persist the FITTED estimator (flat kernel + target scaling +
@@ -464,29 +179,16 @@ class LSTMTrainer(
     WeightsIO.save(path, m, s)
   }
 
-  /** Shared epoch loop — delegates to [[SeqAdam]] (also used by the
-    * transformer trainer). */
-  private def adamEpochs(data: DataFrame, sz: Int, w: Array[Double],
-      kernel: (Array[Double], Array[Array[Double]], Double, Array[Double],
-        Long) => Double): Unit =
-    SeqAdam.run(data, sz, w, SeqAdam.Cfg(nFeat, seqLen, yMean, yStd,
-      epochs, lr, seed, batchFraction, loss, mseWeight, spearmanWeight,
-      rankTau, rankBatch, optimizer), kernel)
-
   /** Appends `prediction` through the distributed unrolled forward pass
-    * (one-layer, stacked, or bidirectional to match the fitted layout),
-    * un-standardizing if the target was scaled at fit. */
+    * (stacked — one layer included — or bidirectional to match the
+    * fitted layout), un-standardizing if the target was scaled at fit. */
   def predict(df: DataFrame): DataFrame = {
+    require(flatKernel != null, "fit first")
     val scored =
       if (bidi != null)
         LstmScorer.scoreBidirectional(df, steps, bidi._1, bidi._2,
           bidi._3, bidi._4, bidiLn)
-      else if (stacked.nonEmpty)
-        LstmScorer.scoreStacked(df, steps, stacked, stackedNorms)
-      else {
-        require(weights != null, "fit first")
-        LstmScorer.score(df, steps, weights)
-      }
+      else LstmScorer.scoreStacked(df, steps, stacked, stackedNorms)
     if (scaleTarget)
       scored.withColumn("prediction",
         col("prediction") * lit(yStd) + lit(yMean))
@@ -530,7 +232,7 @@ object LSTMTrainer {
       layerNorm = meta("layerNorm").toBoolean,
       optimizer = meta("optimizer"))
     val flat = sections("flat")
-    WeightsIO.requireLen("flat", flat, m.kernelSize)
+    WeightsIO.requireLen("flat", flat, m.kernelCfg.size)
     m.yMean = meta("yMean").toDouble
     m.yStd = meta("yStd").toDouble
     m.materialize(flat)
@@ -587,8 +289,6 @@ class LSTMMultiTrainer(
   private val effDropouts: Seq[(Double, Double)] =
     if (layerDropouts.nonEmpty) layerDropouts
     else Seq.fill(math.max(layers.size, 1))((dropout, recurrentDropout))
-  private def anyDropout: Boolean =
-    effDropouts.exists(p => p._1 > 0 || p._2 > 0)
 
   private var cells: Seq[LstmWeights] = Nil
   private var headW: Array[Array[Double]] = _
@@ -667,14 +367,10 @@ class LSTMMultiTrainer(
         math.max(r.getDouble(out + o), 1e-12))
     }
     val w = LstmStackBptt.init(cfg, seed)
-    SeqAdam.runMulti(data, cfg.size, w, out, yMean, yStd, nFeat, seqLen,
+    SeqAdam.run(data, cfg.size, w, out, yMean, yStd, nFeat, seqLen,
       epochs, lr, seed, batchFraction,
       (bw, x, ys, acc, ms, po) => LstmStackBptt.runMulti(bw, cfg, x, ys,
-        acc,
-        if (anyDropout)
-          LstmBptt.Drop(effDropouts.head._1, effDropouts.head._2, ms,
-            if (effDropouts.size > 1) effDropouts else null)
-        else null, po),
+        acc, LstmStackBptt.rowDrop(effDropouts, ms), po),
       loss, mseWeight, spearmanWeight, rankTau, rankBatch, optimizer)
     materialize(w)
     data.unpersist()

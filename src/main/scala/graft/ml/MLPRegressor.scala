@@ -93,11 +93,11 @@ object MLPRegressor {
   *   ever holds the weight vectors, never the data). `batchFraction`
   *   selects full-batch (1.0) or a seeded per-epoch Bernoulli sample —
   *   the scale path matching the reference's minibatch semantics
-  *   (keras_estimators/base.py:68). The DEFAULT is 0.2: the
-  *   [[graft.tools.MinibatchSweep]] measurement shows R² parity with
-  *   full-batch across all five trainable estimators at 1/5 the
-  *   aggregated rows per epoch, and fits stay deterministic (the
-  *   sample is seeded per epoch).
+  *   (keras_estimators/base.py:68). The DEFAULT is 0.2: a minibatch
+  *   sweep (SURVEY.md §2.7) showed R² parity with full-batch across
+  *   all five trainable estimators at 1/5 the aggregated rows per
+  *   epoch, and fits stay deterministic (the sample is seeded per
+  *   epoch).
   *   Target standardization on/off mirrors the reference's
   *   StandardScaler default (keras_estimators/base.py:89-100).
   * - **predict**: pure Column expression from broadcast weights — the

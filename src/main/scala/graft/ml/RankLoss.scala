@@ -20,7 +20,7 @@ import org.apache.spark.sql.Row
 object RankLoss {
   private val Eps = 1e-7
 
-  @inline private def sigmoid(z: Double): Double = 1.0 / (1.0 + math.exp(-z))
+  import Activations.sigmoid
 
   /** Soft ranks of `x` at temperature `tau` (losses.py:76-95; includes
     * the constant 0.5 self-term, matching the reference). */
@@ -93,97 +93,43 @@ object RankLoss {
 
   /** Epoch flat gradient of a rank loss through any sequence BPTT
     * kernel, without touching the kernel: every kernel in this repo
-    * (LstmBptt, LstmStackBptt, AttnBptt, AttnBpttFull) accumulates the
-    * gradient of ½(pred−y)² — which is LINEAR in (pred−y) — and returns
-    * the prediction when `acc` is null. So a batch-level dL/dp injects
-    * exactly by re-running the kernel with the surrogate target
-    * y′ = pred − dL/dp_i (then pred − y′ = dL/dp_i). Costs one extra
-    * forward per row; executors fold bounded in-partition batches
-    * (rankBatch rows, O(b²) pairwise work) — the reference's
-    * per-Keras-batch loss semantics. Slot sz+1 counts BATCHES: the epoch
-    * gradient is the batch mean.
+    * (LstmStackBptt, AttnBptt, AttnBpttFull) accumulates the gradient of
+    * ½Σ_o(pred_o − y_o)² — which is LINEAR in each pred_o − y_o — and
+    * returns the predictions when `acc` is null. So a batch-level dL/dp
+    * injects exactly by re-running the kernel with the surrogate targets
+    * y′ = pred − dL/dp (then pred − y′ = dL/dp). Costs one extra forward
+    * per row; executors fold bounded in-partition batches (rankBatch
+    * rows, O(b²) pairwise work) — the reference's per-Keras-batch loss
+    * semantics. Slot sz+1 counts BATCHES: the epoch gradient is the
+    * batch mean.
+    *
+    * Multi-output (`output_units > 1`, base.py:46): the reference's
+    * SpearmanCorrelation loss RESHAPES the (batch, out) tensors to
+    * (-1, 1) before soft-ranking (losses.py:67-69) — every output's
+    * predictions rank together in ONE flattened vector — and the Keras
+    * mse likewise means over all batch·out elements. So the batch
+    * gradient is [[combinedGrad]] over the flattened length-(b·out)
+    * vectors, scattered back per output as per-output surrogate targets.
     *
     * Batch composition re-randomizes per epoch: rows are drawn through a
     * bounded shuffle window (8 batches wide) whose permutation is seeded
     * by (seed, epoch, partition), so the pairwise neighborhoods a row is
     * ranked against change every epoch — the reference reshuffles Keras
     * batches per epoch — with memory bounded by the window, never the
-    * partition. A leftover single-row batch (b == 1) contributes its MSE
-    * term (the Spearman term is undefined on one row) instead of being
-    * dropped.
+    * partition. The Spearman term is undefined on a flattened vector of
+    * one element, which only a leftover single-row batch at `nOut = 1`
+    * produces: it contributes its MSE term alone when `mseW != 0` and is
+    * skipped (not counted) otherwise. At `nOut >= 2` even a single row
+    * flattens to `nOut` elements, exactly the degenerate batch the
+    * reference's loss would see.
     *
     * Each row carries a per-epoch `maskSeed` (dropout): the prediction
     * forward and the gradient re-run use the SAME seed, so the surrogate
     * identity holds per sampled sub-network.
     *
-    * Row layout: col 0 = target, cols 1.. = lag-major sequence values;
-    * the kernel closure is already bound to the epoch's weights. */
-  def seqEpochGradient(rows: RDD[Row], sz: Int, t: Int, f: Int,
-      ym: Double, ysd: Double,
-      kernel: (Array[Array[Double]], Double, Array[Double], Long) => Double,
-      tau: Double, mseW: Double, spW: Double, rankBatch: Int,
-      seed: Long, ep: Long): Array[Double] = {
-    rows.mapPartitions { it =>
-      val acc = new Array[Double](sz + 2)
-      val part = org.apache.spark.TaskContext.getPartitionId()
-      var idx = 0L
-      SeqAdam.shuffledBatches(it, rankBatch, seed, ep, part.toLong)
-        .foreach { batch =>
-        val b = batch.size
-        val xs = new Array[Array[Array[Double]]](b)
-        val ys = new Array[Double](b)
-        val preds = new Array[Double](b)
-        val seeds = new Array[Long](b)
-        var i = 0
-        batch.foreach { row =>
-          ys(i) = (row.getDouble(0) - ym) / ysd
-          xs(i) = Array.tabulate(t, f)((ti, fi) =>
-            row.getDouble(1 + ti * f + fi))
-          seeds(i) = SeqAdam.maskSeed(seed, ep, part.toLong, idx)
-          idx += 1
-          preds(i) = kernel(xs(i), ys(i), null, seeds(i))
-          i += 1
-        }
-        if (b >= 2) {
-          val (dp, lossVal) = combinedGrad(preds, ys, tau, mseW, spW)
-          i = 0
-          while (i < b) {
-            kernel(xs(i), preds(i) - dp(i), acc, seeds(i))
-            i += 1
-          }
-          acc(sz) += lossVal
-          acc(sz + 1) += 1.0
-        } else if (mseW != 0.0) {
-          // single leftover row: MSE gradient only
-          val d = preds(0) - ys(0)
-          kernel(xs(0), preds(0) - mseW * 2.0 * d, acc, seeds(0))
-          acc(sz) += mseW * d * d
-          acc(sz + 1) += 1.0
-        }
-      }
-      Iterator.single(acc)
-    }.treeReduce({ (a, b) =>
-      var i = 0
-      while (i < a.length) { a(i) += b(i); i += 1 }
-      a
-    }, depth = 2)
-  }
-
-  /** Multi-output rank-loss epoch gradient (`output_units > 1`,
-    * base.py:46): the reference's SpearmanCorrelation loss RESHAPES the
-    * (batch, out) tensors to (-1, 1) before soft-ranking
-    * (losses.py:67-69) — every output's predictions rank together in ONE
-    * flattened vector — and the Keras mse likewise means over all
-    * batch·out elements. So the batch gradient is [[combinedGrad]] over
-    * the flattened length-(b·out) vectors, scattered back per output and
-    * injected through the UNCHANGED multi kernel as per-output surrogate
-    * targets (every multi backward in this repo is linear in each
-    * pred_o − y_o). A leftover single-row batch needs no special case:
-    * its flattened vector still has `nOut >= 2` elements, exactly the
-    * degenerate batch the reference's loss would see.
-    *
     * Row layout: cols 0..nOut-1 = targets, then lag-major sequence
-    * values; kernel signature = (x, ys, acc, maskSeed, predsOut). */
+    * values; kernel signature = (x, ys, acc, maskSeed, predsOut), already
+    * bound to the epoch's weights. */
   def seqEpochGradientMulti(rows: RDD[Row], sz: Int, t: Int, f: Int,
       nOut: Int, yMean: Array[Double], yStd: Array[Double],
       kernel: (Array[Array[Double]], Array[Double], Array[Double], Long,
@@ -225,16 +171,25 @@ object RankLoss {
           }
           i += 1
         }
-        val (dp, lossVal) = combinedGrad(flatP, flatY, tau, mseW, spW)
-        i = 0
-        while (i < b) {
-          val sur = Array.tabulate(nOut)(o =>
-            preds(i)(o) - dp(i * nOut + o))
-          kernel(xs(i), sur, acc, seeds(i), null)
-          i += 1
+        if (b * nOut >= 2) {
+          val (dp, lossVal) = combinedGrad(flatP, flatY, tau, mseW, spW)
+          i = 0
+          while (i < b) {
+            val sur = Array.tabulate(nOut)(o =>
+              preds(i)(o) - dp(i * nOut + o))
+            kernel(xs(i), sur, acc, seeds(i), null)
+            i += 1
+          }
+          acc(sz) += lossVal
+          acc(sz + 1) += 1.0
+        } else if (mseW != 0.0) {
+          // single leftover element: MSE gradient only
+          val d = flatP(0) - flatY(0)
+          kernel(xs(0), Array(flatP(0) - mseW * 2.0 * d), acc, seeds(0),
+            null)
+          acc(sz) += mseW * d * d
+          acc(sz + 1) += 1.0
         }
-        acc(sz) += lossVal
-        acc(sz + 1) += 1.0
       }
       Iterator.single(acc)
     }.treeReduce({ (a, b) =>

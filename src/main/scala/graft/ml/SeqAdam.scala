@@ -2,23 +2,15 @@ package graft.ml
 
 import org.apache.spark.sql.DataFrame
 
-/** Shared epoch loop for the sequence trainers (LSTM + transformer),
-  * previously duplicated in both: per-epoch seeded Bernoulli sampling
+/** The one epoch loop of the sequence trainers (LSTM + transformer,
+  * single- and multi-output): per-epoch seeded Bernoulli sampling
   * (`batchFraction` — the reference's minibatch-SGD semantics at cluster
   * granularity), the flat-gradient MSE treeAggregate or the rank-loss
   * surrogate-injection path (losses.py:22-189 via
-  * [[RankLoss.seqEpochGradient]]), and driver-side Adam.
-  * `kernel(bw, x, y, acc, maskSeed)` accumulates one row's gradient into
-  * `acc` (when non-null) and returns the prediction; `maskSeed` is a
-  * per-row per-epoch seed for training-time dropout masks (kernels
-  * without dropout ignore it). */
+  * [[RankLoss.seqEpochGradientMulti]]), and driver-side Adam. Also home
+  * to the seeded sampling helpers every rank-loss and dropout path
+  * shares ([[maskSeed]], [[invBernoulli]], [[shuffledBatches]]). */
 private[ml] object SeqAdam {
-
-  case class Cfg(
-      nFeat: Int, seqLen: Int, yMean: Double, yStd: Double,
-      epochs: Int, lr: Double, seed: Long, batchFraction: Double,
-      loss: String, mseWeight: Double, spearmanWeight: Double,
-      rankTau: Double, rankBatch: Int, optimizer: String = "adam")
 
   /** SplitMix64-style mix of (seed, epoch, partition, row index) into a
     * per-row dropout mask seed. Never returns 0 (0 = dropout off). */
@@ -63,66 +55,27 @@ private[ml] object SeqAdam {
     }.grouped(rankBatch)
   }
 
-  def run(data: DataFrame, sz: Int, w: Array[Double], c: Cfg,
-      kernel: (Array[Double], Array[Array[Double]], Double, Array[Double],
-        Long) => Double): Unit = {
-    val (f, t) = (c.nFeat, c.seqLen)
-    val adam = new AdamState(sz, c.lr, c.optimizer)
-    val (ym, ys) = (c.yMean, c.yStd)
-    for (ep <- 1 to c.epochs) {
-      val bw = w.clone()
-      val epL = ep.toLong
-      val seed0 = c.seed
-      val batch = if (c.batchFraction >= 1.0) data
-        else data.sample(withReplacement = false, c.batchFraction,
-          c.seed + ep)
-      // rank losses ride the SAME kernel via the surrogate-target
-      // injection (RankLoss.seqEpochGradient)
-      val grad = if (c.loss != "mse") {
-        val (mw, sw) = if (c.loss == "spearman") (0.0, 1.0)
-          else (c.mseWeight, c.spearmanWeight)
-        RankLoss.seqEpochGradient(batch.rdd, sz, t, f, ym, ys,
-          (x, y, acc, ms) => kernel(bw, x, y, acc, ms), c.rankTau, mw, sw,
-          c.rankBatch, seed0, epL)
-      } else batch.rdd.treeAggregate(new Array[Double](sz + 2))(
-        seqOp = (acc, row) => {
-          val y = (row.getDouble(0) - ym) / ys
-          val x = Array.tabulate(t, f)((ti, fi) =>
-            row.getDouble(1 + ti * f + fi))
-          val ms = maskSeed(seed0, epL,
-            org.apache.spark.TaskContext.getPartitionId().toLong,
-            acc(sz + 1).toLong)
-          acc(sz) += kernel(bw, x, y, acc, ms)
-          acc(sz + 1) += 1.0
-          acc
-        },
-        combOp = (a, b) => {
-          var i = 0
-          while (i < a.length) { a(i) += b(i); i += 1 }
-          a
-        }, depth = 2)
-      val bn = math.max(grad(sz + 1), 1.0)
-      val g = Array.tabulate(sz)(i => grad(i) / bn)
-      adam.update(w, g, ep)
-    }
-  }
-
-  /** Multi-output epoch loop (output_units > 1, base.py:46): rows carry
-    * `nOut` leading target columns, each standardized per-output; the
-    * kernel receives the standardized target VECTOR and accumulates the
-    * joint Keras summed-mse gradient (and fills `predsOut` when
-    * non-null). `loss = "spearman" | "combined"` trains the reference's
-    * rank objectives with their exact multi-output semantics — the loss
-    * flattens (batch, out) to one vector (losses.py:67-69) — via
-    * [[RankLoss.seqEpochGradientMulti]]'s surrogate-target injection. */
-  def runMulti(data: DataFrame, sz: Int, w: Array[Double], nOut: Int,
+  /** Trains `w` in place for `epochs` epochs. Rows carry `nOut` leading
+    * target columns (`nOut = 1` for the single-output trainers,
+    * `output_units > 1` otherwise, base.py:46), each standardized
+    * per-output, then the lag-major sequence values. `kernel(bw, x, ys,
+    * acc, maskSeed, predsOut)` receives the standardized target VECTOR,
+    * accumulates the joint Keras summed-mse gradient into `acc` when
+    * non-null, fills `predsOut` when non-null, and returns the loss (or,
+    * with `acc` null, the first prediction); `maskSeed` is a per-row
+    * per-epoch seed for training-time dropout masks (kernels without
+    * dropout ignore it). `loss = "spearman" | "combined"` trains the
+    * reference's rank objectives with their exact multi-output semantics
+    * — the loss flattens (batch, out) to one vector (losses.py:67-69) —
+    * via [[RankLoss.seqEpochGradientMulti]]'s surrogate-target
+    * injection. */
+  def run(data: DataFrame, sz: Int, w: Array[Double], nOut: Int,
       yMean: Array[Double], yStd: Array[Double], nFeat: Int, seqLen: Int,
       epochs: Int, lr: Double, seed: Long, batchFraction: Double,
       kernel: (Array[Double], Array[Array[Double]], Array[Double],
         Array[Double], Long, Array[Double]) => Double,
-      loss: String = "mse", mseWeight: Double = 2.0,
-      spearmanWeight: Double = 1.0, rankTau: Double = 1e-3,
-      rankBatch: Int = 64, optimizer: String = "adam"): Unit = {
+      loss: String, mseWeight: Double, spearmanWeight: Double,
+      rankTau: Double, rankBatch: Int, optimizer: String): Unit = {
     val (f, t) = (nFeat, seqLen)
     val adam = new AdamState(sz, lr, optimizer)
     for (ep <- 1 to epochs) {

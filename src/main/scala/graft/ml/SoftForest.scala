@@ -691,8 +691,8 @@ class SoftNdfRegressor(
   /** Batched epoch gradient for loss="spearman"|"combined"
     * (losses.py:22-189): the per-row backward is linear in pred − y, so
     * the batch rank gradient injects via the surrogate target
-    * y′ = pred − dL/dp_i (the RankLoss.seqEpochGradient identity); slot
-    * sz+1 counts batches. Multi-output uses the reference's exact
+    * y′ = pred − dL/dp_i (the [[RankLoss.seqEpochGradientMulti]]
+    * identity); slot sz+1 counts batches. Multi-output uses the reference's exact
     * semantics — the loss FLATTENS (batch, out) to one ranked vector
     * (losses.py:67-69) — so the single-output path is just nOut = 1. */
   def rankGradient(data: DataFrame, p: Array[Double],

@@ -143,27 +143,37 @@ class MLSpec extends AnyFunSuite {
 
   test("lstm bptt kernel: analytic gradient matches central finite " +
     "differences; kernel forward matches the distributed scorer") {
-    import graft.ml.{LstmBptt, LstmScorer}
+    import graft.ml.{LstmScorer, LstmStackBptt}
     val (f, h, t) = (2, 3, 4)
-    val sz = LstmBptt.size(f, h)
+    val cfg = LstmStackBptt.Cfg(f, Seq(h), bidi = false)
+    val sz = cfg.size
+    assert(sz == LstmBpttReference.size(f, h))
     val r = new scala.util.Random(9)
     val w = Array.fill(sz)(r.nextGaussian() * 0.4)
     val x = Array.fill(t, f)(r.nextGaussian())
     val y = 0.7
     val acc = new Array[Double](sz)
-    LstmBptt.run(w, f, h, x, y, acc)
+    val lossV = LstmStackBptt.run(w, cfg, x, y, acc)
     val eps = 1e-6
     for (i <- 0 until sz) {
       val wp = w.clone(); wp(i) += eps
       val wm = w.clone(); wm(i) -= eps
       def loss(wv: Array[Double]) = {
-        val d = LstmBptt.run(wv, f, h, x, y, null) - y
+        val d = LstmStackBptt.run(wv, cfg, x, y, null) - y
         0.5 * d * d
       }
       val fd = (loss(wp) - loss(wm)) / (2 * eps)
       assert(math.abs(fd - acc(i)) <= 1e-5 * math.max(1.0, math.abs(fd)),
         s"grad mismatch at $i: analytic=${acc(i)} fd=$fd")
     }
+    // the one-layer stack is the former one-layer kernel, bit for bit
+    val refAcc = new Array[Double](sz)
+    assert(lossV == LstmBpttReference.run(w, f, h, x, y, refAcc))
+    for (i <- 0 until sz)
+      assert(acc(i) == refAcc(i),
+        s"grad differs from the one-layer reference at $i")
+    assert(LstmStackBptt.forward(w, cfg, x) ==
+      LstmBpttReference.forward(w, f, h, x))
     // kernel forward == unrolled distributed forward (same weights)
     val cols = (0 until t).flatMap(ti => (0 until f).map(fi => s"x${ti}_$fi"))
     val df = Seq(org.apache.spark.sql.Row.fromSeq(
@@ -177,41 +187,51 @@ class MLSpec extends AnyFunSuite {
     val sdf = spark.createDataFrame(
       spark.sparkContext.parallelize(df, 1), schema)
     val steps = cols.grouped(f).toSeq
-    val scored = LstmScorer.score(sdf, steps, LstmBptt.toWeights(w, f, h))
+    val Seq(layer) = LstmStackBptt.toStacked(w, cfg)
+    val scored = LstmScorer.score(sdf, steps, layer)
       .select("prediction").collect()(0).getDouble(0)
-    assert(math.abs(scored - LstmBptt.forward(w, f, h, x)) < 1e-12,
+    assert(math.abs(scored - LstmStackBptt.forward(w, cfg, x)) < 1e-12,
       "trainer forward and scorer disagree")
   }
 
   test("lstm dropout kernel (Keras dropout/recurrent_dropout, " +
     "sequence.py:123-132): with the per-gate mask sample held fixed the " +
     "analytic gradient matches finite differences; null Drop is identity") {
-    import graft.ml.LstmBptt
+    import graft.ml.LstmStackBptt
     val (f, h, t) = (2, 3, 4)
-    val sz = LstmBptt.size(f, h)
+    val cfg = LstmStackBptt.Cfg(f, Seq(h), bidi = false)
+    val sz = cfg.size
     val r = new scala.util.Random(41)
     val w = Array.fill(sz)(r.nextGaussian() * 0.4)
     val x = Array.fill(t, f)(r.nextGaussian())
     val y = 0.7
-    val drop = LstmBptt.Drop(in = 0.3, rec = 0.3, seed = 777L)
+    val drop = LstmStackBptt.Drop(in = 0.3, rec = 0.3, seed = 777L)
     val acc = new Array[Double](sz)
-    LstmBptt.run(w, f, h, x, y, acc, drop)
+    val lossV = LstmStackBptt.run(w, cfg, x, y, acc, drop)
     val eps = 1e-6
     for (i <- 0 until sz) {
       val wp = w.clone(); wp(i) += eps
       val wm = w.clone(); wm(i) -= eps
       def loss(wv: Array[Double]) = {
-        val d = LstmBptt.run(wv, f, h, x, y, null, drop) - y
+        val d = LstmStackBptt.run(wv, cfg, x, y, null, drop) - y
         0.5 * d * d
       }
       val fd = (loss(wp) - loss(wm)) / (2 * eps)
       assert(math.abs(fd - acc(i)) <= 1e-5 * math.max(1.0, math.abs(fd)),
         s"dropout grad mismatch at $i: analytic=${acc(i)} fd=$fd")
     }
-    assert(LstmBptt.run(w, f, h, x, y, null) ==
-      LstmBptt.run(w, f, h, x, y, null,
-        LstmBptt.Drop(0.0, 0.0, 123L)),
+    assert(LstmStackBptt.run(w, cfg, x, y, null) ==
+      LstmStackBptt.run(w, cfg, x, y, null,
+        LstmStackBptt.Drop(0.0, 0.0, 123L)),
       "zero-rate Drop must equal the deterministic forward")
+    // same mask draw order and arithmetic as the former one-layer kernel
+    val refAcc = new Array[Double](sz)
+    assert(lossV == LstmBpttReference.run(w, f, h, x, y, refAcc, drop))
+    for (i <- 0 until sz)
+      assert(acc(i) == refAcc(i),
+        s"dropout grad differs from the one-layer reference at $i")
+    assert(LstmStackBptt.forward(w, cfg, x, drop) ==
+      LstmBpttReference.forward(w, f, h, x, drop))
   }
 
   test("lstm: reference-default dropout fit (lstm_units=[(h, 0.01, " +
@@ -327,10 +347,10 @@ class MLSpec extends AnyFunSuite {
 
   test("stacked/bidi lstm dropout kernel: per-cell per-gate masks held " +
     "fixed — analytic gradient matches central finite differences") {
-    import graft.ml.{LstmBptt, LstmStackBptt}
+    import graft.ml.LstmStackBptt
     val r = new scala.util.Random(47)
     val (f, t) = (2, 3)
-    val drop = LstmBptt.Drop(in = 0.3, rec = 0.3, seed = 555L)
+    val drop = LstmStackBptt.Drop(in = 0.3, rec = 0.3, seed = 555L)
     val cfgs = Seq(
       LstmStackBptt.Cfg(f, Seq(3, 2), bidi = false),
       LstmStackBptt.Cfg(f, Seq(3), bidi = true))
@@ -356,7 +376,7 @@ class MLSpec extends AnyFunSuite {
       }
       assert(LstmStackBptt.run(w, cfg, x, y, null) ==
         LstmStackBptt.run(w, cfg, x, y, null,
-          LstmBptt.Drop(0.0, 0.0, 99L)),
+          LstmStackBptt.Drop(0.0, 0.0, 99L)),
         "zero-rate Drop must equal the deterministic forward")
     }
   }
@@ -364,7 +384,7 @@ class MLSpec extends AnyFunSuite {
   test("stacked lstm PER-LAYER dropout tuples (lstm_units=[(h,d,rd),...], " +
     "sequence.py:105,123): distinct per-layer rates gradient-check; " +
     "uniform tuples reproduce the shared-scalar masks exactly") {
-    import graft.ml.{LstmBptt, LstmStackBptt}
+    import graft.ml.LstmStackBptt
     val r = new scala.util.Random(53)
     val (f, t) = (2, 3)
     val cfg = LstmStackBptt.Cfg(f, Seq(3, 2), bidi = false)
@@ -373,7 +393,7 @@ class MLSpec extends AnyFunSuite {
     val x = Array.fill(t, f)(r.nextGaussian())
     val y = 0.6
     // layer 0 drops inputs only; layer 1 drops recurrent state only
-    val drop = LstmBptt.Drop(0.0, 0.0, 555L,
+    val drop = LstmStackBptt.Drop(0.0, 0.0, 555L,
       perCell = Seq((0.4, 0.0), (0.0, 0.5)))
     val acc = new Array[Double](sz)
     LstmStackBptt.run(w, cfg, x, y, acc, drop)
@@ -391,9 +411,9 @@ class MLSpec extends AnyFunSuite {
     }
     // uniform tuples == the scalar shorthand (same rng stream, same masks)
     assert(LstmStackBptt.run(w, cfg, x, y, null,
-        LstmBptt.Drop(0.3, 0.2, 777L)) ==
+        LstmStackBptt.Drop(0.3, 0.2, 777L)) ==
       LstmStackBptt.run(w, cfg, x, y, null,
-        LstmBptt.Drop(0.0, 0.0, 777L,
+        LstmStackBptt.Drop(0.0, 0.0, 777L,
           perCell = Seq((0.3, 0.2), (0.3, 0.2)))),
       "uniform per-layer tuples must equal the shared-scalar path")
   }

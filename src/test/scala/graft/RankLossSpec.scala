@@ -402,4 +402,88 @@ class RankLossSpec extends AnyFunSuite {
         "flattened objective")
     assert(sComb > 0.5, s"joint rank training failed: $sComb")
   }
+
+  test("leftover single-row batch at nOut = 1: combined injects exactly " +
+    "its MSE term, spearman skips it without counting a batch; at " +
+    "nOut = 2 one row still takes the flattened combined gradient") {
+    import org.apache.spark.sql.Row
+    val sc = spark.sparkContext
+    val (seed, ep, tau, rb) = (7L, 1L, 1.0, 2)
+    // partition 0: one full batch of two rows; partition 1: one row, so
+    // its last (only) shuffled batch is a singleton
+    val a = Seq(Row(0.3, 1.0, -0.5), Row(-0.8, 0.2, 0.9))
+    val b = Seq(Row(1.1, 0.4, -1.3))
+    val w1 = Array(0.6, -0.2)
+    def grad(rows: Seq[Seq[Row]], w: Array[Double], nOut: Int,
+        mseW: Double, spW: Double): Array[Double] = {
+      val rdd = rows.map(p => sc.parallelize(p, 1)).reduce(_ ++ _)
+      RankLoss.seqEpochGradientMulti(rdd, w.length, 2, 1, nOut,
+        Array.fill(nOut)(0.0), Array.fill(nOut)(1.0),
+        RankLossToyKernel(w, nOut), tau, mseW, spW, rb, seed, ep)
+    }
+    val sz = w1.length
+    // the singleton's closed form: pred − y′ = mseW·2·d, so the linear
+    // kernel adds mseW·2·d·x; loss mseW·d²; one batch
+    val xB = Array(0.4, -1.3)
+    val dB = w1(0) * xB(0) + w1(1) * xB(1) - 1.1
+    for (mseW <- Seq(2.0, 0.5)) {
+      val g = grad(Seq(b), w1, 1, mseW, 1.0)
+      for (i <- 0 until sz)
+        assert(math.abs(g(i) - mseW * 2.0 * dB * xB(i)) <= 1e-12,
+          s"mseW=$mseW singleton grad $i: ${g(i)}")
+      assert(math.abs(g(sz) - mseW * dB * dB) <= 1e-12)
+      assert(g(sz + 1) == 1.0)
+      // next to a full batch it adds exactly that term
+      val gA = grad(Seq(a), w1, 1, mseW, 1.0)
+      val gAB = grad(Seq(a, b), w1, 1, mseW, 1.0)
+      for (i <- 0 until sz + 1)
+        assert(math.abs(gAB(i) - gA(i) - g(i)) <= 1e-12,
+          s"mseW=$mseW grad slot $i")
+      assert(gAB(sz + 1) == gA(sz + 1) + 1.0)
+    }
+    // spearman (mseW = 0): the singleton contributes nothing, and the
+    // batch count stays that of the full batches
+    assert(grad(Seq(b), w1, 1, 0.0, 1.0).forall(_ == 0.0))
+    assert(grad(Seq(a, b), w1, 1, 0.0, 1.0) sameElements
+      grad(Seq(a), w1, 1, 0.0, 1.0))
+    assert(grad(Seq(a), w1, 1, 0.0, 1.0)(sz + 1) == 1.0)
+    // nOut = 2: one row flattens to two elements — the combined gradient
+    val w2 = Array(0.6, -0.2, -0.1, 0.5)
+    val row2 = Seq(Row(1.1, -0.7, 0.4, -1.3))
+    val p2 = Array(0.6 * 0.4 + -0.2 * -1.3, -0.1 * 0.4 + 0.5 * -1.3)
+    for ((mseW, spW) <- Seq((2.0, 1.0), (0.0, 1.0))) {
+      val (dp, lossV) =
+        RankLoss.combinedGrad(p2, Array(1.1, -0.7), tau, mseW, spW)
+      val g = grad(Seq(row2), w2, 2, mseW, spW)
+      for (o <- 0 until 2; j <- 0 until 2)
+        assert(math.abs(g(o * 2 + j) - dp(o) * xB(j)) <= 1e-12,
+          s"nOut=2 ($mseW, $spW) grad ($o, $j)")
+      assert(math.abs(g(4) - lossV) <= 1e-12 && g(5) == 1.0)
+    }
+  }
+}
+
+/** A linear stand-in for a sequence kernel: pred_o = w_o · x (x
+  * flattened), with the ½Σ_o(pred_o − y_o)² gradient every sequence
+  * kernel accumulates, so rank-loss injections have closed forms. */
+object RankLossToyKernel {
+  def apply(w: Array[Double], nOut: Int): (Array[Array[Double]],
+      Array[Double], Array[Double], Long, Array[Double]) => Double =
+    (x, ys, acc, _, po) => {
+      val xf = x.flatten
+      val k = xf.length
+      val preds = Array.tabulate(nOut)(o =>
+        (0 until k).map(j => w(o * k + j) * xf(j)).sum)
+      if (po != null) Array.copy(preds, 0, po, 0, nOut)
+      if (acc == null) preds(0)
+      else {
+        var loss = 0.0
+        for (o <- 0 until nOut) {
+          val d = preds(o) - ys(o)
+          loss += 0.5 * d * d
+          for (j <- 0 until k) acc(o * k + j) += d * xf(j)
+        }
+        loss
+      }
+    }
 }
