@@ -22,7 +22,7 @@ import org.apache.spark.sql.SparkSession
   * measures 1.9-2.9s, and the inflation did not reproduce afterwards
   * (ambient machine load during the recording, not a code or plan
   * property). So after the chunk forks finish, the parent re-runs the
-  * SPARK_GRAFT_BENCH_SPOT (5) slowest queries each in its OWN solo child
+  * SPARK_GRAFT_BENCH_SPOT (15) slowest queries each in its OWN solo child
   * JVM and records min(chunk, solo) as the number of record — a minimum
   * over >=4 full runs in two JVMs at two different times. The artifact
   * carries the evidence: a flat "spotcheck" object with per-query

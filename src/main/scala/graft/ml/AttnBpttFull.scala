@@ -786,36 +786,33 @@ object AttnBpttFull {
   /** Glorot-uniform init per matrix (the reference's Keras defaults);
     * biases zero; LayerNorm γ=1, β=0. */
   def init(c: Cfg, seed: Long): Array[Double] = {
+    import Activations.glorot
     val rng = new scala.util.Random(seed)
     val w = new Array[Double](c.size)
     val o = c.offsets
-    def glorot(off: Int, rows: Int, cols: Int): Unit = {
-      val lim = math.sqrt(6.0 / (rows + cols))
-      for (i <- 0 until rows * cols)
-        w(off + i) = (rng.nextDouble() * 2 - 1) * lim
-    }
-    glorot(o(0), c.f, c.h) // wIn
-    glorot(o(2), c.t, c.h) // posEmb
+    glorot(w, o(0), c.f, c.h, rng) // wIn
+    glorot(w, o(2), c.t, c.h, rng) // posEmb
     for (b <- 0 until c.blocks) {
       val base = 3 + b * c.blocksPerEnc
       for (hi <- 0 until c.heads) {
         val hb = base + hi * 6
-        glorot(o(hb), c.h, c.keyDim) // wq
-        glorot(o(hb + 2), c.h, c.keyDim) // wk
-        glorot(o(hb + 4), c.h, c.keyDim) // wv
+        glorot(w, o(hb), c.h, c.keyDim, rng) // wq
+        glorot(w, o(hb + 2), c.h, c.keyDim, rng) // wk
+        glorot(w, o(hb + 4), c.h, c.keyDim, rng) // wv
       }
       val a = base + c.heads * 6
-      glorot(o(a), c.heads * c.keyDim, c.h) // wO
-      glorot(o(a + 2), c.h, c.ff) // wF1
-      glorot(o(a + 4), c.ff, c.h) // wF2
+      glorot(w, o(a), c.heads * c.keyDim, c.h, rng) // wO
+      glorot(w, o(a + 2), c.h, c.ff, rng) // wF1
+      glorot(w, o(a + 4), c.ff, c.h, rng) // wF2
       if (c.norm) for (p <- 0 until 2) // per-block γ=1 (β stays 0)
         for (i <- 0 until c.h) w(o(a + 6 + 2 * p) + i) = 1.0
     }
     var bi = 3 + c.blocks * c.blocksPerEnc
-    if (c.pool) { glorot(o(bi), c.h, 1); bi += 2 }
+    if (c.pool) { glorot(w, o(bi), c.h, 1, rng); bi += 2 }
     var prev = c.h
-    for (u <- c.mlp) { glorot(o(bi), prev, u); prev = u; bi += 2 }
-    glorot(o(bi), c.headLast, c.out) // wOut (out rows for output_units>1)
+    for (u <- c.mlp) { glorot(w, o(bi), prev, u, rng); prev = u; bi += 2 }
+    // wOut (out rows for output_units > 1)
+    glorot(w, o(bi), c.headLast, c.out, rng)
     bi += 2
     if (c.norm) // final γ=1 (β stays 0)
       for (i <- 0 until c.h) w(o(bi) + i) = 1.0

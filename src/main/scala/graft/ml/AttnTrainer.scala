@@ -551,7 +551,7 @@ object AttnBptt {
 }
 
 /** Trains the reference's transformer encoder regressor
-  * (transformer.py:108-245) with the same treeAggregate-gradient +
+  * (transformer.py:108-245) with the same [[PartitionSum]]-gradient +
   * driver-Adam shape as [[MLPRegressor]] / [[LSTMTrainer]]: executors
   * fold rows into ONE flat gradient vector per epoch, the driver holds
   * only the weights. Fitted weights flow into the distributed
@@ -683,27 +683,23 @@ class AttnTrainer(
       // Glorot-uniform per matrix (the reference's Keras defaults, incl.
       // the position embedding, transformer.py:19); biases start at zero;
       // LayerNorm γ=1, β=0 (the Keras initializers)
-      def glorot(off: Int, rows: Int, cols: Int): Unit = {
-        val lim = math.sqrt(6.0 / (rows + cols))
-        for (i <- 0 until rows * cols)
-          w(off + i) = (rng.nextDouble() * 2 - 1) * lim
-      }
+      import Activations.glorot
       var off = 0
-      glorot(off, f, h); off += f * h // wIn
+      glorot(w, off, f, h, rng); off += f * h // wIn
       off += h // bIn
-      glorot(off, t, h); off += t * h // posEmb
+      glorot(w, off, t, h, rng); off += t * h // posEmb
       for (_ <- 0 until 3) { // wq/wk/wv (+ their biases)
-        glorot(off, h, h); off += h * h + h
+        glorot(w, off, h, h, rng); off += h * h + h
       }
-      glorot(off, h, ff); off += h * ff + ff // wF1
-      glorot(off, ff, h); off += ff * h + h // wF2
-      glorot(off, h, 1); off += h + 1 // wOut, bOut
+      glorot(w, off, h, ff, rng); off += h * ff + ff // wF1
+      glorot(w, off, ff, h, rng); off += ff * h + h // wF2
+      glorot(w, off, h, 1, rng); off += h + 1 // wOut, bOut
       if (useNorm) { // γ=1 (β stays 0)
         for (p <- 0 until 3; i <- 0 until h) w(off + 2 * p * h + i) = 1.0
         off += 6 * h
       }
       if (crossMode) for (_ <- 0 until 3) { // wqF/wkF/wvF (+ biases)
-        glorot(off, t, t); off += t * t + t
+        glorot(w, off, t, t, rng); off += t * t + t
       }
       adamEpochs(data, sz, w, f, t, (bw, x, ys, acc, _, po) => {
         val r = AttnBptt.run(bw, f, h, ff, x, ys(0), acc, useNorm, crossMode)

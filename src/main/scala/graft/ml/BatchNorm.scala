@@ -130,6 +130,16 @@ object BatchNorm {
     }
   }
 
+  /** Population (mean, biased variance floored at 0) of one site from
+    * its `[Σv (width) | Σv² (width) | count]` sums. */
+  def population(stats: Array[Double], width: Int)
+      : (Array[Double], Array[Double]) = {
+    val cnt = math.max(stats(2 * width), 1.0)
+    val mean = Array.tabulate(width)(u => stats(u) / cnt)
+    (mean, Array.tabulate(width)(u =>
+      math.max(stats(width + u) / cnt - mean(u) * mean(u), 0.0)))
+  }
+
   /** Inference affine from population statistics:
     * `gamma*(z-mu)/sqrt(var+eps) + beta  =  scale*z + shift`. */
   def affine(gamma: Array[Double], beta: Array[Double],

@@ -579,7 +579,7 @@ class BnJointAutoencoder(
     * pins batch composition. */
   /** Per-site batch-statistics sums from the most recent [[gradient]]
     * call that collected them (moving-average mode only): layout =
-    * [[BnAeKernel.statsLen]], driver-side after the treeReduce. */
+    * [[BnAeKernel.statsLen]], driver-side after the partition sum. */
   @transient private var lastEpochStats: Array[Double] = _
 
   def gradient(data: DataFrame, p: Array[Double], ep: Long = 0L)
@@ -597,10 +597,9 @@ class BnJointAutoencoder(
     val sLen = BnAeKernel.statsLen(kk, encoderHidden, latentDim, headHidden)
     val w = BnAeKernel.toWeights(p, kk, encoderHidden, latentDim,
       headHidden, nO)
-    val acc = data.rdd.mapPartitions { it =>
-      val acc = new Array[Double](n + 2 + (if (collect) sLen else 0))
+    val sums = PartitionSum.sum(data.rdd,
+        n + 2 + (if (collect) sLen else 0)) { (part, it, acc) =>
       val stats = if (collect) new Array[Double](sLen) else null
-      val part = org.apache.spark.TaskContext.getPartitionId().toLong
       var idx = 0L
       SeqAdam.shuffledBatches(it, bsz, seed0, ep, part).foreach { batch =>
         val b = batch.size
@@ -652,15 +651,9 @@ class BnJointAutoencoder(
         }
       }
       if (collect) System.arraycopy(stats, 0, acc, n + 2, sLen)
-      Iterator.single(acc)
-    }.treeReduce({ (a, b) =>
-      var i = 0
-      while (i < a.length) { a(i) += b(i); i += 1 }
-      a
-    }, depth = 2)
-    if (collect) lastEpochStats = acc.slice(n + 2, n + 2 + sLen)
-    val cnt = math.max(acc(sz + 1), 1.0)
-    (Array.tabulate(sz)(i => acc(i) / cnt), acc(sz) / cnt)
+    }
+    if (collect) lastEpochStats = sums.slice(n + 2, n + 2 + sLen)
+    PartitionSum.mean(sums, n)
   }
 
   def fit(df: DataFrame): BnAeModel = {

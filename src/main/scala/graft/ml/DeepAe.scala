@@ -1,6 +1,5 @@
 package graft.ml
 
-import breeze.linalg.DenseVector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -165,13 +164,9 @@ object DeepAeKernel {
   def init(c: Cfg, seed: Long): Array[Double] = {
     val rng = new scala.util.Random(seed)
     val w = new Array[Double](c.size)
-    for (s <- c.stages.indices) {
-      val st = c.stages(s)
-      val off = c.stageOff(s)
-      val lim = math.sqrt(6.0 / (st.nIn + st.nOut))
-      for (i <- 0 until st.nIn * st.nOut)
-        w(off + i) = (rng.nextDouble() * 2 - 1) * lim
-    }
+    for (s <- c.stages.indices)
+      Activations.glorot(w, c.stageOff(s), c.stages(s).nIn,
+        c.stages(s).nOut, rng)
     w
   }
 
@@ -328,24 +323,19 @@ class DeepJointAutoencoder(
     val (rw, tw) = (reconWeight, targetWeight)
     val useDrop = dropActive && ep != 0L
     val seed0 = seed
-    val zero = DenseVector.zeros[Double](n + 2)
-    val acc = data.rdd.treeAggregate(zero)(
-      seqOp = (acc, row) => {
+    val sums = PartitionSum.sum(data.rdd, n + 2) { (part, it, acc) =>
+      it.foreach { row =>
         val ys = Array.tabulate(nO)(o => row.getDouble(o))
         val xTgt = Array.tabulate(kk)(i => row.getDouble(i + nO))
         val xIn = if (row.size > kk + nO)
           Array.tabulate(kk)(i => row.getDouble(kk + i + nO)) else xTgt
-        val ms = if (!useDrop) 0L else SeqAdam.maskSeed(seed0, ep,
-          org.apache.spark.TaskContext.getPartitionId().toLong,
-          acc(n + 1).toLong)
-        val loss = DeepAeKernel.run(p, c, xIn, xTgt, ys, rw, tw,
-          acc.data, ms)
+        val ms = if (!useDrop) 0L
+          else SeqAdam.maskSeed(seed0, ep, part, acc(n + 1).toLong)
+        val loss = DeepAeKernel.run(p, c, xIn, xTgt, ys, rw, tw, acc, ms)
         acc(n) += loss; acc(n + 1) += 1.0
-        acc
-      },
-      combOp = _ + _, depth = 2)
-    val cnt = math.max(acc(sz + 1), 1.0)
-    (Array.tabulate(sz)(i => acc(i) / cnt), acc(sz) / cnt)
+      }
+    }
+    PartitionSum.mean(sums, n)
   }
 
   def fit(df: DataFrame): this.type = {

@@ -320,10 +320,9 @@ class DeepBnAutoencoder(
     val seed0 = seed
     val collect = ep != 0L && bnInference == "moving_average"
     val sLen = DeepBnKernel.statsLen(c)
-    val acc = data.rdd.mapPartitions { it =>
-      val acc = new Array[Double](n + 2 + (if (collect) sLen else 0))
+    val sums = PartitionSum.sum(data.rdd,
+        n + 2 + (if (collect) sLen else 0)) { (part, it, acc) =>
       val stats = if (collect) new Array[Double](sLen) else null
-      val part = org.apache.spark.TaskContext.getPartitionId().toLong
       var idx = 0L
       SeqAdam.shuffledBatches(it, bsz, seed0, ep, part).foreach { batch =>
         val b = batch.size
@@ -346,19 +345,13 @@ class DeepBnAutoencoder(
         if (stats != null) stats(sLen - 1) += 1.0
       }
       if (collect) System.arraycopy(stats, 0, acc, n + 2, sLen)
-      Iterator.single(acc)
-    }.treeReduce({ (a, b) =>
-      var i = 0
-      while (i < a.length) { a(i) += b(i); i += 1 }
-      a
-    }, depth = 2)
-    if (collect) lastEpochStats = acc.slice(n + 2, n + 2 + sLen)
-    val cnt = math.max(acc(size + 1), 1.0)
-    (Array.tabulate(size)(i => acc(i) / cnt), acc(size) / cnt)
+    }
+    if (collect) lastEpochStats = sums.slice(n + 2, n + 2 + sLen)
+    PartitionSum.mean(sums, n)
   }
 
   /** Most recent collected per-site batch-statistics sums (driver-side
-    * after the treeReduce; moving-average mode only). */
+    * after the partition sum; moving-average mode only). */
   @transient private var lastEpochStats: Array[Double] = _
 
   def fit(df: DataFrame): this.type = {
@@ -441,8 +434,7 @@ class DeepBnAutoencoder(
     for (site <- widths.indices) {
       val wWidth = widths(site)
       val prior = built.toArray
-      val stats = std.rdd.mapPartitions { it =>
-        val s = new Array[Double](2 * wWidth + 1)
+      val stats = PartitionSum.sum(std.rdd, 2 * wWidth + 1) { (_, it, s) =>
         it.foreach { row =>
           val x = Array.tabulate(kk)(j => row.getDouble(j + nO))
           // pre-normalization values of this site: the raw row (site 0)
@@ -485,16 +477,8 @@ class DeepBnAutoencoder(
           }
           s(2 * wWidth) += 1.0
         }
-        Iterator.single(s)
-      }.treeReduce({ (a, b) =>
-        var i = 0
-        while (i < a.length) { a(i) += b(i); i += 1 }
-        a
-      }, depth = 2)
-      val cnt = math.max(stats(2 * wWidth), 1.0)
-      val mean = Array.tabulate(wWidth)(u => stats(u) / cnt)
-      val varr = Array.tabulate(wWidth)(u =>
-        math.max(stats(wWidth + u) / cnt - mean(u) * mean(u), 0.0))
+      }
+      val (mean, varr) = BatchNorm.population(stats, wWidth)
       val o = DeepBnKernel.bnOff(c, site)
       val gamma = Array.tabulate(wWidth)(j => p(o + j))
       val beta = Array.tabulate(wWidth)(j => p(o + wWidth + j))

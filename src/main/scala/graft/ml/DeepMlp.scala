@@ -1,6 +1,5 @@
 package graft.ml
 
-import breeze.linalg.DenseVector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -16,6 +15,20 @@ object DeepMlpKernel {
   def size(dims: Seq[Int], out: Int = 1): Int =
     (1 until dims.size).map(l => dims(l - 1) * dims(l) + dims(l)).sum +
       dims.last * out + out
+
+  /** Glorot-uniform weights per layer and for the `out` heads, zero
+    * biases (the Keras initializers). */
+  def init(dims: Seq[Int], out: Int, seed: Long): Array[Double] = {
+    val rng = new scala.util.Random(seed)
+    val p = new Array[Double](size(dims, out))
+    var o = 0
+    for (l <- 1 until dims.size) {
+      Activations.glorot(p, o, dims(l - 1), dims(l), rng)
+      o += dims(l - 1) * dims(l) + dims(l)
+    }
+    Activations.glorot(p, o, dims.last, out, rng)
+    p
+  }
 
   private def layerOff(dims: Seq[Int], l: Int): Int =
     (1 to l).map(i => dims(i - 1) * dims(i) + dims(i)).sum
@@ -151,7 +164,7 @@ object DeepMlpKernel {
 /** Depth-general MLP regressor matching the reference's `hidden_units`
   * tuple (dense.py:17 — default (64, 64); [[MLPRegressor]] covers the
   * one-layer shape with a DuckDB-oracled scoring query). Same training
-  * shape as every trainer here: flat-gradient treeAggregate (or bounded
+  * shape as every trainer here: flat-gradient [[PartitionSum]] (or bounded
   * in-partition batches for the rank losses — the kernel backward is
   * linear in pred − y, so dL/dp injects via y′ = pred − dL/dp), driver
   * [[AdamState]], input un-touched / target standardized, seeded
@@ -206,21 +219,7 @@ class DeepMLPRegressor(
         .collect()(0)
       yMean = r.getDouble(0); yStd = math.max(r.getDouble(1), 1e-12)
     }
-    val rng = new scala.util.Random(seed)
-    val p = new Array[Double](sz)
-    var o = 0
-    for (l <- 0 until layers.size) { // Glorot uniform per layer
-      val (nin, nout) = (dims(l), dims(l + 1))
-      val lim = math.sqrt(6.0 / (nin + nout))
-      for (_ <- 0 until nin * nout) {
-        p(o) = (rng.nextDouble() * 2 - 1) * lim; o += 1
-      }
-      o += nout // biases start at 0
-    }
-    val limOut = math.sqrt(6.0 / (dims.last + 1))
-    for (i <- 0 until dims.last) {
-      p(o) = (rng.nextDouble() * 2 - 1) * limOut; o += 1
-    }
+    val p = DeepMlpKernel.init(dims, 1, seed)
     val adam = new AdamState(sz, lr, optimizer)
     val (ym, ys, dd, n) = (yMean, yStd, dims, sz)
     val sw = swish
@@ -236,9 +235,7 @@ class DeepMLPRegressor(
         val (mw, spw) = if (loss == "spearman") (0.0, 1.0)
           else (mseWeight, spearmanWeight)
         val (tau, rb) = (rankTau, rankBatch)
-        batch.rdd.mapPartitions { it =>
-          val acc = new Array[Double](n + 2)
-          val part = org.apache.spark.TaskContext.getPartitionId().toLong
+        PartitionSum.sum(batch.rdd, n + 2) { (part, it, acc) =>
           var idx = 0L
           SeqAdam.shuffledBatches(it, rb, seed0, epL, part)
             .foreach { rows =>
@@ -275,23 +272,18 @@ class DeepMLPRegressor(
               acc(n) += mw * d * d; acc(n + 1) += 1.0
             }
           }
-          Iterator.single(DenseVector(acc))
-        }.treeReduce(_ + _, depth = 2)
-      } else batch.rdd.treeAggregate(DenseVector.zeros[Double](n + 2))(
-        seqOp = (acc, row) => {
+        }
+      } else PartitionSum.sum(batch.rdd, n + 2) { (part, it, acc) =>
+        it.foreach { row =>
           val y = (row.getDouble(0) - ym) / ys
           val x = Array.tabulate(kk)(j => row.getDouble(j + 1))
-          val ms = SeqAdam.maskSeed(seed0, epL,
-            org.apache.spark.TaskContext.getPartitionId().toLong,
-            acc(n + 1).toLong)
-          val pred = DeepMlpKernel.run(bw, dd, x, y, acc.data, sw, dr, ms)
+          val ms = SeqAdam.maskSeed(seed0, epL, part, acc(n + 1).toLong)
+          val pred = DeepMlpKernel.run(bw, dd, x, y, acc, sw, dr, ms)
           val d = pred - y
           acc(n) += 0.5 * d * d; acc(n + 1) += 1.0
-          acc
-        },
-        combOp = _ + _, depth = 2)
-      val cnt = math.max(grad(n + 1), 1e-12)
-      adam.update(p, Array.tabulate(n)(i => grad(i) / cnt), t)
+        }
+      }
+      adam.update(p, PartitionSum.mean(grad, n)._1, t)
     }
     data.unpersist()
     weights = p
@@ -510,21 +502,7 @@ class DeepMLPMultiRegressor(
       yStd = Array.tabulate(out)(o =>
         math.max(r.getDouble(2 * o + 1), 1e-12))
     }
-    val rng = new scala.util.Random(seed)
-    val p = new Array[Double](sz)
-    var o = 0
-    for (l <- 0 until layers.size) { // Glorot uniform per layer
-      val (nin, nout) = (dims(l), dims(l + 1))
-      val lim = math.sqrt(6.0 / (nin + nout))
-      for (_ <- 0 until nin * nout) {
-        p(o) = (rng.nextDouble() * 2 - 1) * lim; o += 1
-      }
-      o += nout // biases start at 0
-    }
-    val limOut = math.sqrt(6.0 / (dims.last + out))
-    for (_ <- 0 until dims.last * out) {
-      p(o) = (rng.nextDouble() * 2 - 1) * limOut; o += 1
-    }
+    val p = DeepMlpKernel.init(dims, out, seed)
     val adam = new AdamState(sz, lr, optimizer)
     val (ym, ys, dd, n, oo) = (yMean, yStd, dims, sz, out)
     val sw = swish
@@ -546,9 +524,7 @@ class DeepMLPMultiRegressor(
         val (mw, spw) = if (loss == "spearman") (0.0, 1.0)
           else (mseWeight, spearmanWeight)
         val (tau, rb) = (rankTau, rankBatch)
-        batch.rdd.mapPartitions { it =>
-          val acc = new Array[Double](n + 2)
-          val part = org.apache.spark.TaskContext.getPartitionId().toLong
+        PartitionSum.sum(batch.rdd, n + 2) { (part, it, acc) =>
           var idx = 0L
           SeqAdam.shuffledBatches(it, rb, seed0, epL, part)
             .foreach { rows =>
@@ -587,25 +563,20 @@ class DeepMLPMultiRegressor(
             acc(n) += lossVal
             acc(n + 1) += 1.0
           }
-          Iterator.single(DenseVector(acc))
-        }.treeReduce(_ + _, depth = 2)
-      } else batch.rdd.treeAggregate(DenseVector.zeros[Double](n + 2))(
-        seqOp = (acc, row) => {
+        }
+      } else PartitionSum.sum(batch.rdd, n + 2) { (part, it, acc) =>
+        it.foreach { row =>
           val y = Array.tabulate(oo)(o2 =>
             (row.getDouble(o2) - ym(o2)) / ys(o2))
           val x = Array.tabulate(kk)(j => row.getDouble(j + oo))
-          val ms = SeqAdam.maskSeed(seed0, epL,
-            org.apache.spark.TaskContext.getPartitionId().toLong,
-            acc(n + 1).toLong)
+          val ms = SeqAdam.maskSeed(seed0, epL, part, acc(n + 1).toLong)
           val po = new Array[Double](oo)
-          acc(n) += DeepMlpKernel.runV(bw, dd, oo, x, y, acc.data, sw,
-            dr, ms, po)
+          acc(n) += DeepMlpKernel.runV(bw, dd, oo, x, y, acc, sw, dr, ms,
+            po)
           acc(n + 1) += 1.0
-          acc
-        },
-        combOp = _ + _, depth = 2)
-      val cnt = math.max(grad(n + 1), 1e-12)
-      adam.update(p, Array.tabulate(n)(i => grad(i) / cnt), t)
+        }
+      }
+      adam.update(p, PartitionSum.mean(grad, n)._1, t)
     }
     data.unpersist()
     weights = p

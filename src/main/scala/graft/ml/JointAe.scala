@@ -1,6 +1,5 @@
 package graft.ml
 
-import breeze.linalg.DenseVector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -534,7 +533,7 @@ object JointAe {
 }
 
 /** Joint-loss nonlinear autoencoder trainer (autoencoder.py:25-135
-  * end-to-end): Adam on the driver over `treeAggregate` flat gradients;
+  * end-to-end): Adam on the driver over [[PartitionSum]] flat gradients;
   * `batchFraction` gives the seeded minibatch path. The linear-PCA
   * BottleneckEncoder stays as the closed-form sibling; this is the
   * trained path a reference user gets from fit(). Both of the
@@ -613,24 +612,20 @@ class JointAutoencoder(
     val nO = nOut
     val w = JointAeKernel.toWeights(p, kk, encoderHidden, latentDim,
       headHidden, nO)
-    val zero = DenseVector.zeros[Double](n + 2)
-    val acc = data.rdd.treeAggregate(zero)(
-      seqOp = (acc, row) => {
+    val sums = PartitionSum.sum(data.rdd, n + 2) { (part, it, acc) =>
+      it.foreach { row =>
         val ys = Array.tabulate(nO)(o2 => row.getDouble(o2))
         val xTgt = Array.tabulate(kk)(i => row.getDouble(i + nO))
         val xIn = if (row.size > kk + nO)
           Array.tabulate(kk)(i => row.getDouble(kk + i + nO)) else xTgt
-        val ms = if (dd == null) 0L else SeqAdam.maskSeed(seed0, ep,
-          org.apache.spark.TaskContext.getPartitionId().toLong,
-          acc(n + 1).toLong)
-        val loss = JointAeKernel.runW(w, xIn, xTgt, ys(0), rw, tw,
-          acc.data, dd, ms, ysM = ys)
+        val ms = if (dd == null) 0L
+          else SeqAdam.maskSeed(seed0, ep, part, acc(n + 1).toLong)
+        val loss = JointAeKernel.runW(w, xIn, xTgt, ys(0), rw, tw, acc,
+          dd, ms, ysM = ys)
         acc(n) += loss; acc(n + 1) += 1.0
-        acc
-      },
-      combOp = _ + _, depth = 2)
-    val cnt = math.max(acc(sz + 1), 1.0)
-    (Array.tabulate(sz)(i => acc(i) / cnt), acc(sz) / cnt)
+      }
+    }
+    PartitionSum.mean(sums, n)
   }
 
   /** Batched epoch gradient when the TARGET head trains against a rank
@@ -666,9 +661,7 @@ class JointAutoencoder(
     val dd = if (ep == 0L) null else aeDrop
     val seed0 = seed
     val w = JointAeKernel.toWeights(p, kk, hE, l, hA, nO)
-    val acc = data.rdd.mapPartitions { it =>
-      val acc = new Array[Double](n + 2)
-      val part = org.apache.spark.TaskContext.getPartitionId().toLong
+    val sums = PartitionSum.sum(data.rdd, n + 2) { (part, it, acc) =>
       var idx = 0L
       SeqAdam.shuffledBatches(it, rb, seed0, ep, part).foreach { batch =>
         val b = batch.size
@@ -721,14 +714,8 @@ class JointAutoencoder(
           acc(n + 1) += 1.0
         }
       }
-      Iterator.single(acc)
-    }.treeReduce({ (a, b) =>
-      var i = 0
-      while (i < a.length) { a(i) += b(i); i += 1 }
-      a
-    }, depth = 2)
-    val cnt = math.max(acc(sz + 1), 1.0)
-    (Array.tabulate(sz)(i => acc(i) / cnt), acc(sz) / cnt)
+    }
+    PartitionSum.mean(sums, n)
   }
 
   def fit(df: DataFrame): JointAeModel = {

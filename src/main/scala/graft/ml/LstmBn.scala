@@ -187,14 +187,13 @@ class LSTMBnTrainer(
     val lnOffs = if (!layerNorm) null
       else widths.indices.map(lnBlockOff).toArray
     // moving-average mode: per-site batch-statistics sums ride the same
-    // treeReduce (layout: per site mean-sums then var-sums, then one
+    // partition sum (layout: per site mean-sums then var-sums, then one
     // trailing batch counter)
     val collect = ep != 0L && bnInference == "moving_average"
     val sLen = 2 * widths.sum + 1
-    val acc = data.rdd.mapPartitions { it =>
-      val acc = new Array[Double](n + 2 + (if (collect) sLen else 0))
+    val sums = PartitionSum.sum(data.rdd,
+        n + 2 + (if (collect) sLen else 0)) { (part, it, acc) =>
       val stats = if (collect) new Array[Double](sLen) else null
-      val part = org.apache.spark.TaskContext.getPartitionId().toLong
       var idx = 0L
       SeqAdam.shuffledBatches(it, bsz, seed0, ep, part).foreach { batch =>
         val b = batch.size
@@ -230,19 +229,13 @@ class LSTMBnTrainer(
         }
       }
       if (collect) System.arraycopy(stats, 0, acc, n + 2, sLen)
-      Iterator.single(acc)
-    }.treeReduce({ (a, b) =>
-      var i = 0
-      while (i < a.length) { a(i) += b(i); i += 1 }
-      a
-    }, depth = 2)
-    if (collect) lastEpochStats = acc.slice(n + 2, n + 2 + sLen)
-    val cnt = math.max(acc(size + 1), 1.0)
-    (Array.tabulate(size)(i => acc(i) / cnt), acc(size) / cnt)
+    }
+    if (collect) lastEpochStats = sums.slice(n + 2, n + 2 + sLen)
+    PartitionSum.mean(sums, n)
   }
 
   /** Most recent collected per-site batch-statistics sums (driver-side
-    * after the treeReduce; moving-average mode only). */
+    * after the partition sum; moving-average mode only). */
   @transient private var lastEpochStats: Array[Double] = _
 
   /** Accumulate one BN site's batch statistics into `stats` at the
@@ -601,8 +594,7 @@ class LSTMBnTrainer(
           nm.movingMean, nm.movingVar)
         Array.tabulate(v.length)(u => sc(u) * v(u) + sh(u))
       } else Ln.forward(v, nm.gamma, nm.beta)._1
-    val stats = std.rdd.mapPartitions { it =>
-      val s = new Array[Double](2 * wWidth + 1)
+    val stats = PartitionSum.sum(std.rdd, 2 * wWidth + 1) { (_, it, s) =>
       it.foreach { row =>
         val x = Array.tabulate(t0, f)((t, j) => row.getDouble(1 + t * f + j))
         val samples: Seq[Array[Double]] = if (c.bidi || nL == 1) {
@@ -632,17 +624,8 @@ class LSTMBnTrainer(
           s(2 * wWidth) += 1.0
         }
       }
-      Iterator.single(s)
-    }.treeReduce({ (a, b) =>
-      var i = 0
-      while (i < a.length) { a(i) += b(i); i += 1 }
-      a
-    }, depth = 2)
-    val cnt = math.max(stats(2 * wWidth), 1.0)
-    val mean = Array.tabulate(wWidth)(u => stats(u) / cnt)
-    val varr = Array.tabulate(wWidth)(u =>
-      math.max(stats(wWidth + u) / cnt - mean(u) * mean(u), 0.0))
-    (mean, varr)
+    }
+    BatchNorm.population(stats, wWidth)
   }
 
   /** Appends `prediction` through the SAME distributed staged forward

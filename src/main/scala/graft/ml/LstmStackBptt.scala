@@ -710,9 +710,9 @@ object LstmStackBptt {
       Array.tabulate(h)(i => w(o + h + i)), LnEps)
   }
 
-  /** Glorot input blocks, scaled-uniform recurrent blocks and a
-    * Keras-style unit forget bias (inert at t=0 by the cell's h₋₁ = 0
-    * convention, but it stabilizes early epochs); Glorot head. */
+  /** Glorot input and recurrent blocks and a Keras-style unit forget
+    * bias (inert at t=0 by the cell's h₋₁ = 0 convention, but it
+    * stabilizes early epochs); Glorot head. */
   def init(c: Cfg, seed: Long): Array[Double] = {
     val rng = new scala.util.Random(seed)
     val w = new Array[Double](c.size)
@@ -722,14 +722,10 @@ object LstmStackBptt {
       val h = if (c.bidi) c.layers.head else c.layers(cell)
       val off = c.cellOff(cell)
       val blk = f * h + h * h + h
-      val limW = math.sqrt(6.0 / (f + h))
-      val limU = math.sqrt(6.0 / (2.0 * h))
       for (g <- 0 until 4) {
         val base = off + g * blk
-        for (i <- 0 until f * h)
-          w(base + i) = (rng.nextDouble() * 2 - 1) * limW
-        for (i <- 0 until h * h)
-          w(base + f * h + i) = (rng.nextDouble() * 2 - 1) * limU
+        Activations.glorot(w, base, f, h, rng)
+        Activations.glorot(w, base + f * h, h, h, rng)
         if (g == 1)
           for (i <- 0 until h) w(base + f * h + h * h + i) = 1.0
       }

@@ -8,13 +8,14 @@ import org.apache.spark.sql.functions._
   * `layers` (the reference's `lstm_units` list) and the single-layer
   * bidirectional layout via `bidirectional`, every layout through the
   * one [[LstmStackBptt]] kernel and the [[SeqAdam]] epoch loop at one
-  * output — with the same treeAggregate-gradient + driver-Adam shape as
-  * [[MLPRegressor]]: executors fold rows into ONE flat gradient
-  * vector per epoch (map-side partial sums, depth-2 tree merge), the
-  * driver holds only the weight vector. Fitted weights flow into the
-  * existing distributed scoring path ([[LstmScorer]] — unrolled pure
-  * column arithmetic, no UDF), so fit-once/score-anywhere works exactly
-  * like the pinned-weights queries.
+  * output — with the same [[PartitionSum]]-gradient + driver-Adam shape
+  * as [[MLPRegressor]]: executors fold rows into ONE flat gradient
+  * vector per epoch (per-partition partial sums, added on the driver
+  * in partition order), the driver holds only the weight vector.
+  * Fitted weights flow into the existing distributed scoring path
+  * ([[LstmScorer]] — unrolled pure column arithmetic, no UDF), so
+  * fit-once/score-anywhere works exactly like the pinned-weights
+  * queries.
   *
   * `lagCols` must be lag-major over `seqLen` timesteps — the
   * LagTransformer output order ([[graft.operators.SequenceReshape]]).

@@ -89,15 +89,17 @@ object MLPRegressor {
   * surface (dense.py:13-38 + keras_estimators/base.py:26-156) Spark-first:
   *
   * - **fit**: Adam on the driver over gradients computed cluster-side
-  *   with `treeAggregate` (map-side partial aggregation; the driver only
-  *   ever holds the weight vectors, never the data). `batchFraction`
-  *   selects full-batch (1.0) or a seeded per-epoch Bernoulli sample —
-  *   the scale path matching the reference's minibatch semantics
-  *   (keras_estimators/base.py:68). The DEFAULT is 0.2: a minibatch
-  *   sweep (SURVEY.md §2.7) showed R² parity with full-batch across
-  *   all five trainable estimators at 1/5 the aggregated rows per
-  *   epoch, and fits stay deterministic (the sample is seeded per
-  *   epoch).
+  *   with [[PartitionSum]] (per-partition partial sums; the driver only
+  *   ever holds the weight vectors and one partial per partition, never
+  *   the data). `batchFraction` selects full-batch (1.0) or a seeded
+  *   per-epoch Bernoulli sample — the scale path matching the
+  *   reference's minibatch semantics (keras_estimators/base.py:68). The
+  *   DEFAULT is 0.2: a minibatch sweep (SURVEY.md §2.7) showed R² parity
+  *   with full-batch across all five trainable estimators at 1/5 the
+  *   aggregated rows per epoch. Fits are deterministic for a given
+  *   partitioning, under any number of executor cores: the sample is
+  *   seeded per epoch, and the partials are summed in partition-index
+  *   order, never in task-completion order.
   *   Target standardization on/off mirrors the reference's
   *   StandardScaler default (keras_estimators/base.py:89-100).
   * - **predict**: pure Column expression from broadcast weights — the
@@ -177,9 +179,9 @@ class MLPRegressor(
 
     for (t <- 1 to epochs) {
       val bw1 = w1.copy; val bb1 = b1.copy; val bw2 = w2.copy; val bb2 = b2
-      // gradient via treeAggregate: executors fold rows into a flat
-      // gradient vector; depth-2 tree merge keeps driver traffic
-      // O(sz log partitions). batchFraction < 1 takes a fresh seeded
+      // gradient via PartitionSum: executors fold rows into a flat
+      // gradient vector per partition, summed on the driver in
+      // partition order. batchFraction < 1 takes a fresh seeded
       // Bernoulli sample each epoch — the reference's minibatch-SGD
       // semantics (keras_estimators/base.py:68, batch_size=32) at
       // cluster granularity: each epoch aggregates ~fraction·n rows, so
@@ -197,9 +199,7 @@ class MLPRegressor(
           else (mseWeight, spearmanWeight)
         val (tau, rb, kF) = (rankTau, rankBatch, k)
         val (sd, ep) = (seed, t.toLong)
-        batch.rdd.mapPartitions { it =>
-          val acc = DenseVector.zeros[Double](sz + 2)
-          val part = org.apache.spark.TaskContext.getPartitionId().toLong
+        PartitionSum.sum(batch.rdd, sz + 2) { (part, it, acc) =>
           SeqAdam.shuffledBatches(it, rb, sd, ep, part).foreach { rows =>
             val b = rows.size
             val xs = new Array[DenseVector[Double]](b)
@@ -254,8 +254,7 @@ class MLPRegressor(
               acc(sz + 1) += 1.0
             }
           }
-          Iterator.single(acc)
-        }.treeReduce(_ + _, depth = 2)
+        }
       } else {
         // primitive-loop kernel: the per-row work is a 3×h matvec —
         // per-row breeze (DenseVector alloc + dgemv dispatch) costs
@@ -271,9 +270,7 @@ class MLPRegressor(
         val b1a = bb1.toArray
         val w2a = bw2.toArray
         val b2v = bb2
-        batch.rdd.mapPartitions { it =>
-          val acc = DenseVector.zeros[Double](sz + 2)
-          val a = acc.data
+        PartitionSum.sum(batch.rdd, sz + 2) { (_, it, a) =>
           val x = new Array[Double](kk)
           val z = new Array[Double](hh)
           while (it.hasNext) {
@@ -313,13 +310,10 @@ class MLPRegressor(
             a(sz) += 0.5 * wt * (pred - y) * (pred - y)
             a(sz + 1) += wt
           }
-          Iterator.single(acc)
-        }.treeReduce(_ + _, depth = 2)
+        }
       }
-      // slot sz+1 is a weight sum (or batch count) — guard against an
-      // empty batch only, NOT clamp to 1: fractional weight sums below 1
-      // must still normalize exactly
-      val g = (grad(0 until sz) / math.max(grad(sz + 1), 1e-12)).toArray
+      // slot sz+1 is a weight sum (or batch count)
+      val (g, _) = PartitionSum.mean(grad, sz)
       val step = adam.step(g, t)
       var off = 0
       for (i <- 0 until k; j <- 0 until hidden) {
@@ -396,7 +390,7 @@ class MLPRegressor(
 /** Joint multi-output MLP fit (the reference's `output_units > 1`,
   * keras_estimators/base.py:33,137-150): one shared ReLU hidden layer
   * feeds every linear output head, trained together against the summed
-  * per-output MSE — the same flat-gradient treeAggregate kernel as the
+  * per-output MSE — the same flat-gradient [[PartitionSum]] kernel as the
   * single-output fit, with per-output target standardization. Scoring
   * goes through [[MLPRegressor.predictColumns]] (the q_mlp_multi path)
   * and appends `prediction_{i}`.
@@ -475,9 +469,7 @@ class MLPMultiRegressor(
           else (mseWeight, spearmanWeight)
         val (tau, rb, nOut) = (rankTau, rankBatch, out)
         val (sd, ep) = (seed, t.toLong)
-        batch.rdd.mapPartitions { it =>
-          val acc = DenseVector.zeros[Double](sz + 2)
-          val part = org.apache.spark.TaskContext.getPartitionId().toLong
+        PartitionSum.sum(batch.rdd, sz + 2) { (part, it, acc) =>
           SeqAdam.shuffledBatches(it, rb, sd, ep, part).foreach { rows =>
             val b = rows.size
             val xs = new Array[DenseVector[Double]](b)
@@ -530,8 +522,7 @@ class MLPMultiRegressor(
             acc(sz) += lossVal
             acc(sz + 1) += 1.0
           }
-          Iterator.single(acc)
-        }.treeReduce(_ + _, depth = 2)
+        }
       } else {
         // primitive-loop kernel (the single-output fit's treatment):
         // per-row breeze costs more than the k×h matvec at this size.
@@ -545,9 +536,7 @@ class MLPMultiRegressor(
         val b1a = bb1.toArray
         val w2a = Array.tabulate(hh * nO)(r => bw2(r / nO, r % nO))
         val b2a = bb2.toArray
-        batch.rdd.mapPartitions { it =>
-          val acc = DenseVector.zeros[Double](sz + 2)
-          val a = acc.data
+        PartitionSum.sum(batch.rdd, sz + 2) { (_, it, a) =>
           val x = new Array[Double](kk)
           val z = new Array[Double](hh)
           val hArr = new Array[Double](hh)
@@ -607,10 +596,9 @@ class MLPMultiRegressor(
             a(sz) += l
             a(sz + 1) += 1.0
           }
-          Iterator.single(acc)
-        }.treeReduce(_ + _, depth = 2)
+        }
       }
-      val g = (grad(0 until sz) / math.max(grad(sz + 1), 1.0)).toArray
+      val (g, _) = PartitionSum.mean(grad, sz)
       val step = adam.step(g, t)
       var off = 0
       for (i <- 0 until k; j <- 0 until hidden) {

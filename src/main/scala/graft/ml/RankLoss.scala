@@ -136,11 +136,9 @@ object RankLoss {
         Array[Double]) => Double,
       tau: Double, mseW: Double, spW: Double, rankBatch: Int,
       seed: Long, ep: Long): Array[Double] = {
-    rows.mapPartitions { it =>
-      val acc = new Array[Double](sz + 2)
-      val part = org.apache.spark.TaskContext.getPartitionId()
+    PartitionSum.sum(rows, sz + 2) { (part, it, acc) =>
       var idx = 0L
-      SeqAdam.shuffledBatches(it, rankBatch, seed, ep, part.toLong)
+      SeqAdam.shuffledBatches(it, rankBatch, seed, ep, part)
         .foreach { batch =>
         val b = batch.size
         val xs = new Array[Array[Array[Double]]](b)
@@ -153,7 +151,7 @@ object RankLoss {
             (row.getDouble(o) - yMean(o)) / yStd(o))
           xs(i) = Array.tabulate(t, f)((ti, fi) =>
             row.getDouble(nOut + ti * f + fi))
-          seeds(i) = SeqAdam.maskSeed(seed, ep, part.toLong, idx)
+          seeds(i) = SeqAdam.maskSeed(seed, ep, part, idx)
           idx += 1
           preds(i) = new Array[Double](nOut)
           kernel(xs(i), ys(i), null, seeds(i), preds(i))
@@ -191,12 +189,7 @@ object RankLoss {
           acc(sz + 1) += 1.0
         }
       }
-      Iterator.single(acc)
-    }.treeReduce({ (a, b) =>
-      var i = 0
-      while (i < a.length) { a(i) += b(i); i += 1 }
-      a
-    }, depth = 2)
+    }
   }
 
   /** Combined loss (losses.py:125-189): mseW·mean((p−y)²) + spW·softSp.

@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 /** The one epoch loop of the sequence trainers (LSTM + transformer,
   * single- and multi-output): per-epoch seeded Bernoulli sampling
   * (`batchFraction` — the reference's minibatch-SGD semantics at cluster
-  * granularity), the flat-gradient MSE treeAggregate or the rank-loss
+  * granularity), the flat-gradient MSE [[PartitionSum]] or the rank-loss
   * surrogate-injection path (losses.py:22-189 via
   * [[RankLoss.seqEpochGradientMulti]]), and driver-side Adam. Also home
   * to the seeded sampling helpers every rank-loss and dropout path
@@ -89,27 +89,18 @@ private[ml] object SeqAdam {
         RankLoss.seqEpochGradientMulti(batch.rdd, sz, t, f, nOut, yMean,
           yStd, (x, ys, acc, ms, po) => kernel(bw, x, ys, acc, ms, po),
           rankTau, mw, sw, rankBatch, seed, epL)
-      } else batch.rdd.treeAggregate(new Array[Double](sz + 2))(
-        seqOp = (acc, row) => {
+      } else PartitionSum.sum(batch.rdd, sz + 2) { (part, it, acc) =>
+        it.foreach { row =>
           val ys = Array.tabulate(nOut)(o =>
             (row.getDouble(o) - yMean(o)) / yStd(o))
           val x = Array.tabulate(t, f)((ti, fi) =>
             row.getDouble(nOut + ti * f + fi))
-          val ms = maskSeed(seed, epL,
-            org.apache.spark.TaskContext.getPartitionId().toLong,
-            acc(sz + 1).toLong)
+          val ms = maskSeed(seed, epL, part, acc(sz + 1).toLong)
           acc(sz) += kernel(bw, x, ys, acc, ms, null)
           acc(sz + 1) += 1.0
-          acc
-        },
-        combOp = (a, b) => {
-          var i = 0
-          while (i < a.length) { a(i) += b(i); i += 1 }
-          a
-        }, depth = 2)
-      val bn = math.max(grad(sz + 1), 1.0)
-      val g = Array.tabulate(sz)(i => grad(i) / bn)
-      adam.update(w, g, ep)
+        }
+      }
+      adam.update(w, PartitionSum.mean(grad, sz)._1, ep)
     }
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * TransformerRegressor encoder block, transformer.py:108-245).
   *
   * Both families also TRAIN cluster-side: the LSTM through
-  * [[LSTMTrainer]] (treeAggregate BPTT, the MLPRegressor
+  * [[LSTMTrainer]] ([[PartitionSum]] BPTT, the MLPRegressor
   * gradient-aggregation shape, stacked/bidirectional/LayerNorm via
   * [[LstmStackBptt]]) and the transformer through [[AttnTrainer]] /
   * [[AttnBpttFull]] (pre-norm blocks, multi-head, attention pooling —

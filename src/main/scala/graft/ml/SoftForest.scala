@@ -1,6 +1,5 @@
 package graft.ml
 
-import breeze.linalg.DenseVector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -330,7 +329,7 @@ object SoftForestModel {
 
 /** Differentiable Neural-Decision-Forest regressor
   * (keras_estimators/tree.py:209-384) trained Spark-first: Adam on the
-  * driver over flat gradients computed cluster-side with `treeAggregate`
+  * driver over flat gradients computed cluster-side with [[PartitionSum]]
   * (the MLPRegressor kernel pattern — the driver only ever holds the
   * parameter vector, never rows). Soft sigmoid routing with the
   * reference's temperature-annealing schedule (TemperatureAnnealing,
@@ -471,7 +470,7 @@ class SoftNdfRegressor(
     * for the finite-difference spec. Returns (grad, meanLoss). */
   /** Fused per-row forward (+backward into `acc` when non-null, with
     * output delta = pred − y): returns the prediction. Shared by the MSE
-    * treeAggregate path and the rank-loss surrogate-injection path. */
+    * gradient path and the rank-loss surrogate-injection path. */
   private def rowRun(trees: Seq[SoftTreeWeights],
       trunk: Seq[(Array[Array[Double]], Array[Double])],
       paths: Array[Array[(Int, Boolean)]], tOffs: Seq[Int],
@@ -661,31 +660,25 @@ class SoftNdfRegressor(
     val useNoise = noiseActive && ep != 0L
     val bn = if (!useInputBn) null else batchBnStats(data, p)
     if (ep != 0L) lastBnStats = bn
-    val zero = DenseVector.zeros[Double](sz + 2)
-    val acc = data.rdd.treeAggregate(zero)(
-      seqOp = (acc, row) => {
+    val sums = PartitionSum.sum(data.rdd, sz + 2) { (part, it, acc) =>
+      it.foreach { row =>
         val ys = Array.tabulate(nOut)(o2 => row.getDouble(o2))
         val x0 = Array.tabulate(k)(i => row.getDouble(i + nOut))
-        val flat = acc.data
-        val ms = if (!useNoise) 0L else SeqAdam.maskSeed(seed0, ep,
-          org.apache.spark.TaskContext.getPartitionId().toLong,
-          acc(sz + 1).toLong)
+        val ms = if (!useNoise) 0L
+          else SeqAdam.maskSeed(seed0, ep, part, acc(sz + 1).toLong)
         val preds = new Array[Double](nOut)
-        rowRun(trees, trunk, paths, tOffs, x0, 0.0, flat, temp, ms,
+        rowRun(trees, trunk, paths, tOffs, x0, 0.0, acc, temp, ms,
           ys = ys, predsOut = preds, bn = bn)
         for (o2 <- 0 until nOut) {
           val delta = preds(o2) - ys(o2)
           acc(sz) += 0.5 * delta * delta
         }
         acc(sz + 1) += 1.0
-        acc
-      },
-      combOp = _ + _, depth = 2)
-    val n = math.max(acc(sz + 1), 1.0)
-    val g = new Array[Double](sz)
-    for (i <- 0 until sz) g(i) = acc(i) / n
+      }
+    }
+    val (g, meanLoss) = PartitionSum.mean(sums, sz)
     applyL2(g, p)
-    (g, acc(sz) / n)
+    (g, meanLoss)
   }
 
   /** Batched epoch gradient for loss="spearman"|"combined"
@@ -712,9 +705,7 @@ class SoftNdfRegressor(
     val useNoise = noiseActive && ep != 0L
     val bn = if (!useInputBn) null else batchBnStats(data, p)
     if (ep != 0L) lastBnStats = bn
-    val acc = data.rdd.mapPartitions { it =>
-      val acc = new Array[Double](n + 2)
-      val part = org.apache.spark.TaskContext.getPartitionId().toLong
+    val sums = PartitionSum.sum(data.rdd, n + 2) { (part, it, acc) =>
       var idx = 0L
       SeqAdam.shuffledBatches(it, rb, seed0, ep, part).foreach { batch =>
         val b = batch.size
@@ -761,17 +752,10 @@ class SoftNdfRegressor(
           acc(n + 1) += 1.0
         }
       }
-      Iterator.single(acc)
-    }.treeReduce({ (a, b) =>
-      var i = 0
-      while (i < a.length) { a(i) += b(i); i += 1 }
-      a
-    }, depth = 2)
-    val cnt = math.max(acc(sz + 1), 1.0)
-    val g = new Array[Double](sz)
-    for (i <- 0 until sz) g(i) = acc(i) / cnt
+    }
+    val (g, meanLoss) = PartitionSum.mean(sums, n)
     applyL2(g, p)
-    (g, acc(sz) / cnt)
+    (g, meanLoss)
   }
 
   def fit(df: DataFrame): SoftForestModel = {
@@ -814,18 +798,11 @@ class SoftNdfRegressor(
     val masks = Seq.fill(numTrees)(
       rng.shuffle((0 until treeFeat).toList).take(nUsed).sorted.toArray)
     val p = new Array[Double](sz)
-    for (l <- trunkUnits.indices) {              // trunk: Glorot uniform
-      val o = trunkOff(l)
-      val (nin, nout) = (trunkDims(l), trunkDims(l + 1))
-      val lim = math.sqrt(6.0 / (nin + nout))
-      for (i <- 0 until nin * nout)
-        p(o + i) = (rng.nextDouble() * 2 - 1) * lim
-    }
-    val limit = math.sqrt(6.0 / (nUsed + nNodes)) // Glorot uniform
+    for (l <- trunkUnits.indices)
+      Activations.glorot(p, trunkOff(l), trunkDims(l), trunkDims(l + 1), rng)
     for (t <- 0 until numTrees) {
       val o = trunkSz + t * perTree
-      for (i <- 0 until nUsed * nNodes)
-        p(o + i) = (rng.nextDouble() * 2 - 1) * limit
+      Activations.glorot(p, o, nUsed, nNodes, rng) // routing kernel
       for (l <- 0 until nLeaves * nOut)           // pi ~ random_normal
         p(o + nUsed * nNodes + nNodes + l) = rng.nextGaussian() * 0.05
     }

@@ -156,29 +156,28 @@ class BnAeSpec extends AnyFunSuite {
     "weights identical to population mode, scoring flows through the " +
     "same folded-affine chain, and the flag actually changes the stats") {
     val rows = manifold(200, 5)
-    // one partition: treeReduce combine order is then deterministic, so
-    // the two fits below are bit-comparable (multi-partition reduce
-    // order varies with task timing and compounds over the epochs)
-    val df = rows.toDF("id", "f0", "f1", "f2", "y").coalesce(1)
+    // four partitions: the partials are summed in partition order, so
+    // the two fits below are bit-comparable however the tasks finish
+    val df = rows.toDF("id", "f0", "f1", "f2", "y")
+    assert(df.rdd.getNumPartitions == 4)
     val feats = Seq("f0", "f1", "f2")
     def trainer(mode: String) = new BnJointAutoencoder(feats, "y",
       latentDim = 2, encoderHidden = 3, headHidden = 2, epochs = 30,
       seed = 11L, bnInference = mode)
     val pop = trainer("population").fit(df)
     val ma = trainer("moving_average").fit(df)
-    // the flag must not touch training: weights agree to reduce-order
-    // noise (treeReduce combine order varies with task timing, so two
-    // fits differ at ~1e-16 regardless of any flag)
-    def close(a: Array[Double], b: Array[Double]): Boolean =
-      a.length == b.length &&
-        a.indices.forall(i => math.abs(a(i) - b(i)) < 1e-9)
+    // the flag must not touch training: weights agree bit for bit
+    def same(a: Array[Double], b: Array[Double]): Boolean =
+      a.length == b.length && a.indices.forall(i =>
+        java.lang.Double.doubleToRawLongBits(a(i)) ==
+          java.lang.Double.doubleToRawLongBits(b(i)))
     assert(pop.weights.core.we.zip(ma.weights.core.we)
-      .forall { case (a, b) => close(a, b) })
+      .forall { case (a, b) => same(a, b) })
     assert(pop.weights.core.wh.zip(ma.weights.core.wh)
-      .forall { case (a, b) => close(a, b) })
+      .forall { case (a, b) => same(a, b) })
     (0 until 5).foreach { s =>
-      assert(close(pop.weights.gamma(s), ma.weights.gamma(s)))
-      assert(close(pop.weights.beta(s), ma.weights.beta(s)))
+      assert(same(pop.weights.gamma(s), ma.weights.gamma(s)))
+      assert(same(pop.weights.beta(s), ma.weights.beta(s)))
     }
     // the inference statistics must differ (EMA of training-batch stats
     // vs final-weights population re-estimation)
