@@ -436,7 +436,8 @@ object QueriesML {
         outs.map { case (n, c) => round(c, 6).as(n) }: _*)
     }),
 
-    // multi-output DEEP scoring (round-6 DeepMLPMultiRegressor forward):
+    // multi-output DEEP scoring (the DeepMLPRegressor forward at two
+    // outputs):
     // two shared ReLU hidden layers feeding two linear heads, staged
     // per-layer named codegen'd columns, CTE-chain SQL mirror
     "q_deep_multi" -> ((s, dir) => {

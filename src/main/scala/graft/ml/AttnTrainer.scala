@@ -1,7 +1,6 @@
 package graft.ml
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Flat-parameter forward/backward kernel for the transformer encoder
   * regressor the reference trains with Keras (transformer.py:108-245):
@@ -562,23 +561,31 @@ object AttnBptt {
   * pooling, linear head — [[AttnBptt]]); `preNorm = true` adds the
   * reference's `use_pre_norm=True` LayerNorms with trainable γ/β.
   * Setting any of `numHeads` (> 0), `attnPool`, `mlpUnits`,
-  * `numBlocks` (> 1), or `dropoutRate` (> 0) switches to the
-  * full-architecture kernel [[AttnBpttFull]] — the reference's DEFAULT
-  * config (transformer.py:149-157) is `numHeads = 4, attnPool = true,
-  * mlpUnits = Seq(64), preNorm = true, numBlocks = 1,
+  * `numBlocks` (> 1), `dropoutRate` (> 0) or `extraTargetCols` switches
+  * to the full-architecture kernel [[AttnBpttFull]] — the reference's
+  * DEFAULT config (transformer.py:149-157) is `numHeads = 4,
+  * attnPool = true, mlpUnits = Seq(64), preNorm = true, numBlocks = 1,
   * dropoutRate = 0.1` with per-head key_dim = dModel / numHeads.
   * Dropout is training-time only (per-row per-epoch seeded masks at the
   * Keras sites — attention probabilities, both FFN layers, the MLP
   * head); the fitted weights score through the deterministic
   * distributed forward pass unchanged.
   *
+  * `targetCol` plus `extraTargetCols` are the reference's
+  * `output_units` (base.py:46, transformer.py:236): the final Dense
+  * reads the shared pooled/MLP-head representation with one row per
+  * output, every output trains jointly with per-output target
+  * standardization, and scores as `prediction` or `prediction_{i}`. At
+  * several outputs the rank losses flatten (batch, out) to ONE ranked
+  * vector (losses.py:67-69).
+  *
   * `attentionType` covers the reference's three modes
   * (transformer.py:168-190): "temporal" (default), "feature" — the
   * iTransformer-style mode, fitted as the SAME kernel over the
   * transposed token layout (composes with every full-kernel surface),
   * and "cross" — the dual-axis mode, fitted by the reduced kernel
-  * extended with the feature-axis q/k/v (single-head, the scorer's
-  * [[AttnWeights]] constraint).
+  * extended with the feature-axis q/k/v (single-head and
+  * single-output, the scorer's [[AttnWeights]] constraint).
   *
   * `lagCols` must be lag-major over `seqLen` timesteps — the
   * LagTransformer output order ([[graft.operators.SequenceReshape]]). */
@@ -586,6 +593,7 @@ class AttnTrainer(
     val lagCols: Seq[String],
     val seqLen: Int,
     val targetCol: String,
+    val extraTargetCols: Seq[String] = Nil,
     val dModel: Int = 8,
     val ffDim: Int = 16,
     val preNorm: Boolean = false,
@@ -607,6 +615,10 @@ class AttnTrainer(
     val attentionType: String = "temporal",
     val optimizer: String = "adam") extends ModelEstimator {
 
+  /** All targets: `output_units = 1 + extraTargetCols.size`. */
+  val targetCols: Seq[String] = targetCol +: extraTargetCols
+  require(targetCols.distinct.size == targetCols.size,
+    s"target columns repeat a name: ${targetCols.mkString(", ")}")
   require(lagCols.size % seqLen == 0,
     s"${lagCols.size} lag columns do not reshape into $seqLen steps")
   require(batchFraction > 0 && batchFraction <= 1.0,
@@ -618,28 +630,36 @@ class AttnTrainer(
     s"dropoutRate must be in [0, 1), got $dropoutRate")
   require(Set("temporal", "feature", "cross")(attentionType),
     s"attention_type must be temporal|feature|cross, got $attentionType")
+  require(attentionType != "cross" || extraTargetCols.isEmpty,
+    "multi-output attention_type is temporal|feature (cross is " +
+      "single-head, the AttnWeights constraint)")
   private val nFeat = lagCols.size / seqLen
+  private val out = targetCols.size
 
   private var weights: AttnWeights = _
   private var blockWeights: Seq[AttnWeights] = Nil
+  private var headW: Array[Array[Double]] = _
+  private var headB: Array[Double] = _
   private var flatKernel: Array[Double] = _
-  private var yMean = 0.0
-  private var yStd = 1.0
+  private var yMean: Array[Double] = Array.fill(out)(0.0)
+  private var yStd: Array[Double] = Array.fill(out)(1.0)
 
   def fittedWeights: AttnWeights = weights
   /** Per-encoder-block weights (numBlocks entries; head = fittedWeights
-    * when numBlocks == 1). */
+    * when numBlocks == 1 at one output). */
   def fittedBlocks: Seq[AttnWeights] =
     if (blockWeights.nonEmpty) blockWeights else Seq(weights)
+  /** The final Dense: one weight row and bias per output. */
+  def fittedHead: (Array[Array[Double]], Array[Double]) = (headW, headB)
 
   def steps: Seq[Seq[String]] = lagCols.grouped(nFeat).toSeq
 
   /** True when any reference-default surface (multi-head, attention
-    * pooling, MLP head, stacked blocks, dropout) is requested → the
-    * full-architecture kernel. */
+    * pooling, MLP head, stacked blocks, dropout) or a second output is
+    * requested → the full-architecture kernel. */
   private def useFull: Boolean =
     numHeads > 0 || attnPool || mlpUnits.nonEmpty || numBlocks > 1 ||
-      dropoutRate > 0
+      dropoutRate > 0 || out > 1
 
   /** Feature mode (iTransformer, transformer.py:179-186) fits the SAME
     * kernels over the TRANSPOSED token layout — tokens = the nFeat
@@ -653,22 +673,15 @@ class AttnTrainer(
     require(!crossMode || !useFull,
       "cross mode is single-head (scorer constraint) — leave numHeads/" +
         "attnPool/mlpUnits/numBlocks/dropoutRate at their defaults")
-    val (f, t) = if (featMode) (seqLen, nFeat) else (nFeat, seqLen)
+    val (f, t) = kernelDims
     val (h, ff) = (dModel, ffDim)
     val useNorm = preNorm
     // feature mode selects the lag columns token-major over the
     // TRANSPOSED steps so the kernel's row parse sees that layout
     val orderedLags = if (featMode) steps.transpose.flatten else lagCols
-    val data = df.select((targetCol +: orderedLags).map(c =>
-      col(c).cast("double")): _*).na.drop()
-    data.cache()
-    val n = data.count().toDouble
-    require(n > 0, "no complete rows to fit on")
-    if (scaleTarget) {
-      val r = data.agg(avg(col(targetCol)), stddev_pop(col(targetCol)))
-        .collect()(0)
-      yMean = r.getDouble(0); yStd = math.max(r.getDouble(1), 1e-12)
-    }
+    val (data, ym, ys) = SeqAdam.prepare(df, targetCols, orderedLags,
+      scaleTarget)
+    yMean = ym; yStd = ys
     if (useFull) {
       val cfg = fullCfg // ONE architecture definition shared with load
       val w = AttnBpttFull.init(cfg, seed)
@@ -721,7 +734,7 @@ class AttnTrainer(
     val heads = math.max(numHeads, 1)
     AttnBpttFull.Cfg(f, t, dModel, ffDim, heads,
       math.max(1, dModel / heads), attnPool, mlpUnits, preNorm,
-      blocks = numBlocks, drop = dropoutRate)
+      blocks = numBlocks, drop = dropoutRate, out = out)
   }
 
   /** Decode a final flat kernel into scorer weights — shared by the fit
@@ -733,9 +746,12 @@ class AttnTrainer(
     if (useFull) {
       blockWeights = AttnBpttFull.toBlockWeights(w, fullCfg)
       weights = blockWeights.head
+      val (hw, hb) = AttnBpttFull.headMulti(w, fullCfg)
+      headW = hw; headB = hb
     } else {
       weights = AttnBptt.toWeights(w, f, t, dModel, ffDim, preNorm,
         attentionType == "cross")
+      headW = Array(weights.wOut); headB = Array(weights.bOut)
     }
   }
 
@@ -753,15 +769,15 @@ class AttnTrainer(
     * schema + fit recipe) — the sklearn-pickle role (the reference's
     * wrapper pickles the fitted Keras transformer, base.py). JSON exact
     * doubles, so [[AttnTrainer.load]] scores bit-identically. */
-  def familyName: String = "attn"
-  def predictionNames: Seq[String] = Seq("prediction")
+  def familyName: String = if (out == 1) "attn" else "attn_multi"
+  def predictionNames: Seq[String] = MLPRegressor.predictionNames(out)
 
   def saveParts: (Map[String, String], Seq[(String, Array[Double])]) = {
     require(flatKernel != null, "fit first")
-    (Map(
-      "family" -> "attn",
+    val (tm, ts) = WeightsIO.targetParts("attn", targetCols, yMean, yStd)
+    (tm ++ Map(
       "lagCols" -> WeightsIO.namesToMeta(lagCols),
-      "seqLen" -> seqLen.toString, "target" -> targetCol,
+      "seqLen" -> seqLen.toString,
       "dModel" -> dModel.toString, "ffDim" -> ffDim.toString,
       "preNorm" -> preNorm.toString,
       "numHeads" -> numHeads.toString, "attnPool" -> attnPool.toString,
@@ -770,7 +786,6 @@ class AttnTrainer(
       "dropoutRate" -> dropoutRate.toString,
       "attentionType" -> attentionType,
       "scaleTarget" -> scaleTarget.toString,
-      "yMean" -> yMean.toString, "yStd" -> yStd.toString,
       "lr" -> lr.toString, "epochs" -> epochs.toString,
       "seed" -> seed.toString,
       "batchFraction" -> batchFraction.toString, "loss" -> loss,
@@ -778,7 +793,7 @@ class AttnTrainer(
       "spearmanWeight" -> spearmanWeight.toString,
       "rankTau" -> rankTau.toString, "rankBatch" -> rankBatch.toString,
       "optimizer" -> optimizer),
-      Seq("flat" -> flatKernel))
+      ("flat" -> flatKernel) +: ts)
   }
 
   def save(path: String): Unit = {
@@ -786,26 +801,27 @@ class AttnTrainer(
     WeightsIO.save(path, m, s)
   }
 
-  /** The [[SeqAdam]] epoch loop at one output. `f`/`t` are the KERNEL
-    * dims (swapped in feature mode). */
+  /** The [[SeqAdam]] epoch loop at `out` outputs. `f`/`t` are the
+    * KERNEL dims (swapped in feature mode). */
   private def adamEpochs(data: DataFrame, sz: Int, w: Array[Double],
       f: Int, t: Int,
       kernel: (Array[Double], Array[Array[Double]], Array[Double],
         Array[Double], Long, Array[Double]) => Double): Unit =
-    SeqAdam.run(data, sz, w, 1, Array(yMean), Array(yStd), f, t, epochs,
-      lr, seed, batchFraction, kernel, loss, mseWeight, spearmanWeight,
-      rankTau, rankBatch, optimizer)
+    SeqAdam.run(data, sz, w, out, yMean, yStd, f, t, epochs, lr, seed,
+      batchFraction, kernel, loss, mseWeight, spearmanWeight, rankTau,
+      rankBatch, optimizer)
 
-  /** Appends `prediction` through the distributed unrolled forward pass,
-    * un-standardizing if the target was scaled at fit. */
+  /** Appends [[predictionNames]] through the distributed unrolled
+    * forward pass, un-standardizing each output if the targets were
+    * scaled at fit. */
   def predict(df: DataFrame): DataFrame = {
     require(weights != null, "fit first")
     val scoreSteps =
       if (attentionType == "feature") steps.transpose else steps
-    val scored = AttnScorer.scoreBlocks(df, scoreSteps, fittedBlocks)
+    val scored = AttnScorer.scoreBlocksMulti(df, scoreSteps, fittedBlocks,
+      headW, headB)
     if (scaleTarget)
-      scored.withColumn("prediction",
-        col("prediction") * lit(yStd) + lit(yMean))
+      SeqAdam.destandardize(scored, predictionNames, yMean, yStd)
     else scored
   }
 }
@@ -820,14 +836,16 @@ object AttnTrainer {
   }
 
   /** Rebuild from an already-parsed payload (standalone or
-    * pipeline-embedded). */
+    * pipeline-embedded) of either the `attn` or the `attn_multi`
+    * layout. */
   def fromParts(meta: Map[String, String],
       sections: Map[String, Array[Double]], where: String): AttnTrainer = {
-    WeightsIO.requireFamily(meta, "attn", where)
-    val mlpUnits = WeightsIO.intsFromMeta(meta("mlpUnits"))
+    val (targets, ym, ys) =
+      WeightsIO.targetsFromParts(meta, sections, "attn", where)
     val m = new AttnTrainer(
       WeightsIO.namesFromMeta(meta("lagCols")),
-      meta("seqLen").toInt, meta("target"),
+      meta("seqLen").toInt, targets.head,
+      extraTargetCols = targets.tail,
       dModel = meta("dModel").toInt, ffDim = meta("ffDim").toInt,
       preNorm = meta("preNorm").toBoolean, lr = meta("lr").toDouble,
       epochs = meta("epochs").toInt, seed = meta("seed").toLong,
@@ -835,7 +853,8 @@ object AttnTrainer {
       batchFraction = meta("batchFraction").toDouble,
       numHeads = meta("numHeads").toInt,
       attnPool = meta("attnPool").toBoolean,
-      mlpUnits = mlpUnits, loss = meta("loss"),
+      mlpUnits = WeightsIO.intsFromMeta(meta("mlpUnits")),
+      loss = meta("loss"),
       mseWeight = meta("mseWeight").toDouble,
       spearmanWeight = meta("spearmanWeight").toDouble,
       rankTau = meta("rankTau").toDouble,
@@ -846,216 +865,8 @@ object AttnTrainer {
       optimizer = meta("optimizer"))
     val flat = sections("flat")
     WeightsIO.requireLen("flat", flat, m.kernelSize)
-    m.yMean = meta("yMean").toDouble
-    m.yStd = meta("yStd").toDouble
-    m.materialize(flat)
-    m
-  }
-}
-
-/** Joint multi-output transformer fit — `output_units > 1`
-  * (base.py:46, transformer.py:236) with the `prediction_{i}` naming
-  * contract: the final Dense reads the shared pooled/MLP-head
-  * representation with one row per output, all outputs trained jointly
-  * through the full-architecture kernel ([[AttnBpttFull]] — multi-head
-  * attention, attention pooling, MLP head, stacked blocks, and dropout
-  * all compose). Per-output target standardization.
-  * `loss = "spearman" | "combined"` trains the reference's rank
-  * objectives with their exact multi-output semantics — the loss
-  * flattens (batch, out) to ONE ranked vector (losses.py:67-69). */
-class AttnMultiTrainer(
-    val lagCols: Seq[String],
-    val seqLen: Int,
-    val targetCols: Seq[String],
-    val dModel: Int = 8,
-    val ffDim: Int = 16,
-    val preNorm: Boolean = false,
-    val lr: Double = 1e-2,
-    val epochs: Int = 150,
-    val seed: Long = 42L,
-    val scaleTarget: Boolean = true,
-    val batchFraction: Double = 0.2,
-    val numHeads: Int = 0,
-    val attnPool: Boolean = false,
-    val mlpUnits: Seq[Int] = Nil,
-    val numBlocks: Int = 1,
-    val dropoutRate: Double = 0.0,
-    val attentionType: String = "temporal",
-    val loss: String = "mse",
-    val mseWeight: Double = 2.0,
-    val spearmanWeight: Double = 1.0,
-    val rankTau: Double = 1e-3,
-    val rankBatch: Int = 64,
-    val optimizer: String = "adam") extends ModelEstimator {
-
-  require(targetCols.size >= 2, "use AttnTrainer for a single output")
-  require(lagCols.size % seqLen == 0,
-    s"${lagCols.size} lag columns do not reshape into $seqLen steps")
-  require(batchFraction > 0 && batchFraction <= 1.0,
-    s"batchFraction must be in (0, 1], got $batchFraction")
-  require(numBlocks >= 1, s"numBlocks must be >= 1, got $numBlocks")
-  require(dropoutRate >= 0 && dropoutRate < 1,
-    s"dropoutRate must be in [0, 1), got $dropoutRate")
-  require(Set("temporal", "feature")(attentionType),
-    "multi-output attention_type is temporal|feature (cross is " +
-      s"single-head, the AttnWeights constraint), got $attentionType")
-  require(Set("mse", "spearman", "combined")(loss),
-    s"loss must be mse|spearman|combined, got $loss")
-
-  private val nFeat = lagCols.size / seqLen
-  private val out = targetCols.size
-
-  private var blocks: Seq[AttnWeights] = Nil
-  private var headW: Array[Array[Double]] = _
-  private var headB: Array[Double] = _
-  private var flatKernel: Array[Double] = _
-  private var yMean: Array[Double] = Array.fill(out)(0.0)
-  private var yStd: Array[Double] = Array.fill(out)(1.0)
-
-  def fittedBlocks: Seq[AttnWeights] = blocks
-  def fittedHead: (Array[Array[Double]], Array[Double]) = (headW, headB)
-
-  def steps: Seq[Seq[String]] = lagCols.grouped(nFeat).toSeq
-
-  private def kernelCfg: AttnBpttFull.Cfg = {
-    val (f, t) = if (attentionType == "feature") (seqLen, nFeat)
-      else (nFeat, seqLen)
-    val heads = math.max(numHeads, 1)
-    AttnBpttFull.Cfg(f, t, dModel, ffDim, heads,
-      math.max(1, dModel / heads), attnPool, mlpUnits, preNorm,
-      blocks = numBlocks, drop = dropoutRate, out = out)
-  }
-
-  /** Decode a final flat kernel — shared by the fit tail and
-    * [[AttnMultiTrainer.load]]. */
-  private def materialize(w: Array[Double]): Unit = {
-    flatKernel = w
-    val cfg = kernelCfg
-    blocks = AttnBpttFull.toBlockWeights(w, cfg)
-    val (hw, hb) = AttnBpttFull.headMulti(w, cfg)
-    headW = hw; headB = hb
-  }
-
-  def familyName: String = "attn_multi"
-  def predictionNames: Seq[String] =
-    targetCols.indices.map(o => s"prediction_$o")
-
-  /** The fitted payload (flat kernel + per-output scaling + recipe) —
-    * [[AttnMultiTrainer.load]] scores bit-identically. */
-  def saveParts: (Map[String, String], Seq[(String, Array[Double])]) = {
-    require(flatKernel != null, "fit first")
-    (Map(
-      "family" -> "attn_multi",
-      "lagCols" -> WeightsIO.namesToMeta(lagCols),
-      "seqLen" -> seqLen.toString,
-      "targets" -> WeightsIO.namesToMeta(targetCols),
-      "dModel" -> dModel.toString, "ffDim" -> ffDim.toString,
-      "preNorm" -> preNorm.toString, "numHeads" -> numHeads.toString,
-      "attnPool" -> attnPool.toString,
-      "mlpUnits" -> mlpUnits.mkString(","),
-      "numBlocks" -> numBlocks.toString,
-      "dropoutRate" -> dropoutRate.toString,
-      "attentionType" -> attentionType,
-      "scaleTarget" -> scaleTarget.toString,
-      "lr" -> lr.toString, "epochs" -> epochs.toString,
-      "seed" -> seed.toString,
-      "batchFraction" -> batchFraction.toString, "loss" -> loss,
-      "mseWeight" -> mseWeight.toString,
-      "spearmanWeight" -> spearmanWeight.toString,
-      "rankTau" -> rankTau.toString, "rankBatch" -> rankBatch.toString,
-      "optimizer" -> optimizer),
-      Seq("flat" -> flatKernel, "yMeans" -> yMean, "yStds" -> yStd))
-  }
-
-  def save(path: String): Unit = {
-    val (m, s) = saveParts
-    WeightsIO.save(path, m, s)
-  }
-
-  def fit(df: DataFrame): this.type = {
-    val featMode = attentionType == "feature"
-    val (f, t) = if (featMode) (seqLen, nFeat) else (nFeat, seqLen)
-    val cfg = kernelCfg
-    val orderedLags = if (featMode) steps.transpose.flatten else lagCols
-    val data = df.select((targetCols ++ orderedLags).map(c =>
-      col(c).cast("double")): _*).na.drop()
-    data.cache()
-    require(data.count() > 0, "no complete rows to fit on")
-    if (scaleTarget) {
-      val exprs = targetCols.map(c => avg(col(c))) ++
-        targetCols.map(c => stddev_pop(col(c)))
-      val r = data.agg(exprs.head, exprs.tail: _*).collect()(0)
-      yMean = Array.tabulate(out)(o => r.getDouble(o))
-      yStd = Array.tabulate(out)(o =>
-        math.max(r.getDouble(out + o), 1e-12))
-    }
-    val w = AttnBpttFull.init(cfg, seed)
-    SeqAdam.run(data, cfg.size, w, out, yMean, yStd, f, t,
-      epochs, lr, seed, batchFraction,
-      (bw, x, ys, acc, ms, po) => AttnBpttFull.runMulti(bw, cfg, x, ys,
-        acc, ms, po),
-      loss, mseWeight, spearmanWeight, rankTau, rankBatch, optimizer)
-    materialize(w)
-    data.unpersist()
-    this
-  }
-
-  /** Appends `prediction_{i}` per target through the distributed
-    * forward pass, un-standardizing each output. */
-  def predict(df: DataFrame): DataFrame = {
-    require(blocks.nonEmpty, "fit first")
-    val scoreSteps =
-      if (attentionType == "feature") steps.transpose else steps
-    var scored = AttnScorer.scoreBlocksMulti(df, scoreSteps, blocks, headW,
-      headB)
-    if (scaleTarget)
-      for (o <- 0 until out)
-        scored = scored.withColumn(s"prediction_$o",
-          col(s"prediction_$o") * lit(yStd(o)) + lit(yMean(o)))
-    scored
-  }
-}
-
-object AttnMultiTrainer {
-  /** Rehydrate a `save`d estimator (shape-validated). */
-  def load(path: String): AttnMultiTrainer = {
-    val (meta, sections) = WeightsIO.load(path)
-    fromParts(meta, sections, path)
-  }
-
-  /** Rebuild from an already-parsed payload (standalone or
-    * pipeline-embedded). */
-  def fromParts(meta: Map[String, String],
-      sections: Map[String, Array[Double]], where: String)
-      : AttnMultiTrainer = {
-    WeightsIO.requireFamily(meta, "attn_multi", where)
-    val targets = WeightsIO.namesFromMeta(meta("targets"))
-    val mlpUnits = WeightsIO.intsFromMeta(meta("mlpUnits"))
-    val m = new AttnMultiTrainer(
-      WeightsIO.namesFromMeta(meta("lagCols")),
-      meta("seqLen").toInt, targets,
-      dModel = meta("dModel").toInt, ffDim = meta("ffDim").toInt,
-      preNorm = meta("preNorm").toBoolean, lr = meta("lr").toDouble,
-      epochs = meta("epochs").toInt, seed = meta("seed").toLong,
-      scaleTarget = meta("scaleTarget").toBoolean,
-      batchFraction = meta("batchFraction").toDouble,
-      numHeads = meta("numHeads").toInt,
-      attnPool = meta("attnPool").toBoolean,
-      mlpUnits = mlpUnits, numBlocks = meta("numBlocks").toInt,
-      dropoutRate = meta("dropoutRate").toDouble,
-      attentionType = meta("attentionType"),
-      loss = meta("loss"),
-      mseWeight = meta("mseWeight").toDouble,
-      spearmanWeight = meta("spearmanWeight").toDouble,
-      rankTau = meta("rankTau").toDouble,
-      rankBatch = meta("rankBatch").toInt,
-      optimizer = meta("optimizer"))
-    val flat = sections("flat")
-    WeightsIO.requireLen("flat", flat, m.kernelCfg.size)
-    WeightsIO.requireLen("yMeans", sections("yMeans"), targets.size)
-    WeightsIO.requireLen("yStds", sections("yStds"), targets.size)
-    m.yMean = sections("yMeans")
-    m.yStd = sections("yStds")
+    m.yMean = ym
+    m.yStd = ys
     m.materialize(flat)
     m
   }

@@ -572,16 +572,16 @@ class BnJointAutoencoder(
     if (d.active) d else null
   }
 
-  /** Mean batch loss + flat gradient at `p` over `data` (cols 0..nOut-1
-    * = standardized targets, then k RAW features). One batch = one
-    * gradient unit (batch-count normalized), matching the rank paths.
-    * `ep` = 0 disables noise/dropout (the finite-difference mode) and
-    * pins batch composition. */
   /** Per-site batch-statistics sums from the most recent [[gradient]]
     * call that collected them (moving-average mode only): layout =
     * [[BnAeKernel.statsLen]], driver-side after the partition sum. */
   @transient private var lastEpochStats: Array[Double] = _
 
+  /** Mean batch loss + flat gradient at `p` over `data` (cols 0..nOut-1
+    * = standardized targets, then k RAW features). One batch = one
+    * gradient unit (batch-count normalized), matching the rank paths.
+    * `ep` = 0 disables noise/dropout (the finite-difference mode) and
+    * pins batch composition. */
   def gradient(data: DataFrame, p: Array[Double], ep: Long = 0L)
       : (Array[Double], Double) = {
     val (kk, nO, bsz) = (k, nOut, batchSize)

@@ -163,16 +163,26 @@ object DeepMlpKernel {
 
 /** Depth-general MLP regressor matching the reference's `hidden_units`
   * tuple (dense.py:17 — default (64, 64); [[MLPRegressor]] covers the
-  * one-layer shape with a DuckDB-oracled scoring query). Same training
-  * shape as every trainer here: flat-gradient [[PartitionSum]] (or bounded
-  * in-partition batches for the rank losses — the kernel backward is
-  * linear in pred − y, so dL/dp injects via y′ = pred − dL/dp), driver
-  * [[AdamState]], input un-touched / target standardized, seeded
-  * minibatch fraction. Scoring stages each layer as named codegen'd
-  * columns (no expression blow-up at depth), map-side, no UDF. */
+  * one-layer shape with a DuckDB-oracled scoring query) and its
+  * `output_units` (keras_estimators/base.py:33,46): `targetCol` plus
+  * `extraTargetCols` give `1 + extraTargetCols.size` linear heads over
+  * the shared hidden stack (with the same optional per-layer Dropout),
+  * trained jointly against the summed per-output standardized MSE and
+  * scored as `prediction` or `prediction_{i}` (base.py:137-150).
+  * `loss = "spearman" | "combined"` trains the reference's rank
+  * objectives; at several outputs the loss flattens (batch, out) to ONE
+  * ranked vector (losses.py:67-69). The features are one timestep of
+  * width `k`, so the fit is the [[SeqAdam]] epoch loop every sequence
+  * trainer runs: seeded minibatch fraction, the partition-ordered
+  * gradient sum (or bounded in-partition batches for the rank losses —
+  * the kernel backward is linear in pred − y, so dL/dp injects via
+  * y′ = pred − dL/dp), driver [[AdamState]], input un-touched / targets
+  * standardized. Scoring stages each layer as named codegen'd columns
+  * (no expression blow-up at depth), map-side, no UDF. */
 class DeepMLPRegressor(
     val featureCols: Seq[String],
     val targetCol: String,
+    val extraTargetCols: Seq[String] = Nil,
     val layers: Seq[Int] = Seq(64, 64),
     val activation: String = "relu",
     val lr: Double = 1e-3,
@@ -188,6 +198,10 @@ class DeepMLPRegressor(
     val dropoutRate: Double = 0.0,
     val optimizer: String = "adam") extends ModelEstimator {
 
+  /** All targets: `output_units = 1 + extraTargetCols.size`. */
+  val targetCols: Seq[String] = targetCol +: extraTargetCols
+  require(targetCols.distinct.size == targetCols.size,
+    s"target columns repeat a name: ${targetCols.mkString(", ")}")
   require(layers.nonEmpty, "at least one hidden layer")
   require(Set("relu", "swish")(activation),
     s"activation must be relu|swish, got $activation")
@@ -200,122 +214,61 @@ class DeepMLPRegressor(
     s"dropoutRate must be in [0, 1), got $dropoutRate")
 
   private val k = featureCols.size
+  private val out = targetCols.size
   private val dims = k +: layers
-  private val sz = DeepMlpKernel.size(dims)
+  private val sz = DeepMlpKernel.size(dims, out)
 
   private var weights: Array[Double] = _
-  private var yMean = 0.0
-  private var yStd = 1.0
+  private var yMean: Array[Double] = Array.fill(out)(0.0)
+  private var yStd: Array[Double] = Array.fill(out)(1.0)
 
   def fittedFlat: Array[Double] = weights
 
   def fit(df: DataFrame): this.type = {
-    val data = df.select((targetCol +: featureCols).map(c =>
-      col(c).cast("double")): _*).na.drop()
-    data.cache()
-    require(data.count() > 0, "no complete rows to fit on")
-    if (scaleTarget) {
-      val r = data.agg(avg(col(targetCol)), stddev_pop(col(targetCol)))
-        .collect()(0)
-      yMean = r.getDouble(0); yStd = math.max(r.getDouble(1), 1e-12)
-    }
-    val p = DeepMlpKernel.init(dims, 1, seed)
-    val adam = new AdamState(sz, lr, optimizer)
-    val (ym, ys, dd, n) = (yMean, yStd, dims, sz)
-    val sw = swish
-    val kk = k
-    val dr = dropoutRate
-    val seed0 = seed
-    for (t <- 1 to epochs) {
-      val bw = p.clone()
-      val epL = t.toLong
-      val batch = if (batchFraction >= 1.0) data
-        else data.sample(withReplacement = false, batchFraction, seed + t)
-      val grad = if (loss != "mse") {
-        val (mw, spw) = if (loss == "spearman") (0.0, 1.0)
-          else (mseWeight, spearmanWeight)
-        val (tau, rb) = (rankTau, rankBatch)
-        PartitionSum.sum(batch.rdd, n + 2) { (part, it, acc) =>
-          var idx = 0L
-          SeqAdam.shuffledBatches(it, rb, seed0, epL, part)
-            .foreach { rows =>
-            val b = rows.size
-            val xs = new Array[Array[Double]](b)
-            val ysA = new Array[Double](b)
-            val preds = new Array[Double](b)
-            val seeds = new Array[Long](b)
-            var i = 0
-            rows.foreach { row =>
-              ysA(i) = (row.getDouble(0) - ym) / ys
-              xs(i) = Array.tabulate(kk)(j => row.getDouble(j + 1))
-              seeds(i) = SeqAdam.maskSeed(seed0, epL, part, idx)
-              idx += 1
-              preds(i) = DeepMlpKernel.run(bw, dd, xs(i), 0.0, null, sw,
-                dr, seeds(i))
-              i += 1
-            }
-            if (b >= 2) {
-              val (dp, lossVal) =
-                RankLoss.combinedGrad(preds, ysA, tau, mw, spw)
-              i = 0
-              while (i < b) {
-                DeepMlpKernel.run(bw, dd, xs(i), preds(i) - dp(i), acc,
-                  sw, dr, seeds(i))
-                i += 1
-              }
-              acc(n) += lossVal; acc(n + 1) += 1.0
-            } else if (mw != 0.0) {
-              // leftover single-row batch: MSE term (Spearman undefined)
-              val d = preds(0) - ysA(0)
-              DeepMlpKernel.run(bw, dd, xs(0), preds(0) - mw * 2.0 * d,
-                acc, sw, dr, seeds(0))
-              acc(n) += mw * d * d; acc(n + 1) += 1.0
-            }
-          }
-        }
-      } else PartitionSum.sum(batch.rdd, n + 2) { (part, it, acc) =>
-        it.foreach { row =>
-          val y = (row.getDouble(0) - ym) / ys
-          val x = Array.tabulate(kk)(j => row.getDouble(j + 1))
-          val ms = SeqAdam.maskSeed(seed0, epL, part, acc(n + 1).toLong)
-          val pred = DeepMlpKernel.run(bw, dd, x, y, acc, sw, dr, ms)
-          val d = pred - y
-          acc(n) += 0.5 * d * d; acc(n + 1) += 1.0
-        }
-      }
-      adam.update(p, PartitionSum.mean(grad, n)._1, t)
-    }
+    val (data, ym, ys) = SeqAdam.prepare(df, targetCols, featureCols,
+      scaleTarget)
+    yMean = ym; yStd = ys
+    val p = DeepMlpKernel.init(dims, out, seed)
+    val (dd, oo, sw, dr) = (dims, out, swish, dropoutRate)
+    // SeqAdam fills predictions only on its rank-loss forward pass;
+    // runV always writes them, so the gradient pass gets a scratch row
+    SeqAdam.run(data, sz, p, out, yMean, yStd, k, 1, epochs, lr, seed,
+      batchFraction,
+      (bw, x, ys, acc, ms, po) => DeepMlpKernel.runV(bw, dd, oo, x(0), ys,
+        acc, sw, dr, ms, if (po != null) po else new Array[Double](oo)),
+      loss, mseWeight, spearmanWeight, rankTau, rankBatch, optimizer)
     data.unpersist()
     weights = p
     this
   }
 
-  /** Appends `prediction` via staged per-layer named columns. */
+  /** Appends [[predictionNames]] via staged per-layer named columns,
+    * destandardized per output. */
   def predict(df: DataFrame): DataFrame = {
     require(weights != null, "fit first")
     DeepMlpScore.stage(df, featureCols.map(c => col(c).cast("double")),
-      weights, dims, 1, swish, Array(yMean), Array(yStd))
+      weights, dims, out, swish, yMean, yStd)
   }
 
-  def familyName: String = "deep_mlp"
-  def predictionNames: Seq[String] = Seq("prediction")
+  def familyName: String = if (out == 1) "deep_mlp" else "deep_mlp_multi"
+  def predictionNames: Seq[String] = MLPRegressor.predictionNames(out)
 
   /** The fitted payload (flat kernel + target scaling + recipe) —
     * written standalone by `save`, embedded by PipelineIO. */
   def saveParts: (Map[String, String], Seq[(String, Array[Double])]) = {
     require(weights != null, "fit first")
-    (Map(
-      "family" -> "deep_mlp",
+    val (tm, ts) = WeightsIO.targetParts("deep_mlp", targetCols, yMean,
+      yStd)
+    (tm ++ Map(
       "features" -> WeightsIO.namesToMeta(featureCols),
-      "target" -> targetCol, "layers" -> layers.mkString(","),
+      "layers" -> layers.mkString(","),
       "activation" -> activation,
       "scaleTarget" -> scaleTarget.toString,
-      "yMean" -> yMean.toString, "yStd" -> yStd.toString,
       "lr" -> lr.toString, "epochs" -> epochs.toString,
       "seed" -> seed.toString,
       "batchFraction" -> batchFraction.toString, "loss" -> loss,
       "dropoutRate" -> dropoutRate.toString, "optimizer" -> optimizer),
-      Seq("flat" -> weights))
+      ("flat" -> weights) +: ts)
   }
 
   /** Persist the FITTED estimator — exact-double JSON;
@@ -334,13 +287,16 @@ object DeepMLPRegressor {
   }
 
   /** Rebuild from an already-parsed payload (standalone or
-    * pipeline-embedded). */
+    * pipeline-embedded) of either the `deep_mlp` or the
+    * `deep_mlp_multi` layout. */
   def fromParts(meta: Map[String, String],
       sections: Map[String, Array[Double]], where: String)
       : DeepMLPRegressor = {
-    WeightsIO.requireFamily(meta, "deep_mlp", where)
+    val (targets, ym, ys) =
+      WeightsIO.targetsFromParts(meta, sections, "deep_mlp", where)
     val m = new DeepMLPRegressor(
-      WeightsIO.namesFromMeta(meta("features")), meta("target"),
+      WeightsIO.namesFromMeta(meta("features")), targets.head,
+      extraTargetCols = targets.tail,
       layers = WeightsIO.intsFromMeta(meta("layers")),
       activation = meta("activation"), lr = meta("lr").toDouble,
       epochs = meta("epochs").toInt, seed = meta("seed").toLong,
@@ -352,8 +308,8 @@ object DeepMLPRegressor {
     val flat = sections("flat")
     WeightsIO.requireLen("flat", flat, m.sz)
     m.weights = flat
-    m.yMean = meta("yMean").toDouble
-    m.yStd = meta("yStd").toDouble
+    m.yMean = ym
+    m.yStd = ys
     m
   }
 }
@@ -435,222 +391,5 @@ object DeepMlpScore {
        |SELECT ${keySql.mkString(", ")},
        |  ${heads.mkString(",\n  ")}
        |FROM h${L - 1}""".stripMargin
-  }
-}
-
-/** Multi-output DEEP MLP — the reference's `MLPRegressor` with
-  * `output_units > 1` at its actual default depth (dense.py:17
-  * `hidden_units=(64, 64)` feeding every linear head, with the same
-  * optional per-layer Dropout): every hidden layer is shared, outputs
-  * train jointly against the summed per-output standardized MSE.
-  * [[MLPMultiRegressor]] remains the one-layer oracled sibling; this is
-  * the depth-general path. Scoring stages layers as named codegen'd
-  * columns and appends `prediction_{i}` (base.py:137-150).
-  * `loss = "spearman" | "combined"` trains the reference's rank
-  * objectives with their exact multi-output semantics — the loss
-  * flattens (batch, out) to ONE ranked vector (losses.py:67-69). */
-class DeepMLPMultiRegressor(
-    val featureCols: Seq[String],
-    val targetCols: Seq[String],
-    val layers: Seq[Int] = Seq(64, 64),
-    val activation: String = "relu",
-    val lr: Double = 1e-3,
-    val epochs: Int = 200,
-    val seed: Long = 42L,
-    val scaleTarget: Boolean = true,
-    val batchFraction: Double = 0.2,
-    val dropoutRate: Double = 0.0,
-    val loss: String = "mse",
-    val mseWeight: Double = 2.0,
-    val spearmanWeight: Double = 1.0,
-    val rankTau: Double = 1e-3,
-    val rankBatch: Int = 64,
-    val optimizer: String = "adam") extends ModelEstimator {
-
-  require(targetCols.size >= 2, "use DeepMLPRegressor for a single output")
-  require(layers.nonEmpty, "at least one hidden layer")
-  require(Set("relu", "swish")(activation),
-    s"activation must be relu|swish, got $activation")
-  require(batchFraction > 0 && batchFraction <= 1.0,
-    s"batchFraction must be in (0, 1], got $batchFraction")
-  require(dropoutRate >= 0 && dropoutRate < 1,
-    s"dropoutRate must be in [0, 1), got $dropoutRate")
-  require(Set("mse", "spearman", "combined")(loss),
-    s"loss must be mse|spearman|combined, got $loss")
-  private val swish = activation == "swish"
-  private val k = featureCols.size
-  private val out = targetCols.size
-  private val dims = k +: layers
-  private val sz = DeepMlpKernel.size(dims, out)
-
-  private var weights: Array[Double] = _
-  private var yMean: Array[Double] = Array.fill(out)(0.0)
-  private var yStd: Array[Double] = Array.fill(out)(1.0)
-
-  def fittedFlat: Array[Double] = weights
-
-  def fit(df: DataFrame): this.type = {
-    val data = df.select((targetCols ++ featureCols).map(c =>
-      col(c).cast("double")): _*).na.drop()
-    data.cache()
-    require(data.count() > 0, "no complete rows to fit on")
-    if (scaleTarget) {
-      val stats = targetCols.flatMap(c =>
-        Seq(avg(col(c)), stddev_pop(col(c))))
-      val r = data.agg(stats.head, stats.tail: _*).collect()(0)
-      yMean = Array.tabulate(out)(o => r.getDouble(2 * o))
-      yStd = Array.tabulate(out)(o =>
-        math.max(r.getDouble(2 * o + 1), 1e-12))
-    }
-    val p = DeepMlpKernel.init(dims, out, seed)
-    val adam = new AdamState(sz, lr, optimizer)
-    val (ym, ys, dd, n, oo) = (yMean, yStd, dims, sz, out)
-    val sw = swish
-    val kk = k
-    val dr = dropoutRate
-    val seed0 = seed
-    for (t <- 1 to epochs) {
-      val bw = p.clone()
-      val epL = t.toLong
-      val batch = if (batchFraction >= 1.0) data
-        else data.sample(withReplacement = false, batchFraction, seed + t)
-      val grad = if (loss != "mse") {
-        // rank-loss path with the reference's multi-output semantics:
-        // (batch, out) flattens to ONE soft-ranked vector per batch
-        // (losses.py:67-69); the flattened dL/dp injects as per-output
-        // surrogate targets (the vector kernel backward is linear in
-        // each pred_o − y_o). A 1-row leftover batch still ranks its
-        // `out >= 2` flattened elements.
-        val (mw, spw) = if (loss == "spearman") (0.0, 1.0)
-          else (mseWeight, spearmanWeight)
-        val (tau, rb) = (rankTau, rankBatch)
-        PartitionSum.sum(batch.rdd, n + 2) { (part, it, acc) =>
-          var idx = 0L
-          SeqAdam.shuffledBatches(it, rb, seed0, epL, part)
-            .foreach { rows =>
-            val b = rows.size
-            val xs = new Array[Array[Double]](b)
-            val seeds = new Array[Long](b)
-            val flatP = new Array[Double](b * oo)
-            val flatY = new Array[Double](b * oo)
-            var i = 0
-            rows.foreach { row =>
-              xs(i) = Array.tabulate(kk)(j => row.getDouble(j + oo))
-              seeds(i) = SeqAdam.maskSeed(seed0, epL, part, idx)
-              idx += 1
-              val po = new Array[Double](oo)
-              DeepMlpKernel.runV(bw, dd, oo, xs(i), new Array[Double](oo),
-                null, sw, dr, seeds(i), po)
-              var o2 = 0
-              while (o2 < oo) {
-                flatY(i * oo + o2) = (row.getDouble(o2) - ym(o2)) / ys(o2)
-                flatP(i * oo + o2) = po(o2)
-                o2 += 1
-              }
-              i += 1
-            }
-            val (dp, lossVal) =
-              RankLoss.combinedGrad(flatP, flatY, tau, mw, spw)
-            val scratch = new Array[Double](oo)
-            i = 0
-            while (i < b) {
-              val sur = Array.tabulate(oo)(o2 =>
-                flatP(i * oo + o2) - dp(i * oo + o2))
-              DeepMlpKernel.runV(bw, dd, oo, xs(i), sur, acc, sw, dr,
-                seeds(i), scratch)
-              i += 1
-            }
-            acc(n) += lossVal
-            acc(n + 1) += 1.0
-          }
-        }
-      } else PartitionSum.sum(batch.rdd, n + 2) { (part, it, acc) =>
-        it.foreach { row =>
-          val y = Array.tabulate(oo)(o2 =>
-            (row.getDouble(o2) - ym(o2)) / ys(o2))
-          val x = Array.tabulate(kk)(j => row.getDouble(j + oo))
-          val ms = SeqAdam.maskSeed(seed0, epL, part, acc(n + 1).toLong)
-          val po = new Array[Double](oo)
-          acc(n) += DeepMlpKernel.runV(bw, dd, oo, x, y, acc, sw, dr, ms,
-            po)
-          acc(n + 1) += 1.0
-        }
-      }
-      adam.update(p, PartitionSum.mean(grad, n)._1, t)
-    }
-    data.unpersist()
-    weights = p
-    this
-  }
-
-  /** Appends `prediction_{i}` via staged per-layer named columns,
-    * destandardized per output. */
-  def predict(df: DataFrame): DataFrame = {
-    require(weights != null, "fit first")
-    DeepMlpScore.stage(df, featureCols.map(c => col(c).cast("double")),
-      weights, dims, out, swish, yMean, yStd)
-  }
-
-  def familyName: String = "deep_mlp_multi"
-  def predictionNames: Seq[String] =
-    targetCols.indices.map(o => s"prediction_$o")
-
-  /** The fitted payload (flat kernel + per-output scaling) — written
-    * standalone by `save`, embedded by PipelineIO. */
-  def saveParts: (Map[String, String], Seq[(String, Array[Double])]) = {
-    require(weights != null, "fit first")
-    (Map(
-      "family" -> "deep_mlp_multi",
-      "features" -> WeightsIO.namesToMeta(featureCols),
-      "targets" -> WeightsIO.namesToMeta(targetCols),
-      "layers" -> layers.mkString(","),
-      "activation" -> activation,
-      "scaleTarget" -> scaleTarget.toString,
-      "lr" -> lr.toString, "epochs" -> epochs.toString,
-      "seed" -> seed.toString,
-      "batchFraction" -> batchFraction.toString, "loss" -> loss,
-      "dropoutRate" -> dropoutRate.toString, "optimizer" -> optimizer),
-      Seq("flat" -> weights, "yMeans" -> yMean, "yStds" -> yStd))
-  }
-
-  /** Persist the FITTED estimator — exact-double JSON;
-    * [[DeepMLPMultiRegressor.load]] scores bit-identically. */
-  def save(path: String): Unit = {
-    val (m, s) = saveParts
-    WeightsIO.save(path, m, s)
-  }
-}
-
-object DeepMLPMultiRegressor {
-  /** Rehydrate a `save`d estimator (shape-validated). */
-  def load(path: String): DeepMLPMultiRegressor = {
-    val (meta, sections) = WeightsIO.load(path)
-    fromParts(meta, sections, path)
-  }
-
-  /** Rebuild from an already-parsed payload (standalone or
-    * pipeline-embedded). */
-  def fromParts(meta: Map[String, String],
-      sections: Map[String, Array[Double]], where: String)
-      : DeepMLPMultiRegressor = {
-    WeightsIO.requireFamily(meta, "deep_mlp_multi", where)
-    val targets = WeightsIO.namesFromMeta(meta("targets"))
-    val m = new DeepMLPMultiRegressor(
-      WeightsIO.namesFromMeta(meta("features")), targets,
-      layers = WeightsIO.intsFromMeta(meta("layers")),
-      activation = meta("activation"), lr = meta("lr").toDouble,
-      epochs = meta("epochs").toInt, seed = meta("seed").toLong,
-      scaleTarget = meta("scaleTarget").toBoolean,
-      batchFraction = meta("batchFraction").toDouble,
-      dropoutRate = meta("dropoutRate").toDouble,
-      loss = meta("loss"), optimizer = meta("optimizer"))
-    val flat = sections("flat")
-    WeightsIO.requireLen("flat", flat, m.sz)
-    WeightsIO.requireLen("yMeans", sections("yMeans"), targets.size)
-    WeightsIO.requireLen("yStds", sections("yStds"), targets.size)
-    m.weights = flat
-    m.yMean = sections("yMeans")
-    m.yStd = sections("yStds")
-    m
   }
 }

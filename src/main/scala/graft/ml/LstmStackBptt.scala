@@ -2,7 +2,7 @@ package graft.ml
 
 /** Flat-parameter BPTT kernel for every LSTM fit layout the reference
   * builds from its `lstm_units` list (sequence.py:120-147) — the one
-  * kernel behind [[LSTMTrainer]], [[LSTMMultiTrainer]] and
+  * kernel behind [[LSTMTrainer]] (at one or more outputs) and
   * [[LSTMBnTrainer]]:
   *
   * - **one layer** (the default, `lstm_units=[n]`): a single cell whose

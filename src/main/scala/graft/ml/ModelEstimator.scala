@@ -52,11 +52,11 @@ object ModelCodecs {
     "mlp" -> (MLPRegressor.fromParts _),
     "mlp_multi" -> (MLPMultiRegressor.fromParts _),
     "deep_mlp" -> (DeepMLPRegressor.fromParts _),
-    "deep_mlp_multi" -> (DeepMLPMultiRegressor.fromParts _),
+    "deep_mlp_multi" -> (DeepMLPRegressor.fromParts _),
     "lstm" -> (LSTMTrainer.fromParts _),
-    "lstm_multi" -> (LSTMMultiTrainer.fromParts _),
+    "lstm_multi" -> (LSTMTrainer.fromParts _),
     "attn" -> (AttnTrainer.fromParts _),
-    "attn_multi" -> (AttnMultiTrainer.fromParts _),
+    "attn_multi" -> (AttnTrainer.fromParts _),
     "joint_ae" -> (JointAeModel.fromParts _),
     "bn_ae" -> (BnAeModel.fromParts _),
     "deep_ae" -> (DeepJointAutoencoder.fromParts _),

@@ -1,12 +1,14 @@
 package graft.ml
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
-/** The one epoch loop of the sequence trainers (LSTM + transformer,
-  * single- and multi-output): per-epoch seeded Bernoulli sampling
-  * (`batchFraction` — the reference's minibatch-SGD semantics at cluster
-  * granularity), the flat-gradient MSE [[PartitionSum]] or the rank-loss
-  * surrogate-injection path (losses.py:22-189 via
+/** The one epoch loop of every flat-kernel trainer with `output_units`
+  * heads — the LSTM, the transformer and the deep MLP (whose features
+  * are one timestep) at one or more outputs: per-epoch seeded Bernoulli
+  * sampling (`batchFraction` — the reference's minibatch-SGD semantics
+  * at cluster granularity), the flat-gradient MSE [[PartitionSum]] or
+  * the rank-loss surrogate-injection path (losses.py:22-189 via
   * [[RankLoss.seqEpochGradientMulti]]), and driver-side Adam. Also home
   * to the seeded sampling helpers every rank-loss and dropout path
   * shares ([[maskSeed]], [[invBernoulli]], [[shuffledBatches]]). */
@@ -55,20 +57,47 @@ private[ml] object SeqAdam {
     }.grouped(rankBatch)
   }
 
+  /** The fit frame of a `targets`-headed trainer: the targets then the
+    * `inputs` cast to double, incomplete rows dropped, cached, and
+    * required non-empty; with `scaleTarget`, also the per-output mean
+    * and population std (floored at 1e-12) the rows standardize by —
+    * otherwise 0 and 1. The caller unpersists the frame. */
+  def prepare(df: DataFrame, targets: Seq[String], inputs: Seq[String],
+      scaleTarget: Boolean): (DataFrame, Array[Double], Array[Double]) = {
+    val data = df.select((targets ++ inputs).map(c =>
+      col(c).cast("double")): _*).na.drop()
+    data.cache()
+    require(data.count() > 0, "no complete rows to fit on")
+    val n = targets.size
+    if (!scaleTarget) (data, Array.fill(n)(0.0), Array.fill(n)(1.0))
+    else {
+      val stats = targets.flatMap(c => Seq(avg(col(c)), stddev_pop(col(c))))
+      val r = data.agg(stats.head, stats.tail: _*).collect()(0)
+      (data, Array.tabulate(n)(o => r.getDouble(2 * o)),
+        Array.tabulate(n)(o => math.max(r.getDouble(2 * o + 1), 1e-12)))
+    }
+  }
+
+  /** Maps each scored head in `names` back to target units. */
+  def destandardize(scored: DataFrame, names: Seq[String],
+      yMean: Array[Double], yStd: Array[Double]): DataFrame =
+    names.zipWithIndex.foldLeft(scored) { case (d, (name, o)) =>
+      d.withColumn(name, col(name) * lit(yStd(o)) + lit(yMean(o)))
+    }
+
   /** Trains `w` in place for `epochs` epochs. Rows carry `nOut` leading
-    * target columns (`nOut = 1` for the single-output trainers,
-    * `output_units > 1` otherwise, base.py:46), each standardized
-    * per-output, then the lag-major sequence values. `kernel(bw, x, ys,
-    * acc, maskSeed, predsOut)` receives the standardized target VECTOR,
-    * accumulates the joint Keras summed-mse gradient into `acc` when
-    * non-null, fills `predsOut` when non-null, and returns the loss (or,
-    * with `acc` null, the first prediction); `maskSeed` is a per-row
-    * per-epoch seed for training-time dropout masks (kernels without
-    * dropout ignore it). `loss = "spearman" | "combined"` trains the
-    * reference's rank objectives with their exact multi-output semantics
-    * — the loss flattens (batch, out) to one vector (losses.py:67-69) —
-    * via [[RankLoss.seqEpochGradientMulti]]'s surrogate-target
-    * injection. */
+    * target columns (the reference's `output_units`, base.py:46), each
+    * standardized per-output, then the lag-major sequence values.
+    * `kernel(bw, x, ys, acc, maskSeed, predsOut)` receives the
+    * standardized target VECTOR, accumulates the joint Keras summed-mse
+    * gradient into `acc` when non-null, fills `predsOut` when non-null,
+    * and returns the loss (or, with `acc` null, the first prediction);
+    * `maskSeed` is a per-row per-epoch seed for training-time dropout
+    * masks (kernels without dropout ignore it). `loss = "spearman" |
+    * "combined"` trains the reference's rank objectives with their exact
+    * multi-output semantics — the loss flattens (batch, out) to one
+    * vector (losses.py:67-69) — via
+    * [[RankLoss.seqEpochGradientMulti]]'s surrogate-target injection. */
   def run(data: DataFrame, sz: Int, w: Array[Double], nOut: Int,
       yMean: Array[Double], yStd: Array[Double], nFeat: Int, seqLen: Int,
       epochs: Int, lr: Double, seed: Long, batchFraction: Double,

@@ -79,6 +79,49 @@ object SeqAlg {
       .reduce(alg.add)
     bias.fold(s)(b => alg.add(s, alg.const(b)))
   }
+
+  /** The output heads over `ins`: one Dense row per output, named by
+    * [[MLPRegressor.predictionNames]] (`prediction` at one output,
+    * `prediction_{i}` at several — base.py:137-150). */
+  def heads[E](alg: Alg[E], ins: Seq[E], headW: Array[Array[Double]],
+      headB: Array[Double]): Seq[(String, E)] = {
+    require(headW.length == headB.length, "head rows must match biases")
+    MLPRegressor.predictionNames(headW.length).zip(headW.indices).map {
+      case (name, o) =>
+        name -> linear(alg, ins, headW(o).toSeq, Some(headB(o)))
+    }
+  }
+
+  /** The Spark head writer: each stage one projection of named columns,
+    * then the heads, then the `__` intermediates dropped. */
+  def scoreChain(df: DataFrame, stages: Seq[Seq[(String, Column)]],
+      heads: Seq[(String, Column)]): DataFrame = {
+    var cur = df
+    for (stage <- stages)
+      cur = cur.select(col("*") +: stage.map { case (n, e) => e.as(n) }: _*)
+    for ((n, e) <- heads) cur = cur.withColumn(n, e)
+    cur.drop(cur.columns.filter(_.startsWith("__")): _*)
+  }
+
+  /** The DuckDB head writer: chained CTEs (`pfx` + stage index) after
+    * the caller's base CTE, the heads in a `fin` CTE, then the caller's
+    * final select list. */
+  def sqlChain(baseCte: String, baseName: String, pfx: String,
+      stages: Seq[Seq[(String, String)]], heads: Seq[(String, String)],
+      finalSelect: String): String = {
+    val sb = new StringBuilder(baseCte)
+    var prev = baseName
+    for ((stage, si) <- stages.zipWithIndex) {
+      val name = s"$pfx$si"
+      val cols = stage.map { case (n, e) => s"$e AS $n" }.mkString(",\n    ")
+      sb.append(s",\n$name AS (\n  SELECT *,\n    $cols\n  FROM $prev)")
+      prev = name
+    }
+    val hs = heads.map { case (n, e) => s"$e AS $n" }.mkString(",\n    ")
+    sb.append(s",\nfin AS (\n  SELECT *,\n    $hs FROM $prev)")
+    sb.append(s"\nSELECT $finalSelect FROM fin")
+    sb.toString
+  }
 }
 
 /** LSTM cell weights (one layer, H units over F features/step) + linear
@@ -234,35 +277,21 @@ object LstmScorer {
     * states; only the LAST layer's output head is used. `norms` adds the
     * per-layer use_layer_norm/use_batch_norm stages (sequence.py:141-144). */
   def scoreStacked(df: DataFrame, steps: Seq[Seq[String]],
-      weights: Seq[LstmWeights], norms: Seq[LstmNorm] = Nil): DataFrame = {
-    val (stages, headIn) = stackedStages(ColAlg, weights, steps, norms)
-    var cur = df
-    for (stage <- stages)
-      cur = cur.select(col("*") +: stage.map { case (n, e) => e.as(n) }: _*)
-    val out = cur.withColumn("prediction",
-      linear(ColAlg, headIn.map(ColAlg.ref), weights.last.wOut.toSeq,
-        Some(weights.last.bOut)))
-    out.drop(out.columns.filter(_.startsWith("__")): _*)
-  }
+      weights: Seq[LstmWeights], norms: Seq[LstmNorm] = Nil): DataFrame =
+    scoreStackedMulti(df, steps, weights, Array(weights.last.wOut),
+      Array(weights.last.bOut), norms)
 
-  /** Multi-output variant — the base class's `output_units > 1` with
-    * the `prediction_{i}` naming contract (base.py:46,144-150,
-    * sequence.py:146): one Dense row per output over the (optionally
-    * normalized) final state; cells come from the joint fit's shared
-    * trunk ([[LstmStackBptt.stackCells]] + headMulti). */
+  /** The general head — the base class's `output_units` with the
+    * `prediction` / `prediction_{i}` naming contract (base.py:46,
+    * 144-150, sequence.py:146): one Dense row per output over the
+    * (optionally normalized) final state; the cells' own heads are
+    * unused. */
   def scoreStackedMulti(df: DataFrame, steps: Seq[Seq[String]],
       weights: Seq[LstmWeights], headW: Array[Array[Double]],
       headB: Array[Double], norms: Seq[LstmNorm] = Nil): DataFrame = {
-    require(headW.length == headB.length, "head rows must match biases")
     val (stages, headIn) = stackedStages(ColAlg, weights, steps, norms)
-    var cur = df
-    for (stage <- stages)
-      cur = cur.select(col("*") +: stage.map { case (n, e) => e.as(n) }: _*)
-    for (o <- headW.indices)
-      cur = cur.withColumn(s"prediction_$o",
-        linear(ColAlg, headIn.map(ColAlg.ref), headW(o).toSeq,
-          Some(headB(o))))
-    cur.drop(cur.columns.filter(_.startsWith("__")): _*)
+    scoreChain(df, stages, heads(ColAlg, headIn.map(ColAlg.ref), headW,
+      headB))
   }
 
   /** Bidirectional variant (the reference's `bidirectional` flag,
@@ -274,33 +303,22 @@ object LstmScorer {
       bOut: Double, norm: LstmNorm = null): DataFrame = {
     require(wOut.length == fwd.hidden + bwd.hidden,
       "bidirectional head must span both cells' hidden states")
-    var cur = df
-    for (t <- steps.indices;
-         stage <- stepStages(ColAlg, fwd, steps, t, "__fwd_"))
-      cur = cur.select(col("*") +: stage.map { case (n, e) => e.as(n) }: _*)
     val rev = steps.reverse
-    for (t <- rev.indices;
-         stage <- stepStages(ColAlg, bwd, rev, t, "__bwd_"))
-      cur = cur.select(col("*") +: stage.map { case (n, e) => e.as(n) }: _*)
     val lastT = steps.size - 1
     val h = fwd.hidden
     val concat: Int => String = u =>
       if (u < h) s"__fwd_h${lastT}_$u" else s"__bwd_h${lastT}_${u - h}"
     // norm over the CONCATENATED [fwd, bwd] final state — Keras applies
     // the use_layer_norm stage after the Bidirectional wrapper's output
-    val headIn: Seq[Column] =
-      if (norm == null) (0 until 2 * h).map(u => col(concat(u)))
-      else {
-        for (stage <- normStages(ColAlg, norm, "__bi_", lastT,
-            2 * h, concat))
-          cur = cur.select(
-            col("*") +: stage.map { case (n, e) => e.as(n) }: _*)
-        (0 until 2 * h).map(u => col(s"__bi_n${lastT}_$u"))
-      }
-    val head = headIn.zip(wOut).map { case (r, wt) => r * lit(wt) }
-      .reduce(_ + _) + lit(bOut)
-    val out = cur.withColumn("prediction", head)
-    out.drop(out.columns.filter(_.startsWith("__")): _*)
+    val stages =
+      steps.indices.flatMap(t => stepStages(ColAlg, fwd, steps, t,
+        "__fwd_")) ++
+      rev.indices.flatMap(t => stepStages(ColAlg, bwd, rev, t, "__bwd_")) ++
+      (if (norm == null) Nil
+       else normStages(ColAlg, norm, "__bi_", lastT, 2 * h, concat))
+    val headIn = (0 until 2 * h).map(u =>
+      col(if (norm == null) concat(u) else s"__bi_n${lastT}_$u"))
+    scoreChain(df, stages, heads(ColAlg, headIn, Array(wOut), Array(bOut)))
   }
 
   /** DuckDB mirror: chained CTEs, one per stage, same expressions. The
@@ -312,13 +330,10 @@ object LstmScorer {
 
   def sqlStacked(baseCte: String, baseName: String, steps: Seq[Seq[String]],
       weights: Seq[LstmWeights], finalSelect: String,
-      norms: Seq[LstmNorm] = Nil): String = {
-    val (stages, headIn) = stackedStages(SqlAlg, weights, steps, norms)
-    val head = linear(SqlAlg, headIn.map(SqlAlg.ref),
-      weights.last.wOut.toSeq, Some(weights.last.bOut))
-    sqlChain(baseCte, baseName, stages, Seq("prediction" -> head),
-      finalSelect)
-  }
+      norms: Seq[LstmNorm] = Nil): String =
+    sqlStackedMulti(baseCte, baseName, steps, weights,
+      Array(weights.last.wOut), Array(weights.last.bOut), finalSelect,
+      norms)
 
   /** DuckDB mirror of [[scoreStackedMulti]]. */
   def sqlStackedMulti(baseCte: String, baseName: String,
@@ -326,28 +341,8 @@ object LstmScorer {
       headW: Array[Array[Double]], headB: Array[Double],
       finalSelect: String, norms: Seq[LstmNorm] = Nil): String = {
     val (stages, headIn) = stackedStages(SqlAlg, weights, steps, norms)
-    val heads = headW.indices.map(o => s"prediction_$o" ->
-      linear(SqlAlg, headIn.map(SqlAlg.ref), headW(o).toSeq,
-        Some(headB(o))))
-    sqlChain(baseCte, baseName, stages, heads, finalSelect)
-  }
-
-  private def sqlChain(baseCte: String, baseName: String,
-      stages: Seq[Seq[(String, String)]],
-      heads: Seq[(String, String)], finalSelect: String): String = {
-    val sb = new StringBuilder(baseCte)
-    var prev = baseName
-    var si = 0
-    for (stage <- stages) {
-      val name = s"s$si"
-      val cols = stage.map { case (n, e) => s"$e AS $n" }.mkString(",\n    ")
-      sb.append(s",\n$name AS (\n  SELECT *,\n    $cols\n  FROM $prev)")
-      prev = name; si += 1
-    }
-    val hs = heads.map { case (n, e) => s"$e AS $n" }.mkString(",\n    ")
-    sb.append(s",\nfin AS (\n  SELECT *,\n    $hs FROM $prev)")
-    sb.append(s"\nSELECT $finalSelect FROM fin")
-    sb.toString
+    sqlChain(baseCte, baseName, "s", stages,
+      heads(SqlAlg, headIn.map(SqlAlg.ref), headW, headB), finalSelect)
   }
 }
 
@@ -752,11 +747,6 @@ object AttnScorer {
     }
   }
 
-  private def headExpr[E](alg: Alg[E], blocks: Seq[AttnWeights],
-      l: Int): E =
-    linear(alg, headInputs(alg, blocks, l), blocks.last.wOut.toSeq,
-      Some(blocks.last.bOut))
-
   /** Appends `prediction` = attention forward pass (named-stage unroll). */
   def score(df: DataFrame, steps: Seq[Seq[String]], w: AttnWeights)
       : DataFrame = scoreBlocks(df, steps, Seq(w))
@@ -766,33 +756,20 @@ object AttnScorer {
     * outputs; input projection/posEmb come from the FIRST block, the
     * final norm / pooling / head from the LAST. */
   def scoreBlocks(df: DataFrame, steps: Seq[Seq[String]],
-      blocks: Seq[AttnWeights]): DataFrame = {
-    checkBlocks(blocks)
-    var cur = df
-    for (stage <- stages(ColAlg, blocks, steps))
-      cur = cur.select(col("*") +: stage.map { case (n, e) => e.as(n) }: _*)
-    val out = cur.withColumn("prediction",
-      headExpr(ColAlg, blocks, steps.size))
-    out.drop(out.columns.filter(_.startsWith("__")): _*)
-  }
+      blocks: Seq[AttnWeights]): DataFrame =
+    scoreBlocksMulti(df, steps, blocks, Array(blocks.last.wOut),
+      Array(blocks.last.bOut))
 
-  /** Multi-output head (output_units > 1, base.py:46,
-    * transformer.py:236): every `prediction_{i}` reads the SAME staged
+  /** The general head (output_units, base.py:46, transformer.py:236):
+    * every `prediction` / `prediction_{i}` reads the SAME staged
     * forward pass — pooling/MLP-head computed once, each output one
     * map-side Dense row. The blocks' own wOut/bOut are unused. */
   def scoreBlocksMulti(df: DataFrame, steps: Seq[Seq[String]],
       blocks: Seq[AttnWeights], headW: Array[Array[Double]],
       headB: Array[Double]): DataFrame = {
     checkBlocks(blocks)
-    require(headW.length == headB.length, "head rows must match biases")
-    var cur = df
-    for (stage <- stages(ColAlg, blocks, steps))
-      cur = cur.select(col("*") +: stage.map { case (n, e) => e.as(n) }: _*)
-    val ins = headInputs(ColAlg, blocks, steps.size)
-    for (o <- headW.indices)
-      cur = cur.withColumn(s"prediction_$o",
-        linear(ColAlg, ins, headW(o).toSeq, Some(headB(o))))
-    cur.drop(cur.columns.filter(_.startsWith("__")): _*)
+    scoreChain(df, stages(ColAlg, blocks, steps),
+      heads(ColAlg, headInputs(ColAlg, blocks, steps.size), headW, headB))
   }
 
   private def checkBlocks(blocks: Seq[AttnWeights]): Unit = {
@@ -809,22 +786,9 @@ object AttnScorer {
     sqlBlocks(baseCte, baseName, steps, Seq(w), finalSelect)
 
   def sqlBlocks(baseCte: String, baseName: String, steps: Seq[Seq[String]],
-      blocks: Seq[AttnWeights], finalSelect: String): String = {
-    checkBlocks(blocks)
-    val sb = new StringBuilder(baseCte)
-    var prev = baseName
-    var si = 0
-    for (stage <- stages(SqlAlg, blocks, steps)) {
-      val name = s"a$si"
-      val cols = stage.map { case (n, e) => s"$e AS $n" }.mkString(",\n    ")
-      sb.append(s",\n$name AS (\n  SELECT *,\n    $cols\n  FROM $prev)")
-      prev = name; si += 1
-    }
-    val head = headExpr(SqlAlg, blocks, steps.size)
-    sb.append(s",\nfin AS (\n  SELECT *, $head AS prediction FROM $prev)")
-    sb.append(s"\nSELECT $finalSelect FROM fin")
-    sb.toString
-  }
+      blocks: Seq[AttnWeights], finalSelect: String): String =
+    sqlBlocksMulti(baseCte, baseName, steps, blocks,
+      Array(blocks.last.wOut), Array(blocks.last.bOut), finalSelect)
 
   /** DuckDB mirror of [[scoreBlocksMulti]]. */
   def sqlBlocksMulti(baseCte: String, baseName: String,
@@ -832,22 +796,9 @@ object AttnScorer {
       headW: Array[Array[Double]], headB: Array[Double],
       finalSelect: String): String = {
     checkBlocks(blocks)
-    val sb = new StringBuilder(baseCte)
-    var prev = baseName
-    var si = 0
-    for (stage <- stages(SqlAlg, blocks, steps)) {
-      val name = s"a$si"
-      val cols = stage.map { case (n, e) => s"$e AS $n" }.mkString(",\n    ")
-      sb.append(s",\n$name AS (\n  SELECT *,\n    $cols\n  FROM $prev)")
-      prev = name; si += 1
-    }
-    val ins = headInputs(SqlAlg, blocks, steps.size)
-    val hs = headW.indices.map(o =>
-      linear(SqlAlg, ins, headW(o).toSeq, Some(headB(o))) +
-        s" AS prediction_$o").mkString(",\n    ")
-    sb.append(s",\nfin AS (\n  SELECT *,\n    $hs FROM $prev)")
-    sb.append(s"\nSELECT $finalSelect FROM fin")
-    sb.toString
+    sqlChain(baseCte, baseName, "a", stages(SqlAlg, blocks, steps),
+      heads(SqlAlg, headInputs(SqlAlg, blocks, steps.size), headW, headB),
+      finalSelect)
   }
 }
 

@@ -466,8 +466,6 @@ class SoftNdfRegressor(
         Array.tabulate(nout)(j => p(o + nin * nout + j)))
     }
 
-  /** One full-data (or sampled) gradient of the MSE loss at `p`; exposed
-    * for the finite-difference spec. Returns (grad, meanLoss). */
   /** Fused per-row forward (+backward into `acc` when non-null, with
     * output delta = pred − y): returns the prediction. Shared by the MSE
     * gradient path and the rank-loss surrogate-injection path. */
@@ -647,8 +645,10 @@ class SoftNdfRegressor(
     * [[batchBnStats]]); consumed by the moving-average inference mode. */
   @transient private var lastBnStats: SoftForest.InputBn = _
 
-  /** `ep != 0` activates the stochastic regularizers with per-row
-    * per-epoch seeded draws (0 = deterministic, the spec mode). */
+  /** One full-data (or sampled) gradient of the MSE loss at `p`; exposed
+    * for the finite-difference spec. Returns (grad, meanLoss). `ep != 0`
+    * activates the stochastic regularizers with per-row per-epoch seeded
+    * draws (0 = deterministic, the spec mode). */
   def gradient(data: DataFrame, p: Array[Double], masks: Seq[Array[Int]],
       temp: Double, ep: Long = 0L): (Array[Double], Double) = {
     val trees = decode(p, masks)

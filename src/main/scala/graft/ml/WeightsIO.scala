@@ -132,6 +132,39 @@ object WeightsIO {
       s"section $name holds ${a.length} doubles, expected $expected " +
         "(architecture meta does not match the stored kernel)")
 
+  /** The target half of a flat-kernel estimator's payload, in the two
+    * layouts every `output_units` family writes: one target is `family`
+    * with `target`, `yMean` and `yStd` in meta; several are
+    * `family_multi` with a `targets` list in meta and per-output
+    * `yMeans`/`yStds` sections. */
+  def targetParts(family: String, targets: Seq[String],
+      yMean: Array[Double], yStd: Array[Double])
+      : (Map[String, String], Seq[(String, Array[Double])]) =
+    if (targets.size == 1)
+      (Map("family" -> family, "target" -> targets.head,
+        "yMean" -> yMean(0).toString, "yStd" -> yStd(0).toString), Nil)
+    else (Map("family" -> s"${family}_multi",
+      "targets" -> namesToMeta(targets)),
+      Seq("yMeans" -> yMean, "yStds" -> yStd))
+
+  /** Inverse of [[targetParts]]: (targets, yMean, yStd) from a payload
+    * of either layout; any other family is refused. */
+  def targetsFromParts(meta: Map[String, String],
+      sections: Map[String, Array[Double]], family: String, path: String)
+      : (Seq[String], Array[Double], Array[Double]) =
+    meta.get("family") match {
+      case Some(`family`) => (Seq(meta("target")),
+        Array(meta("yMean").toDouble), Array(meta("yStd").toDouble))
+      case Some(f) if f == s"${family}_multi" =>
+        val targets = namesFromMeta(meta("targets"))
+        requireLen("yMeans", sections("yMeans"), targets.size)
+        requireLen("yStds", sections("yStds"), targets.size)
+        (targets, sections("yMeans"), sections("yStds"))
+      case other => throw new IllegalArgumentException(
+        s"$path holds family ${other.getOrElse("<none>")}, expected " +
+          s"$family or ${family}_multi")
+    }
+
   // ---- MLP family codecs (row-major flattening) ----
 
   def packMlp(w: MLPWeights): Seq[(String, Array[Double])] = Seq(

@@ -23,9 +23,10 @@ case class ModelStage(model: ModelEstimator) extends GraftTransformer {
   * featureCols reference chain outputs), and return the FITTED pipeline
   * — stages + [[ModelStage]] — ready to `transform` new data or
   * persist as one artifact (PipelineIO). `fitHead` is the family
-  * constructor + fit (e.g. `d => new DeepMLPRegressor(feats, y).fit(d)`)
-  * — type-level fit/predict stay with the family, composition lives
-  * here. */
+  * constructor + fit (e.g. `d => new DeepMLPRegressor(feats, y).fit(d)`,
+  * or `new DeepMLPRegressor(feats, y, extraTargetCols = Seq(y2))` for
+  * the reference's `output_units = 2`) — type-level fit/predict stay
+  * with the family, composition lives here. */
 object FitPipeline {
   def fit(stages: Seq[GraftTransformer], train: DataFrame,
       fitHead: DataFrame => ModelEstimator): Pipeline =

@@ -430,8 +430,9 @@ class AttnFitSpec extends AnyFunSuite {
         0.5 * series(i - 1) - 0.8 * series(i - 2))
     }
     val df = rows.toDF("id", "lag4", "lag3", "lag2", "lag1", "y0", "y1")
-    val m = new AttnMultiTrainer(Seq("lag4", "lag3", "lag2", "lag1"),
-      seqLen = 4, targetCols = Seq("y0", "y1"), dModel = 6, ffDim = 12,
+    val m = new AttnTrainer(Seq("lag4", "lag3", "lag2", "lag1"),
+      seqLen = 4, targetCol = "y0", extraTargetCols = Seq("y1"),
+      dModel = 6, ffDim = 12,
       lr = 0.02, epochs = 200)
     val pred = m.fit(df).predict(df)
     assert(pred.columns.contains("prediction_0") &&

@@ -126,7 +126,8 @@ class DeepMlpSpec extends AnyFunSuite {
         math.tanh(2.0 * f0) - f1 + 0.05 * r.nextGaussian())
     }
     val df = rows.toDF("id", "f0", "f1", "y0", "y1")
-    val m = new DeepMLPMultiRegressor(Seq("f0", "f1"), Seq("y0", "y1"),
+    val m = new DeepMLPRegressor(Seq("f0", "f1"), "y0",
+      extraTargetCols = Seq("y1"),
       layers = Seq(8, 8), lr = 0.01, epochs = 400)
     val pred = m.fit(df).predict(df)
     assert(pred.columns.contains("prediction_0") &&

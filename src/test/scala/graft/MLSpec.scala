@@ -532,7 +532,7 @@ class MLSpec extends AnyFunSuite {
 
   test("lstm multi-output joint fit learns two targets over one shared " +
     "trunk to R^2 > 0.8 each, with the prediction_{i} naming contract") {
-    import graft.ml.{LSTMMultiTrainer, Metrics}
+    import graft.ml.{LSTMTrainer, Metrics}
     val r = new scala.util.Random(4)
     val series = new Array[Double](620)
     for (i <- 2 until series.length)
@@ -544,8 +544,9 @@ class MLSpec extends AnyFunSuite {
         0.5 * series(i - 1) - 0.8 * series(i - 2))    // y1: linear lags
     }
     val df = rows.toDF("id", "lag4", "lag3", "lag2", "lag1", "y0", "y1")
-    val m = new LSTMMultiTrainer(Seq("lag4", "lag3", "lag2", "lag1"),
-      seqLen = 4, targetCols = Seq("y0", "y1"), hidden = 6, lr = 0.02,
+    val m = new LSTMTrainer(Seq("lag4", "lag3", "lag2", "lag1"),
+      seqLen = 4, targetCol = "y0", extraTargetCols = Seq("y1"),
+      hidden = 6, lr = 0.02,
       epochs = 150)
     val pred = m.fit(df).predict(df)
     assert(pred.columns.contains("prediction_0") &&

@@ -199,45 +199,47 @@ class ModelPersistenceSpec extends AnyFunSuite {
     m.save(p)
     assertBitEqual(m.predict(tabFrame),
       DeepMLPRegressor.load(p).predict(tabFrame), Seq("prediction"))
-    intercept[IllegalArgumentException] { DeepMLPMultiRegressor.load(p) }
+    intercept[IllegalArgumentException] { LSTMTrainer.load(p) }
   }
 
   test("deep mlp multi: save -> load preserves every head") {
-    val m = new DeepMLPMultiRegressor(Seq("f0", "f1", "f2"),
-      Seq("y", "y2"), layers = Seq(4), lr = 0.02, epochs = 10)
+    val m = new DeepMLPRegressor(Seq("f0", "f1", "f2"),
+      "y", extraTargetCols = Seq("y2"), layers = Seq(4), lr = 0.02,
+      epochs = 10)
       .fit(tabFrame)
     val p = tmp("deep_mlp_multi.json")
     m.save(p)
     assertBitEqual(m.predict(tabFrame),
-      DeepMLPMultiRegressor.load(p).predict(tabFrame),
+      DeepMLPRegressor.load(p).predict(tabFrame),
       Seq("prediction_0", "prediction_1"))
   }
 
   test("lstm multi: stacked 2-head save -> load is bit-identical") {
     val multiFrame = seqFrame.withColumn("y2",
       col("y") * lit(0.5) + col("lag1"))
-    val m = new LSTMMultiTrainer(lags, seqLen = 2,
-      targetCols = Seq("y", "y2"), layers = Seq(3, 2), lr = 0.02,
+    val m = new LSTMTrainer(lags, seqLen = 2,
+      targetCol = "y", extraTargetCols = Seq("y2"), layers = Seq(3, 2),
+      lr = 0.02,
       epochs = 6).fit(multiFrame)
     val p = tmp("lstm_multi.json")
     m.save(p)
     assertBitEqual(m.predict(multiFrame),
-      LSTMMultiTrainer.load(p).predict(multiFrame),
+      LSTMTrainer.load(p).predict(multiFrame),
       Seq("prediction_0", "prediction_1"))
-    intercept[IllegalArgumentException] { LSTMTrainer.load(p) }
+    intercept[IllegalArgumentException] { AttnTrainer.load(p) }
   }
 
   test("attn multi: full-kernel 2-head save -> load is bit-identical") {
     val multiFrame = seqFrame.withColumn("y2",
       col("y") * lit(0.5) + col("lag1"))
-    val m = new AttnMultiTrainer(lags, seqLen = 4,
-      targetCols = Seq("y", "y2"), dModel = 4, ffDim = 8,
+    val m = new AttnTrainer(lags, seqLen = 4,
+      targetCol = "y", extraTargetCols = Seq("y2"), dModel = 4, ffDim = 8,
       preNorm = true, numHeads = 2, attnPool = true, lr = 0.02,
       epochs = 5).fit(multiFrame)
     val p = tmp("attn_multi.json")
     m.save(p)
     assertBitEqual(m.predict(multiFrame),
-      AttnMultiTrainer.load(p).predict(multiFrame),
+      AttnTrainer.load(p).predict(multiFrame),
       Seq("prediction_0", "prediction_1"))
   }
 

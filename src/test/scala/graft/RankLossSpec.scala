@@ -274,8 +274,9 @@ class RankLossSpec extends AnyFunSuite {
     val df = rows.toDF("id", "lag4", "lag3", "lag2", "lag1", "y0", "y1")
       .repartition(1)
     def attnW(loss: String) =
-      new AttnMultiTrainer(Seq("lag4", "lag3", "lag2", "lag1"),
-        seqLen = 4, targetCols = Seq("y0", "y1"), dModel = 4, ffDim = 6,
+      new AttnTrainer(Seq("lag4", "lag3", "lag2", "lag1"),
+        seqLen = 4, targetCol = "y0", extraTargetCols = Seq("y1"),
+        dModel = 4, ffDim = 6,
         lr = 0.02, epochs = 5, loss = loss, mseWeight = 1.0,
         spearmanWeight = 0.0, rankBatch = 64).fit(df).fittedHead
     val (hwM, hbM) = attnW("mse"); val (hwC, hbC) = attnW("combined")
@@ -286,8 +287,9 @@ class RankLossSpec extends AnyFunSuite {
       assert(math.abs(a - b) < 1e-6, s"attn multi bias diverged: $a vs $b")
     }
     def deepW(loss: String) =
-      new DeepMLPMultiRegressor(Seq("lag4", "lag3", "lag2", "lag1"),
-        Seq("y0", "y1"), layers = Seq(4), lr = 0.02, epochs = 10,
+      new DeepMLPRegressor(Seq("lag4", "lag3", "lag2", "lag1"),
+        "y0", extraTargetCols = Seq("y1"), layers = Seq(4), lr = 0.02,
+        epochs = 10,
         loss = loss, mseWeight = 1.0, spearmanWeight = 0.0,
         rankBatch = 64).fit(df).fittedFlat
     (deepW("mse") zip deepW("combined")).foreach { case (a, b) =>

@@ -260,4 +260,23 @@ class ErrorContractSpec extends AnyFunSuite {
       graft.operators.SequenceReshape.toSequenceTensor(Seq("a", "b", "c"), 2)
     }
   }
+
+  test("a repeated target name is refused when the trainer is built") {
+    // the fit frame would carry two same-named target columns; Spark
+    // only rejects the reference once the frame is cached, and without
+    // target scaling nothing rejects it at all
+    val lags = Seq("lag2", "lag1")
+    for (make <- Seq[() => Any](
+        () => new graft.ml.DeepMLPRegressor(Seq("f0"), "y",
+          extraTargetCols = Seq("y")),
+        () => new graft.ml.DeepMLPRegressor(Seq("f0"), "y",
+          extraTargetCols = Seq("y2", "y2"), scaleTarget = false),
+        () => new graft.ml.LSTMTrainer(lags, 2, "y",
+          extraTargetCols = Seq("y")),
+        () => new graft.ml.AttnTrainer(lags, 2, "y",
+          extraTargetCols = Seq("y2", "y")))) {
+      val e = intercept[IllegalArgumentException](make())
+      assert(e.getMessage.contains("target columns repeat a name"))
+    }
+  }
 }

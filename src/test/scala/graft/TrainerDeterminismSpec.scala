@@ -75,8 +75,9 @@ class TrainerDeterminismSpec extends AnyFunSuite {
       repeats(() => parts(new DeepMLPRegressor(feats, "y",
         layers = Seq(4, 3), lr = 0.01, epochs = 3, batchFraction = 1.0,
         loss = loss, rankBatch = 8, dropoutRate = 0.1).fit(df)))
-      repeats(() => parts(new DeepMLPMultiRegressor(feats, Seq("y", "y2"),
-        layers = Seq(4, 3), lr = 0.01, epochs = 3, batchFraction = 1.0,
+      repeats(() => parts(new DeepMLPRegressor(feats, "y",
+        extraTargetCols = Seq("y2"), layers = Seq(4, 3), lr = 0.01,
+        epochs = 3, batchFraction = 1.0,
         dropoutRate = 0.1, loss = loss, rankBatch = 8).fit(df)))
     }
   }
@@ -98,6 +99,19 @@ class TrainerDeterminismSpec extends AnyFunSuite {
     }
     repeats(() => parts(new AttnTrainer(lags, 3, "ys", dModel = 4,
       ffDim = 8, epochs = 3, batchFraction = 1.0).fit(df)))
+  }
+
+  test("multi-output sequence trainers: lstm and attention, mse and " +
+    "rank paths, repeat bit for bit at local[4]") {
+    for (loss <- Seq("mse", "combined")) {
+      repeats(() => parts(new LSTMTrainer(lags, 3, "ys",
+        extraTargetCols = Seq("y2"), hidden = 3, epochs = 3,
+        batchFraction = 1.0, loss = loss, rankBatch = 8,
+        dropout = 0.1).fit(df)))
+      repeats(() => parts(new AttnTrainer(lags, 3, "ys",
+        extraTargetCols = Seq("y2"), dModel = 4, ffDim = 8, epochs = 3,
+        batchFraction = 1.0, loss = loss, rankBatch = 8).fit(df)))
+    }
   }
 
   test("autoencoders: joint (mse and rank), deep, bn and deep-bn repeat " +
