@@ -251,14 +251,21 @@ object QueriesML {
 
   /** Pinned nonlinear joint autoencoder (4 feats → swish(2) → latent 2
     * → swish(2) → recon 4 → swish(2) → prediction) for the trained-path
-    * scoring query (autoencoder.py:25-85 architecture). */
-  val pinnedAe: JointAeWeights = JointAeWeights(
-    we = frac(4, 2, 51, 13), be = fracV(2, 51, 7),
-    wz = frac(2, 2, 52, 13), bz = fracV(2, 52, 7),
-    wd = frac(2, 2, 53, 13), bd = fracV(2, 53, 7),
-    wr = frac(2, 4, 54, 13), br = fracV(4, 54, 7),
-    wh = frac(4, 2, 55, 13), bh = fracV(2, 55, 7),
-    wp = fracV(2, 56, 9), bp = 1.0 / 7)
+    * scoring query (autoencoder.py:25-85 architecture): the chain at one
+    * encoder and one head stage. */
+  val aeCfg: DeepAeKernel.Cfg =
+    DeepAeKernel.Cfg(k = 4, enc = Seq(2), latent = 2, head = Seq(2))
+  /** Encoder, latent, decoder, recon and head-hidden stages, each
+    * row-major [in][out] weights then the bias. */
+  private val aeTrunk: Array[Double] = Seq(
+    (frac(4, 2, 51, 13), fracV(2, 51, 7)),
+    (frac(2, 2, 52, 13), fracV(2, 52, 7)),
+    (frac(2, 2, 53, 13), fracV(2, 53, 7)),
+    (frac(2, 4, 54, 13), fracV(4, 54, 7)),
+    (frac(4, 2, 55, 13), fracV(2, 55, 7))).flatMap { case (w, b) =>
+      w.flatten.toSeq ++ b
+    }.toArray
+  val pinnedAe: Array[Double] = aeTrunk ++ fracV(2, 56, 9) :+ 1.0 / 7
 
   /** Pinned standardization for the autoencoder query's features. */
   private val aeFeatStats = Seq((25.5, 14.0), (38000.0, 22000.0),
@@ -266,13 +273,16 @@ object QueriesML {
 
   /** The pinned AE with a 2-output target head (Dense(output_units)
     * target_prediction, autoencoder.py:67-69): output 0 keeps the
-    * single head row, output 1 its own row over the SAME staged chain. */
-  val pinnedAeMulti: JointAeWeights = pinnedAe.copy(
-    wpM = Array(pinnedAe.wp, Array(-3.0 / 11, 5.0 / 13)),
-    bpM = Array(pinnedAe.bp, -2.0 / 9))
+    * single head column, output 1 its own column over the SAME staged
+    * chain (head matrix [hidden][out], then the two biases). */
+  val aeMultiCfg: DeepAeKernel.Cfg = aeCfg.copy(out = 2)
+  val pinnedAeMulti: Array[Double] = aeTrunk ++
+    fracV(2, 56, 9).zip(Seq(-3.0 / 11, 5.0 / 13)).flatMap { case (a, b) =>
+      Seq(a, b)
+    } ++ Seq(1.0 / 7, -2.0 / 9)
 
   /** Pinned inference affines of the BatchNorm autoencoder
-    * ([[graft.ml.BnJointAutoencoder]] population-statistics fold,
+    * ([[graft.ml.DeepBnAutoencoder]] population-statistics fold,
     * autoencoder.py:30,35,41,52,63): the input site absorbs the raw
     * feature scales (gamma/sqrt(var+eps) ≈ 1/sd with a learned gamma
     * near 1), sites 1..4 sit between each Dense pre-activation and its
@@ -479,7 +489,7 @@ object QueriesML {
       val feats = bnFeats.zip(aeFeatStats).map { case (c, (m, sd)) =>
         (col(c).cast("double") - lit(m)) / lit(sd)
       }
-      JointAe.stageTo(li(s, dir), feats, pinnedAe, upTo = "pred")
+      DeepAeKernel.score(li(s, dir), feats, pinnedAe, aeCfg)
         .select(col("l_orderkey"), col("l_linenumber"),
           round(col("latent_0"), 6).as("latent_0"),
           round(col("latent_1"), 6).as("latent_1"),
@@ -488,7 +498,7 @@ object QueriesML {
           round(col("prediction"), 6).as("prediction"))
     }),
 
-    // BatchNorm AE scoring (BnJointAutoencoder inference): the five BN
+    // BatchNorm AE scoring (DeepBnAutoencoder inference): the five BN
     // sites folded to per-unit population affines — the input site on
     // the RAW features, sites 1..4 between each Dense and its swish —
     // over the SAME staged projection chain as q_ae_score
@@ -496,7 +506,7 @@ object QueriesML {
       val feats = bnFeats.zip(aeBnAff0._1.zip(aeBnAff0._2)).map {
         case (c, (sc, sh)) => col(c).cast("double") * lit(sc) + lit(sh)
       }
-      JointAe.stageTo(li(s, dir), feats, pinnedAe, upTo = "pred", aeBnAff)
+      DeepAeKernel.score(li(s, dir), feats, pinnedAe, aeCfg, aeBnAff)
         .select(col("l_orderkey"), col("l_linenumber"),
           round(col("latent_0"), 6).as("latent_0"),
           round(col("latent_1"), 6).as("latent_1"),
@@ -534,12 +544,12 @@ object QueriesML {
     }),
 
     // multi-output AE target head: encoder/decoder/head-hidden staged
-    // ONCE, each prediction_i one Dense row over the shared __h columns
+    // ONCE, each prediction_i one Dense column over the shared head units
     "q_ae_multi" -> ((s, dir) => {
       val feats = bnFeats.zip(aeFeatStats).map { case (c, (m, sd)) =>
         (col(c).cast("double") - lit(m)) / lit(sd)
       }
-      JointAe.stageMulti(li(s, dir), feats, pinnedAeMulti)
+      DeepAeKernel.score(li(s, dir), feats, pinnedAeMulti, aeMultiCfg)
         .select(col("l_orderkey"), col("l_linenumber"),
           round(col("latent_0"), 6).as("latent_0"),
           round(col("prediction_0"), 6).as("prediction_0"),
@@ -1334,8 +1344,8 @@ object QueriesML {
       val fx = bnFeats.zip(aeFeatStats).map { case (c, (m, sd)) =>
         s"((CAST($c AS DOUBLE) - $m) / $sd)"
       }
-      JointAe.sql("WITH base AS (SELECT * FROM lineitem)", "base", fx,
-        pinnedAe, "l_orderkey, l_linenumber",
+      DeepAeKernel.sql("WITH base AS (SELECT * FROM lineitem)", "base", fx,
+        pinnedAe, aeCfg, "l_orderkey, l_linenumber",
         """l_orderkey, l_linenumber,
           |  round(latent_0, 6) AS latent_0, round(latent_1, 6) AS latent_1,
           |  round(recon_0, 6) AS recon_0, round(recon_3, 6) AS recon_3,
@@ -1345,8 +1355,8 @@ object QueriesML {
       val fx = bnFeats.zip(aeBnAff0._1.zip(aeBnAff0._2)).map {
         case (c, (sc, sh)) => s"(CAST($c AS DOUBLE) * $sc + $sh)"
       }
-      JointAe.sql("WITH base AS (SELECT * FROM lineitem)", "base", fx,
-        pinnedAe, "l_orderkey, l_linenumber",
+      DeepAeKernel.sql("WITH base AS (SELECT * FROM lineitem)", "base", fx,
+        pinnedAe, aeCfg, "l_orderkey, l_linenumber",
         """l_orderkey, l_linenumber,
           |  round(latent_0, 6) AS latent_0, round(latent_1, 6) AS latent_1,
           |  round(recon_0, 6) AS recon_0, round(recon_3, 6) AS recon_3,
@@ -1357,8 +1367,8 @@ object QueriesML {
       val fx = bnFeats.zip(aeFeatStats).map { case (c, (m, sd)) =>
         s"((CAST($c AS DOUBLE) - $m) / $sd)"
       }
-      JointAe.sqlMulti("WITH base AS (SELECT * FROM lineitem)", "base", fx,
-        pinnedAeMulti, "l_orderkey, l_linenumber",
+      DeepAeKernel.sql("WITH base AS (SELECT * FROM lineitem)", "base", fx,
+        pinnedAeMulti, aeMultiCfg, "l_orderkey, l_linenumber",
         """l_orderkey, l_linenumber,
           |  round(latent_0, 6) AS latent_0,
           |  round(prediction_0, 6) AS prediction_0,

@@ -3,26 +3,27 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Depth-general joint autoencoder — the reference's ACTUAL list-shaped
-  * architecture (autoencoder.py:15-69): `encoder_units` is a LIST of
-  * (units, dropout) stages, the decoder mirrors it REVERSED, and
-  * `ae_units` is a list of head stages between the reconstruction and
-  * the Dense(output_units) target head. [[JointAutoencoder]] remains
-  * the single-stage fast path (the reference default is one stage per
-  * list); this kernel generalizes depth exactly the way
-  * [[DeepMLPRegressor]] generalizes [[MLPRegressor]]'s hidden layer.
+/** The joint autoencoder — the reference's `BottleneckEncoder`
+  * (autoencoder.py:15-69) with its list-shaped architecture:
+  * `encoder_units` is a LIST of (units, dropout) stages, the decoder
+  * mirrors it REVERSED, and `ae_units` is a list of head stages between
+  * the reconstruction and the Dense(output_units) target head. The
+  * reference default is one stage per list (`encoder_units=[h]`,
+  * `ae_units=[h']`); that is this kernel at one encoder and one head
+  * stage.
   *
   * The whole network is one CHAIN with a loss tap: standardized input →
   * swish encoder stages → swish latent → swish decoder stages → LINEAR
   * reconstruction (tap: rw·mean over features of (r−xTgt)²) → swish
   * head stages → LINEAR Dense(out) target head (tw·mean over outputs).
-  * Backward runs the chain in reverse, ADDING the reconstruction-loss
-  * gradient at the tap. Per-layer BatchNorm is the documented
-  * standardization-in-lieu-of-BatchNorm deviation (see JointAe).
+  * Backward runs the chain in reverse; the reconstruction-loss gradient
+  * starts the sum that arrives at the tap. Input standardization stands
+  * in for the reference's BatchNorm layers here; [[DeepBnKernel]] trains
+  * the BatchNorm chain itself.
   */
 object DeepAeKernel {
 
-  import Activations.{sigmoid, swish, swishD}
+  import Activations.{swish, swishCol, swishD, swishSql}
 
   /** One chained Dense stage: `act` = swish (false = linear);
     * `drop` = training-time dropout rate AFTER the activation
@@ -73,7 +74,8 @@ object DeepAeKernel {
 
   /** Forward (+ backward into `acc` when non-null). Returns the joint
     * loss; `actsOut`, when non-null, receives every stage's POST-drop
-    * activation (index s+1; index 0 = the input) for scoring checks.
+    * activation (index s+1; index 0 = the input; the predictions at
+    * index `c.stages.size`).
     * `maskSeed != 0` samples the per-stage inverted-Bernoulli dropout
     * masks in stage order from one seeded stream. */
   def run(w: Array[Double], c: Cfg, x: Array[Double],
@@ -136,10 +138,13 @@ object DeepAeKernel {
         acc(off + st.nIn * st.nOut + j) += dz(j)
         j += 1
       }
+      // arriving AT the tap's output: the reconstruction gradient
+      // starts the sum over the stage's outputs
+      val atTap = s - 1 == c.tapStage
       val dIn = new Array[Double](st.nIn)
       var i = 0
       while (i < st.nIn) {
-        var g = 0.0
+        var g = if (atTap) 2.0 * rw / c.k * (r(i) - xTgt(i)) else 0.0
         j = 0
         while (j < st.nOut) {
           acc(off + i * st.nOut + j) += in(i) * dz(j)
@@ -150,30 +155,32 @@ object DeepAeKernel {
         i += 1
       }
       dOut = dIn
-      if (s - 1 == c.tapStage) {
-        // arriving AT the tap's output: add the reconstruction gradient
-        for (f <- 0 until c.k)
-          dOut(f) += 2.0 * rw / c.k * (r(f) - xTgt(f))
-      }
       s -= 1
     }
     loss
   }
 
-  /** Glorot-uniform init per stage matrix, zero biases. */
+  /** Glorot-uniform init per stage matrix, zero biases. At one encoder
+    * and one head stage (the reference default) every bias slot also
+    * draws one value, scaled to zero, after its stage's matrix: the
+    * random stream the single-stage trainers always used, so their
+    * seeded fits keep their weights. Deeper chains draw the matrices
+    * only, as they always did. */
   def init(c: Cfg, seed: Long): Array[Double] = {
     val rng = new scala.util.Random(seed)
     val w = new Array[Double](c.size)
-    for (s <- c.stages.indices)
-      Activations.glorot(w, c.stageOff(s), c.stages(s).nIn,
-        c.stages(s).nOut, rng)
+    val biasDraws = c.enc.size == 1 && c.head.size == 1
+    for (s <- c.stages.indices) {
+      val st = c.stages(s)
+      val off = c.stageOff(s)
+      Activations.glorot(w, off, st.nIn, st.nOut, rng)
+      if (biasDraws) for (j <- 0 until st.nOut)
+        w(off + st.nIn * st.nOut + j) = (rng.nextDouble() * 2 - 1) * 0.0
+    }
     w
   }
 
-  // ---- distributed scoring (staged columns; JointAe's Alg style) ----
-
-  private def swishCol(z: Column): Column =
-    z * (lit(1.0) / (lit(1.0) + exp(-z)))
+  // ---- distributed scoring: each stage one named projection ----
 
   private def dense(in: Seq[Column], w: Array[Double], off: Int,
       nIn: Int, nOut: Int, j: Int): Column =
@@ -186,9 +193,6 @@ object DeepAeKernel {
     in.zipWithIndex.map { case (c0, i) =>
       s"$c0 * ${w(off + i * nOut + j)}"
     }.mkString(" + ") + s" + ${w(off + nIn * nOut + j)}"
-
-  private def swishSql(z: String): String =
-    s"($z) * (1.0 / (1.0 + exp(-($z))))"
 
   /** Names each stage's columns: latent stage → `latent_{i}`, tap →
     * `recon_{i}`, final → `prediction_{i}` (or `prediction`), others →
@@ -204,17 +208,20 @@ object DeepAeKernel {
     * BatchNorm chain, [[DeepBnAutoencoder]]) — valid when stages(s).act. */
   def actIdx(c: Cfg, s: Int): Int = c.stages.take(s).count(_.act)
 
-  /** Stage the whole chain onto `df` (dropout is inference-identity):
-    * appends latent_{i}, recon_{i}, prediction(_{i}); drops internals.
-    * `aff` (nullable) carries the BatchNorm chain's inference affines,
-    * one (scale, shift) pair per ACT stage in stage order, applied
-    * between each Dense pre-activation and its swish (the input-site
-    * affine is pre-applied by the caller into `feats`). */
+  /** Stage the chain onto `df` (dropout is inference-identity) through
+    * its first `upTo` stages: the whole chain appends latent_{i},
+    * recon_{i}, prediction(_{i}); `c.latentStage + 1` stops at the
+    * latent, `c.tapStage + 1` at the reconstruction. Internals are
+    * dropped. `aff` (nullable) carries the BatchNorm chain's inference
+    * affines, one (scale, shift) pair per ACT stage in stage order,
+    * applied between each Dense pre-activation and its swish (the
+    * input-site affine is pre-applied by the caller into `feats`). */
   def score(df: DataFrame, feats: Seq[Column], w: Array[Double],
-      c: Cfg, aff: Seq[(Array[Double], Array[Double])] = null): DataFrame = {
+      c: Cfg, aff: Seq[(Array[Double], Array[Double])] = null,
+      upTo: Int = -1): DataFrame = {
     var cur = df
     var in: Seq[Column] = feats
-    for (s <- c.stages.indices) {
+    for (s <- 0 until (if (upTo < 0) c.stages.size else upTo)) {
       val st = c.stages(s)
       val off = c.stageOff(s)
       val cols = (0 until st.nOut).map { j =>
@@ -262,13 +269,32 @@ object DeepAeKernel {
   }
 }
 
-/** Depth-general joint-AE trainer — the reference's list-shaped
-  * `encoder_units` / `ae_units` config (autoencoder.py:15-19) with the
-  * decoder mirrored reversed, per-stage dropout rates riding the same
-  * tuples, the GaussianNoise denoising corruption, and the
-  * Dense(output_units) multi-target head. [[JointAutoencoder]] stays
-  * the single-stage fast path (and carries the rank losses); this
-  * trainer is mse-only, the same boundary as the other deep variants.
+/** Joint-loss autoencoder trainer (autoencoder.py:15-135 end-to-end):
+  * the reference's list-shaped `encoder_units` / `ae_units` config
+  * (autoencoder.py:15-19) with the decoder mirrored reversed, per-stage
+  * dropout rates riding the same tuples (`encoderDropout`,
+  * `latentDropout`, `headDropout`; the decoder reuses the encoder
+  * rates), the GaussianNoise denoising corruption (`gaussianNoise`), and
+  * the Dense(output_units) multi-target head. Adam on the driver over
+  * [[PartitionSum]] flat gradients; `batchFraction` gives the seeded
+  * minibatch path. The reference's default network is
+  * `encoderUnits = Seq(h)`, `headUnits = Seq(h')`. Dropout defaults off
+  * to keep fits deterministic; opt in for the reference-default
+  * regularization (0.1/0.1/0.4, autoencoder.py:16-22).
+  *
+  * The target head trains against `targetLoss` = `mse` | `spearman` |
+  * `combined` — the reference compiles loss={"reconstruction": "mse",
+  * "target_prediction": loss_function} (autoencoder.py:79) — with the
+  * rank losses' exact multi-output semantics: (batch, out) flattens to
+  * one ranked vector (losses.py:67-69).
+  *
+  * Standardization mode: this trainer replaces the reference's BN
+  * layers with input standardization, so the reconstruction head trains
+  * against the STANDARDIZED features — relative to the raw-space MSE,
+  * each feature's error is reweighted by 1/σ_f² (features equalized
+  * rather than dollar-scaled); fitted surfaces are destandardized on
+  * output. For the reference's BatchNorm architecture and its raw-space
+  * reconstruction objective use [[DeepBnAutoencoder]].
   */
 class DeepJointAutoencoder(
     val featureCols: Seq[String],
@@ -287,12 +313,21 @@ class DeepJointAutoencoder(
     val epochs: Int = 150,
     val seed: Long = 42L,
     val batchFraction: Double = 0.2,
-    val optimizer: String = "adam") extends ModelEstimator {
+    val optimizer: String = "adam",
+    val targetLoss: String = "mse",
+    val mseWeight: Double = 2.0,
+    val spearmanWeight: Double = 1.0,
+    val rankTau: Double = 1e-3,
+    val rankBatch: Int = 64) extends ModelEstimator {
 
   require(batchFraction > 0 && batchFraction <= 1.0,
     s"batchFraction must be in (0, 1], got $batchFraction")
+  require(Set("mse", "spearman", "combined")(targetLoss),
+    s"targetLoss must be mse|spearman|combined, got $targetLoss")
 
   val targetCols: Seq[String] = targetCol +: extraTargetCols
+  require(targetCols.distinct.size == targetCols.size,
+    s"target columns repeat a name: ${targetCols.mkString(", ")}")
   private val nOut = targetCols.size
   private val k = featureCols.size
   private val cfg = DeepAeKernel.Cfg(k, encoderUnits, latentDim,
@@ -316,7 +351,8 @@ class DeepJointAutoencoder(
   def targetStds: Array[Double] = yStds
 
   /** Mean joint loss + flat gradient (exposed for the finite-difference
-    * spec; data layout = targets..., clean features..., [corrupted]). */
+    * spec; data layout = targets..., clean features..., [corrupted]).
+    * `ep` seeds the per-row dropout masks (0 = dropout off). */
   def gradient(data: DataFrame, p: Array[Double], ep: Long = 0L)
       : (Array[Double], Double) = {
     val (kk, nO, n, c) = (k, nOut, sz, cfg)
@@ -326,13 +362,82 @@ class DeepJointAutoencoder(
     val sums = PartitionSum.sum(data.rdd, n + 2) { (part, it, acc) =>
       it.foreach { row =>
         val ys = Array.tabulate(nO)(o => row.getDouble(o))
-        val xTgt = Array.tabulate(kk)(i => row.getDouble(i + nO))
-        val xIn = if (row.size > kk + nO)
-          Array.tabulate(kk)(i => row.getDouble(kk + i + nO)) else xTgt
+        val (xIn, xTgt) = DeepJointAutoencoder.rowInputs(row, kk, nO)
         val ms = if (!useDrop) 0L
           else SeqAdam.maskSeed(seed0, ep, part, acc(n + 1).toLong)
         val loss = DeepAeKernel.run(p, c, xIn, xTgt, ys, rw, tw, acc, ms)
         acc(n) += loss; acc(n + 1) += 1.0
+      }
+    }
+    PartitionSum.mean(sums, n)
+  }
+
+  /** Batched epoch gradient when the TARGET head trains against a rank
+    * loss: per in-partition batch of b rows, batch loss =
+    * rw·mean(recon) + tw·L_rank(preds, ys). The kernel's target
+    * backward is linear in (p−y′), 2·tw/nOut·(p−y′), so the flattened
+    * rank gradient dLt injects via y′_o = p_o − nOut·dLt_o/2 while the
+    * recon term is scaled rw/b per row; slot sz+1 counts batches. The
+    * reported loss is the FULL joint objective — each row's
+    * reconstruction term (the kernel return minus the injected
+    * surrogate-target term) plus tw·L_rank — consistent with
+    * [[gradient]]. A leftover single-row batch contributes through the
+    * same path (combinedGrad degenerates to the pure MSE gradient at
+    * b = 1; skipped only for the pure single-output spearman loss,
+    * which is undefined on one element). */
+  def rankGradient(data: DataFrame, p: Array[Double], ep: Long = 0L)
+      : (Array[Double], Double) = {
+    val (kk, nO, n, c) = (k, nOut, sz, cfg)
+    val (rw, tw) = (reconWeight, targetWeight)
+    val (mw, sw) = if (targetLoss == "spearman") (0.0, 1.0)
+      else (mseWeight, spearmanWeight)
+    val (tau, rb) = (rankTau, rankBatch)
+    val useDrop = dropActive && ep != 0L
+    val seed0 = seed
+    val sums = PartitionSum.sum(data.rdd, n + 2) { (part, it, acc) =>
+      var idx = 0L
+      val acts = new Array[Array[Double]](c.stages.size + 1)
+      SeqAdam.shuffledBatches(it, rb, seed0, ep, part).foreach { batch =>
+        val b = batch.size
+        if (b >= 2 || mw != 0.0 || nO >= 2) {
+          val ins = new Array[(Array[Double], Array[Double])](b)
+          val seeds = new Array[Long](b)
+          val flatP = new Array[Double](b * nO)
+          val flatY = new Array[Double](b * nO)
+          var i = 0
+          batch.foreach { row =>
+            ins(i) = DeepJointAutoencoder.rowInputs(row, kk, nO)
+            seeds(i) = if (!useDrop) 0L
+              else SeqAdam.maskSeed(seed0, ep, part, idx)
+            idx += 1
+            DeepAeKernel.run(p, c, ins(i)._1, ins(i)._2,
+              new Array[Double](nO), rw, tw, null, seeds(i), acts)
+            for (o <- 0 until nO) {
+              flatP(i * nO + o) = acts(c.stages.size)(o)
+              flatY(i * nO + o) = row.getDouble(o)
+            }
+            i += 1
+          }
+          val (dLt, tLoss) =
+            RankLoss.combinedGrad(flatP, flatY, tau, mw, sw)
+          i = 0
+          while (i < b) {
+            val sur = Array.tabulate(nO)(o =>
+              flatP(i * nO + o) - nO * dLt(i * nO + o) / 2.0)
+            val lv = DeepAeKernel.run(p, c, ins(i)._1, ins(i)._2, sur,
+              rw / b, tw, acc, seeds(i))
+            // strip the injected surrogate term, keep the recon term
+            var surTerm = 0.0
+            for (o <- 0 until nO) {
+              val d = nO * dLt(i * nO + o) / 2.0
+              surTerm += d * d
+            }
+            acc(n) += lv - tw * surTerm / nO
+            i += 1
+          }
+          acc(n) += tw * tLoss
+          acc(n + 1) += 1.0
+        }
       }
     }
     PartitionSum.mean(sums, n)
@@ -366,8 +471,9 @@ class DeepJointAutoencoder(
     for (t <- 1 to epochs) {
       val batch = if (batchFraction >= 1.0) std
         else std.sample(withReplacement = false, batchFraction, seed + t)
-      // denoising corruption on the encoder INPUT only; reconstruction
-      // still targets the clean standardized features (autoencoder.py:32)
+      // denoising corruption (GaussianNoise, autoencoder.py:14,32): a
+      // fresh seeded randn draw per epoch on the encoder INPUT only;
+      // reconstruction still targets the clean standardized features
       val epochData = if (gaussianNoise <= 0.0) batch else {
         val cs = batch.columns
         batch.select(cs.map(col) ++
@@ -376,7 +482,8 @@ class DeepJointAutoencoder(
               randn(seed + t.toLong * k + i)).as(s"__n$i")
           }: _*)
       }
-      val (g0, _) = gradient(epochData, p, t)
+      val (g0, _) = if (targetLoss != "mse") rankGradient(epochData, p, t)
+        else gradient(epochData, p, t)
       adam.update(p, g0, t)
     }
     std.unpersist()
@@ -384,28 +491,39 @@ class DeepJointAutoencoder(
     this
   }
 
-  /** Appends latent_{i}, recon_{i} (destandardized), and the
-    * destandardized prediction(_{i}) head through the staged chain. */
-  def predict(df: DataFrame): DataFrame = {
+  private def stdFeats: Seq[Column] = {
     require(weights != null, "fit first")
-    val feats = featureCols.zipWithIndex.map { case (c, i) =>
+    featureCols.zipWithIndex.map { case (c, i) =>
       (col(c).cast("double") - lit(fMean(i))) / lit(fStd(i))
     }
-    var scored = DeepAeKernel.score(df, feats, weights, cfg)
-    for (o <- 0 until nOut) {
-      val n = if (nOut == 1) "prediction" else s"prediction_$o"
-      scored = scored.withColumn(n,
-        col(n) * lit(yStds(o)) + lit(yMeans(o)))
-    }
-    scored.drop(featureCols.indices.map(f => s"recon_$f"): _*)
+  }
+
+  /** Appends `latent_{i}` (get_feature_names_out contract,
+    * autoencoder.py:159-161). */
+  def transform(df: DataFrame): DataFrame =
+    DeepAeKernel.score(df, stdFeats, weights, cfg,
+      upTo = cfg.latentStage + 1)
+
+  /** Appends `latent_{i}` and destandardized `recon_{i}`. */
+  def reconstruct(df: DataFrame): DataFrame = {
+    val staged = DeepAeKernel.score(df, stdFeats, weights, cfg,
+      upTo = cfg.tapStage + 1)
+    SeqAdam.destandardize(staged, featureCols.indices.map(f => s"recon_$f"),
+      fMean, fStd)
+  }
+
+  /** Appends `latent_{i}` and the destandardized prediction(_{i})
+    * head(s) (base.py:137-150 contract); recon is [[reconstruct]]'s. */
+  def predict(df: DataFrame): DataFrame = {
+    val scored = DeepAeKernel.score(df, stdFeats, weights, cfg)
+    SeqAdam.destandardize(scored, MLPRegressor.predictionNames(nOut),
+      yMeans, yStds).drop(featureCols.indices.map(f => s"recon_$f"): _*)
   }
 
   def familyName: String = "deep_ae"
-  // predict appends latent_{i} (recon is dropped) plus the head(s)
   def predictionNames: Seq[String] =
     (0 until latentDim).map(i => s"latent_$i") ++
-      (if (nOut == 1) Seq("prediction")
-      else (0 until nOut).map(o => s"prediction_$o"))
+      MLPRegressor.predictionNames(nOut)
 
   /** The fitted payload (flat kernel + standardization stats +
     * architecture) — the sklearn-pickle role; exact-double JSON, so
@@ -428,7 +546,12 @@ class DeepJointAutoencoder(
       "lr" -> lr.toString, "epochs" -> epochs.toString,
       "seed" -> seed.toString,
       "batchFraction" -> batchFraction.toString,
-      "optimizer" -> optimizer),
+      "optimizer" -> optimizer,
+      "targetLoss" -> targetLoss,
+      "mseWeight" -> mseWeight.toString,
+      "spearmanWeight" -> spearmanWeight.toString,
+      "rankTau" -> rankTau.toString,
+      "rankBatch" -> rankBatch.toString),
       Seq("flat" -> weights, "fMean" -> fMean, "fStd" -> fStd,
         "yMeans" -> yMeans, "yStds" -> yStds))
   }
@@ -437,9 +560,34 @@ class DeepJointAutoencoder(
     val (m, s) = saveParts
     WeightsIO.save(path, m, s)
   }
+
+  /** Installs a saved fit (shape-validated) — the loaders' path. */
+  private def install(flat: Array[Double], fm: Array[Double],
+      fs: Array[Double], ym: Array[Double], ys: Array[Double]): this.type = {
+    WeightsIO.requireLen("flat", flat, sz)
+    WeightsIO.requireLen("fMean", fm, k)
+    WeightsIO.requireLen("fStd", fs, k)
+    WeightsIO.requireLen("yMeans", ym, nOut)
+    WeightsIO.requireLen("yStds", ys, nOut)
+    weights = flat
+    fMean = fm; fStd = fs
+    yMeans = ym; yStds = ys
+    this
+  }
 }
 
 object DeepJointAutoencoder {
+  /** (network input, clean reconstruction target) of one gradient row:
+    * `nOut` targets, `k` clean features, then (with noise) the `k`
+    * corrupted network inputs. */
+  private def rowInputs(row: org.apache.spark.sql.Row, k: Int, nOut: Int)
+      : (Array[Double], Array[Double]) = {
+    val xTgt = Array.tabulate(k)(i => row.getDouble(i + nOut))
+    val xIn = if (row.size > k + nOut)
+      Array.tabulate(k)(i => row.getDouble(k + i + nOut)) else xTgt
+    (xIn, xTgt)
+  }
+
   /** Rehydrate a `save`d estimator (architecture + stats + kernel,
     * shape-validated) — `predict` on the loaded instance equals
     * `predict` on the fitted one byte for byte. */
@@ -449,10 +597,14 @@ object DeepJointAutoencoder {
   }
 
   /** Rebuild from an already-parsed payload (standalone or
-    * pipeline-embedded). */
+    * pipeline-embedded): a `deep_ae` payload, or a `joint_ae` payload
+    * of the former single-stage model (see [[fromJointAe]]). Payloads
+    * saved before the rank-loss keys existed load with their defaults. */
   def fromParts(meta: Map[String, String],
       sections: Map[String, Array[Double]], where: String)
       : DeepJointAutoencoder = {
+    if (meta.get("family").contains("joint_ae"))
+      return fromJointAe(meta, sections)
     WeightsIO.requireFamily(meta, "deep_ae", where)
     val targets = WeightsIO.namesFromMeta(meta("targets"))
     val m = new DeepJointAutoencoder(
@@ -470,17 +622,51 @@ object DeepJointAutoencoder {
       lr = meta("lr").toDouble, epochs = meta("epochs").toInt,
       seed = meta("seed").toLong,
       batchFraction = meta("batchFraction").toDouble,
-      optimizer = meta("optimizer"))
+      optimizer = meta("optimizer"),
+      targetLoss = meta.getOrElse("targetLoss", "mse"),
+      mseWeight = meta.get("mseWeight").fold(2.0)(_.toDouble),
+      spearmanWeight = meta.get("spearmanWeight").fold(1.0)(_.toDouble),
+      rankTau = meta.get("rankTau").fold(1e-3)(_.toDouble),
+      rankBatch = meta.get("rankBatch").fold(64)(_.toInt))
+    m.install(sections("flat"), sections("fMean"), sections("fStd"),
+      sections("yMeans"), sections("yStds"))
+  }
+
+  /** Decoder of the former single-stage `joint_ae` payload (meta `hE`,
+    * `latent`, `hA`, `nOut`; its flat kernel is the one-stage layout
+    * with an output-major multi-output head, transposed here to the
+    * input-major head). That payload carried no target names or
+    * training options: the targets are named `target` (one output) or
+    * `target_{i}`, and every training option takes its default. */
+  private def fromJointAe(meta: Map[String, String],
+      sections: Map[String, Array[Double]]): DeepJointAutoencoder = {
+    val (hE, l, hA, nOut) = (meta("hE").toInt, meta("latent").toInt,
+      meta("hA").toInt, meta("nOut").toInt)
+    val targets = if (nOut == 1) Seq("target")
+      else (0 until nOut).map(o => s"target_$o")
+    val m = new DeepJointAutoencoder(
+      WeightsIO.namesFromMeta(meta("features")), targets.head,
+      extraTargetCols = targets.tail, encoderUnits = Seq(hE),
+      latentDim = l, headUnits = Seq(hA))
     val flat = sections("flat")
     WeightsIO.requireLen("flat", flat, m.kernelCfg.size)
-    val k = m.featureCols.size
-    WeightsIO.requireLen("fMean", sections("fMean"), k)
-    WeightsIO.requireLen("fStd", sections("fStd"), k)
-    WeightsIO.requireLen("yMeans", sections("yMeans"), targets.size)
-    WeightsIO.requireLen("yStds", sections("yStds"), targets.size)
-    m.weights = flat
-    m.fMean = sections("fMean"); m.fStd = sections("fStd")
-    m.yMeans = sections("yMeans"); m.yStds = sections("yStds")
-    m
+    m.install(headInputMajor(flat, flat.length, hA, nOut),
+      sections("featMeans"),
+      sections("featStds"),
+      sections.getOrElse("yMeans", Array(meta("yMean").toDouble)),
+      sections.getOrElse("yStds", Array(meta("yStd").toDouble)))
+  }
+
+  /** `flat` with the Dense(out) head that ends its first `core` slots
+    * rewritten from output-major ([out][hA], the former single-stage
+    * layout) to this chain's input-major ([hA][out]); the biases and any
+    * slots past `core` (BatchNorm blocks) stay as they are. */
+  private[ml] def headInputMajor(flat: Array[Double], core: Int, hA: Int,
+      out: Int): Array[Double] = {
+    val w = flat.clone()
+    val off = core - hA * out - out
+    for (o <- 0 until out; a <- 0 until hA)
+      w(off + a * out + o) = flat(off + o * hA + a)
+    w
   }
 }

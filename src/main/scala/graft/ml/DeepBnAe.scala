@@ -3,15 +3,14 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** BatchNorm training for the DEPTH-GENERAL autoencoder chain — the
-  * reference's list-shaped `encoder_units` / `ae_units` config at its
-  * real architecture (autoencoder.py:29-69): `BatchNormalization` on
-  * the raw inputs and between every Dense and its activation, down the
-  * whole chain; the reconstruction tap and the target head stay bare
-  * Dense layers. The single-stage [[BnJointAutoencoder]] is this
-  * trainer's `encoder_units=[h]`, `ae_units=[h']` instance (and keeps
-  * the rank losses); this one is mse-only — the same boundary as the
-  * other deep variants.
+/** BatchNorm training for the autoencoder chain — the reference's
+  * `BottleneckEncoder` at its real architecture (autoencoder.py:29-69):
+  * `BatchNormalization` on the raw inputs and between every Dense and
+  * its activation, down the whole list-shaped chain; the reconstruction
+  * tap and the target head stay bare Dense layers. The reference
+  * default (`encoder_units=[h]`, `ae_units=[h']`) is the chain at one
+  * encoder and one head stage: BN at five sites (input, encoder,
+  * latent, decoder, head).
   *
   * Batched kernel: each bounded in-partition batch of `batchSize` rows
   * is one BN statistics group, every site's backward couples the
@@ -24,7 +23,7 @@ import org.apache.spark.sql.functions._
 object DeepBnKernel {
   import DeepAeKernel.Cfg
 
-  import Activations.{sigmoid, swish, swishD}
+  import Activations.{swish, swishD}
 
   /** BN site widths: site 0 = the input (k), then one per ACT stage in
     * stage order. */
@@ -42,21 +41,28 @@ object DeepBnKernel {
     Array.tabulate(w)(j => p(o + w + j))
   }
 
+  /** Per-site batch-statistics accumulator length for [[runBatch]]'s
+    * `bnStats` (per site: mean sums then var sums; one trailing batch
+    * counter, which each call with `bnStats` steps). */
+  def statsLen(c: Cfg): Int = 2 * bnWidths(c).sum + 1
+
   /** One batch's mean joint loss; if `acc` != null accumulates the
     * batch-mean gradient (flat layout: core stages then BN site
     * blocks). `xs` is the RAW feature block — the input BN conditions
     * it and the reconstruction targets it in raw space. `seeds` draw
     * each row's noise (k Gaussians when noiseStd > 0) then per-stage
-    * dropout masks in stage order. */
-  /** Per-site batch-statistics accumulator length for [[runBatch]]'s
-    * `bnStats` (per site: mean sums then var sums; one trailing batch
-    * counter). */
-  def statsLen(c: Cfg): Int = 2 * bnWidths(c).sum + 1
-
+    * dropout masks in stage order. `predOut` ([b][out], nullable)
+    * receives the target head's outputs. With `injectTgt` non-null the
+    * target-head gradient rows are taken verbatim per output (rank-loss
+    * surrogate: dL/dpred_{i,o}, [b][out], scaled here by tw only) and
+    * the returned loss is the reconstruction term alone — the caller
+    * adds its own target loss. */
   def runBatch(p: Array[Double], c: Cfg, xs: Array[Array[Double]],
       ysM: Array[Array[Double]], rw: Double, tw: Double,
       acc: Array[Double], noiseStd: Double = 0.0,
-      seeds: Array[Long] = null, bnStats: Array[Double] = null): Double = {
+      seeds: Array[Long] = null, bnStats: Array[Double] = null,
+      predOut: Array[Array[Double]] = null,
+      injectTgt: Array[Array[Double]] = null): Double = {
     val b = xs.length
     val nS = c.stages.size
     val useNoise = noiseStd > 0.0 && seeds != null
@@ -132,8 +138,11 @@ object DeepBnKernel {
         }
       }
     }
+    if (bnStats != null) bnStats(bnStats.length - 1) += 1.0
     val r = acts(c.tapStage + 1)
     val preds = acts(nS)
+    if (predOut != null)
+      for (i <- 0 until b) System.arraycopy(preds(i), 0, predOut(i), 0, c.out)
     var recon = 0.0
     var tgt = 0.0
     var i = 0
@@ -142,17 +151,23 @@ object DeepBnKernel {
       while (f < c.k) {
         val d = r(i)(f) - xs(i)(f); recon += d * d; f += 1
       }
-      var o = 0
-      while (o < c.out) {
-        val d = preds(i)(o) - ysM(i)(o); tgt += d * d; o += 1
+      if (injectTgt == null) {
+        var o = 0
+        while (o < c.out) {
+          val d = preds(i)(o) - ysM(i)(o); tgt += d * d; o += 1
+        }
       }
       i += 1
     }
-    val loss = rw * recon / (c.k * b) + tw * tgt / (c.out * b)
+    val reconLoss = rw * recon / (c.k * b)
+    val loss = if (injectTgt != null) reconLoss
+      else reconLoss + tw * tgt / (c.out * b)
     if (acc == null) return loss
 
     // ---- backward (batch-mean) ----
-    var dOut = Array.tabulate(b, c.out)((i2, o) =>
+    var dOut = if (injectTgt != null)
+      Array.tabulate(b, c.out)((i2, o) => tw * injectTgt(i2)(o))
+    else Array.tabulate(b, c.out)((i2, o) =>
       2.0 * tw / (c.out * b) * (preds(i2)(o) - ysM(i2)(o)))
     var s = nS - 1
     site = bnWidths(c).size - 1
@@ -201,25 +216,17 @@ object DeepBnKernel {
         }
         i0 += 1
       }
-      val dIn = Array.tabulate(b, st.nIn) { (i2, i3) =>
-        var g = 0.0
+      // arriving AT the tap's output: the reconstruction gradient
+      // starts the sum over the stage's outputs
+      val atTap = s - 1 == c.tapStage
+      dOut = Array.tabulate(b, st.nIn) { (i2, i3) =>
+        var g = if (atTap) 2.0 * rw / (c.k * b) * (r(i2)(i3) - xs(i2)(i3))
+          else 0.0
         var j2 = 0
         while (j2 < st.nOut) {
           g += p(off + i3 * st.nOut + j2) * dZ(i2)(j2); j2 += 1
         }
         g
-      }
-      dOut = dIn
-      if (s - 1 == c.tapStage) {
-        var i2 = 0
-        while (i2 < b) {
-          var f = 0
-          while (f < c.k) {
-            dOut(i2)(f) += 2.0 * rw / (c.k * b) * (r(i2)(f) - xs(i2)(f))
-            f += 1
-          }
-          i2 += 1
-        }
       }
       s -= 1
     }
@@ -262,9 +269,35 @@ object DeepBnKernel {
   }
 }
 
-/** Trainer for the BatchNorm depth-general chain (see [[DeepBnKernel]]).
-  * Feature columns enter RAW; targets standardize (destandardized on
-  * output); reconstruction trains and scores in raw space. */
+/** Trainer for the reference's DEFAULT BottleneckEncoder architecture
+  * (see [[DeepBnKernel]]): BatchNormalization at the input and at every
+  * activated stage, trained with TRUE per-batch statistics and the
+  * batch-coupled BN backward, GaussianNoise after the input BN,
+  * per-stage dropout, joint `rw·mse(recon raw X) + tw·L(target)`
+  * objective. Feature columns enter RAW (input BN learns the scaling);
+  * targets standardize (destandardized on output); reconstruction
+  * trains and scores in raw space — the reference's raw-space MSE that
+  * [[DeepJointAutoencoder]]'s standardization mode deviates from.
+  *
+  * Batches are bounded in-partition row blocks of `batchSize` rows
+  * (reference fit default 32, base.py:120), re-shuffled per epoch via
+  * the bounded shuffle window — each batch is one BN statistics group
+  * and, under the rank losses (`targetLoss` = `spearman` | `combined`,
+  * flattened over (batch, out), losses.py:67-69), one ranking
+  * neighborhood (Keras batches play both roles).
+  *
+  * Inference statistics: Keras folds training-time MOVING averages into
+  * inference BN; a moving average is order-dependent and ill-defined
+  * when batches execute in parallel, so this trainer re-estimates each
+  * site's POPULATION statistics over the full training set at the final
+  * weights (the "precise BatchNorm" re-estimation), then folds them to
+  * per-unit affines so scoring stays a codegen'd projection.
+  * `bnInference = "moving_average"` selects the strict-Keras parity mode
+  * instead: moving averages of the training batches' statistics
+  * (momentum `bnMomentum`, Keras default 0.99, EMA stepped once per
+  * optimizer step so it stays order-independent — see the note in
+  * [[fit]]), folded through the SAME affine chain. Training weights are
+  * identical under both modes; only the inference statistics differ. */
 class DeepBnAutoencoder(
     val featureCols: Seq[String],
     val targetCol: String,
@@ -285,12 +318,20 @@ class DeepBnAutoencoder(
     val batchSize: Int = 32,
     val optimizer: String = "adam",
     val bnInference: String = "population",
-    val bnMomentum: Double = 0.99) extends ModelEstimator {
+    val bnMomentum: Double = 0.99,
+    val targetLoss: String = "mse",
+    val mseWeight: Double = 2.0,
+    val spearmanWeight: Double = 1.0,
+    val rankTau: Double = 1e-3) extends ModelEstimator {
 
   require(Set("population", "moving_average")(bnInference),
     s"bnInference must be population|moving_average, got $bnInference")
+  require(Set("mse", "spearman", "combined")(targetLoss),
+    s"targetLoss must be mse|spearman|combined, got $targetLoss")
 
   val targetCols: Seq[String] = targetCol +: extraTargetCols
+  require(targetCols.distinct.size == targetCols.size,
+    s"target columns repeat a name: ${targetCols.mkString(", ")}")
   private val nOut = targetCols.size
   private val k = featureCols.size
   val cfg: DeepAeKernel.Cfg = DeepAeKernel.Cfg(k, encoderUnits, latentDim,
@@ -306,13 +347,22 @@ class DeepBnAutoencoder(
   def fittedAffines: Seq[(Array[Double], Array[Double])] = affs
   def targetStats: (Array[Double], Array[Double]) = (yMeans, yStds)
 
-  /** Batched epoch gradient (one batch = one BN group = one gradient
-    * unit). `ep` = 0 disables noise/dropout — the FD spec mode. */
+  /** Mean batch loss + flat gradient at `p` over `data` (cols 0..nOut-1
+    * = standardized targets, then k RAW features). One batch = one BN
+    * group = one gradient unit (batch-count normalized) on the MSE and
+    * the rank paths alike. `ep` = 0 disables noise/dropout (the
+    * finite-difference mode) and pins batch composition. Under a rank
+    * `targetLoss` each batch runs the kernel twice: a forward for the
+    * predictions, then the backward with the flattened rank gradient
+    * injected at the target head. */
   def gradient(data: DataFrame, p: Array[Double], ep: Long = 0L)
       : (Array[Double], Double) = {
     val (kk, nO, bsz) = (k, nOut, batchSize)
     val c = cfg
     val (rw, tw) = (reconWeight, targetWeight)
+    val (mw, sw) = if (targetLoss == "spearman") (0.0, 1.0)
+      else (mseWeight, spearmanWeight)
+    val (tau, rank) = (rankTau, targetLoss != "mse")
     val n = size
     val noiseStd = if (ep == 0L) 0.0 else gaussianNoise
     val wantSeeds = ep != 0L &&
@@ -338,11 +388,23 @@ class DeepBnAutoencoder(
           idx += 1
           i += 1
         }
-        val loss = DeepBnKernel.runBatch(p, c, xs, ys, rw, tw, acc,
-          noiseStd, seeds, stats)
-        acc(n) += loss
-        acc(n + 1) += 1.0
-        if (stats != null) stats(sLen - 1) += 1.0
+        if (!rank) {
+          acc(n) += DeepBnKernel.runBatch(p, c, xs, ys, rw, tw, acc,
+            noiseStd, seeds, stats)
+          acc(n + 1) += 1.0
+        } else if (b >= 2 || mw != 0.0 || nO >= 2) {
+          // stats collect on this pass only — the inject pass below
+          // re-runs the identical forward over the same batch
+          val po = Array.ofDim[Double](b, nO)
+          DeepBnKernel.runBatch(p, c, xs, ys, rw, tw, null, noiseStd,
+            seeds, stats, predOut = po)
+          val (dLt, tLoss) = RankLoss.combinedGrad(po.flatten, ys.flatten,
+            tau, mw, sw)
+          val inj = Array.tabulate(b, nO)((i2, o) => dLt(i2 * nO + o))
+          acc(n) += DeepBnKernel.runBatch(p, c, xs, ys, rw, tw, acc,
+            noiseStd, seeds, injectTgt = inj) + tw * tLoss
+          acc(n + 1) += 1.0
+        }
       }
       if (collect) System.arraycopy(stats, 0, acc, n + 2, sLen)
     }
@@ -379,9 +441,18 @@ class DeepBnAutoencoder(
     for (site <- widths.indices; j <- 0 until widths(site))
       p(DeepBnKernel.bnOff(cfg, site) + j) = 1.0 // gamma=1, beta=0
     val adam = new AdamState(size, lr, optimizer)
-    // moving-average inference statistics (strict-Keras mode) — EMA of
-    // the epoch-average batch statistics, k batch updates composed per
-    // optimizer step as momentum^k (see BnJointAutoencoder.fit)
+    // strict-Keras inference statistics (bnInference="moving_average"):
+    // Keras initializes moving_mean=0 / moving_var=1 and updates them
+    // from each training batch's statistics with momentum 0.99. A
+    // literal per-batch EMA is order-dependent and ill-defined when
+    // batches execute in parallel, so the EMA step here is per OPTIMIZER
+    // STEP (= epoch): the step's batches all run at the same weights,
+    // their statistics average order-independently, and that average
+    // feeds one EMA update. Keras steps the EMA once per BATCH; an epoch
+    // of k batches whose statistics all sit near the epoch average
+    // composes in closed form to momentum^k — without this the (0,1)
+    // initialization keeps ~momentum^epochs weight (0.99^150 ≈ 0.22)
+    // and the folded statistics stay visibly biased
     val maMean = widths.map(w0 => new Array[Double](w0))
     val maVar = widths.map(w0 => Array.fill(w0)(1.0))
     for (t <- 1 to epochs) {
@@ -462,8 +533,7 @@ class DeepBnAutoencoder(
                 else {
                   val (sc, sh) = prior(si)
                   in = Array.tabulate(st.nOut)(j =>
-                    1.0 / (1.0 + math.exp(-(sc(j) * z(j) + sh(j)))) *
-                      (sc(j) * z(j) + sh(j)))
+                    Activations.swish(sc(j) * z(j) + sh(j)))
                   si += 1
                 }
               } else in = z
@@ -487,33 +557,37 @@ class DeepBnAutoencoder(
     built.toSeq
   }
 
-  private def affFeats: Seq[Column] = featureCols.zipWithIndex.map {
-    case (c, i) =>
+  private def affFeats: Seq[Column] = {
+    require(w != null, "fit first")
+    featureCols.zipWithIndex.map { case (c, i) =>
       col(c).cast("double") * lit(affs.head._1(i)) + lit(affs.head._2(i))
+    }
   }
 
-  /** Appends `latent_{i}`, raw-space `recon_{i}` and destandardized
-    * `prediction[_i]` through the affine-threaded staged chain. */
+  /** Appends `latent_{i}` (the encoder surface, autoencoder.py:45-47). */
+  def transform(df: DataFrame): DataFrame =
+    DeepAeKernel.score(df, affFeats, w, cfg, affs.tail,
+      upTo = cfg.latentStage + 1)
+
+  /** Appends `latent_{i}` and raw-space `recon_{i}` (the BN chain trains
+    * reconstruction in raw units, so there is nothing to undo). */
+  def reconstruct(df: DataFrame): DataFrame =
+    DeepAeKernel.score(df, affFeats, w, cfg, affs.tail,
+      upTo = cfg.tapStage + 1)
+
+  /** Appends `latent_{i}` and the destandardized prediction(_{i})
+    * head(s) through the affine-threaded staged chain; recon is
+    * [[reconstruct]]'s. */
   def predict(df: DataFrame): DataFrame = {
-    require(w != null, "fit first")
-    var scored = DeepAeKernel.score(df, affFeats, w, cfg, affs.tail)
-    if (nOut == 1)
-      scored = scored.withColumn("prediction",
-        col("prediction") * lit(yStds(0)) + lit(yMeans(0)))
-    else for (o <- 0 until nOut)
-      scored = scored.withColumn(s"prediction_$o",
-        col(s"prediction_$o") * lit(yStds(o)) + lit(yMeans(o)))
-    scored
+    val scored = DeepAeKernel.score(df, affFeats, w, cfg, affs.tail)
+    SeqAdam.destandardize(scored, MLPRegressor.predictionNames(nOut),
+      yMeans, yStds).drop(featureCols.indices.map(f => s"recon_$f"): _*)
   }
 
   def familyName: String = "deep_bn_ae"
-  // predict keeps latent_{i} AND raw-space recon_{f} (the BN path
-  // trains reconstruction in raw units) plus the head(s)
   def predictionNames: Seq[String] =
     (0 until latentDim).map(i => s"latent_$i") ++
-      featureCols.indices.map(f => s"recon_$f") ++
-      (if (nOut == 1) Seq("prediction")
-      else (0 until nOut).map(o => s"prediction_$o"))
+      MLPRegressor.predictionNames(nOut)
 
   /** The fitted payload: flat kernel, the folded per-site BN inference
     * affines, target stats, and the architecture — the sklearn-pickle
@@ -543,6 +617,10 @@ class DeepBnAutoencoder(
       "batchSize" -> batchSize.toString,
       "optimizer" -> optimizer, "bnInference" -> bnInference,
       "bnMomentum" -> bnMomentum.toString,
+      "targetLoss" -> targetLoss,
+      "mseWeight" -> mseWeight.toString,
+      "spearmanWeight" -> spearmanWeight.toString,
+      "rankTau" -> rankTau.toString,
       "nAffines" -> affs.size.toString),
       Seq("flat" -> w, "yMeans" -> yMeans, "yStds" -> yStds) ++ affSecs)
   }
@@ -550,6 +628,34 @@ class DeepBnAutoencoder(
   def save(path: String): Unit = {
     val (m, s) = saveParts
     WeightsIO.save(path, m, s)
+  }
+
+  /** Installs a saved fit (shape-validated) — the loaders' path: the
+    * flat kernel, then `nAffines` inference affines and the target
+    * stats from the payload. The site count and widths come from the
+    * kernel's ONE invariant (the accessor fit's population
+    * re-estimation walks); the count is validated BEFORE the section
+    * reads. */
+  private def install(flat: Array[Double], meta: Map[String, String],
+      sections: Map[String, Array[Double]], where: String): this.type = {
+    WeightsIO.requireLen("flat", flat, size)
+    val siteDims = DeepBnKernel.bnWidths(cfg)
+    val nAff = meta("nAffines").toInt
+    require(nAff == siteDims.size,
+      s"$where holds $nAff affines, expected ${siteDims.size}")
+    val a = (0 until nAff).map { i =>
+      (sections(s"aff${i}_s"), sections(s"aff${i}_c"))
+    }
+    a.zip(siteDims).zipWithIndex.foreach { case (((sc, cc), d), i) =>
+      WeightsIO.requireLen(s"aff${i}_s", sc, d)
+      WeightsIO.requireLen(s"aff${i}_c", cc, d)
+    }
+    WeightsIO.requireLen("yMeans", sections("yMeans"), nOut)
+    WeightsIO.requireLen("yStds", sections("yStds"), nOut)
+    w = flat
+    affs = a
+    yMeans = sections("yMeans"); yStds = sections("yStds")
+    this
   }
 }
 
@@ -561,10 +667,14 @@ object DeepBnAutoencoder {
   }
 
   /** Rebuild from an already-parsed payload (standalone or
-    * pipeline-embedded). */
+    * pipeline-embedded): a `deep_bn_ae` payload, or a `bn_ae` payload of
+    * the former single-stage model (see [[fromBnAe]]). Payloads saved
+    * before the rank-loss keys existed load with their defaults. */
   def fromParts(meta: Map[String, String],
       sections: Map[String, Array[Double]], where: String)
       : DeepBnAutoencoder = {
+    if (meta.get("family").contains("bn_ae"))
+      return fromBnAe(meta, sections, where)
     WeightsIO.requireFamily(meta, "deep_bn_ae", where)
     val targets = WeightsIO.namesFromMeta(meta("targets"))
     val m = new DeepBnAutoencoder(
@@ -585,28 +695,35 @@ object DeepBnAutoencoder {
       batchSize = meta("batchSize").toInt,
       optimizer = meta("optimizer"),
       bnInference = meta("bnInference"),
-      bnMomentum = meta("bnMomentum").toDouble)
+      bnMomentum = meta("bnMomentum").toDouble,
+      targetLoss = meta.getOrElse("targetLoss", "mse"),
+      mseWeight = meta.get("mseWeight").fold(2.0)(_.toDouble),
+      spearmanWeight = meta.get("spearmanWeight").fold(1.0)(_.toDouble),
+      rankTau = meta.get("rankTau").fold(1e-3)(_.toDouble))
+    m.install(sections("flat"), meta, sections, where)
+  }
+
+  /** Decoder of the former single-stage `bn_ae` payload (meta `hE`,
+    * `latent`, `hA`, `nOut`; its flat kernel is the one-stage layout
+    * with an output-major multi-output head, transposed here to the
+    * input-major head, then the five BN sites' blocks in this chain's
+    * order). That payload carried no target names or training options:
+    * the targets are named `target` (one output) or `target_{i}`, and
+    * every training option takes its default. */
+  private def fromBnAe(meta: Map[String, String],
+      sections: Map[String, Array[Double]], where: String)
+      : DeepBnAutoencoder = {
+    val (hE, l, hA, nOut) = (meta("hE").toInt, meta("latent").toInt,
+      meta("hA").toInt, meta("nOut").toInt)
+    val targets = if (nOut == 1) Seq("target")
+      else (0 until nOut).map(o => s"target_$o")
+    val m = new DeepBnAutoencoder(
+      WeightsIO.namesFromMeta(meta("features")), targets.head,
+      extraTargetCols = targets.tail, encoderUnits = Seq(hE),
+      latentDim = l, headUnits = Seq(hA))
     val flat = sections("flat")
     WeightsIO.requireLen("flat", flat, m.size)
-    // site count and widths from the kernel's ONE invariant (the same
-    // accessor fit's population re-estimation walks), count validated
-    // BEFORE the section reads
-    val siteDims = DeepBnKernel.bnWidths(m.cfg)
-    val nAff = meta("nAffines").toInt
-    require(nAff == siteDims.size,
-      s"$where holds $nAff affines, expected ${siteDims.size}")
-    val affs = (0 until nAff).map { i =>
-      (sections(s"aff${i}_s"), sections(s"aff${i}_c"))
-    }
-    affs.zip(siteDims).zipWithIndex.foreach { case (((sc, cc), d), i) =>
-      WeightsIO.requireLen(s"aff${i}_s", sc, d)
-      WeightsIO.requireLen(s"aff${i}_c", cc, d)
-    }
-    WeightsIO.requireLen("yMeans", sections("yMeans"), targets.size)
-    WeightsIO.requireLen("yStds", sections("yStds"), targets.size)
-    m.w = flat
-    m.affs = affs
-    m.yMeans = sections("yMeans"); m.yStds = sections("yStds")
-    m
+    m.install(DeepJointAutoencoder.headInputMajor(flat, m.cfg.size, hA,
+      nOut), meta, sections, where)
   }
 }

@@ -337,7 +337,7 @@ object DeepMlpScore {
         val z = in.zipWithIndex.map { case (c, i) =>
           c * lit(p(off + i * nout + j))
         }.reduce(_ + _) + lit(p(off + nin * nout + j))
-        (if (swish) JointAe.swishCol(z) else greatest(z, lit(0.0)))
+        (if (swish) Activations.swishCol(z) else greatest(z, lit(0.0)))
           .as(s"__h${l}_$j")
       }
       cur = cur.select(cur.columns.map(col) ++ outs: _*)

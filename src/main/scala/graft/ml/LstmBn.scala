@@ -514,7 +514,7 @@ class LSTMBnTrainer(
     // moving-average inference statistics (strict-Keras mode): EMA of
     // the per-epoch average batch statistics, one composed update of
     // the epoch's k batches per optimizer step (momentum^k — see
-    // BnJointAutoencoder.fit for the closed-form rationale); Keras init
+    // DeepBnAutoencoder.fit for the closed-form rationale); Keras init
     // moving_mean=0 / moving_var=1
     val maMean = bnWidths.map(w0 => new Array[Double](w0))
     val maVar = bnWidths.map(w0 => Array.fill(w0)(1.0))

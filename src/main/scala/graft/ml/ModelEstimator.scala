@@ -31,10 +31,10 @@ trait ModelEstimator extends Serializable {
 
   /** EVERY column `predict` appends, in order — the prediction head
     * (`prediction` / `prediction_{i}`) plus any intermediate surface
-    * the family leaves in the frame (the AE families keep `latent_{i}`,
-    * the BN deep AE also raw-space `recon_{f}`). This is ModelStage's
-    * outputNames, so downstream stages and persistence checks reason
-    * about the REAL post-stage schema, not just the head. */
+    * the family leaves in the frame (the AE families keep `latent_{i}`).
+    * This is ModelStage's outputNames, so downstream stages and
+    * persistence checks reason about the REAL post-stage schema, not
+    * just the head. */
   def predictionNames: Seq[String]
 }
 
@@ -57,8 +57,8 @@ object ModelCodecs {
     "lstm_multi" -> (LSTMTrainer.fromParts _),
     "attn" -> (AttnTrainer.fromParts _),
     "attn_multi" -> (AttnTrainer.fromParts _),
-    "joint_ae" -> (JointAeModel.fromParts _),
-    "bn_ae" -> (BnAeModel.fromParts _),
+    "joint_ae" -> (DeepJointAutoencoder.fromParts _),
+    "bn_ae" -> (DeepBnAutoencoder.fromParts _),
     "deep_ae" -> (DeepJointAutoencoder.fromParts _),
     "deep_bn_ae" -> (DeepBnAutoencoder.fromParts _),
     "bottleneck" -> (BottleneckModel.fromParts _),

@@ -411,6 +411,8 @@ class SoftNdfRegressor(
     * AND the rank losses (the reference's loss flattens (batch, out)
     * to one ranked vector, losses.py:67-69 — [[rankGradient]]). */
   val targetCols: Seq[String] = targetCol +: extraTargetCols
+  require(targetCols.distinct.size == targetCols.size,
+    s"target columns repeat a name: ${targetCols.mkString(", ")}")
   private val nOut = targetCols.size
 
   private val nFeat = featureCols.size

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.ml._
 
 /** BatchNorm autoencoder (the reference BottleneckEncoder's ACTUAL
-  * default architecture, autoencoder.py:29-69): batch-coupled gradient
+  * default architecture, autoencoder.py:29-69 — [[DeepBnAutoencoder]]
+  * at one encoder and one head stage): batch-coupled gradient
   * vs central finite differences (plain AND noise+dropout-masked), fit
   * quality on the nonlinear manifold in RAW feature space, population-
   * affine staged scoring ≡ driver inference forward, and the rank-path
@@ -27,8 +28,8 @@ class BnAeSpec extends AnyFunSuite {
 
   test("bn ae: batched flat gradient (BN batch statistics coupled " +
     "across rows) matches central finite differences") {
-    val ae = new BnJointAutoencoder(Seq("f0", "f1", "f2"), "y",
-      latentDim = 2, encoderHidden = 3, headHidden = 2,
+    val ae = new DeepBnAutoencoder(Seq("f0", "f1", "f2"), "y",
+      encoderUnits = Seq(3), latentDim = 2, headUnits = Seq(2),
       reconWeight = 1.0, targetWeight = 0.7, batchSize = 7)
     val r = new scala.util.Random(5)
     // 7 rows in ONE partition = one batch: the FD loss must see the
@@ -37,10 +38,10 @@ class BnAeSpec extends AnyFunSuite {
       (r.nextGaussian() * 0.5, r.nextGaussian() * 2.0 + 1.0,
         r.nextGaussian() * 0.3 - 2.0, r.nextGaussian()))
     val data = rows.toDF("y", "f0", "f1", "f2").repartition(1)
-    val sz = BnAeKernel.size(3, 3, 2, 2)
+    val sz = ae.size
     val p = Array.tabulate(sz) { i =>
       // keep BN gammas near 1 so invStd stays well-conditioned
-      val core = JointAeKernel.size(3, 3, 2, 2)
+      val core = ae.cfg.size
       if (i < core) r.nextGaussian() * 0.4
       else 1.0 + r.nextGaussian() * 0.1
     }
@@ -60,21 +61,22 @@ class BnAeSpec extends AnyFunSuite {
     "AND per-layer dropout masks held fixed by the seed stream") {
     val r = new scala.util.Random(11)
     val (k, hE, l, hA) = (3, 3, 2, 2)
-    val sz = BnAeKernel.size(k, hE, l, hA)
-    val core = JointAeKernel.size(k, hE, l, hA)
+    val c = DeepAeKernel.Cfg(k, Seq(hE), l, Seq(hA), encDrop = Seq(0.3),
+      latentDrop = 0.3, headDrop = Seq(0.4))
+    val sz = DeepBnKernel.size(c)
+    val core = c.size
     val p = Array.tabulate(sz)(i =>
       if (i < core) r.nextGaussian() * 0.4 else 1.0 + r.nextGaussian() * 0.1)
     val b = 6
     val x = Array.fill(b, k)(r.nextGaussian())
     val ys = Array.fill(b, 1)(r.nextGaussian() * 0.5)
     val seeds = Array.tabulate(b)(i => 1000L + i * 77L)
-    val drop = JointAeKernel.AeDrop(enc = 0.3, latent = 0.3, head = 0.4)
     def loss(pv: Array[Double]): Double =
-      BnAeKernel.runBatch(BnAeKernel.toWeights(pv, k, hE, l, hA),
-        x, ys, 1.0, 0.7, null, drop, seeds, noiseStd = 0.05)
+      DeepBnKernel.runBatch(pv, c, x, ys, 1.0, 0.7, null,
+        noiseStd = 0.05, seeds = seeds)
     val acc = new Array[Double](sz)
-    BnAeKernel.runBatch(BnAeKernel.toWeights(p, k, hE, l, hA),
-      x, ys, 1.0, 0.7, acc, drop, seeds, noiseStd = 0.05)
+    DeepBnKernel.runBatch(p, c, x, ys, 1.0, 0.7, acc, noiseStd = 0.05,
+      seeds = seeds)
     val eps = 1e-6
     for (i <- 0 until sz) {
       val pp = p.clone(); pp(i) += eps
@@ -97,8 +99,8 @@ class BnAeSpec extends AnyFunSuite {
         .collect()(0).getDouble(0)
     // uniform scales: everything reconstructs
     val dfU = manifold(400, 8).toDF("id", "f0", "f1", "f2", "y")
-    val mU = new BnJointAutoencoder(feats, "y", latentDim = 1,
-      encoderHidden = 8, headHidden = 4, lr = 0.02, epochs = 300,
+    val mU = new DeepBnAutoencoder(feats, "y", encoderUnits = Seq(8),
+      latentDim = 1, headUnits = Seq(4), lr = 0.02, epochs = 300,
       seed = 1L, batchFraction = 1.0).fit(dfU)
     val recU = mU.reconstruct(dfU)
     feats.indices.foreach { f =>
@@ -117,8 +119,8 @@ class BnAeSpec extends AnyFunSuite {
     // scale skew.
     val dfS = manifold(400, 9, scale1 = 40.0)
       .toDF("id", "f0", "f1", "f2", "y")
-    val mS = new BnJointAutoencoder(feats, "y", latentDim = 1,
-      encoderHidden = 8, headHidden = 4, lr = 0.02, epochs = 300,
+    val mS = new DeepBnAutoencoder(feats, "y", encoderUnits = Seq(8),
+      latentDim = 1, headUnits = Seq(4), lr = 0.02, epochs = 300,
       seed = 1L, batchFraction = 1.0, targetWeight = 100.0).fit(dfS)
     val eDom = relErr(mS.reconstruct(dfS), 1)
     assert(eDom < 0.45,
@@ -133,21 +135,24 @@ class BnAeSpec extends AnyFunSuite {
     val rows = manifold(200, 3)
     val df = rows.toDF("id", "f0", "f1", "f2", "y")
     val feats = Seq("f0", "f1", "f2")
-    val model = new BnJointAutoencoder(feats, "y", latentDim = 2,
-      encoderHidden = 3, headHidden = 2, epochs = 8).fit(df)
+    val model = new DeepBnAutoencoder(feats, "y", encoderUnits = Seq(3),
+      latentDim = 2, headUnits = Seq(2), epochs = 8).fit(df)
+    val c = model.cfg
     val out = model.reconstruct(df)
       .join(model.predict(df).select(col("id"), col("prediction")), "id")
       .select("f0", "f1", "f2", "latent_0", "latent_1", "recon_0",
         "prediction").limit(10).collect()
     out.foreach { row =>
-      val x0 = Array.tabulate(3)(i =>
-        row.getDouble(i) * model.aff0._1(i) + model.aff0._2(i))
-      val (zl, rec, ps) = BnAeKernel.forwardAffine(model.weights,
-        model.aff, x0)
+      val x = Array.tabulate(3)(i => row.getDouble(i))
+      val acts = DeepBnKernel.forwardAffine(model.fittedWeights, c,
+        model.fittedAffines, x)
+      val (zl, rec, ps) =
+        (acts(c.latentStage + 1), acts(c.tapStage + 1), acts.last)
+      val (yMeans, yStds) = model.targetStats
       assert(math.abs(zl(0) - row.getDouble(3)) < 1e-9)
       assert(math.abs(zl(1) - row.getDouble(4)) < 1e-9)
       assert(math.abs(rec(0) - row.getDouble(5)) < 1e-9)
-      assert(math.abs(ps(0) * model.yStds(0) + model.yMeans(0)
+      assert(math.abs(ps(0) * yStds(0) + yMeans(0)
         - row.getDouble(6)) < 1e-9)
     }
   }
@@ -161,8 +166,8 @@ class BnAeSpec extends AnyFunSuite {
     val df = rows.toDF("id", "f0", "f1", "f2", "y")
     assert(df.rdd.getNumPartitions == 4)
     val feats = Seq("f0", "f1", "f2")
-    def trainer(mode: String) = new BnJointAutoencoder(feats, "y",
-      latentDim = 2, encoderHidden = 3, headHidden = 2, epochs = 30,
+    def trainer(mode: String) = new DeepBnAutoencoder(feats, "y",
+      encoderUnits = Seq(3), latentDim = 2, headUnits = Seq(2), epochs = 30,
       seed = 11L, bnInference = mode)
     val pop = trainer("population").fit(df)
     val ma = trainer("moving_average").fit(df)
@@ -171,18 +176,14 @@ class BnAeSpec extends AnyFunSuite {
       a.length == b.length && a.indices.forall(i =>
         java.lang.Double.doubleToRawLongBits(a(i)) ==
           java.lang.Double.doubleToRawLongBits(b(i)))
-    assert(pop.weights.core.we.zip(ma.weights.core.we)
-      .forall { case (a, b) => same(a, b) })
-    assert(pop.weights.core.wh.zip(ma.weights.core.wh)
-      .forall { case (a, b) => same(a, b) })
-    (0 until 5).foreach { s =>
-      assert(same(pop.weights.gamma(s), ma.weights.gamma(s)))
-      assert(same(pop.weights.beta(s), ma.weights.beta(s)))
-    }
+    // (the flat kernel: every Dense matrix, every BN gamma/beta)
+    assert(same(pop.fittedWeights, ma.fittedWeights))
     // the inference statistics must differ (EMA of training-batch stats
     // vs final-weights population re-estimation)
-    assert(!pop.aff0._1.sameElements(ma.aff0._1) ||
-      !pop.aff0._2.sameElements(ma.aff0._2))
+    val (popAff0, maAff0) = (pop.fittedAffines.head, ma.fittedAffines.head)
+    assert(!popAff0._1.sameElements(maAff0._1) ||
+      !popAff0._2.sameElements(maAff0._2))
+    val c = ma.cfg
     // MA-mode scoring goes through the SAME staged folded-affine chain:
     // the staged Spark projection equals the driver inference forward
     val out = ma.reconstruct(df)
@@ -190,13 +191,16 @@ class BnAeSpec extends AnyFunSuite {
       .select("f0", "f1", "f2", "latent_0", "latent_1", "recon_0",
         "prediction").limit(10).collect()
     out.foreach { row =>
-      val x0 = Array.tabulate(3)(i =>
-        row.getDouble(i) * ma.aff0._1(i) + ma.aff0._2(i))
-      val (zl, rec, ps) = BnAeKernel.forwardAffine(ma.weights, ma.aff, x0)
+      val x = Array.tabulate(3)(i => row.getDouble(i))
+      val acts = DeepBnKernel.forwardAffine(ma.fittedWeights, c,
+        ma.fittedAffines, x)
+      val (zl, rec, ps) =
+        (acts(c.latentStage + 1), acts(c.tapStage + 1), acts.last)
+      val (yMeans, yStds) = ma.targetStats
       assert(math.abs(zl(0) - row.getDouble(3)) < 1e-9)
       assert(math.abs(zl(1) - row.getDouble(4)) < 1e-9)
       assert(math.abs(rec(0) - row.getDouble(5)) < 1e-9)
-      assert(math.abs(ps(0) * ma.yStds(0) + ma.yMeans(0)
+      assert(math.abs(ps(0) * yStds(0) + yMeans(0)
         - row.getDouble(6)) < 1e-9)
       assert(!row.getDouble(6).isNaN)
     }
@@ -210,13 +214,13 @@ class BnAeSpec extends AnyFunSuite {
         r.nextGaussian()))
     val df = rows.toDF("y", "f0", "f1", "f2").repartition(1)
     def grad(tl: String) = {
-      val ae = new BnJointAutoencoder(Seq("f0", "f1", "f2"), "y",
-        latentDim = 2, encoderHidden = 3, headHidden = 2,
+      val ae = new DeepBnAutoencoder(Seq("f0", "f1", "f2"), "y",
+        encoderUnits = Seq(3), latentDim = 2, headUnits = Seq(2),
         reconWeight = 1.0, targetWeight = 0.7, targetLoss = tl,
         mseWeight = 1.0, spearmanWeight = 0.0, batchSize = 8)
-      val sz = BnAeKernel.size(3, 3, 2, 2)
+      val sz = ae.size
       val rr = new scala.util.Random(7)
-      val core = JointAeKernel.size(3, 3, 2, 2)
+      val core = ae.cfg.size
       val p = Array.tabulate(sz)(i =>
         if (i < core) rr.nextGaussian() * 0.4
         else 1.0 + rr.nextGaussian() * 0.1)
@@ -244,9 +248,9 @@ class BnAeSpec extends AnyFunSuite {
         -0.8 * t + 0.1 * r.nextGaussian())
     }
     val df = rows.toDF("id", "f0", "f1", "f2", "y0", "y1")
-    val model = new BnJointAutoencoder(Seq("f0", "f1", "f2"), "y0",
-      extraTargetCols = Seq("y1"), latentDim = 1, encoderHidden = 6,
-      headHidden = 4, lr = 0.02, epochs = 250, batchFraction = 1.0)
+    val model = new DeepBnAutoencoder(Seq("f0", "f1", "f2"), "y0",
+      extraTargetCols = Seq("y1"), encoderUnits = Seq(6), latentDim = 1,
+      headUnits = Seq(4), lr = 0.02, epochs = 250, batchFraction = 1.0)
       .fit(df)
     val pred = model.predict(df)
     assert(pred.columns.contains("prediction_0") &&

@@ -86,7 +86,9 @@ class DeepBnAeSpec extends AnyFunSuite {
     val m = new DeepBnAutoencoder(feats, "y",
       encoderUnits = Seq(8, 4), latentDim = 1, headUnits = Seq(4),
       lr = 0.02, epochs = 300, seed = 1L, batchFraction = 1.0).fit(df)
-    val pred = m.predict(df)
+    // predict appends latent + prediction; reconstruct the raw recon
+    val pred = m.predict(df).join(m.reconstruct(df).select("id",
+      "recon_0", "recon_1", "recon_2"), "id")
     val mse = pred.select(avg(
       feats.indices.map(f =>
         pow(col(s"recon_$f") - col(feats(f)), 2)).reduce(_ + _) /

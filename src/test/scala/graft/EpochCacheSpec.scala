@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Epoch-loop input caching (VERDICT r11 item 2): every trainer runs N
-  * epochs of treeAggregate over its assembled (features, target) frame
+  * epochs of partition sums over its assembled (features, target) frame
   * — if that frame re-evaluated its parquet scan + feature chain per
   * epoch, a 100 TB fit would pay N full corpus reads, invisible at test
   * scale where the scan is cheap. The audit: all six trainer families
@@ -13,8 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *   MLPRegressor.scala:161,441 / DeepMlp.scala:202,503 (MLP family),
   *   LstmTrainer.scala:345,659 + LstmBn.scala:501 (LSTM family),
   *   AttnTrainer.scala:664,984 (transformer family),
-  *   JointAe.scala:738 / BnAe.scala:671 / DeepAe.scala:358 /
-  *   DeepBnAe.scala:371 (AE families),
+  *   DeepAe.scala:449 / DeepBnAe.scala:422 (AE families),
   *   SoftForest.scala:780 (forest)
   * — and this suite PINS the property behaviorally: local-filesystem
   * bytesRead (Hadoop FileSystem statistics, which count the executor

@@ -4,24 +4,25 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.ml._
 
-/** Joint-loss nonlinear autoencoder (keras_estimators/autoencoder.py):
-  * analytic gradient vs finite differences, recon-beats-PCA at equal
-  * latent dim on a nonlinear manifold, joint target head quality, and
-  * staged-scoring/kernel forward agreement. */
+/** Joint-loss nonlinear autoencoder (keras_estimators/autoencoder.py)
+  * at the reference's default one encoder and one head stage
+  * ([[DeepJointAutoencoder]]): analytic gradient vs finite differences,
+  * recon-beats-PCA at equal latent dim on a nonlinear manifold, joint
+  * target head quality, and staged-scoring/kernel forward agreement. */
 class JointAeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
   test("joint ae: flat gradient matches central finite differences") {
-    val ae = new JointAutoencoder(Seq("f0", "f1", "f2"), "y",
-      latentDim = 2, encoderHidden = 3, headHidden = 2,
+    val ae = new DeepJointAutoencoder(Seq("f0", "f1", "f2"), "y",
+      encoderUnits = Seq(3), latentDim = 2, headUnits = Seq(2),
       reconWeight = 1.0, targetWeight = 0.7)
     val r = new scala.util.Random(5)
     val rows = (0 until 6).map(_ =>
       (r.nextGaussian() * 0.5, r.nextGaussian(), r.nextGaussian(),
         r.nextGaussian()))
     val data = rows.toDF("y", "f0", "f1", "f2")
-    val sz = JointAeKernel.size(3, 3, 2, 2)
+    val sz = ae.kernelCfg.size
     val p = Array.fill(sz)(r.nextGaussian() * 0.4)
     val (g, _) = ae.gradient(data, p)
     val eps = 1e-6
@@ -51,8 +52,8 @@ class JointAeSpec extends AnyFunSuite {
     val df = rows.toDF("id", "f0", "f1", "f2", "y")
     val feats = Seq("f0", "f1", "f2")
 
-    val ae = new JointAutoencoder(feats, "y", latentDim = 1,
-      encoderHidden = 8, headHidden = 4, lr = 0.02, epochs = 300,
+    val ae = new DeepJointAutoencoder(feats, "y", encoderUnits = Seq(8),
+      latentDim = 1, headUnits = Seq(4), lr = 0.02, epochs = 300,
       seed = 1L)
     val model = ae.fit(df)
     val aeRec = model.reconstruct(df)
@@ -91,9 +92,9 @@ class JointAeSpec extends AnyFunSuite {
     }
     val df = rows.toDF("id", "f0", "f1", "f2", "y")
     val feats = Seq("f0", "f1", "f2")
-    val model = new JointAutoencoder(feats, "y", latentDim = 1,
-      encoderHidden = 8, headHidden = 4, gaussianNoise = 0.05,
-      lr = 0.02, epochs = 200, seed = 1L).fit(df)
+    val model = new DeepJointAutoencoder(feats, "y",
+      encoderUnits = Seq(8), latentDim = 1, headUnits = Seq(4),
+      gaussianNoise = 0.05, lr = 0.02, epochs = 200, seed = 1L).fit(df)
     val mse = model.reconstruct(df).select(avg(
       feats.indices.map(f =>
         pow(col(s"recon_$f") - col(feats(f)), 2)).reduce(_ + _) /
@@ -108,22 +109,21 @@ class JointAeSpec extends AnyFunSuite {
     "reference-default rates (0.1/0.1/0.4) still learn the manifold") {
     val r = new scala.util.Random(33)
     val (k, hE, l, hA) = (3, 3, 2, 2)
-    val sz = JointAeKernel.size(k, hE, l, hA)
+    val c = DeepAeKernel.Cfg(k, Seq(hE), l, Seq(hA), encDrop = Seq(0.3),
+      latentDrop = 0.3, headDrop = Seq(0.4))
+    val sz = c.size
     val p = Array.fill(sz)(r.nextGaussian() * 0.4)
-    val w = JointAeKernel.toWeights(p, k, hE, l, hA)
     val x = Array.fill(k)(r.nextGaussian())
-    val y = 0.4
-    val drop = JointAeKernel.AeDrop(enc = 0.3, latent = 0.3, head = 0.4)
+    val y = Array(0.4)
     val ms = 9876L
     val acc = new Array[Double](sz)
-    JointAeKernel.runW(w, x, x, y, 1.0, 0.7, acc, drop, ms)
+    DeepAeKernel.run(p, c, x, x, y, 1.0, 0.7, acc, ms)
     val eps = 1e-6
     for (i <- 0 until sz) {
       val pp = p.clone(); pp(i) += eps
       val pm = p.clone(); pm(i) -= eps
-      def loss(pv: Array[Double]) = JointAeKernel.runW(
-        JointAeKernel.toWeights(pv, k, hE, l, hA), x, x, y, 1.0, 0.7,
-        null, drop, ms)
+      def loss(pv: Array[Double]) =
+        DeepAeKernel.run(pv, c, x, x, y, 1.0, 0.7, null, ms)
       val fd = (loss(pp) - loss(pm)) / (2 * eps)
       assert(math.abs(fd - acc(i)) <= 1e-5 * math.max(1.0, math.abs(fd)),
         s"dropout grad mismatch at $i: analytic=${acc(i)} fd=$fd")
@@ -138,10 +138,10 @@ class JointAeSpec extends AnyFunSuite {
     }
     val df = rows.toDF("id", "f0", "f1", "f2", "y")
     val feats = Seq("f0", "f1", "f2")
-    val model = new JointAutoencoder(feats, "y", latentDim = 1,
-      encoderHidden = 8, headHidden = 4, lr = 0.02, epochs = 300,
-      seed = 1L, dropoutEncoder = 0.1, dropoutLatent = 0.1,
-      dropoutHead = 0.4).fit(df)
+    val model = new DeepJointAutoencoder(feats, "y",
+      encoderUnits = Seq(8), latentDim = 1, headUnits = Seq(4), lr = 0.02,
+      epochs = 300, seed = 1L, encoderDropout = Seq(0.1),
+      latentDropout = 0.1, headDropout = Seq(0.4)).fit(df)
     val mse = model.reconstruct(df).select(avg(
       feats.indices.map(f =>
         pow(col(s"recon_$f") - col(feats(f)), 2)).reduce(_ + _) /
@@ -156,11 +156,11 @@ class JointAeSpec extends AnyFunSuite {
       (r.nextGaussian(), r.nextGaussian(), r.nextGaussian(),
         r.nextGaussian()))
     val df = rows.toDF("y", "f0", "f1", "f2").repartition(1)
-    val ae = new JointAutoencoder(Seq("f0", "f1", "f2"), "y",
-      latentDim = 2, encoderHidden = 3, headHidden = 2,
+    val ae = new DeepJointAutoencoder(Seq("f0", "f1", "f2"), "y",
+      encoderUnits = Seq(3), latentDim = 2, headUnits = Seq(2),
       reconWeight = 1.0, targetWeight = 0.7, targetLoss = "combined",
       mseWeight = 1.0, spearmanWeight = 0.0, rankBatch = 64)
-    val sz = JointAeKernel.size(3, 3, 2, 2)
+    val sz = ae.kernelCfg.size
     val p = Array.fill(sz)(r.nextGaussian() * 0.4)
     val (_, mseLoss) = ae.gradient(df, p)
     val (_, rankLoss) = ae.rankGradient(df, p)
@@ -177,15 +177,22 @@ class JointAeSpec extends AnyFunSuite {
         r.nextGaussian()))
     val df = rows.toDF("y", "f0", "f1", "f2").repartition(1)
     def fitted(tl: String) =
-      new JointAutoencoder(Seq("f0", "f1", "f2"), "y", latentDim = 2,
-        encoderHidden = 3, headHidden = 2, epochs = 10, lr = 0.02,
-        targetLoss = tl, mseWeight = 1.0, spearmanWeight = 0.0,
-        rankBatch = 64).fit(df).weights
+      new DeepJointAutoencoder(Seq("f0", "f1", "f2"), "y",
+        encoderUnits = Seq(3), latentDim = 2, headUnits = Seq(2),
+        epochs = 10, lr = 0.02, targetLoss = tl, mseWeight = 1.0,
+        spearmanWeight = 0.0, rankBatch = 64).fit(df)
+    // one stage's Dense matrix (row-major [in][out]) from the flat kernel
+    def mat(m: DeepJointAutoencoder, s: Int): Array[Double] = {
+      val st = m.kernelCfg.stages(s)
+      m.fittedWeights.slice(m.kernelCfg.stageOff(s),
+        m.kernelCfg.stageOff(s) + st.nIn * st.nOut)
+    }
     val wm = fitted("mse"); val wc = fitted("combined")
-    (wm.wp zip wc.wp).foreach { case (a, b) =>
+    val (head, tap) = (wm.kernelCfg.stages.size - 1, wm.kernelCfg.tapStage)
+    (mat(wm, head) zip mat(wc, head)).foreach { case (a, b) =>
       assert(math.abs(a - b) < 1e-6, s"wp diverged: $a vs $b")
     }
-    (wm.wr.flatten[Double] zip wc.wr.flatten[Double]).foreach {
+    (mat(wm, tap) zip mat(wc, tap)).foreach {
       case (a, b) =>
         assert(math.abs(a - b) < 1e-6, s"wr diverged: $a vs $b")
     }
@@ -205,9 +212,9 @@ class JointAeSpec extends AnyFunSuite {
     }
     val df = rows.toDF("id", "f0", "f1", "f2", "y")
     def spearmanOf(tl: String): Double = {
-      val m = new JointAutoencoder(Seq("f0", "f1", "f2"), "y",
-        latentDim = 2, encoderHidden = 8, headHidden = 4, lr = 0.02,
-        epochs = 150, targetLoss = tl, mseWeight = 1.0,
+      val m = new DeepJointAutoencoder(Seq("f0", "f1", "f2"), "y",
+        encoderUnits = Seq(8), latentDim = 2, headUnits = Seq(4),
+        lr = 0.02, epochs = 150, targetLoss = tl, mseWeight = 1.0,
         spearmanWeight = 2.0, rankTau = 0.3, rankBatch = 64).fit(df)
       Metrics.spearman(m.predict(df), "prediction", "y", Seq.empty)
         .collect()(0).getDouble(0)
@@ -226,9 +233,10 @@ class JointAeSpec extends AnyFunSuite {
         r.nextGaussian())
     }
     val df = rows.toDF("id", "f0", "f1", "f2", "y")
-    val ae = new JointAutoencoder(Seq("f0", "f1", "f2"), "y",
-      latentDim = 2, encoderHidden = 3, headHidden = 2, epochs = 5)
+    val ae = new DeepJointAutoencoder(Seq("f0", "f1", "f2"), "y",
+      encoderUnits = Seq(3), latentDim = 2, headUnits = Seq(2), epochs = 5)
     val model = ae.fit(df)
+    val c = model.kernelCfg
     val out = model.reconstruct(model.transform(df)
       .drop((0 until 2).map(i => s"latent_$i"): _*))
       .join(model.predict(df).select(col("id"),
@@ -238,12 +246,16 @@ class JointAeSpec extends AnyFunSuite {
     out.foreach { row =>
       val x = Array.tabulate(3)(i =>
         (row.getDouble(i) - model.featMeans(i)) / model.featStds(i))
-      val (zl, rec, p) = JointAeKernel.forward(model.weights, x)
+      val acts = new Array[Array[Double]](c.stages.size + 1)
+      DeepAeKernel.run(model.fittedWeights, c, x, x, Array(0.0), 0.0, 0.0,
+        null, actsOut = acts)
+      val (zl, rec, p) =
+        (acts(c.latentStage + 1), acts(c.tapStage + 1), acts.last(0))
       assert(math.abs(zl(0) - row.getDouble(3)) < 1e-9)
       assert(math.abs(zl(1) - row.getDouble(4)) < 1e-9)
       assert(math.abs(rec(0) * model.featStds(0) + model.featMeans(0)
         - row.getDouble(5)) < 1e-9)
-      assert(math.abs(p * model.yStd + model.yMean
+      assert(math.abs(p * model.targetStds(0) + model.targetMeans(0)
         - row.getDouble(6)) < 1e-9)
     }
   }
@@ -251,15 +263,15 @@ class JointAeSpec extends AnyFunSuite {
   test("joint ae multi-output target head (Dense(output_units), " +
     "autoencoder.py:67-69): joint gradient matches finite differences " +
     "with the Keras mean-over-outputs mse") {
-    val ae = new JointAutoencoder(Seq("f0", "f1", "f2"), "y0",
-      extraTargetCols = Seq("y1"), latentDim = 2, encoderHidden = 3,
-      headHidden = 2, reconWeight = 1.0, targetWeight = 0.7)
+    val ae = new DeepJointAutoencoder(Seq("f0", "f1", "f2"), "y0",
+      extraTargetCols = Seq("y1"), encoderUnits = Seq(3), latentDim = 2,
+      headUnits = Seq(2), reconWeight = 1.0, targetWeight = 0.7)
     val r = new scala.util.Random(9)
     val rows = (0 until 6).map(_ =>
       (r.nextGaussian() * 0.5, r.nextGaussian() * 0.5, r.nextGaussian(),
         r.nextGaussian(), r.nextGaussian()))
     val data = rows.toDF("y0", "y1", "f0", "f1", "f2")
-    val sz = JointAeKernel.size(3, 3, 2, 2, out = 2)
+    val sz = ae.kernelCfg.size
     val p = Array.fill(sz)(r.nextGaussian() * 0.4)
     val (g, _) = ae.gradient(data, p)
     val eps = 1e-6
@@ -286,9 +298,9 @@ class JointAeSpec extends AnyFunSuite {
         -0.8 * t + 0.1 * r.nextGaussian())
     }
     val df = rows.toDF("id", "f0", "f1", "f2", "y0", "y1")
-    val m = new JointAutoencoder(Seq("f0", "f1", "f2"), "y0",
-      extraTargetCols = Seq("y1"), latentDim = 1, encoderHidden = 6,
-      headHidden = 4, lr = 0.02, epochs = 200, batchFraction = 1.0)
+    val m = new DeepJointAutoencoder(Seq("f0", "f1", "f2"), "y0",
+      extraTargetCols = Seq("y1"), encoderUnits = Seq(6), latentDim = 1,
+      headUnits = Seq(4), lr = 0.02, epochs = 200, batchFraction = 1.0)
     val model = m.fit(df)
     val pred = model.predict(df)
     assert(pred.columns.contains("prediction_0") &&
@@ -305,11 +317,13 @@ class JointAeSpec extends AnyFunSuite {
     sample.foreach { row =>
       val x = Array.tabulate(3)(i =>
         (row.getDouble(i) - model.featMeans(i)) / model.featStds(i))
-      val po = new Array[Double](2)
-      JointAeKernel.runW(model.weights, x, x, 0.0, 0.0, 0.0, null,
-        predOut = po)
+      val c = model.kernelCfg
+      val acts = new Array[Array[Double]](c.stages.size + 1)
+      DeepAeKernel.run(model.fittedWeights, c, x, x, new Array[Double](2),
+        0.0, 0.0, null, actsOut = acts)
+      val po = acts.last
       for (o <- 0 until 2) {
-        val local = po(o) * model.yStds(o) + model.yMeans(o)
+        val local = po(o) * model.targetStds(o) + model.targetMeans(o)
         assert(math.abs(local - row.getDouble(3 + o)) < 1e-9,
           s"multi AE scorer and kernel disagree on output $o")
       }

@@ -124,12 +124,12 @@ class ModelPersistenceSpec extends AnyFunSuite {
   }
 
   test("joint ae: save -> load transforms AND predicts bit-identically") {
-    val model = new JointAutoencoder(Seq("f0", "f1", "f2"), "y",
-      latentDim = 2, encoderHidden = 3, headHidden = 2, lr = 0.02,
+    val model = new DeepJointAutoencoder(Seq("f0", "f1", "f2"), "y",
+      encoderUnits = Seq(3), latentDim = 2, headUnits = Seq(2), lr = 0.02,
       epochs = 10).fit(tabFrame)
     val p = tmp("joint_ae.json")
     model.save(p)
-    val loaded = JointAeModel.load(p)
+    val loaded = DeepJointAutoencoder.load(p)
     assertBitEqual(model.predict(tabFrame), loaded.predict(tabFrame),
       Seq("latent_0", "latent_1", "prediction"))
     assertBitEqual(model.reconstruct(tabFrame),
@@ -138,15 +138,15 @@ class ModelPersistenceSpec extends AnyFunSuite {
 
   test("bn ae: save -> load (kernel + folded BN affines) is " +
     "bit-identical") {
-    val model = new BnJointAutoencoder(Seq("f0", "f1", "f2"), "y",
-      latentDim = 2, encoderHidden = 3, headHidden = 2, lr = 0.02,
+    val model = new DeepBnAutoencoder(Seq("f0", "f1", "f2"), "y",
+      encoderUnits = Seq(3), latentDim = 2, headUnits = Seq(2), lr = 0.02,
       epochs = 6, batchSize = 16).fit(tabFrame)
     val p = tmp("bn_ae.json")
     model.save(p)
     assertBitEqual(model.predict(tabFrame),
-      BnAeModel.load(p).predict(tabFrame),
+      DeepBnAutoencoder.load(p).predict(tabFrame),
       Seq("latent_0", "latent_1", "prediction"))
-    intercept[IllegalArgumentException] { JointAeModel.load(p) }
+    intercept[IllegalArgumentException] { DeepJointAutoencoder.load(p) }
   }
 
   test("deep ae: multi-output save -> load is bit-identical") {

@@ -327,35 +327,45 @@ class RankLossSpec extends AnyFunSuite {
     }
     // joint AE: the kernel's target backward carries 2·tw/out, so the
     // identity weight is mseWeight = 1
+    // one stage's Dense matrix (row-major [in][out]) of a flat AE kernel
+    def mat(w: Array[Double], c: DeepAeKernel.Cfg, s: Int): Array[Double] =
+      w.slice(c.stageOff(s),
+        c.stageOff(s) + c.stages(s).nIn * c.stages(s).nOut)
     def ae(loss: String) =
-      new JointAutoencoder(Seq("f0", "f1", "f2"), "y0",
-        extraTargetCols = Seq("y1"), latentDim = 2, encoderHidden = 4,
-        headHidden = 3, lr = 0.02, epochs = 5, batchFraction = 1.0,
+      new DeepJointAutoencoder(Seq("f0", "f1", "f2"), "y0",
+        extraTargetCols = Seq("y1"), encoderUnits = Seq(4), latentDim = 2,
+        headUnits = Seq(3), lr = 0.02, epochs = 5, batchFraction = 1.0,
         targetLoss = loss, mseWeight = 1.0, spearmanWeight = 0.0,
-        rankBatch = 64).fit(df).weights
+        rankBatch = 64).fit(df)
     val am = ae("mse"); val ac = ae("combined")
-    (am.wpM.flatten[Double] zip ac.wpM.flatten[Double]).foreach {
+    val aHead = am.kernelCfg.stages.size - 1
+    (mat(am.fittedWeights, am.kernelCfg, aHead) zip
+      mat(ac.fittedWeights, ac.kernelCfg, aHead)).foreach {
       case (x, y2) => assert(math.abs(x - y2) < 1e-6,
         s"ae head diverged: $x vs $y2")
     }
-    (am.we.flatten[Double] zip ac.we.flatten[Double]).foreach {
+    (mat(am.fittedWeights, am.kernelCfg, 0) zip
+      mat(ac.fittedWeights, ac.kernelCfg, 0)).foreach {
       case (x, y2) => assert(math.abs(x - y2) < 1e-6,
         s"ae encoder diverged: $x vs $y2")
     }
     // BN AE: both paths batch identically (shuffledBatches at batchSize),
     // so the identity holds per batch at mseWeight = 1 for ANY batch mix
     def bnAe(loss: String) =
-      new BnJointAutoencoder(Seq("f0", "f1", "f2"), "y0",
-        extraTargetCols = Seq("y1"), latentDim = 2, encoderHidden = 4,
-        headHidden = 3, lr = 0.02, epochs = 5, batchFraction = 1.0,
+      new DeepBnAutoencoder(Seq("f0", "f1", "f2"), "y0",
+        extraTargetCols = Seq("y1"), encoderUnits = Seq(4), latentDim = 2,
+        headUnits = Seq(3), lr = 0.02, epochs = 5, batchFraction = 1.0,
         batchSize = 16, targetLoss = loss, mseWeight = 1.0,
-        spearmanWeight = 0.0).fit(df).weights
+        spearmanWeight = 0.0).fit(df)
     val bm = bnAe("mse"); val bc = bnAe("combined")
-    (bm.core.wpM.flatten[Double] zip bc.core.wpM.flatten[Double]).foreach {
+    val bHead = bm.cfg.stages.size - 1
+    (mat(bm.fittedWeights, bm.cfg, bHead) zip
+      mat(bc.fittedWeights, bc.cfg, bHead)).foreach {
       case (x, y2) => assert(math.abs(x - y2) < 1e-6,
         s"bn-ae head diverged: $x vs $y2")
     }
-    (bm.core.we.flatten[Double] zip bc.core.we.flatten[Double]).foreach {
+    (mat(bm.fittedWeights, bm.cfg, 0) zip
+      mat(bc.fittedWeights, bc.cfg, 0)).foreach {
       case (x, y2) => assert(math.abs(x - y2) < 1e-6,
         s"bn-ae encoder diverged: $x vs $y2")
     }

@@ -279,4 +279,23 @@ class ErrorContractSpec extends AnyFunSuite {
       assert(e.getMessage.contains("target columns repeat a name"))
     }
   }
+
+  test("a repeated target name in the soft forest and both autoencoders " +
+    "is refused before the fit frame is cached") {
+    import spark.implicits._
+    val df = Seq((0.1, 1.0, 2.0), (0.2, 3.0, 4.0)).toDF("f0", "y", "y2")
+    for (fit <- Seq[() => Any](
+        () => new graft.ml.SoftNdfRegressor(Seq("f0"), "y",
+          extraTargetCols = Seq("y"), epochs = 1).fit(df),
+        () => new graft.ml.DeepJointAutoencoder(Seq("f0"), "y",
+          extraTargetCols = Seq("y2", "y"), epochs = 1).fit(df),
+        () => new graft.ml.DeepBnAutoencoder(Seq("f0"), "y",
+          extraTargetCols = Seq("y"), epochs = 1).fit(df))) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val e = intercept[IllegalArgumentException](fit())
+      assert(e.getMessage.contains("target columns repeat a name"))
+      assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+        "the refused fit left a cached frame")
+    }
+  }
 }

@@ -117,14 +117,20 @@ class TrainerDeterminismSpec extends AnyFunSuite {
   test("autoencoders: joint (mse and rank), deep, bn and deep-bn repeat " +
     "bit for bit at local[4]") {
     for (loss <- Seq("mse", "combined"))
-      repeats(() => parts(new JointAutoencoder(feats, "y", latentDim = 2,
-        encoderHidden = 4, headHidden = 3, epochs = 3, batchFraction = 1.0,
-        targetLoss = loss, rankBatch = 8).fit(df)))
+      repeats(() => parts(new DeepJointAutoencoder(feats, "y",
+        encoderUnits = Seq(4), latentDim = 2, headUnits = Seq(3),
+        epochs = 3, batchFraction = 1.0, targetLoss = loss,
+        rankBatch = 8).fit(df)))
     repeats(() => parts(new DeepJointAutoencoder(feats, "y", epochs = 3,
       batchFraction = 1.0, latentDropout = 0.1).fit(df)))
-    repeats(() => parts(new BnJointAutoencoder(feats, "y", latentDim = 2,
-      encoderHidden = 4, headHidden = 3, epochs = 3, batchFraction = 1.0,
-      batchSize = 8, bnInference = "moving_average").fit(df)))
+    // the BN chain at one encoder and one head stage: both inference
+    // modes, and the rank path's two kernel passes per batch
+    for ((mode, loss) <- Seq(("moving_average", "mse"),
+        ("population", "mse"), ("population", "combined")))
+      repeats(() => parts(new DeepBnAutoencoder(feats, "y",
+        encoderUnits = Seq(4), latentDim = 2, headUnits = Seq(3),
+        epochs = 3, batchFraction = 1.0, batchSize = 8,
+        bnInference = mode, targetLoss = loss).fit(df)))
     for (mode <- Seq("moving_average", "population"))
       repeats(() => parts(new DeepBnAutoencoder(feats, "y", epochs = 3,
         batchFraction = 1.0, batchSize = 8, bnInference = mode).fit(df)))
