@@ -426,10 +426,9 @@ object QueriesSim {
     // IVF-PQ (Jégou et al. 2011 §V / the FAISS IVFPQ structure): coarse
     // cells prune the scan, residual PQ codes bound the bytes per
     // candidate, exact re-rank touches only the shortlist — the full
-    // web-scale ANN index under one oracle. Runs through the DATA-form
-    // path (centroids/codebooks broadcast as frames, plan size
-    // independent of nlist·m·nk — the production shape); the literal
-    // path is pinned equal in SimSpec.
+    // web-scale ANN index under one oracle. Centroids and codebooks
+    // broadcast as frames, so the plan size is independent of nlist·m·nk;
+    // DataFormAnnSpec pins it equal to a literal-table reference.
     "q_ivfpq_topk" -> ((s, dir) => {
       val corpus = emb(s, dir)
       val coarse = IvfCosine.centroidsDf(s,
@@ -555,9 +554,9 @@ object QueriesSim {
     // item 2): nlist scales with the corpus (max(16, ceil(N/125)) — the
     // md5 grid is enumerable at any size, so the oracle derives the
     // same grid from count(*) in SQL), keeping the self-kNN probe join
-    // N·cell instead of N²/const; the grid enters the assignment and
-    // the probe routing as one matrix literal, so the PLAN is also
-    // nlist-independent. 16 cells at the gate scales (500/2000 rows),
+    // N·cell instead of N²/const; the grid enters the assignment as one
+    // kernel matrix and the probe routing as a broadcast (cell, cvec)
+    // frame, so the PLAN is also nlist-independent. 16 cells at the gate scales (500/2000 rows),
     // 160 at the sf1 checkpoint — cells stay ~125 rows at every scale.
     "q_umap_ivf" -> ((s, dir) => {
       val e = emb(s, dir)

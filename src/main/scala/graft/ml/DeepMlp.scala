@@ -267,7 +267,13 @@ class DeepMLPRegressor(
       "lr" -> lr.toString, "epochs" -> epochs.toString,
       "seed" -> seed.toString,
       "batchFraction" -> batchFraction.toString, "loss" -> loss,
-      "dropoutRate" -> dropoutRate.toString, "optimizer" -> optimizer),
+      "dropoutRate" -> dropoutRate.toString, "optimizer" -> optimizer) ++
+      // the rank-loss settings only shape a spearman/combined fit, so an
+      // mse payload stays byte-identical to the layout that omitted them
+      (if (loss == "mse") Map.empty[String, String]
+       else Map("mseWeight" -> mseWeight.toString,
+         "spearmanWeight" -> spearmanWeight.toString,
+         "rankTau" -> rankTau.toString, "rankBatch" -> rankBatch.toString)),
       ("flat" -> weights) +: ts)
   }
 
@@ -303,6 +309,10 @@ object DeepMLPRegressor {
       scaleTarget = meta("scaleTarget").toBoolean,
       batchFraction = meta("batchFraction").toDouble,
       loss = meta("loss"),
+      mseWeight = meta.get("mseWeight").fold(2.0)(_.toDouble),
+      spearmanWeight = meta.get("spearmanWeight").fold(1.0)(_.toDouble),
+      rankTau = meta.get("rankTau").fold(1e-3)(_.toDouble),
+      rankBatch = meta.get("rankBatch").fold(64)(_.toInt),
       dropoutRate = meta("dropoutRate").toDouble,
       optimizer = meta("optimizer"))
     val flat = sections("flat")

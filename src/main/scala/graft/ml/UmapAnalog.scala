@@ -61,8 +61,9 @@ object UmapAnalog {
   /** The SCALE path for the kNN graph: [[IvfCosine]] cell-partitioned
     * search over the pinned md5 grid of `nlist` cells — corpus and
     * probes shuffle once on the cell id instead of broadcasting the
-    * whole corpus as probes, and the grid enters the plan as one matrix
-    * literal, so a corpus-scaled nlist adds no plan nodes. Same (src,
+    * whole corpus as probes, and the grid enters the plan as one kernel
+    * matrix (assignment) and one broadcast frame (routing), so a
+    * corpus-scaled nlist adds no plan nodes. Same (src,
     * dst) edge contract as [[bruteKnnEdges]]; at nprobe == nlist the
     * candidate set is the full corpus and the edges are IDENTICAL to
     * brute force (the ranking key (cosine desc, nid) is shared), which

@@ -51,8 +51,8 @@ object AnnIndexIO {
 
   // ------------------------------------------------------------- IVF-PQ
 
-  /** Persist a built IVF-PQ index: `codes` must be
-    * [[IvfPq.encode]]/[[IvfPq.encodeDf]] output over the full corpus. */
+  /** Persist a built IVF-PQ index: `codes` must be [[IvfPq.encodeDf]]
+    * output over the full corpus. */
   def saveIvfPq(path: String, coarse: Array[Array[Double]],
       codebooks: Array[Array[Array[Double]]], codes: DataFrame,
       idCol: String): Unit = {
@@ -79,8 +79,9 @@ object AnnIndexIO {
   }
 
   /** Rehydrate a [[saveIvfPq]] artifact (family/shape/row-count
-    * validated). Search the result with [[IvfPq.search]]/[[IvfPq
-    * .searchDf]] passing the loaded coarse/codebooks and `codes`. */
+    * validated). Search the result with [[IvfPq.searchDf]], passing
+    * `codes` and the loaded coarse/codebooks as frames
+    * ([[IvfCosine.centroidsDf]], [[PqCosine.codebooksDf]]). */
   def loadIvfPq(spark: SparkSession, path: String,
       verifyRows: Boolean = true): IvfPqIndex = {
     val (meta, sections) = graft.ml.WeightsIO.load(s"$path/params.json")

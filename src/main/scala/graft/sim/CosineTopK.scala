@@ -31,14 +31,43 @@ object CosineTopK {
       sqrt(Similarity.dotExpr(col(vecCol), col(vecCol), dim)).as("__cn"))
     val p = probes.select(col(qidCol), col(qvecCol),
       sqrt(Similarity.dotExpr(col(qvecCol), col(qvecCol), dim)).as("__qn"))
-    val joined = c.crossJoin(broadcast(p))
+    topK(c.crossJoin(broadcast(p))
       .where(col(qidCol) =!= col(idCol))
       .select(col(qidCol).as("qid"), col(idCol).as("nid"),
         (Similarity.dotExpr(col(qvecCol), col(vecCol), dim)
-          / (col("__qn") * col("__cn"))).as("cosine"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cosine").desc, col("nid"))
-    joined.withColumn("rank", row_number().over(w))
+          / (col("__qn") * col("__cn"))).as("cosine")), k)
+  }
+
+  /** The per-probe top-k step every search ends in: over a scored
+    * (qid, nid, cosine, …) frame, `rank` = row_number per qid by
+    * (cosine desc, nid), kept while `rank <= k`. */
+  private[sim] def topK(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(Window.partitionBy(col("qid"))
+        .orderBy(col("cosine").desc, col("nid"))))
       .where(col("rank") <= k)
+
+  /** The shortlist + exact re-rank tail of the quantized searches (PQ,
+    * SQ8, IVF-PQ): over the scored candidates (qidCol, qvecCol, __qn,
+    * idCol, approx_cos), keep the `shortlist` best per probe by
+    * (approx_cos desc, id), join the raw corpus vectors for only those
+    * rows, and rank them by exact cosine to the top `k`. Each caller
+    * keeps its own `approx_cos` expression. Output: (qid, nid, cosine,
+    * approx_cos, rank). */
+  private[sim] def rerank(scored: DataFrame, corpus: DataFrame,
+      idCol: String, vecCol: String, qidCol: String, qvecCol: String,
+      k: Int, shortlist: Int): DataFrame = {
+    val short = scored
+      .withColumn("__arank", row_number().over(
+        Window.partitionBy(col(qidCol))
+          .orderBy(col("approx_cos").desc, col(idCol))))
+      .where(col("__arank") <= shortlist)
+    topK(short
+      .join(corpus.select(col(idCol), col(vecCol),
+        sqrt(Similarity.dot(col(vecCol), col(vecCol))).as("__cn")),
+        Seq(idCol))
+      .select(col(qidCol).as("qid"), col(idCol).as("nid"),
+        (Similarity.dot(col(qvecCol), col(vecCol))
+          / (col("__qn") * col("__cn"))).as("cosine"),
+        col("approx_cos")), k)
   }
 }

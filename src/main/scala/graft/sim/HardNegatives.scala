@@ -1,7 +1,6 @@
 package graft.sim
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.dedup.Similarity
 import graft.functions.FastRound
@@ -58,12 +57,7 @@ object HardNegatives {
     * IVF shortlist joined with labels, …). Filters first, ranks second. */
   def fromScored(scored: DataFrame, k: Int, maxCos: Double): DataFrame = {
     require(k >= 1, s"k=$k must be >= 1")
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cosine").desc, col("nid"))
-    scored
-      .where(col("nlabel") =!= col("qlabel") &&
-        col("cosine") <= lit(maxCos))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+    CosineTopK.topK(scored.where(col("nlabel") =!= col("qlabel") &&
+      col("cosine") <= lit(maxCos)), k)
   }
 }

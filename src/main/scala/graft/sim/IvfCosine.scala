@@ -17,11 +17,11 @@ import graft.functions.NearestCentroid
   * 100k) — k-means centroids don't improve past that, and at 100 TB
   * feeding the full corpus through the featurizer would be the
   * bottleneck. Cell assignment of the full corpus IS distributed and
-  * map-side: MLlib's `transform` broadcasts the tiny centroid set and
-  * predicts per row (no shuffle, no collect). Centroid tables are carried
-  * as single array literals, never unrolled into per-coefficient
-  * expression nodes (which would exceed codegen method limits and ship a
-  * multi-MB plan with every task).
+  * map-side: the `nearest_centroid` kernel holds the centroid matrix as
+  * one reference object and assigns per row (no shuffle, no collect).
+  * Probe routing broadcasts the grid as a (cell, cvec) frame. Neither
+  * plan grows with nlist; per-centroid expression nodes would exceed
+  * codegen method limits and ship a multi-MB plan with every task.
   */
 object IvfCosine {
 
@@ -707,7 +707,7 @@ object IvfCosine {
     * 10 Lloyd iterations as 10 distributed MLlib jobs is pure scheduling
     * overhead at any scale — the sample is the same size either way.
     * Cell assignment of the full corpus stays distributed and codegen'd
-    * (assignByCentroids: centroid literals + the VecDot kernel). */
+    * (assignByCentroids: the `nearest_centroid` kernel). */
   def buildIndex(corpus: DataFrame, idCol: String, vecCol: String,
       nlist: Int, seed: Long = 42L, maxTrainRows: Int = 100000,
       iters: Int = 10): Index = {
@@ -874,79 +874,53 @@ object IvfCosine {
   }
 
   /** Top-k cosine neighbors per probe, scanning only the nprobe closest
-    * cells of each probe. Probes carry (qidCol, qvecCol). */
+    * cells of each probe. Probes carry (qidCol, qvecCol). The index's
+    * centroid grid routes as data ([[searchDf]]). */
   def search(index: Index, probes: DataFrame, idCol: String, vecCol: String,
       qidCol: String, qvecCol: String, k: Int, nprobe: Int,
-      dim: Int): DataFrame = {
-    // centroid table as ONE nested-array literal; probe-side cell ranking
-    // explodes nlist tiny structs per probe (probes are the small side)
-    val cents = typedlit(index.centroids)
-    val qn = sqrt(Similarity.dotExpr(col(qvecCol), col(qvecCol), dim))
-    val probeCells = probes
-      .select(col(qidCol), col(qvecCol), qn.as("__qn"),
-        posexplode(cents).as(Seq("__c0", "cvec")))
-      .withColumn("__csim",
-        Similarity.dot(col(qvecCol), col("cvec"))
-          / (col("__qn") * sqrt(Similarity.dot(col("cvec"), col("cvec")))))
-      .withColumn("__crank", row_number().over(
-        Window.partitionBy(col(qidCol))
-          .orderBy(col("__csim").desc, col("__c0"))))
-      .where(col("__crank") <= nprobe)
-      .select(col(qidCol), col(qvecCol), col("__qn"),
-        col("__c0").as("cell"))
-    searchCore(probeCells, index.assigned, idCol, vecCol, qidCol, qvecCol,
-      k, dim)
-  }
+      dim: Int): DataFrame =
+    searchDf(index.assigned, probes, idCol, vecCol, qidCol, qvecCol,
+      centroidsDf(probes.sparkSession, index.centroids), k, nprobe, dim)
 
-  /** Data-form search: the centroid grid arrives as a (cell, cvec)
-    * DataFrame and probe routing runs as a broadcast join + per-probe
-    * rank — the plan size is INDEPENDENT of nlist (the literal path's
-    * Catalyst tree grows O(nlist), which a corpus-scaled cell count
-    * outgrows). Values are
-    * identical to [[search]]: same cosine routing, same (desc, cell)
-    * tie order, same cell equi-join core (SimSpec pins literal ≡ data). */
+  /** [[search]] with the centroid grid as a (cell, cvec) DataFrame:
+    * [[route]] picks each probe's cells, the probe cells equi-join the
+    * assigned corpus on the cell id (the join that dynamic partition
+    * pruning narrows to the probed directories of a loaded index), and
+    * the exact cosine ranks the top k per probe. */
   def searchDf(assigned: DataFrame, probes: DataFrame, idCol: String,
       vecCol: String, qidCol: String, qvecCol: String,
       centroids: DataFrame, k: Int, nprobe: Int, dim: Int): DataFrame = {
-    // centroid self-norms precomputed once per centroid inside the
-    // broadcast (same IEEE value as the per-pair form — one sqrt of
-    // the same fold)
-    val cents = broadcast(centroids.select(col("cell").as("__c0"),
-      col("cvec").as("__cv"),
-      sqrt(Similarity.dot(col("cvec"), col("cvec"))).as("__cn0")))
     val qn = sqrt(Similarity.dotExpr(col(qvecCol), col(qvecCol), dim))
-    val probeCells = probes
-      .select(col(qidCol), col(qvecCol), qn.as("__qn"))
-      .crossJoin(cents)
-      .withColumn("__csim",
-        Similarity.dot(col(qvecCol), col("__cv"))
-          / (col("__qn") * col("__cn0")))
-      .withColumn("__crank", row_number().over(
-        Window.partitionBy(col(qidCol))
-          .orderBy(col("__csim").desc, col("__c0"))))
-      .where(col("__crank") <= nprobe)
-      .select(col(qidCol), col(qvecCol), col("__qn"),
-        col("__c0").as("cell"))
-    searchCore(probeCells, assigned, idCol, vecCol, qidCol, qvecCol,
-      k, dim)
-  }
-
-  /** Shared in-cell scan + exact ranking behind both routing paths:
-    * probeCells (qid, qvec, __qn, cell) equi-join the assigned corpus
-    * on the cell id, cosine, top-k per probe. */
-  private def searchCore(probeCells: DataFrame, assigned: DataFrame,
-      idCol: String, vecCol: String, qidCol: String, qvecCol: String,
-      k: Int, dim: Int): DataFrame = {
+    val probeCells = route(probes.select(col(qidCol), col(qvecCol),
+      qn.as("__qn")), qidCol, qvecCol, centroids, nprobe)
     val corpus = assigned.select(col(idCol), col(vecCol), col("cell"),
       sqrt(Similarity.dotExpr(col(vecCol), col(vecCol), dim)).as("__cn"))
-    probeCells.join(corpus, Seq("cell"))
+    CosineTopK.topK(probeCells.join(corpus, Seq("cell"))
       .where(col(qidCol) =!= col(idCol))
       .select(col(qidCol).as("qid"), col(idCol).as("nid"),
         (Similarity.dotExpr(col(qvecCol), col(vecCol), dim)
-          / (col("__qn") * col("__cn"))).as("cosine"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid"))
-          .orderBy(col("cosine").desc, col("nid"))))
-      .where(col("rank") <= k)
+          / (col("__qn") * col("__cn"))).as("cosine")), k)
+  }
+
+  /** The probe router of every IVF search: each probe keeps the
+    * `nprobe` cells closest by centroid cosine `dot(q, c) / (__qn·‖c‖)`,
+    * ties to the lowest cell id. `probes` carries (qidCol, qvecCol,
+    * __qn = ‖q‖) and any further columns, which pass through; the
+    * (cell, cvec) grid broadcasts with ‖c‖ computed once per centroid,
+    * so the plan does not grow with nlist. Adds `__qc = dot(q, c)` (the
+    * IVF-PQ score's centroid term) and `cell`. */
+  private[sim] def route(probes: DataFrame, qidCol: String,
+      qvecCol: String, centroids: DataFrame, nprobe: Int): DataFrame = {
+    val cents = broadcast(centroids.select(col("cell").as("__c0"),
+      col("cvec").as("__cv"),
+      sqrt(Similarity.dot(col("cvec"), col("cvec"))).as("__cn0")))
+    probes.crossJoin(cents)
+      .withColumn("__qc", Similarity.dot(col(qvecCol), col("__cv")))
+      .withColumn("__crank", row_number().over(
+        Window.partitionBy(col(qidCol)).orderBy(
+          (col("__qc") / (col("__qn") * col("__cn0"))).desc, col("__c0"))))
+      .where(col("__crank") <= nprobe)
+      .select(probes.columns.map(col) :+ col("__qc") :+
+        col("__c0").as("cell"): _*)
   }
 }

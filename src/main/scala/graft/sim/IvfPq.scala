@@ -1,7 +1,6 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.dedup.Similarity
 
@@ -21,19 +20,16 @@ import graft.dedup.Similarity
   * are fetched only for the shortlist. All three stages are the same
   * join/projection shapes as [[IvfCosine]] and [[PqCosine]].
   *
-  * Two parameter-delivery paths share the ADC/shortlist/re-rank core:
-  * the LITERAL path interpolates the centroid grid and codebooks into
-  * the plan as `typedlit` tables (right for small pinned grids — pure
-  * codegen, zero joins), and the DATA path takes them as DataFrames
-  * (`coarse` = (cell, cvec), `codebooks` = (m, k, bv)) and
-  * broadcast-joins assignment, encoding, LUT construction and probe
-  * routing — the plan size is then INDEPENDENT of nlist·m·nk, which is
-  * what survives production nlist (the literal encoder's O(nlist·m·nk)
-  * correction table would otherwise hit janino method limits and ship a
-  * multi-MB plan with every task). Encoding in the data path stays one
-  * pass: the broadcast fan-out to m·nk candidates per row collapses
+  * The coarse centroids and codebooks arrive as DataFrames (`coarse` =
+  * (cell, cvec), `codebooks` = (m, k, bv)), and encoding, LUT
+  * construction and probe routing broadcast-join them, so the plan
+  * size is INDEPENDENT of nlist·m·nk — a literal correction table of
+  * O(nlist·m·nk) entries would hit janino method limits and ship a
+  * multi-MB plan with every task at production nlist. Encoding stays
+  * one pass: the broadcast fan-out to m·nk candidates per row collapses
   * back map-side through per-subspace partial min aggregates before the
-  * single id-keyed exchange.
+  * single id-keyed exchange. Routing is [[IvfCosine.route]], and the
+  * shortlist and exact re-rank are [[CosineTopK.rerank]].
   *
   * Numeric contract for the oracle: residual dot products are computed
   * as the DIFFERENCE OF TWO DOTS, `s·c − c_cell_s·c` (never materializing
@@ -41,9 +37,8 @@ import graft.dedup.Similarity
   * chain `qc + t₀ + … + t₇` — the DuckDB SQL mirrors both forms, so the
   * full index — assignment, residual encoding, probe routing, ADC,
   * re-rank — verifies bit-for-bit against pinned centroid/codebook
-  * grids, through EITHER path (the data path is value-identical by
-  * construction: same VecDot kernels, same argmin and ranking orders —
-  * pinned by literal≡data equality tests).
+  * grids. DataFormAnnSpec pins it equal, bit for bit, to a literal-table
+  * reference that interpolates the grids into the plan.
   * North-star extension beyond the reference (SURVEY.md §7.6).
   */
 object IvfPq {
@@ -83,46 +78,16 @@ object IvfPq {
     }
   }
 
-  /** Residual-PQ encoding against fixed coarse centroids + codebooks.
-    * Output: (idCol, cell, codes array<int>, nrm). The per-subspace
-    * comparator drops the constant `r·r` term: argmin_k of
-    * `cc_k − 2·(s·c_k − c_cell_s·c_k)`, where the `c_cell_s·c_k`
-    * corrections are 3-D literals indexed by the runtime cell id. */
-  def encode(corpus: DataFrame, idCol: String, vecCol: String,
-      coarse: Array[Array[Double]],
-      codebooks: Array[Array[Array[Double]]]): DataFrame = {
-    val subDim = codebooks(0)(0).length
-    val assigned = IvfCosine
-      .assignByCentroids(corpus, idCol, vecCol, coarse).assigned
-    val codeCols: Seq[Column] = codebooks.toIndexedSeq.zipWithIndex.map {
-      case (book, mi) =>
-        val sub = slice(col(vecCol), mi * subDim + 1, subDim)
-        val cands = book.zipWithIndex.map { case (ck, ki) =>
-          val cc = ck.map(x => x * x).sum
-          // corr(cell) = c_cell subvector · ck, one literal per cell
-          val corr = coarse.map { cent =>
-            val cs = cent.slice(mi * subDim, (mi + 1) * subDim)
-            cs.zip(ck).map { case (a, b) => a * b }.sum
-          }
-          val rDot = Similarity.dot(sub, typedlit(ck)) -
-            element_at(typedlit(corr), col("cell") + 1)
-          struct((lit(cc) - lit(2.0) * rDot).as("d"), lit(ki).as("code"))
-        }
-        array_min(array(cands.toIndexedSeq: _*)).getField("code")
-    }
-    assigned.select(col(idCol), col("cell"),
-      array(codeCols: _*).as("codes"),
-      sqrt(Similarity.dot(col(vecCol), col(vecCol))).as("nrm"))
-  }
-
-  /** Data-form residual-PQ encoding: `coarse` = (cell, cvec) and
-    * `codebooks` = (m, k, bv) arrive as DataFrames. The coarse cell
+  /** Residual-PQ encoding: `coarse` = (cell, cvec) and `codebooks` =
+    * (m, k, bv) arrive as DataFrames. The coarse cell
     * comes from [[IvfCosine.assignByCentroidsDf]] (the
     * `nearest_centroid` kernel, no fan-out); the codebooks broadcast-
     * join, and only `m` (the subspace count — a structural constant
     * like a column list, never a scale axis) shapes the plan: one
     * codebook fan-out, m partial-min aggregates, one id-keyed exchange.
-    * Values identical to the literal encoder. */
+    * The per-subspace comparator drops the constant `r·r` term: argmin_k
+    * of `cc_k − 2·(s·c_k − c_cell_s·c_k)`, ties to the lowest code.
+    * Output: (idCol, cell, codes array<int>, nrm). */
   def encodeDf(corpus: DataFrame, idCol: String, vecCol: String,
       coarse: DataFrame, codebooks: DataFrame, m: Int): DataFrame = {
     val assigned = IvfCosine
@@ -150,45 +115,11 @@ object IvfPq {
         col("nrm"))
   }
 
-  /** Probe the `nprobe` cells closest by centroid cosine (same routing
-    * as [[IvfCosine.search]]), ADC-score in-cell candidates, keep the
-    * `shortlist` best per probe, exact-re-rank to the top `k`. */
-  def search(codes: DataFrame, corpus: DataFrame, probes: DataFrame,
-      idCol: String, vecCol: String, qidCol: String, qvecCol: String,
-      coarse: Array[Array[Double]],
-      codebooks: Array[Array[Array[Double]]], k: Int, nprobe: Int,
-      shortlist: Int): DataFrame = {
-    val m = codebooks.length
-    val nk = codebooks(0).length
-    val subDim = codebooks(0)(0).length
-    val cents = typedlit(coarse)
-    val lutTerms: Seq[Column] = for {
-      mi <- 0 until m; ki <- 0 until nk
-    } yield Similarity.dot(slice(col(qvecCol), mi * subDim + 1, subDim),
-      typedlit(codebooks(mi)(ki)))
-    val qn = sqrt(Similarity.dot(col(qvecCol), col(qvecCol)))
-    // routing: top-nprobe cells by centroid cosine (ties to low cell id),
-    // carrying the raw dot(q, c_cell) the ADC score needs
-    val probeCells = probes
-      .select(col(qidCol), col(qvecCol), qn.as("__qn"),
-        array(lutTerms: _*).as("__lut"),
-        posexplode(cents).as(Seq("__c0", "cvec")))
-      .withColumn("__qc", Similarity.dot(col(qvecCol), col("cvec")))
-      .withColumn("__csim", col("__qc")
-        / (col("__qn") * sqrt(Similarity.dot(col("cvec"), col("cvec")))))
-      .withColumn("__crank", row_number().over(
-        Window.partitionBy(col(qidCol))
-          .orderBy(col("__csim").desc, col("__c0"))))
-      .where(col("__crank") <= nprobe)
-      .select(col(qidCol), col(qvecCol), col("__qn"), col("__lut"),
-        col("__qc"), col("__c0").as("cell"))
-    adcRerank(probeCells, codes, corpus, idCol, vecCol, qidCol, qvecCol,
-      m, nk, k, shortlist)
-  }
-
-  /** Data-form search: LUT construction and probe routing run as
-    * broadcast joins against the (m, k, bv) / (cell, cvec) frames —
-    * plan size independent of nlist and nk — then the same ADC core. */
+  /** Probe the `nprobe` cells closest by centroid cosine
+    * ([[IvfCosine.route]]), ADC-score the in-cell candidates, keep the
+    * `shortlist` best per probe, exact-re-rank to the top `k`. The
+    * per-probe LUT is one broadcast join against the (m, k, bv) frame,
+    * so the plan size is independent of nlist and nk. */
   def searchDf(codes: DataFrame, corpus: DataFrame, probes: DataFrame,
       idCol: String, vecCol: String, qidCol: String, qvecCol: String,
       coarse: DataFrame, codebooks: DataFrame, k: Int, nprobe: Int,
@@ -197,8 +128,8 @@ object IvfPq {
       col("k").as("__k"), col("bv").as("__bv")))
     val subDim = size(col("__bv"))
     // flat LUT per probe, position mi·nk + ki: collected as (m, k, v)
-    // structs and sorted — (m, k) is unique, so the order matches the
-    // literal path's comprehension order exactly
+    // structs and sorted — (m, k) is unique, so lut[mi·nk + ki] =
+    // q_mi · c_{mi,ki}
     val lutVal = Similarity.dot(
       slice(col(qvecCol), col("__m") * subDim + 1, subDim), col("__bv"))
     val withLut = probes.crossJoin(cb)
@@ -209,51 +140,17 @@ object IvfPq {
       .select(col(qidCol), col(qvecCol),
         sqrt(Similarity.dot(col(qvecCol), col(qvecCol))).as("__qn"),
         transform(col("__l0"), x => x.getField("v")).as("__lut"))
-    val cents = broadcast(coarse.select(col("cell").as("__c0"),
-      col("cvec").as("__cv")))
-    val probeCells = withLut.crossJoin(cents)
-      .withColumn("__qc", Similarity.dot(col(qvecCol), col("__cv")))
-      .withColumn("__csim", col("__qc")
-        / (col("__qn") * sqrt(Similarity.dot(col("__cv"), col("__cv")))))
-      .withColumn("__crank", row_number().over(
-        Window.partitionBy(col(qidCol))
-          .orderBy(col("__csim").desc, col("__c0"))))
-      .where(col("__crank") <= nprobe)
-      .select(col(qidCol), col(qvecCol), col("__qn"), col("__lut"),
-        col("__qc"), col("__c0").as("cell"))
-    adcRerank(probeCells, codes, corpus, idCol, vecCol, qidCol, qvecCol,
-      m, nk, k, shortlist)
-  }
-
-  /** Shared ADC + shortlist + exact-re-rank core over a probeCells
-    * frame (qidCol, qvecCol, __qn, __lut, __qc, cell). */
-  private def adcRerank(probeCells: DataFrame, codes: DataFrame,
-      corpus: DataFrame, idCol: String, vecCol: String, qidCol: String,
-      qvecCol: String, m: Int, nk: Int, k: Int,
-      shortlist: Int): DataFrame = {
+    val probeCells = IvfCosine.route(withLut, qidCol, qvecCol, coarse,
+      nprobe)
+    // adc = __qc + Σ_mi lut[mi·nk + code_mi], left-associated
     val adc = (0 until m).map(mi =>
       element_at(col("__lut"),
         element_at(col("codes"), mi + 1) + lit(mi * nk) + 1))
       .foldLeft(col("__qc"))(_ + _)
-    val short = codes.join(probeCells, Seq("cell"))
+    CosineTopK.rerank(codes.join(probeCells, Seq("cell"))
       .where(col(qidCol) =!= col(idCol))
       .select(col(qidCol), col(qvecCol), col("__qn"), col(idCol),
-        (adc / (col("__qn") * col("nrm"))).as("approx_cos"))
-      .withColumn("__arank", row_number().over(
-        Window.partitionBy(col(qidCol))
-          .orderBy(col("approx_cos").desc, col(idCol))))
-      .where(col("__arank") <= shortlist)
-    short
-      .join(corpus.select(col(idCol), col(vecCol),
-        sqrt(Similarity.dot(col(vecCol), col(vecCol))).as("__cn")),
-        Seq(idCol))
-      .select(col(qidCol).as("qid"), col(idCol).as("nid"),
-        (Similarity.dot(col(qvecCol), col(vecCol))
-          / (col("__qn") * col("__cn"))).as("cosine"),
-        col("approx_cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid"))
-          .orderBy(col("cosine").desc, col("nid"))))
-      .where(col("rank") <= k)
+        (adc / (col("__qn") * col("nrm"))).as("approx_cos")),
+      corpus, idCol, vecCol, qidCol, qvecCol, k, shortlist)
   }
 }

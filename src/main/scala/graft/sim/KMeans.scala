@@ -115,8 +115,8 @@ object KMeans {
     * localCheckpoint. Convergence-mode fits are NOT oracle-checkable
     * (the round count depends on float sums), so the driver-gate query
     * (q_kmeans) stays on the fixed-iteration form; this is the
-    * production trainer contract, pinned by SimSpec's separated-blobs
-    * early-stop test. */
+    * production trainer contract, pinned by DataFormAnnSpec's
+    * separated-blobs early-stop test. */
   def lloydConverged(vecs: DataFrame, idCol: String, vecCol: String,
       init: DataFrame, maxIters: Int, tol: Double): (DataFrame, Int) = {
     require(maxIters >= 1, s"maxIters must be positive: $maxIters")

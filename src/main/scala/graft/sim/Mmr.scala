@@ -46,7 +46,7 @@ object Mmr {
   /** Seam overload: the relevance shortlist arrives as a prebuilt
     * (qid, nid, cosine, rank) frame — the shared contract of
     * [[CosineTopK.bruteForce]], [[IvfCosine.search]], and
-    * [[IvfPq.search]] — so the diversification head composes with any
+    * [[IvfPq.searchDf]] — so the diversification head composes with any
     * ANN producer without forcing the whole-corpus-broadcast brute
     * build. MmrSpec pins full-probe-IVF-shortlist ≡ brute-shortlist
     * rerank equality.

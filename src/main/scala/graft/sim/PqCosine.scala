@@ -1,7 +1,6 @@
 package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.dedup.Similarity
 
@@ -125,25 +124,11 @@ object PqCosine {
       element_at(col("__lut"),
         element_at(col("codes"), mi + 1) + lit(mi * nk) + 1))
       .reduceLeft(_ + _)
-    val short = codes.join(broadcast(probesLut), col(qidCol) =!= col(idCol))
-      .select(col(qidCol), col(qvecCol), col("__qn"), col(idCol),
-        (adc / (col("__qn") * col("nrm"))).as("approx_cos"))
-      .withColumn("__arank", row_number().over(
-        Window.partitionBy(col(qidCol))
-          .orderBy(col("approx_cos").desc, col(idCol))))
-      .where(col("__arank") <= shortlist)
     // exact re-rank touches only shortlist·|probes| raw vectors
-    short
-      .join(corpus.select(col(idCol), col(vecCol),
-        sqrt(Similarity.dot(col(vecCol), col(vecCol))).as("__cn")),
-        Seq(idCol))
-      .select(col(qidCol).as("qid"), col(idCol).as("nid"),
-        (Similarity.dot(col(qvecCol), col(vecCol))
-          / (col("__qn") * col("__cn"))).as("cosine"),
-        col("approx_cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid"))
-          .orderBy(col("cosine").desc, col("nid"))))
-      .where(col("rank") <= k)
+    CosineTopK.rerank(
+      codes.join(broadcast(probesLut), col(qidCol) =!= col(idCol))
+        .select(col(qidCol), col(qvecCol), col("__qn"), col(idCol),
+          (adc / (col("__qn") * col("nrm"))).as("approx_cos")),
+      corpus, idCol, vecCol, qidCol, qvecCol, k, shortlist)
   }
 }

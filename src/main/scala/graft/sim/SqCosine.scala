@@ -1,7 +1,6 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.dedup.Similarity
 
@@ -60,24 +59,10 @@ object SqCosine {
       sqrt(Similarity.dot(col(qvecCol), col(qvecCol))).as("__qn"))
     val approx = (col("scale") *
       Similarity.dot(col(qvecCol), col("codes").cast("array<double>")))
-    val short = codes.join(broadcast(probesN), col(qidCol) =!= col(idCol))
-      .select(col(qidCol), col(qvecCol), col("__qn"), col(idCol),
-        (approx / (col("__qn") * col("nrm"))).as("approx_cos"))
-      .withColumn("__arank", row_number().over(
-        Window.partitionBy(col(qidCol))
-          .orderBy(col("approx_cos").desc, col(idCol))))
-      .where(col("__arank") <= shortlist)
-    short
-      .join(corpus.select(col(idCol), col(vecCol),
-        sqrt(Similarity.dot(col(vecCol), col(vecCol))).as("__cn")),
-        Seq(idCol))
-      .select(col(qidCol).as("qid"), col(idCol).as("nid"),
-        (Similarity.dot(col(qvecCol), col(vecCol))
-          / (col("__qn") * col("__cn"))).as("cosine"),
-        col("approx_cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid"))
-          .orderBy(col("cosine").desc, col("nid"))))
-      .where(col("rank") <= k)
+    CosineTopK.rerank(
+      codes.join(broadcast(probesN), col(qidCol) =!= col(idCol))
+        .select(col(qidCol), col(qvecCol), col("__qn"), col(idCol),
+          (approx / (col("__qn") * col("nrm"))).as("approx_cos")),
+      corpus, idCol, vecCol, qidCol, qvecCol, k, shortlist)
   }
 }

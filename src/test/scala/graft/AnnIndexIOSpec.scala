@@ -212,8 +212,9 @@ class AnnIndexIOSpec extends AnyFunSuite {
     val books = PqCosine.pinnedCodebooks(m = 4, subDim = 2, k = 8)
     val p = tmp("ivfpq2")
     AnnIndexIO.saveIvfPq(p, coarse, books,
-      IvfPq.encode(vecs(0 until 30, 61), "vec_id", "embedding",
-        coarse, books), "vec_id")
+      IvfPq.encodeDf(vecs(0 until 30, 61), "vec_id", "embedding",
+        IvfCosine.centroidsDf(spark, coarse),
+        PqCosine.codebooksDf(spark, books), m = 4), "vec_id")
     // loading through the wrong family loader names the family
     val e = intercept[IllegalArgumentException] {
       AnnIndexIO.loadPq(spark, p)

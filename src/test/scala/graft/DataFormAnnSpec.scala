@@ -6,7 +6,8 @@ import graft.sim.{IvfCosine, IvfPq, PqCosine, SemDedup}
 
 /** The data-form centroid/codebook paths (IVF search routing, IVF-PQ,
   * k-means, prototypicality pruning) must be value-identical to the
-  * literal-table paths (which back the DuckDB oracles), and the plan
+  * literal-table forms (the [[AnnLiteralReference]] copies, which
+  * interpolate the grids the DuckDB oracles pin), and the plan
   * size of the data-form and kernel-assigned paths must be INDEPENDENT
   * of nlist — a plan that grows O(nlist) dies at production cluster
   * counts. */
@@ -50,7 +51,8 @@ class DataFormAnnSpec extends AnyFunSuite {
     val books = PqCosine.pinnedCodebooks(m = 4, subDim = 2, k = 8)
     val coarseDf = IvfCosine.centroidsDf(spark, coarse)
     val booksDf = PqCosine.codebooksDf(spark, books)
-    val encLit = IvfPq.encode(emb, "vec_id", "embedding", coarse, books)
+    val encLit = AnnLiteralReference.ivfPqEncode(emb, "vec_id",
+      "embedding", coarse, books)
     val encData = IvfPq.encodeDf(emb, "vec_id", "embedding", coarseDf,
       booksDf, m = 4)
     def encRows(df: org.apache.spark.sql.DataFrame) =
@@ -63,8 +65,9 @@ class DataFormAnnSpec extends AnyFunSuite {
       df.collect().map(r => (r.getLong(0), r.getLong(1),
         r.getAs[Double]("cosine"), r.getAs[Double]("approx_cos"),
         r.getAs[Int]("rank"))).toSet
-    val sLit = IvfPq.search(encLit, emb, probes, "vec_id", "embedding",
-      "qid", "qvec", coarse, books, k = 3, nprobe = 3, shortlist = 10)
+    val sLit = AnnLiteralReference.ivfPqSearch(encLit, emb, probes,
+      "vec_id", "embedding", "qid", "qvec", coarse, books, k = 3,
+      nprobe = 3, shortlist = 10)
     val sData = IvfPq.searchDf(encData, emb, probes, "vec_id",
       "embedding", "qid", "qvec", coarseDf, booksDf, k = 3, nprobe = 3,
       shortlist = 10, m = 4, nk = 8)
@@ -105,17 +108,21 @@ class DataFormAnnSpec extends AnyFunSuite {
         r.getInt(3))).toSet
     val grid = IvfCosine.pinnedCentroids(16, dim)
     val idx = IvfCosine.assignByCentroids(emb, "vec_id", "embedding", grid)
-    val lit = IvfCosine.search(idx, probes, "vec_id", "embedding",
-      "qid", "qvec", k = 3, nprobe = 4, dim = dim)
+    val lit = AnnLiteralReference.ivfSearch(idx, probes, "vec_id",
+      "embedding", "qid", "qvec", k = 3, nprobe = 4, dim = dim)
     val data = IvfCosine.searchDf(idx.assigned, probes, "vec_id",
       "embedding", "qid", "qvec", IvfCosine.centroidsDf(spark, grid),
       k = 3, nprobe = 4, dim = dim)
+    val viaIndex = IvfCosine.search(idx, probes, "vec_id", "embedding",
+      "qid", "qvec", k = 3, nprobe = 4, dim = dim)
     val (a, b) = (rows(lit), rows(data))
     assert(a == b, "literal and data-form search must agree bit for bit")
+    assert(rows(viaIndex) == a,
+      "the Index entry point must agree with the literal search bit for bit")
     assert(a.nonEmpty)
-    // plan-size independence: the reason searchDf exists (a corpus-
-    // scaled nlist outgrows the literal centroid array in the plan)
-    def planLen(nlist: Int): Long = {
+    // plan-size independence: a corpus-scaled nlist would outgrow a
+    // literal centroid array in the plan — through either entry point
+    def dataPlan(nlist: Int): Long = {
       val g = IvfCosine.pinnedCentroids(nlist, dim)
       val ix = IvfCosine.assignByCentroidsDf(emb, "vec_id", "embedding",
         IvfCosine.centroidsDf(spark, g))
@@ -123,9 +130,16 @@ class DataFormAnnSpec extends AnyFunSuite {
         "qid", "qvec", IvfCosine.centroidsDf(spark, g), k = 3,
         nprobe = 4, dim = dim))
     }
-    val (p16, p1024) = (planLen(16), planLen(1024))
-    assert(p1024 <= p16 * 11 / 10,
-      s"data-form search plan must not grow with nlist: $p16 -> $p1024")
+    def indexPlan(nlist: Int): Long = exprNodes(IvfCosine.search(
+      IvfCosine.assignByCentroids(emb, "vec_id", "embedding",
+        IvfCosine.pinnedCentroids(nlist, dim)), probes, "vec_id",
+      "embedding", "qid", "qvec", k = 3, nprobe = 4, dim = dim))
+    for ((name, planLen) <- Seq("searchDf" -> dataPlan _,
+        "search(index)" -> indexPlan _)) {
+      val (p16, p1024) = (planLen(16), planLen(1024))
+      assert(p1024 <= p16 * 11 / 10,
+        s"$name plan must not grow with nlist: $p16 -> $p1024")
+    }
   }
 
   test("kmeans: distributed Lloyd separates two obvious clusters, an " +

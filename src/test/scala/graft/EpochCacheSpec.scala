@@ -10,11 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * scale where the scan is cheap. The audit: all six trainer families
   * cache + count-materialize the assembled input BEFORE the epoch loop
   * and unpersist after —
-  *   MLPRegressor.scala:161,441 / DeepMlp.scala:202,503 (MLP family),
-  *   LstmTrainer.scala:345,659 + LstmBn.scala:501 (LSTM family),
-  *   AttnTrainer.scala:664,984 (transformer family),
+  *   MLPRegressor.scala:163,435 (single-layer MLP),
+  *   SeqAdam.prepare (SeqAdam.scala:69) for the deep MLP, LSTM and
+  *     transformer fits (DeepMlp.scala:228, LstmTrainer.scala:127,
+  *     AttnTrainer.scala:682) + LstmBn.scala:494 (BN LSTM),
   *   DeepAe.scala:449 / DeepBnAe.scala:422 (AE families),
-  *   SoftForest.scala:780 (forest)
+  *   SoftForest.scala:766 (forest)
   * — and this suite PINS the property behaviorally: local-filesystem
   * bytesRead (Hadoop FileSystem statistics, which count the executor
   * reads too under local mode's single JVM) must not grow with the

@@ -446,9 +446,13 @@ class ScalePathSpec extends AnyFunSuite {
       .select($"vec_id".as("qid"), $"embedding".as("qvec"))
     val coarse = IvfCosine.pinnedCentroids(8, 64)
     val books = PqCosine.pinnedCodebooks(m = 8, subDim = 8, k = 16)
-    val codes = IvfPq.encode(corpus, "vec_id", "embedding", coarse, books)
-    val ivfpq = IvfPq.search(codes, corpus, probes, "vec_id", "embedding",
-      "qid", "qvec", coarse, books, k = 5, nprobe = 8, shortlist = n)
+    val (coarseDf, booksDf) = (IvfCosine.centroidsDf(spark, coarse),
+      PqCosine.codebooksDf(spark, books))
+    val codes = IvfPq.encodeDf(corpus, "vec_id", "embedding", coarseDf,
+      booksDf, m = 8)
+    val ivfpq = IvfPq.searchDf(codes, corpus, probes, "vec_id",
+      "embedding", "qid", "qvec", coarseDf, booksDf, k = 5, nprobe = 8,
+      shortlist = n, m = 8, nk = 16)
       .select("qid", "nid", "rank").collect().map(_.toSeq).toSet
     val brute = CosineTopK.bruteForce(corpus, probes, "vec_id", "embedding",
       "qid", "qvec", k = 5, dim = 64)

@@ -214,6 +214,20 @@ class ModelPersistenceSpec extends AnyFunSuite {
       Seq("prediction_0", "prediction_1"))
   }
 
+  test("deep mlp: a combined-loss fit's rank settings survive save -> load") {
+    val m = new DeepMLPRegressor(Seq("f0", "f1", "f2"), "y",
+      layers = Seq(4), lr = 0.02, epochs = 3, loss = "combined",
+      mseWeight = 0.5, spearmanWeight = 3.0, rankTau = 0.05,
+      rankBatch = 16).fit(tabFrame)
+    val p = tmp("deep_mlp_rank.json")
+    m.save(p)
+    val back = DeepMLPRegressor.load(p)
+    assert((back.loss, back.mseWeight, back.spearmanWeight, back.rankTau,
+      back.rankBatch) == ("combined", 0.5, 3.0, 0.05, 16))
+    assertBitEqual(m.predict(tabFrame), back.predict(tabFrame),
+      Seq("prediction"))
+  }
+
   test("lstm multi: stacked 2-head save -> load is bit-identical") {
     val multiFrame = seqFrame.withColumn("y2",
       col("y") * lit(0.5) + col("lag1"))

@@ -277,14 +277,18 @@ class PlanSpec extends AnyFunSuite {
     val p = java.nio.file.Files.createTempDirectory("graft-dpp-pq")
       .resolve("idx").toString
     AnnIndexIO.saveIvfPq(p, coarse, books,
-      IvfPq.encode(corpus, "vec_id", "embedding", coarse, books),
+      IvfPq.encodeDf(corpus, "vec_id", "embedding",
+        IvfCosine.centroidsDf(spark, coarse),
+        PqCosine.codebooksDf(spark, books), m = 4),
       "vec_id")
     val loaded = AnnIndexIO.loadIvfPq(spark, p)
     val probes = corpus.where(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val plan = planOf(IvfPq.search(loaded.codes, corpus, probes,
-      "vec_id", "embedding", "qid", "qvec", loaded.coarse,
-      loaded.codebooks, k = 3, nprobe = 2, shortlist = 10))
+    val plan = planOf(IvfPq.searchDf(loaded.codes, corpus, probes,
+      "vec_id", "embedding", "qid", "qvec",
+      IvfCosine.centroidsDf(spark, loaded.coarse),
+      PqCosine.codebooksDf(spark, loaded.codebooks), k = 3, nprobe = 2,
+      shortlist = 10, m = 4, nk = 8))
     assert(plan.contains("dynamicpruningexpression(cell"),
       s"no DPP on the loaded codes scan — a probe batch would read " +
         s"all nlist cell directories instead of its nprobe:\n$plan")

@@ -70,10 +70,14 @@ class PqTrainSpec extends AnyFunSuite {
       t1(mi)(ki).sameElements(t2(mi)(ki)))))
     val probes = c.where(col("vec_id") < 20)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    def err(books: Array[Array[Array[Double]]]) = adcErr(
-      IvfPq.search(IvfPq.encode(c, "vec_id", "embedding", coarse, books),
-        c, probes, "vec_id", "embedding", "qid", "qvec", coarse, books,
-        k = 3, nprobe = 3, shortlist = 10))
+    val coarseDf = IvfCosine.centroidsDf(spark, coarse)
+    def err(books: Array[Array[Array[Double]]]) = {
+      val booksDf = PqCosine.codebooksDf(spark, books)
+      adcErr(IvfPq.searchDf(IvfPq.encodeDf(c, "vec_id", "embedding",
+          coarseDf, booksDf, m = 4),
+        c, probes, "vec_id", "embedding", "qid", "qvec", coarseDf, booksDf,
+        k = 3, nprobe = 3, shortlist = 10, m = 4, nk = 8))
+    }
     val trained = err(t1)
     val pinned = err(PqCosine.pinnedCodebooks(m = 4, subDim = 2, k = 8))
     assert(trained < pinned,
